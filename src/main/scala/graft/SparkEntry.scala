@@ -58,6 +58,15 @@ object SparkEntry {
   private def events(s: SparkSession, dir: String): DataFrame =
     TimeIndex.normalizeUs(tbl(s, dir, "events"), "ts")
 
+  /** A per-process scratch directory for the built-once tables below,
+    * deleted with its contents at JVM exit.
+    */
+  private def processTempDir(prefix: String): String = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix).toFile
+    sys.addShutdownHook(org.apache.commons.io.FileUtils.deleteQuietly(dir))
+    dir.toString
+  }
+
   /** Per-dataset persisted IVF index paths (build once per process —
     * concurrent query runners may race, so the build is serialized and
     * idempotent: same data, same deterministic layout).
@@ -67,8 +76,7 @@ object SparkEntry {
   private def ivfIndexFor(s: SparkSession, dir: String,
                           emb: DataFrame): String =
     ivfIndexDirs.computeIfAbsent(dir, { _ =>
-      val path = java.nio.file.Files
-        .createTempDirectory("graft_ivf_idx").toString
+      val path = processTempDir("graft_ivf_idx")
       Knn.writeIvfIndex(emb, EmbDim, path)
       path
     })
@@ -82,8 +90,7 @@ object SparkEntry {
     new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def lakeZFor(s: SparkSession, dir: String): String =
     lakeZDirs.computeIfAbsent(dir, { _ =>
-      val path = java.nio.file.Files
-        .createTempDirectory("graft_lake_z").toString
+      val path = processTempDir("graft_lake_z")
       Lake.writeZOrdered(
         events(s, dir).select("event_id", "user_id", "event_type", "value"),
         Seq("user_id", "value"), path, nFiles = 8)
@@ -98,8 +105,7 @@ object SparkEntry {
     new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def lakeSnapFor(s: SparkSession, dir: String): String =
     lakeSnapDirs.computeIfAbsent(dir, { _ =>
-      val path = java.nio.file.Files
-        .createTempDirectory("graft_lake_snap").toString
+      val path = processTempDir("graft_lake_snap")
       val docs = tbl(s, dir, "documents").select("doc_id", "text")
       Lake.snapshotAppend(docs.where(col("doc_id") % 2 === 0), path)
       Lake.snapshotAppend(docs.where(col("doc_id") % 2 === 1), path)
@@ -116,8 +122,7 @@ object SparkEntry {
     new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def lakeMergeFor(s: SparkSession, dir: String): String =
     lakeMergeDirs.computeIfAbsent(dir, { _ =>
-      val path = java.nio.file.Files
-        .createTempDirectory("graft_lake_merge").toString
+      val path = processTempDir("graft_lake_merge")
       val docs = tbl(s, dir, "documents").select("doc_id", "text")
       Lake.snapshotAppend(docs.where(col("doc_id") % 2 === 0), path)
       val updates = docs
@@ -143,8 +148,7 @@ object SparkEntry {
     new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def lakeStreamFor(s: SparkSession, dir: String): String =
     lakeStreamDirs.computeIfAbsent(dir, { _ =>
-      val base = java.nio.file.Files
-        .createTempDirectory("graft_lake_cdc").toString
+      val base = processTempDir("graft_lake_cdc")
       val src = s"$base/src"; val tblDir = s"$base/tbl"; val ck = s"$base/ck"
       val docs = tbl(s, dir, "documents").select("doc_id", "text")
       val b0 = docs.where(col("doc_id") % 2 === 0)

@@ -7,18 +7,15 @@ import graft.ts.TimeRange
 
 object SparkTestSession {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
+    // the shipped configuration (GraftExtensions, fork-free file:
+    // binding, codegen cache) at the suite's fixed width
+    val s = GraftSession.configure(SparkSession.builder()
       .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-      // the full extension surface (native SQL functions + the banded
-      // range-join rule, inert until its bucket conf is set)
-      .config("spark.sql.extensions", "org.apache.spark.sql.graft.GraftExtensions")
       // bucketed-table tests register catalog tables; keep their files
       // out of the repo working tree
       .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_wh").toString)
+        java.nio.file.Files.createTempDirectory("graft_wh").toString), 4)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
