@@ -22,28 +22,13 @@ object BenchScale {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
+    val spark = GraftSession.configure(SparkSession.builder()
       .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "org.apache.spark.sql.graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+      .config("spark.ui.enabled", "false"), cpus.toInt)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     val canary = BenchCanary.measure(spark)
-
-    // run mm_phash_eval's registration at the SAMPLED probe harness at
-    // EVERY BenchScale sf (gate pinned below any corpus, r13 verdict
-    // #4): the exhaustive O(n²) truth is a declared eval whose cost is
-    // its definition — at the r13 sf10 harness it was 65.9 s / exp
-    // 0.96 = 19% of the subset wall while saying nothing about
-    // production scaling. Pinning the gate here makes BOTH ends of the
-    // exponent pair run the O(n·|P|) auto-switch shape production
-    // would run; correctness runs (graft.Verify, default gate 1M)
-    // still take the exhaustive branch at oracle scale.
-    System.setProperty("graft.phashEvalMaxDocs", "1000")
 
     def emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
     val nEmb = emb.count()
@@ -84,7 +69,11 @@ object BenchScale {
     // (minhash banding, df-capped pruned Jaccard, C4-style block
     // dedup) gets measured exponents to back SURVEY §5's df-cap/
     // banding claims with the same evidence the ANN family has.
-    val registered = Seq("mm_phash", "mm_phash_eval",
+    // mm_phash_eval is not a leg: its exhaustive O(n²) truth is a
+    // declared eval whose cost is its definition (65.9 s, 19% of the r13
+    // sf10 subset wall), and beyond 1M docs it auto-switches to
+    // mm_phash_eval_sampled — the O(n·|P|) shape measured below.
+    val registered = Seq("mm_phash",
       "mm_phash_eval_sampled", "emb_knn_ivf", "emb_ivf_pq",
       "emb_ivf_probe_curve", "emb_pq", "doc_dedup_edit",
       "emb_dedup_cosine", "emb_mmr",

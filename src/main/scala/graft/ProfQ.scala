@@ -3,10 +3,13 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.scheduler._
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
+import scala.jdk.CollectionConverters._
 
 /** Per-query profiler: wall seconds, Spark job/stage/task counts and
   * total executor task time for each named query — separates fixed
-  * driver/scheduling overhead (many tiny jobs) from real task compute.
+  * driver/scheduling overhead (many tiny jobs) from real task compute —
+  * followed by the query's six costliest stages (executor seconds,
+  * task count, call site).
   *
   *   sbt "runMain graft.ProfQ emb_ann_recall doc_dedup_eval"
   *
@@ -17,13 +20,9 @@ object ProfQ {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
+    val spark = GraftSession.configure(SparkSession.builder()
       .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "org.apache.spark.sql.graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+      .config("spark.ui.enabled", "false"), cpus.toInt)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
@@ -59,7 +58,6 @@ object ProfQ {
         }
       }
     })
-    val verbose = sys.env.get("PROFQ_STAGES").contains("1")
 
     def runOnce(name: String): Double = {
       val t0 = System.nanoTime()
@@ -85,14 +83,11 @@ object ProfQ {
         println(f"$n%-32s ${math.min(w1, w2)}%8.3f ${jobs.get}%5d " +
           f"${stages.get}%6d ${tasks.get}%6d ${taskTimeMs.get / 1e3}%8.2f " +
           f"${gcTimeMs.get / 1e3}%6.2f ${shufWrite.get / 1e6}%8.1f")
-        if (verbose) {
-          import scala.jdk.CollectionConverters._
-          stageTimeMs.asScala.toSeq.sortBy(-_._2.get).take(6).foreach {
-            case (sid, ms) =>
-              println(f"    stage $sid%4d ${ms.get / 1e3}%8.2f s " +
-                f"${stageTasks.get(sid).get}%4d tasks  " +
-                stageInfoMap.getOrDefault(sid, "?"))
-          }
+        stageTimeMs.asScala.toSeq.sortBy(-_._2.get).take(6).foreach {
+          case (sid, ms) =>
+            println(f"    stage $sid%4d ${ms.get / 1e3}%8.2f s " +
+              f"${stageTasks.get(sid).get}%4d tasks  " +
+              stageInfoMap.getOrDefault(sid, "?"))
         }
       } catch { case e: Throwable =>
         println(s"$n FAILED: ${e.getMessage}")

@@ -26,12 +26,12 @@ object SparkEntry {
 
   // ---------------------------------------------------------------- I/O
 
-  private def tbl(s: SparkSession, dir: String, name: String): DataFrame = {
-    // older testdata wrote events.ts as TIMESTAMP(NANOS); surface it as an
-    // epoch-ns long so normalizeUs can key off the schema
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+  /** Older testdata wrote events.ts as TIMESTAMP(NANOS); the session's
+    * `nanosAsLong` conf ([[GraftSession.configure]]) surfaces it as an
+    * epoch-ns long so normalizeUs can key off the schema.
+    */
+  private def tbl(s: SparkSession, dir: String, name: String): DataFrame =
     s.read.parquet(s"$dir/$name.parquet")
-  }
   /** [[tbl]] + scale-adaptive scan fan-out ([[operators.Par.fanout]]):
     * the sf-dir test tables are single-row-group files, so every scan
     * is ONE task and compute-dense per-row work (vec_dot folds, hashed
@@ -43,13 +43,7 @@ object SparkEntry {
     * part of the measured artifact).
     */
   private def ftbl(s: SparkSession, dir: String, name: String): DataFrame =
-    if (fanoutEnabled) Par.fanout(tbl(s, dir, name)) else tbl(s, dir, name)
-
-  /** A/B hook for [[ProfAB]]/ProfQ only — production default is ON
-    * (SPARK_GRAFT_FANOUT=0 disables, for fresh-JVM A/B measurement).
-    */
-  @volatile private[graft] var fanoutEnabled =
-    sys.env.get("SPARK_GRAFT_FANOUT").forall(_ != "0")
+    Par.fanout(tbl(s, dir, name))
 
   /** events with ts normalized to the canonical epoch-µs long regardless
     * of the parquet physical type (TIMESTAMP(NANOS) long, TIMESTAMP, or
@@ -3489,14 +3483,8 @@ object SparkEntry {
   /** Corpus-size ceiling for mm_phash_eval's exhaustive O(n²) truth;
     * beyond it the registration auto-switches to the sampled probe
     * harness so no sweep pays the quadratic plan by accident.
-    * Overridable via -Dgraft.phashEvalMaxDocs so a scale sweep can pin
-    * the gate below its harness size and measure the auto-switch shape
-    * at both ends of an exponent pair (BenchScale does exactly that);
-    * the default — and therefore every correctness run — is unchanged.
     */
-  private def MmPhashEvalMaxDocs: Long =
-    sys.props.get("graft.phashEvalMaxDocs").map(_.toLong)
-      .getOrElse(1000000L)
+  private val MmPhashEvalMaxDocs = 1000000L
 
   /** Corpus bound above which emb_dedup_cosine_fixed's declared
     * floor-geometry witness caps to the base copy (the 4-plane pin is
@@ -3990,8 +3978,8 @@ object SparkEntry {
     // all-drop). Learning on separable data is pinned by
     // OperatorSpec's "train learns the language labels" descent test
     "doc_classify_train_eval" -> { (s, dir) =>
-      // r16: DROPPED from the fanout whitelist — paired same-JVM A/B
-      // (ProfAB, two JVMs) measures the raw single-task scan 0.24–0.66 s
+      // r16: DROPPED from the fanout whitelist — a paired A/B over two
+      // JVMs measures the raw single-task scan 0.24–0.66 s
       // FASTER here: the 3-epoch loop re-reads the fanned checkpoint ~8
       // times and the 32-way stages' per-task overhead outweighs the
       // tiny per-partition compute (2.5k train docs). The r15 whitelist

@@ -1,5 +1,6 @@
 package graft.functions
 
+import org.apache.spark.SparkException
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -339,41 +340,72 @@ object HashImpl {
     acc
   }
 
+  /** Input contract of the three vector kernels below: every element
+    * non-null and, for the binary ones, equal lengths. Their output
+    * type declares `containsNull = false`, so a null cannot be passed
+    * through, and `getFloat`/`getDouble` on a null slot reads 0.0 —
+    * a violation fails the task instead, naming the expression.
+    */
+  private def nullElement(expr: String, i: Int): SparkException =
+    new SparkException(s"$expr: null element at index $i; " +
+      "the kernel requires arrays without null elements")
+
+  private def sameLength(expr: String, a: ArrayData, b: ArrayData): Int = {
+    val n = a.numElements()
+    if (b.numElements() != n) throw new SparkException(
+      s"$expr: array lengths differ ($n vs ${b.numElements()})")
+    n
+  }
+
   /** Float array widened to double — bit-identical to the interpreted
-    * `transform(v, x => x.cast("double"))` (float→double is exact),
-    * one tight loop per ROW instead of a lambda dispatch per element.
+    * `transform(v, x => x.cast("double"))` (float→double is exact) on
+    * null-free input, one tight loop per ROW instead of a lambda
+    * dispatch per element.
     */
   def vecCastD(a: ArrayData): ArrayData = {
     val n = a.numElements()
     val out = new Array[Double](n)
     var i = 0
-    while (i < n) { out(i) = a.getFloat(i).toDouble; i += 1 }
+    while (i < n) {
+      if (a.isNullAt(i)) throw nullElement("VecCastD", i)
+      out(i) = a.getFloat(i).toDouble
+      i += 1
+    }
     org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
       .fromPrimitiveArray(out)
   }
 
   /** Elementwise a(i) − b(i) over two double arrays — bit-identical to
-    * `zip_with(a, b, (x, y) => x - y)` (same IEEE op, index order).
-    * Caller guarantees equal lengths (vector/centroid pairs).
+    * `zip_with(a, b, (x, y) => x - y)` (same IEEE op, index order) on
+    * equal-length null-free input (vector/centroid pairs).
     */
   def vecSubDD(a: ArrayData, b: ArrayData): ArrayData = {
-    val n = a.numElements()
+    val n = sameLength("VecSubDD", a, b)
     val out = new Array[Double](n)
     var i = 0
-    while (i < n) { out(i) = a.getDouble(i) - b.getDouble(i); i += 1 }
+    while (i < n) {
+      if (a.isNullAt(i) || b.isNullAt(i)) throw nullElement("VecSubDD", i)
+      out(i) = a.getDouble(i) - b.getDouble(i)
+      i += 1
+    }
     org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
       .fromPrimitiveArray(out)
   }
 
   /** Elementwise a(i) + b(i), float + double (a widened first) — the
     * RQ reconstruction c1 + c2; bit-identical to
-    * `zip_with(a, b, (x, y) => x.cast("double") + y)`.
+    * `zip_with(a, b, (x, y) => x.cast("double") + y)` on equal-length
+    * null-free input.
     */
   def vecAddFD(a: ArrayData, b: ArrayData): ArrayData = {
-    val n = a.numElements()
+    val n = sameLength("VecAddFD", a, b)
     val out = new Array[Double](n)
     var i = 0
-    while (i < n) { out(i) = a.getFloat(i).toDouble + b.getDouble(i); i += 1 }
+    while (i < n) {
+      if (a.isNullAt(i) || b.isNullAt(i)) throw nullElement("VecAddFD", i)
+      out(i) = a.getFloat(i).toDouble + b.getDouble(i)
+      i += 1
+    }
     org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
       .fromPrimitiveArray(out)
   }

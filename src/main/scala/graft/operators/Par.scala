@@ -38,13 +38,6 @@ object Par {
     else df
   }
 
-  /** A/B hook for the r16 spread sites (graft.ProfSpread) — production
-    * default is ON (SPARK_GRAFT_SPREAD=0 disables, for same-JVM paired
-    * measurement of exactly these sites).
-    */
-  @volatile private[graft] var spreadEnabled =
-    sys.env.get("SPARK_GRAFT_SPREAD").forall(_ != "0")
-
   /** Explicit compute-density repartition of a POST-SHUFFLE frame
     * (optimization guide §2: "parallelism lost where compute/byte is
     * maximal"). AQE's partition coalescing sizes post-shuffle
@@ -66,10 +59,7 @@ object Par {
     * satisfaction), pinning its width instead of adding a shuffle.
     */
   def spread(df: DataFrame, cols: org.apache.spark.sql.Column*): DataFrame = {
-    if (!spreadEnabled) df
-    else {
-      val p = df.sparkSession.sparkContext.defaultParallelism
-      if (cols.isEmpty) df.repartition(p) else df.repartition(p, cols: _*)
-    }
+    val p = df.sparkSession.sparkContext.defaultParallelism
+    if (cols.isEmpty) df.repartition(p) else df.repartition(p, cols: _*)
   }
 }

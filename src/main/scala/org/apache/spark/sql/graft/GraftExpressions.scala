@@ -154,7 +154,8 @@ case class IndexSumLong(left: Expression, right: Expression)
 
 /** Float array widened to double (exact), one tight loop per row —
   * replaces the interpreted `transform(v, _.cast("double"))` lambda
-  * the kmeans/RQ/PQ chains ran per corpus element.
+  * the kmeans/RQ/PQ chains ran per corpus element. A null element
+  * raises a SparkException (the output declares no nulls).
   */
 case class VecCastD(child: Expression)
     extends UnaryExpression with ExpectsInputTypes {
@@ -168,7 +169,8 @@ case class VecCastD(child: Expression)
 }
 
 /** Elementwise difference of two double arrays — the residual
-  * construction (`zip_with(a, b, (x, y) => x - y)`), codegen'd.
+  * construction (`zip_with(a, b, (x, y) => x - y)`), codegen'd. A null
+  * element or unequal lengths raise a SparkException.
   */
 case class VecSubDD(left: Expression, right: Expression)
     extends BinaryExpression with ExpectsInputTypes {
@@ -185,7 +187,8 @@ case class VecSubDD(left: Expression, right: Expression)
 }
 
 /** Elementwise float + double (left widened first) — the RQ additive
-  * reconstruction c1 + c2, codegen'd.
+  * reconstruction c1 + c2, codegen'd. A null element or unequal
+  * lengths raise a SparkException.
   */
 case class VecAddFD(left: Expression, right: Expression)
     extends BinaryExpression with ExpectsInputTypes {

@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.SparkException
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.{Knn, TextOps}
@@ -130,6 +132,45 @@ class ExpressionParitySpec extends AnyFunSuite {
         zip_with($"a", $"bd", (x, y) => x.cast("double") + y).as("ph"))
       .where($"c" =!= $"ch" || $"s" =!= $"sh" || $"p" =!= $"ph")
     assert(bad.isEmpty)
+  }
+
+  /** `f` over `in` must fail with a SparkException whose message starts
+    * `"$expr: $what"` — both on the driver (a projection over a local
+    * relation is evaluated interpreted while optimizing) and in a
+    * codegen'd task (the same projection after a shuffle).
+    */
+  private def assertRejects(in: DataFrame, expr: String, what: String)(
+      f: DataFrame => DataFrame): Unit =
+    Seq(in, in.repartition(1)).foreach { d =>
+      val e = intercept[Exception](f(d).collect())
+      val chain = Iterator.iterate[Throwable](e)(_.getCause)
+        .takeWhile(_ != null).toSeq
+      assert(chain.exists(t => t.isInstanceOf[SparkException] &&
+        t.getMessage.contains(s"$expr: $what")), e.toString)
+    }
+
+  test("VecCastD / VecSubDD / VecAddFD reject a null element") {
+    val G = org.apache.spark.sql.graft.GraftExpressions
+    assertRejects(Seq(Seq(Some(1.0f), None, Some(2.0f))).toDF("a"),
+      "VecCastD", "null element at index 1")(_.select(G.vec_cast_d($"a")))
+    val dd = Seq((Seq(Some(1.0), Some(2.0)), Seq(Some(0.5), None)))
+      .toDF("a", "b")
+    assertRejects(dd, "VecSubDD", "null element at index 1")(
+      _.select(G.vec_sub_dd($"a", $"b")))
+    val fd = Seq((Seq(None, Some(2.0f)), Seq(Some(0.5), Some(0.5))))
+      .toDF("a", "b")
+    assertRejects(fd, "VecAddFD", "null element at index 0")(
+      _.select(G.vec_add_fd($"a", $"b")))
+  }
+
+  test("VecSubDD / VecAddFD reject arrays of unequal length") {
+    val G = org.apache.spark.sql.graft.GraftExpressions
+    assertRejects(Seq((Seq(1.0, 2.0), Seq(0.5, 0.5, 0.5))).toDF("a", "b"),
+      "VecSubDD", "array lengths differ (2 vs 3)")(
+      _.select(G.vec_sub_dd($"a", $"b")))
+    assertRejects(Seq((Seq(1.0f, 2.0f, 3.0f), Seq(0.5, 0.5))).toDF("a", "b"),
+      "VecAddFD", "array lengths differ (3 vs 2)")(
+      _.select(G.vec_add_fd($"a", $"b")))
   }
 
   test("TokenCountVec == the per-bucket filter-fold on real documents") {
