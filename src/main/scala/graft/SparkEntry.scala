@@ -4313,7 +4313,7 @@ object SparkEntry {
       val q = emb.where(col("vec_id") % 100 === 0 && col("vec_id") < 100000000L)
       // r16: the r15 cells/book/lp15 lazy checkpoints are GONE — the
       // legs share the PLAN objects and AQE's ReuseExchange dedups the
-      // identical subtrees at runtime (ivfCellsPlan's documented
+      // identical subtrees at runtime (Knn.ivfCells' documented
       // mechanism), where the four sequential checkpoint
       // materialization barriers serialized the whole eval. Paired A/B
       // (fresh JVMs, both orders): 6.61 vs 7.31 and 6.75 vs 11.21 s;
@@ -4323,7 +4323,7 @@ object SparkEntry {
       // load-bearing for the 8-way explode).
       val truth = Knn.bruteTopK(emb, q, EmbDim, 3)
         .select("query_id", "neighbor_id").localCheckpoint(false)
-      val cells = Knn.ivfCellsPlan(emb, q, EmbDim)
+      val cells = Knn.ivfCells(emb, q, EmbDim)
       val book = Knn.pqCodebookLearned(emb, EmbDim)
       val lp15 = Knn.ivfPqTopKLearned(emb, q, EmbDim, 15,
         shared = Some(cells), cb = Some(book))

@@ -41,37 +41,91 @@ object Knn {
   def cosine(a: Column, b: Column, dim: Int): Column =
     dot(a, b, dim) / (sqrt(dot(a, a, dim)) * sqrt(dot(b, b, dim)))
 
+  /** One side of a cosine pair join: `idCol` as `id`, `vecCol` as
+    * `vec`, and the vector's L2 norm as `norm`. Norms are computed ONCE
+    * per vector (not per pair); the division dot/(sqrt(na)*sqrt(nb)) is
+    * unchanged, so values stay bit-identical to [[cosine]] / the oracle.
+    */
+  private def normed(idCol: String, vecCol: String, dim: Int,
+                     id: String, vec: String, norm: String): Seq[Column] =
+    Seq(col(idCol).as(id), col(vecCol).as(vec),
+      sqrt(dot(col(vecCol), col(vecCol), dim)).as(norm))
+
+  /** Exact cosine of a (query, neighbor) pair row over [[normed]]
+    * sides named (query_id, qvec, qn) and (neighbor_id, nvec, nn);
+    * `vdot` is [[dot]] over float vectors or [[dotD]] over widened ones.
+    */
+  private def pairCos(vdot: (Column, Column) => Column): Column =
+    vdot(col("qvec"), col("nvec")) / (col("qn") * col("nn"))
+
+  /** Per-query top-k, the rank every search path ends in: number each
+    * query's rows by `score` (descending, or ascending for a distance),
+    * ties on the lower `nb`, into column `rank`, and keep ranks <= k.
+    */
+  private def topK(df: DataFrame, score: String, k: Int, asc: Boolean = false,
+                   rank: String = "rank", nb: String = "neighbor_id"): DataFrame = {
+    val w = Window.partitionBy(col("query_id"))
+      .orderBy(if (asc) col(score).asc else col(score).desc, col(nb))
+    df.withColumn(rank, row_number().over(w)).where(col(rank) <= k)
+  }
+
+  /** [[topK]] as a search result: (query_id, rank, neighbor_id,
+    * `extra`..., score rounded to 6dp). Ranking reads the raw score.
+    */
+  private def ranked(df: DataFrame, score: String, k: Int, asc: Boolean = false,
+                     extra: Seq[String] = Nil): DataFrame =
+    topK(df, score, k, asc).select(
+      Seq(col("query_id"), col("rank"), col("neighbor_id")) ++ extra.map(col)
+        :+ round(col(score), 6).as(score): _*)
+
   /** Brute-force top-k: for each row of `queries`, the k nearest
     * corpus rows by cosine (self excluded).
     */
   def bruteTopK(corpus: DataFrame, queries: DataFrame, dim: Int, k: Int,
                 idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    // norms are computed ONCE per vector (not per pair) — the division
-    // structure dot/(sqrt(na)*sqrt(nb)) is unchanged, so values stay
-    // bit-identical to cosine() / the oracle
-    val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qvec"),
-      sqrt(dot(col(vecCol), col(vecCol), dim)).as("qn"))
-    val joined = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("nvec"),
-      sqrt(dot(col(vecCol), col(vecCol), dim)).as("nn"))
+    val q = queries.select(normed(idCol, vecCol, dim, "query_id", "qvec", "qn"): _*)
+    val joined = corpus
+      .select(normed(idCol, vecCol, dim, "neighbor_id", "nvec", "nn"): _*)
       .crossJoin(broadcast(q))
       .where(col("neighbor_id") =!= col("query_id"))
-      .withColumn("cos",
-        dot(col("qvec"), col("nvec"), dim) / (col("qn") * col("nn")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id"))
-    joined.withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"),
-        round(col("cos"), 6).as("cos"))
+      .withColumn("cos", pairCos(dot(_, _, dim)))
+    ranked(joined, "cos", k)
   }
 
   // --- random-hyperplane LSH -----------------------------------------
 
-  /** Deterministic pseudo-random hyperplane component for plane j,
-    * dimension i: integer in [-1e6, 1e6] — reproducible in any engine.
+  /** The LSH banding every hyperplane path shares: `keep`, exploded
+    * to one row per table t < `nTables` with `tb` = t and `bk` = the
+    * sign-bucket code of `v` (a `dim`-vector) under planes
+    * t·nPlanes … t·nPlanes+nPlanes-1. The DuckDB oracles mirror this
+    * one geometry (`sqlLshCtes`), so no other code lays out tables.
     */
-  def planeComponent(j: Int, i: Int): Long =
-    ((j + 1L) * 73856093L + i * 19349663L) % 2000001L - 1000000L
+  private def lshBand(df: DataFrame, keep: Seq[Column], v: Column, dim: Int,
+                      nPlanes: Int, nTables: Int): DataFrame = {
+    val cells = array((0 until nTables).map { t =>
+      struct(lit(t).as("tb"), bucketCode(v, dim, nPlanes, t * nPlanes).as("bk"))
+    }: _*)
+    val out = df.select(keep :+ explode(cells).as("tbk"): _*)
+    out.select(out.columns.init.map(col) ++
+      Seq(col("tbk.tb").as("tb"), col("tbk.bk").as("bk")): _*)
+  }
+
+  /** Corpus and queries banded ([[lshBand]]) and joined on their shared
+    * (tb, bk) cells, self-pairs excluded, with the exact cosine: one
+    * row per (pair, shared cell). Vectors are hashed scan-side; the
+    * shuffle carries (table, bucket, id, vec), never a cross product.
+    */
+  private def lshPairs(corpus: DataFrame, queries: DataFrame, dim: Int,
+                       nPlanes: Int, nTables: Int, idCol: String,
+                       vecCol: String): DataFrame = {
+    def side(df: DataFrame, id: String, vec: String, norm: String): DataFrame =
+      lshBand(df, normed(idCol, vecCol, dim, id, vec, norm), col(vecCol), dim,
+        nPlanes, nTables)
+    side(corpus, "neighbor_id", "nvec", "nn")
+      .join(side(queries, "query_id", "qvec", "qn"), Seq("tb", "bk"))
+      .where(col("neighbor_id") =!= col("query_id"))
+      .withColumn("cos", pairCos(dot(_, _, dim)))
+  }
 
   /** Multi-table random-hyperplane LSH ANN: `nTables` independent
     * plane sets (tables); a candidate is any corpus row sharing a
@@ -80,68 +134,32 @@ object Knn {
     * with per-plane agreement p collides with probability
     * 1-(1-p^nPlanes)^nTables, so adding tables buys recall linearly in
     * shuffle volume (each row materializes nTables (table, bucket)
-    * entries — vectors are hashed scan-side, and the shuffle carries
-    * (table, bucket, id, vec), never the corpus cross product).
-    * Single-table LSH at realistic plane counts has near-zero top-k
-    * recall on spread-out embeddings — measured by `emb_ann_recall`.
+    * entries). Ranks [[lshCandidatesMinTable]]'s pairs; its `min_tb`
+    * is pruned from the plan. Single-table LSH at realistic plane
+    * counts has near-zero top-k recall on spread-out embeddings —
+    * measured by `emb_ann_recall`.
     */
   def lshTopK(corpus: DataFrame, queries: DataFrame, dim: Int, k: Int,
               nPlanes: Int = 4, nTables: Int = 4, idCol: String = "vec_id",
-              vecCol: String = "embedding"): DataFrame = {
-    def buckets(v: Column): Column = array((0 until nTables).map { t =>
-      struct(lit(t).as("tb"), bucketCode(v, dim, nPlanes, t * nPlanes).as("bk"))
-    }: _*)
-    def side(df: DataFrame, id: String, vec: String, norm: String): DataFrame =
-      df.select(col(idCol).as(id), col(vecCol).as(vec),
-          sqrt(dot(col(vecCol), col(vecCol), dim)).as(norm),
-          explode(buckets(col(vecCol))).as("tbk"))
-        .select(col(id), col(vec), col(norm),
-          col("tbk.tb").as("tb"), col("tbk.bk").as("bk"))
-    val cand = side(corpus, "neighbor_id", "nvec", "nn")
-      .join(side(queries, "query_id", "qvec", "qn"), Seq("tb", "bk"))
-      .where(col("neighbor_id") =!= col("query_id"))
-      .withColumn("cos",
-        dot(col("qvec"), col("nvec"), dim) / (col("qn") * col("nn")))
-      // the same pair collides in several tables; cos is identical on
-      // every copy, so max() is pure dedup (map-side combinable)
-      .groupBy("query_id", "neighbor_id").agg(max(col("cos")).as("cos"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id"))
-    cand.withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"),
-        round(col("cos"), 6).as("cos"))
-  }
+              vecCol: String = "embedding"): DataFrame =
+    ranked(lshCandidatesMinTable(corpus, queries, dim, nPlanes, nTables,
+      idCol, vecCol), "cos", k)
 
   /** [[lshTopK]]'s candidate frame with each pair's MINIMUM colliding
     * table index (r15) — lets the table-count dial compute the banded
     * self-join ONCE: a pair is a t-table candidate iff it collides in
     * SOME table with index < t, so leg t's candidate set is exactly
     * `min_tb < t`, with the identical exact cosine (cos is the same on
-    * every table's copy of a pair, so the max-dedup value is
-    * unchanged). Output: (query_id, neighbor_id, cos, min_tb).
+    * every table's copy of a pair, so max() is pure, map-side
+    * combinable dedup). Output: (query_id, neighbor_id, cos, min_tb).
     */
   def lshCandidatesMinTable(corpus: DataFrame, queries: DataFrame, dim: Int,
                             nPlanes: Int = 4, nTables: Int = 4,
                             idCol: String = "vec_id",
-                            vecCol: String = "embedding"): DataFrame = {
-    def buckets(v: Column): Column = array((0 until nTables).map { t =>
-      struct(lit(t).as("tb"), bucketCode(v, dim, nPlanes, t * nPlanes).as("bk"))
-    }: _*)
-    def side(df: DataFrame, id: String, vec: String, norm: String): DataFrame =
-      df.select(col(idCol).as(id), col(vecCol).as(vec),
-          sqrt(dot(col(vecCol), col(vecCol), dim)).as(norm),
-          explode(buckets(col(vecCol))).as("tbk"))
-        .select(col(id), col(vec), col(norm),
-          col("tbk.tb").as("tb"), col("tbk.bk").as("bk"))
-    side(corpus, "neighbor_id", "nvec", "nn")
-      .join(side(queries, "query_id", "qvec", "qn"), Seq("tb", "bk"))
-      .where(col("neighbor_id") =!= col("query_id"))
-      .withColumn("cos",
-        dot(col("qvec"), col("nvec"), dim) / (col("qn") * col("nn")))
+                            vecCol: String = "embedding"): DataFrame =
+    lshPairs(corpus, queries, dim, nPlanes, nTables, idCol, vecCol)
       .groupBy("query_id", "neighbor_id")
       .agg(max(col("cos")).as("cos"), min(col("tb")).as("min_tb"))
-  }
 
   /** LSH-bucketed cosine RANGE search — the scale path of
     * [[rangeSearch]] for query sets too large to broadcast: candidates
@@ -155,28 +173,16 @@ object Knn {
   def lshRangeSearch(corpus: DataFrame, queries: DataFrame, dim: Int,
                      tau: Double, nPlanes: Int = 4, nTables: Int = 4,
                      idCol: String = "vec_id",
-                     vecCol: String = "embedding"): DataFrame = {
-    def buckets(v: Column): Column = array((0 until nTables).map { t =>
-      struct(lit(t).as("tb"), bucketCode(v, dim, nPlanes, t * nPlanes).as("bk"))
-    }: _*)
-    def side(df: DataFrame, id: String, vec: String, norm: String): DataFrame =
-      df.select(col(idCol).as(id), col(vecCol).as(vec),
-          sqrt(dot(col(vecCol), col(vecCol), dim)).as(norm),
-          explode(buckets(col(vecCol))).as("tbk"))
-        .select(col(id), col(vec), col(norm),
-          col("tbk.tb").as("tb"), col("tbk.bk").as("bk"))
-    side(corpus, "neighbor_id", "nvec", "nn")
-      .join(side(queries, "query_id", "qvec", "qn"), Seq("tb", "bk"))
-      .where(col("neighbor_id") =!= col("query_id"))
-      .withColumn("cos",
-        dot(col("qvec"), col("nvec"), dim) / (col("qn") * col("nn")))
+                     vecCol: String = "embedding"): DataFrame =
+    lshPairs(corpus, queries, dim, nPlanes, nTables, idCol, vecCol)
       // cos is identical on every table's copy of a pair, so filtering
-      // before the max() dedup equals filtering after it
+      // before the max() dedup equals filtering after it; it stays on
+      // this side of the agg because Catalyst does not push a filter
+      // below max()
       .where(col("cos") >= tau)
       .groupBy("query_id", "neighbor_id").agg(max(col("cos")).as("cos"))
       .select(col("query_id"), col("neighbor_id"),
         round(col("cos"), 6).as("cos"))
-  }
 
   // --- max-inner-product search (MIPS) -------------------------------
 
@@ -198,12 +204,7 @@ object Knn {
       .crossJoin(broadcast(q))
       .where(col("neighbor_id") =!= col("query_id"))
       .withColumn("ip", dot(col("qvec"), col("nvec"), dim))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("ip").desc, col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"),
-        round(col("ip"), 6).as("ip"))
+    ranked(scored, "ip", k)
   }
 
   /** MIPS scale path: norm-augmentation reduction to angular search —
@@ -223,10 +224,6 @@ object Knn {
                   idCol: String = "vec_id",
                   vecCol: String = "embedding"): DataFrame = {
     val m2 = corpus.agg(max(dot(col(vecCol), col(vecCol), dim)).as("__m2"))
-    def buckets(v: Column): Column = array((0 until nTables).map { t =>
-      struct(lit(t).as("tb"),
-        bucketCode(v, dim + 1, nPlanes, t * nPlanes).as("bk"))
-    }: _*)
     def side(df: DataFrame, id: String, vec: String,
              corpusSide: Boolean): DataFrame = {
       val base = df.select(col(idCol).as(id), col(vecCol).as(vec))
@@ -236,12 +233,9 @@ object Knn {
       val last =
         if (corpusSide) sqrt(greatest(col("__m2") - n2, lit(0.0)))
         else lit(0.0)
-      base
-        .withColumn("__aug",
-          concat(transform(col(vec), x => x.cast("double")), array(last)))
-        .select(col(id), col(vec), explode(buckets(col("__aug"))).as("tbk"))
-        .select(col(id), col(vec),
-          col("tbk.tb").as("tb"), col("tbk.bk").as("bk"))
+      lshBand(base.withColumn("__aug",
+          concat(transform(col(vec), x => x.cast("double")), array(last))),
+        Seq(col(id), col(vec)), col("__aug"), dim + 1, nPlanes, nTables)
     }
     val cand = side(corpus, "neighbor_id", "nvec", corpusSide = true)
       .join(side(queries, "query_id", "qvec", corpusSide = false),
@@ -251,12 +245,7 @@ object Knn {
       // same pair collides in several tables; ip is identical on every
       // copy, so max() is pure dedup (map-side combinable)
       .groupBy("query_id", "neighbor_id").agg(max(col("ip")).as("ip"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("ip").desc, col("neighbor_id"))
-    cand.withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"),
-        round(col("ip"), 6).as("ip"))
+    ranked(cand, "ip", k)
   }
 
   /** dot(v, plane_j) with the deterministic integer components. */
@@ -418,25 +407,9 @@ object Knn {
       .where(col("neighbor_id") =!= col("query_id"))
       .withColumn("acos",
         dotD(col("qd"), col("dv")) / (col("qn") * sqrt(dotD(col("dv"), col("dv")))))
-    val wa = Window.partitionBy(col("query_id"))
-      .orderBy(col("acos").desc, col("neighbor_id"))
-    val cand = scored.withColumn("rk", row_number().over(wa))
-      .where(col("rk") <= rerank)
+    val cand = topK(scored, "acos", rerank, rank = "rk")
       .select("query_id", "neighbor_id")
-    val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("nvec"),
-      sqrt(dot(col(vecCol), col(vecCol), dim)).as("nn"))
-    val qx = queries.select(col(idCol).as("query_id"), col(vecCol).as("qvec"),
-      sqrt(dot(col(vecCol), col(vecCol), dim)).as("qn"))
-    val exact = c.join(broadcast(cand), Seq("neighbor_id"))
-      .join(broadcast(qx), Seq("query_id"))
-      .withColumn("cos",
-        dot(col("qvec"), col("nvec"), dim) / (col("qn") * col("nn")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id"))
-    exact.withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"),
-        round(col("cos"), 6).as("cos"))
+    exactRerank(corpus, queries, cand, dim, k, idCol, vecCol)
   }
 
   /** Binary quantization (1 bit per dimension — the 32x-compression
@@ -492,8 +465,9 @@ object Knn {
   /** Two-stage binary search (the emb_sq_search shape over the packed
     * store): Hamming distance over the words ranks a candidate pool of
     * `rerank`, then the exact cosine against the true vectors picks the
-    * final top-k. Only |Q|*rerank true vectors are ever fetched; the
-    * ranking scan reads dim/8 bytes per corpus row.
+    * final top-k, with each pick's `ham` carried through. Only
+    * |Q|*rerank true vectors are ever fetched; the ranking scan reads
+    * dim/8 bytes per corpus row.
     */
   def bqSearchTopK(corpus: DataFrame, queries: DataFrame, dim: Int, k: Int,
                    rerank: Int = 15, idCol: String = "vec_id",
@@ -509,25 +483,9 @@ object Knn {
         aggregate(zip_with(col("nbw"), col("qbw"),
             (x, y) => call_function("bit_count", x.bitwiseXOR(y)).cast("long")),
           lit(0L), (acc, v) => acc + v))
-    val wa = Window.partitionBy(col("query_id"))
-      .orderBy(col("ham").asc, col("neighbor_id"))
-    val cand = scored.withColumn("rk", row_number().over(wa))
-      .where(col("rk") <= rerank)
+    val cand = topK(scored, "ham", rerank, asc = true, rank = "rk")
       .select("query_id", "neighbor_id", "ham")
-    val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("nvec"),
-      sqrt(dot(col(vecCol), col(vecCol), dim)).as("nn"))
-    val qx = queries.select(col(idCol).as("query_id"), col(vecCol).as("qvec"),
-      sqrt(dot(col(vecCol), col(vecCol), dim)).as("qn"))
-    val exact = c.join(broadcast(cand), Seq("neighbor_id"))
-      .join(broadcast(qx), Seq("query_id"))
-      .withColumn("cos",
-        dot(col("qvec"), col("nvec"), dim) / (col("qn") * col("nn")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id"))
-    exact.withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"),
-        col("ham"), round(col("cos"), 6).as("cos"))
+    exactRerank(corpus, queries, cand, dim, k, idCol, vecCol)
   }
 
   /** kNN GRAPH over the auto-sized LSH cells: for EVERY corpus
@@ -548,9 +506,6 @@ object Knn {
                vecCol: String = "embedding"): DataFrame = {
     import org.apache.spark.sql.graft.Bridge.ldiv
     val np = if (nPlanes > 0) nPlanes else autoPlanes(cachedCount(emb))
-    def cells(v: Column): Column = array((0 until nTables).map { t =>
-      struct(lit(t).as("tb"), bucketCode(v, dim, np, t * np).as("bk"))
-    }: _*)
     // HUB-CELL SALTING: hyperplane cells are skewed (dense regions
     // blow Σpop² far past the uniform n·target estimate — measured
     // 811M pairs vs the ~80M estimate at 200k vectors), so any cell
@@ -561,11 +516,8 @@ object Knn {
     // the df-cap move), and pair volume is bounded by Σ pop·cap.
     // The salt hash is overflow-safe 64-bit arithmetic mirrored
     // exactly by the DuckDB oracle.
-    val banded0 = emb.select(col(idCol).as("id"), col(vecCol).as("v"),
-        sqrt(dot(col(vecCol), col(vecCol), dim)).as("n"),
-        explode(cells(col(vecCol))).as("tbk"))
-      .select(col("id"), col("v"), col("n"),
-        col("tbk.tb").as("tb"), col("tbk.bk").as("bk"))
+    val banded0 = lshBand(emb, normed(idCol, vecCol, dim, "id", "v", "n"),
+      col(vecCol), dim, np, nTables)
     val wPop = Window.partitionBy(col("tb"), col("bk"))
     // r16 (guide §2): pin the (tb, bk) exchange's width — the cell
     // population window, the salted self-join (keys ⊇ (tb, bk), both
@@ -635,7 +587,8 @@ object Knn {
     * (float→double per element, index order, sqrt·sqrt denominator),
     * so the trajectory — and the DuckDB oracle's verbatim replay — is
     * identical to the one-pick-per-scan fold at any batch size
-    * (KnnSpec pins this equality).
+    * (OperatorSpec "kCenterSelect batched greedy equals the
+    * one-pick-per-scan fold" pins this equality).
     */
   def kCenterSelect(corpus: DataFrame, dim: Int, k: Int,
                     idCol: String = "vec_id",
@@ -742,21 +695,6 @@ object Knn {
       idCol, vecCol, batch)
   }
 
-  /** Product quantization: split the vector into `m` contiguous
-    * subspaces, code each subvector as its nearest (L2) centroid from a
-    * deterministic every-Nth codebook — the memory layout behind
-    * IVF-PQ serving (m bytes per vector instead of 4*dim). Returns
-    * (id, codes CSV ordered by subspace, err2 = summed squared
-    * quantization error).
-    *
-    * Scale shape: the codebook is broadcast; distances are computed
-    * scan-side against the exploded (vector, subspace, centroid)
-    * triple, and the per-subspace argmin is min(struct(dist, cid)) —
-    * an ordinary partial-aggregable min, so the shuffle carries m rows
-    * per vector (not m*k candidates) and no window sort exists. err2
-    * folds the m subspace errors in subspace order, so the double is
-    * bit-reproducible.
-    */
   /** Per-subspace PQ assignment: one row per (vector, subspace) with
     * the nearest codebook centroid and its squared distance — the
     * shared core of [[pqCodes]] and [[ivfPqTopK]].
@@ -781,6 +719,21 @@ object Knn {
       .agg(min(struct(col("dist"), col("cid"))).as("best"))
   }
 
+  /** Product quantization: split the vector into `m` contiguous
+    * subspaces, code each subvector as its nearest (L2) centroid from a
+    * deterministic every-Nth codebook — the memory layout behind
+    * IVF-PQ serving (m bytes per vector instead of 4*dim). Returns
+    * (id, codes CSV ordered by subspace, err2 = summed squared
+    * quantization error).
+    *
+    * Scale shape: the codebook is broadcast; distances are computed
+    * scan-side against the exploded (vector, subspace, centroid)
+    * triple, and the per-subspace argmin is min(struct(dist, cid)) —
+    * an ordinary partial-aggregable min, so the shuffle carries m rows
+    * per vector (not m*k candidates) and no window sort exists. err2
+    * folds the m subspace errors in subspace order, so the double is
+    * bit-reproducible.
+    */
   def pqCodes(emb: DataFrame, dim: Int, m: Int = 4, centroidEvery: Int = 0,
               idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     pqAssign(emb, dim, m, centroidEvery, idCol, vecCol)
@@ -972,37 +925,6 @@ object Knn {
         t => t.getField("src")).as("pm"))
   }
 
-  /** Residual quantization (two-level additive FULL-vector codebook —
-    * the RQ family ScaNN/faiss offer next to PQ): level 2 codes the
-    * level-1 quantization ERROR, so the reconstruction c1 + c2 REFINES
-    * the first approximation instead of partitioning dimensions the
-    * way [[pqCodes]]' subspace split does. Level-1 centroids are the
-    * deterministic every-N corpus vectors ([[autoCoarseEvery]] √n
-    * sizing); level-2 centroids are the RESIDUALS of those same
-    * every-N ids — both codebooks derive from the corpus + its count
-    * alone, so the DuckDB oracle replays them exactly.
-    *
-    * Level-2 centroids come from the OFFSET stride (ids ≡ 2 mod N):
-    * the level-1 members' own residuals are all zero, so reusing the
-    * same ids would degenerate the refinement codebook. A synthetic
-    * ZERO codeword (cid2 = −1) always competes, so err2 ≤ err1 holds
-    * POINTWISE — level 2 refines where it can and abstains where it
-    * can't (the keep-if-improves convention).
-    *
-    * Returns (id, cid1, cid2, err1, err2): err1 = ‖v − c1‖², err2 =
-    * ‖v − c1 − c2‖² (a level-1 codebook member recodes exactly: err1 =
-    * err2 = 0 via the zero codeword). Distances are left-to-right
-    * IEEE folds over double-cast components — bit-identical to the
-    * oracle's list_reduce.
-    *
-    * Scale shape: both codebooks broadcast (≈√n rows, under the
-    * [[MaxCoarseCells]] cap posture); each level is one broadcast
-    * crossJoin + a partial-aggregable min(struct) argmin — no rank
-    * window, no corpus self-join. The residual frame localCheckpoints
-    * once (it feeds the level-2 codebook filter AND the level-2
-    * assignment); materializing n×dim doubles once is the standard
-    * RQ index-build cost.
-    */
   /** Shared RQ core: (assignments(id, cid1, err1, cid2, err2-raw),
     * level-1 codebook, level-2 codebook incl. the zero codeword). */
   private def rqModel(emb: DataFrame, dim: Int, centroidEvery: Int,
@@ -1052,6 +974,37 @@ object Knn {
     (assign, c1, c2)
   }
 
+  /** Residual quantization (two-level additive FULL-vector codebook —
+    * the RQ family ScaNN/faiss offer next to PQ): level 2 codes the
+    * level-1 quantization ERROR, so the reconstruction c1 + c2 REFINES
+    * the first approximation instead of partitioning dimensions the
+    * way [[pqCodes]]' subspace split does. Level-1 centroids are the
+    * deterministic every-N corpus vectors ([[autoCoarseEvery]] √n
+    * sizing); level-2 centroids are the RESIDUALS of those same
+    * every-N ids — both codebooks derive from the corpus + its count
+    * alone, so the DuckDB oracle replays them exactly.
+    *
+    * Level-2 centroids come from the OFFSET stride (ids ≡ 2 mod N):
+    * the level-1 members' own residuals are all zero, so reusing the
+    * same ids would degenerate the refinement codebook. A synthetic
+    * ZERO codeword (cid2 = −1) always competes, so err2 ≤ err1 holds
+    * POINTWISE — level 2 refines where it can and abstains where it
+    * can't (the keep-if-improves convention).
+    *
+    * Returns (id, cid1, cid2, err1, err2): err1 = ‖v − c1‖², err2 =
+    * ‖v − c1 − c2‖² (a level-1 codebook member recodes exactly: err1 =
+    * err2 = 0 via the zero codeword). Distances are left-to-right
+    * IEEE folds over double-cast components — bit-identical to the
+    * oracle's list_reduce.
+    *
+    * Scale shape: both codebooks broadcast (≈√n rows, under the
+    * [[MaxCoarseCells]] cap posture); each level is one broadcast
+    * crossJoin + a partial-aggregable min(struct) argmin — no rank
+    * window, no corpus self-join. The residual frame localCheckpoints
+    * once (it feeds the level-2 codebook filter AND the level-2
+    * assignment); materializing n×dim doubles once is the standard
+    * RQ index-build cost.
+    */
   def rqCodes(emb: DataFrame, dim: Int, centroidEvery: Int = 0,
               idCol: String = "vec_id",
               vecCol: String = "embedding"): DataFrame = {
@@ -1094,41 +1047,13 @@ object Knn {
       .where(col("neighbor_id") =!= col("query_id"))
       .withColumn("acos",
         dotD(col("qd"), col("rv")) / (col("qn") * sqrt(dotD(col("rv"), col("rv")))))
-    val wa = Window.partitionBy(col("query_id"))
-      .orderBy(col("acos").desc, col("neighbor_id"))
-    val cand = scored.withColumn("rk", row_number().over(wa))
-      .where(col("rk") <= rerank)
+    val cand = topK(scored, "acos", rerank, rank = "rk")
       .select("query_id", "neighbor_id")
-    val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("nvec"),
-      sqrt(dot(col(vecCol), col(vecCol), dim)).as("nn"))
-    val qx = queries.select(col(idCol).as("query_id"), col(vecCol).as("qvec"),
-      sqrt(dot(col(vecCol), col(vecCol), dim)).as("qn"))
-    val exact = c.join(broadcast(cand), Seq("neighbor_id"))
-      .join(broadcast(qx), Seq("query_id"))
-      .withColumn("cos",
-        dot(col("qvec"), col("nvec"), dim) / (col("qn") * col("nn")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id"))
-    exact.withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"),
-        round(col("cos"), 6).as("cos"))
+    exactRerank(corpus, queries, cand, dim, k, idCol, vecCol)
   }
 
   // --- IVF (inverted-file) ANN ---------------------------------------
 
-  /** IVF flat index with deterministic sampled centroids: every
-    * `centroidEvery`-th vector is a coarse centroid; corpus vectors are
-    * assigned to their nearest centroid's cell (one broadcast pass);
-    * a query probes its `nProbe` nearest cells and searches only those
-    * postings. At 100 TB the corpus scan + cell assignment is one
-    * broadcast-join stage and the search shuffles only the probed
-    * cells' postings — never the whole corpus.
-    *
-    * (A learned k-means codebook plugs in by swapping the centroid
-    * frame; sampled centroids keep the whole operator deterministic
-    * and engine-mirrorable.)
-    */
   /** Hard cap on the coarse codebook: 2^16 centroids × (dim floats +
     * id + norm) stays a few tens of MB broadcast even at dim 768. */
   val MaxCoarseCells = 65536
@@ -1243,11 +1168,12 @@ object Knn {
   private def coarseCents(corpus: DataFrame, dim: Int, centroidEvery: Int,
                           idCol: String, vecCol: String): DataFrame =
     corpus.where(col(idCol) % centroidEvery === (1 % centroidEvery))
-      .select(col(idCol).as("cid"), col(vecCol).as("cvec"),
-        sqrt(dot(col(vecCol), col(vecCol), dim)).as("cn"))
+      .select(normed(idCol, vecCol, dim, "cid", "cvec", "cn"): _*)
 
   /** Assign each row of `side` to its `n` nearest (max-cosine) cells
-    * of the broadcast centroid frame; ties break on min cid.
+    * of the broadcast centroid frame (cid, cvec, cn); ties break on min
+    * cid. `vdot` is [[dot]] for float centroids or [[dotD]] for the
+    * widened learned codebook — the one thing the callers vary.
     *
     * n == 1 (the corpus-side assignment — by far the bigger side) is
     * a PARTIAL-AGGREGABLE argmax instead of a rank window: the window
@@ -1261,12 +1187,11 @@ object Knn {
     * bit-identical. n > 1 (the |Q|-sized query probing) keeps the
     * window.
     */
-  private def nearestCells(cents: DataFrame, dim: Int)(
+  private def nearestCells(cents: DataFrame, vdot: (Column, Column) => Column)(
       side: DataFrame, id: String, vec: String, n: Int,
       norm: String): DataFrame = {
     val scored = side.crossJoin(broadcast(cents))
-      .withColumn("__ccos",
-        dot(col(vec), col("cvec"), dim) / (col(norm) * col("cn")))
+      .withColumn("__ccos", vdot(col(vec), col("cvec")) / (col(norm) * col("cn")))
     // CONTRACT (n == 1 branch): `side` must be exactly (id, vec, norm)
     // — the argmax rebuilds the frame as those three columns plus cid,
     // so any extra side column would be silently dropped (the n > 1
@@ -1295,71 +1220,66 @@ object Knn {
   /** The shared IVF coarse-cell assignment of a multi-leg eval:
     * `cCells` = (neighbor_id, nvec, nn, cid) — each corpus vector in
     * its single nearest cell; `qCells` = (query_id, qvec, qn, cid) —
-    * each query in its nProbe nearest cells. Both lazily
-    * localCheckpointed, so when several index legs of one job consume
-    * the same assignment (emb_ann_recall runs four coarse-cell legs)
-    * the centroid broadcast + assignment window run ONCE and every leg
-    * reads the materialized frames.
+    * each query in its nProbe nearest cells. When several index legs
+    * of one job consume the same assignment (emb_ann_recall runs four
+    * coarse-cell legs), the centroid broadcast + assignment run ONCE
+    * (see [[ivfCells]]).
     */
   case class IvfCells(cCells: DataFrame, qCells: DataFrame)
 
-  /** Build [[IvfCells]] with the same arithmetic as [[ivfTopK]]'s
-    * inline assignment (bit-identical results when passed back in).
+  /** Build [[IvfCells]] — the assignment [[ivfTopK]] and the IVF-PQ
+    * paths build for themselves when `shared` is empty, so passing it
+    * back in gives bit-identical results. Nothing is materialized: the
+    * legs share one PLAN object, so their assignment exchanges are
+    * byte-identical and AQE's ReusedExchange deduplicates them at
+    * runtime — sharing with zero materialization cost, which measures
+    * FASTER than checkpointing for the frame sizes an eval touches
+    * (checkpoints serialize the leg DAG; reused exchanges don't).
     */
   def ivfCells(corpus: DataFrame, queries: DataFrame, dim: Int,
                centroidEvery: Int = 0, nProbe: Int = 2,
                idCol: String = "vec_id",
                vecCol: String = "embedding"): IvfCells = {
-    val p = ivfCellsInline(corpus, queries, dim, centroidEvery, nProbe,
-      idCol, vecCol)
-    IvfCells(p.cCells.localCheckpoint(false), p.qCells.localCheckpoint(false))
-  }
-
-  /** [[ivfCells]] WITHOUT the checkpoints: the legs share one PLAN
-    * object, so their assignment exchanges are byte-identical and
-    * AQE's ReusedExchange deduplicates them at runtime — sharing with
-    * zero materialization cost, which measures FASTER than
-    * checkpointing for the frame sizes an eval touches (checkpoints
-    * serialize the leg DAG; reused exchanges don't).
-    */
-  def ivfCellsPlan(corpus: DataFrame, queries: DataFrame, dim: Int,
-                   centroidEvery: Int = 0, nProbe: Int = 2,
-                   idCol: String = "vec_id",
-                   vecCol: String = "embedding"): IvfCells =
-    ivfCellsInline(corpus, queries, dim, centroidEvery, nProbe, idCol, vecCol)
-
-  private def ivfCellsInline(corpus: DataFrame, queries: DataFrame, dim: Int,
-                             centroidEvery: Int, nProbe: Int,
-                             idCol: String, vecCol: String): IvfCells = {
     val cents = coarseCents(corpus, dim, resolveCoarse(corpus, centroidEvery),
       idCol, vecCol)
-    val cells = nearestCells(cents, dim) _
-    val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("nvec"),
-      sqrt(dot(col(vecCol), col(vecCol), dim)).as("nn"))
-    val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qvec"),
-      sqrt(dot(col(vecCol), col(vecCol), dim)).as("qn"))
-    IvfCells(cells(c, "neighbor_id", "nvec", 1, "nn"),
-      cells(q, "query_id", "qvec", nProbe, "qn"))
+    val cells = nearestCells(cents, dot(_, _, dim)) _
+    IvfCells(
+      cells(corpus.select(normed(idCol, vecCol, dim, "neighbor_id", "nvec", "nn"): _*),
+        "neighbor_id", "nvec", 1, "nn"),
+      cells(queries.select(normed(idCol, vecCol, dim, "query_id", "qvec", "qn"): _*),
+        "query_id", "qvec", nProbe, "qn"))
   }
 
+  /** The IVF candidate stage: each corpus row in `cCells` meets the
+    * queries in `qCells` that probed its `cid`, self-pairs excluded.
+    */
+  private def cellPairs(cCells: DataFrame, qCells: DataFrame): DataFrame =
+    cCells.join(qCells, Seq("cid")).where(col("neighbor_id") =!= col("query_id"))
+
+  /** Flat-IVF search: [[cellPairs]] ranked top-k by exact cosine `cos`. */
+  private def cellSearch(cCells: DataFrame, qCells: DataFrame, k: Int,
+                         cos: Column): DataFrame =
+    ranked(cellPairs(cCells, qCells).withColumn("cos", cos), "cos", k)
+
+  /** IVF flat index with deterministic sampled centroids: every
+    * `centroidEvery`-th vector is a coarse centroid; corpus vectors are
+    * assigned to their nearest centroid's cell (one broadcast pass);
+    * a query probes its `nProbe` nearest cells and searches only those
+    * postings. At 100 TB the corpus scan + cell assignment is one
+    * broadcast-join stage and the search shuffles only the probed
+    * cells' postings — never the whole corpus.
+    *
+    * (A learned k-means codebook plugs in by swapping the centroid
+    * frame; sampled centroids keep the whole operator deterministic
+    * and engine-mirrorable.)
+    */
   def ivfTopK(corpus: DataFrame, queries: DataFrame, dim: Int, k: Int,
               centroidEvery: Int = 0, nProbe: Int = 2,
               idCol: String = "vec_id", vecCol: String = "embedding",
               shared: Option[IvfCells] = None): DataFrame = {
     val IvfCells(cCells, qCells) = shared.getOrElse(
-      ivfCellsInline(corpus, queries, dim, centroidEvery, nProbe, idCol,
-        vecCol))
-
-    val joined = cCells.join(qCells, Seq("cid"))
-      .where(col("neighbor_id") =!= col("query_id"))
-      .withColumn("cos",
-        dot(col("qvec"), col("nvec"), dim) / (col("qn") * col("nn")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id"))
-    joined.withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"),
-        round(col("cos"), 6).as("cos"))
+      ivfCells(corpus, queries, dim, centroidEvery, nProbe, idCol, vecCol))
+    cellSearch(cCells, qCells, k, pairCos(dot(_, _, dim)))
   }
 
   // --- persisted IVF index --------------------------------------------
@@ -1378,9 +1298,8 @@ object Knn {
                     vecCol: String = "embedding"): Unit = {
     val cents = coarseCents(corpus, dim, resolveCoarse(corpus, centroidEvery),
       idCol, vecCol)
-    val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("nvec"),
-      sqrt(dot(col(vecCol), col(vecCol), dim)).as("nn"))
-    nearestCells(cents, dim)(c, "neighbor_id", "nvec", 1, "nn")
+    val c = corpus.select(normed(idCol, vecCol, dim, "neighbor_id", "nvec", "nn"): _*)
+    nearestCells(cents, dot(_, _, dim))(c, "neighbor_id", "nvec", 1, "nn")
       .withColumnRenamed("cid", "cell")
       .write.mode("overwrite").partitionBy("cell").parquet(s"$path/cells")
     cents.write.mode("overwrite").parquet(s"$path/centroids")
@@ -1399,9 +1318,8 @@ object Knn {
                        idCol: String = "vec_id",
                        vecCol: String = "embedding"): Unit = {
     val cents = spark.read.parquet(s"$path/centroids")
-    val c = batch.select(col(idCol).as("neighbor_id"), col(vecCol).as("nvec"),
-      sqrt(dot(col(vecCol), col(vecCol), dim)).as("nn"))
-    nearestCells(cents, dim)(c, "neighbor_id", "nvec", 1, "nn")
+    val c = batch.select(normed(idCol, vecCol, dim, "neighbor_id", "nvec", "nn"): _*)
+    nearestCells(cents, dot(_, _, dim))(c, "neighbor_id", "nvec", 1, "nn")
       .withColumnRenamed("cid", "cell")
       .write.mode("append").partitionBy("cell").parquet(s"$path/cells")
   }
@@ -1422,25 +1340,45 @@ object Knn {
                      idCol: String = "vec_id",
                      vecCol: String = "embedding"): DataFrame = {
     val cents = spark.read.parquet(s"$path/centroids")
-    val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qvec"),
-      sqrt(dot(col(vecCol), col(vecCol), dim)).as("qn"))
-    val qCells = nearestCells(cents, dim)(q, "query_id", "qvec", nProbe, "qn")
+    val q = queries.select(normed(idCol, vecCol, dim, "query_id", "qvec", "qn"): _*)
+    val qCells = nearestCells(cents, dot(_, _, dim))(
+        q, "query_id", "qvec", nProbe, "qn")
       .localCheckpoint(false) // probed twice: the id collect + the join
     val probed = qCells.select("cid").distinct().collect().map(_.getLong(0))
     val idx = spark.read.parquet(s"$path/cells")
       .where(col("cell").isin(probed: _*))
       .withColumnRenamed("cell", "cid")
-    val joined = idx.join(qCells, Seq("cid"))
-      .where(col("neighbor_id") =!= col("query_id"))
-      .withColumn("cos",
-        dot(col("qvec"), col("nvec"), dim) / (col("qn") * col("nn")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id"))
-    joined.withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"),
-        round(col("cos"), 6).as("cos"))
+    cellSearch(idx, qCells, k, pairCos(dot(_, _, dim)))
   }
+
+  /** The per-candidate ADC sum over the collected subspace rows, with
+    * a LOUD totality guard: each (query, neighbor) must contribute
+    * exactly `m` subspace rows — the (query_id[, cid], s, pcid) joins
+    * cross the full codebook today, so a shorter list can only mean a
+    * future book-pruning change silently lost subspaces, and an
+    * under-summed adist would corrupt the ranking without failing.
+    * raise_error sits on the never-taken branch, so codegen cost is
+    * one size() compare per candidate.
+    */
+  private def adcSum(ds: Column, m: Int): Column =
+    when(size(ds) === m,
+      aggregate(ds, lit(0.0), (a, x) => a + x.getField("d")))
+      .otherwise(raise_error(concat(
+        lit("ADC fold lost subspaces: saw "), size(ds).cast("string"),
+        lit(s" of $m"))))
+
+  /** The ADC ranking every IVF-PQ path ends in: each candidate pair's
+    * subspace codes (`codes`: neighbor_id, s, pcid) look up the query's
+    * distance table `dtab` on `keys`, and the m distances fold
+    * ([[adcSum]]) into `adist`, ranked ascending.
+    */
+  private def adcTopK(cand: DataFrame, codes: DataFrame, dtab: DataFrame,
+                      keys: Seq[String], m: Int, k: Int): DataFrame =
+    ranked(cand.join(codes, Seq("neighbor_id")).join(dtab, keys)
+      .groupBy("query_id", "neighbor_id")
+      .agg(array_sort(collect_list(struct(col("s"), col("d")))).as("ds"))
+      .select(col("query_id"), col("neighbor_id"),
+        adcSum(col("ds"), m).as("adist")), "adist", k, asc = true)
 
   /** IVF-PQ asymmetric-distance search — the classic large-corpus ANN
     * serving layout (an IVF cell index over PQ-coded vectors): a query
@@ -1460,22 +1398,6 @@ object Knn {
     * Output: (query_id, rank, neighbor_id, adist) — ranked on the raw
     * fold (bit-identical across engines), adist surfaced at 6dp.
     */
-  /** The per-candidate ADC sum over the collected subspace rows, with
-    * a LOUD totality guard: each (query, neighbor) must contribute
-    * exactly `m` subspace rows — the (query_id[, cid], s, pcid) joins
-    * cross the full codebook today, so a shorter list can only mean a
-    * future book-pruning change silently lost subspaces, and an
-    * under-summed adist would corrupt the ranking without failing.
-    * raise_error sits on the never-taken branch, so codegen cost is
-    * one size() compare per candidate.
-    */
-  private def adcSum(ds: Column, m: Int): Column =
-    when(size(ds) === m,
-      aggregate(ds, lit(0.0), (a, x) => a + x.getField("d")))
-      .otherwise(raise_error(concat(
-        lit("ADC fold lost subspaces: saw "), size(ds).cast("string"),
-        lit(s" of $m"))))
-
   def ivfPqTopK(corpus: DataFrame, queries: DataFrame, dim: Int, k: Int,
                 m: Int = 4, coarseEvery: Int = 0, pqEvery: Int = 0,
                 nProbe: Int = 2, idCol: String = "vec_id",
@@ -1485,9 +1407,9 @@ object Knn {
     val subDim = dim / m
     val pqEv = resolvePq(corpus, pqEvery)
     val parts = shared.getOrElse(
-      ivfCellsInline(corpus, queries, dim, coarseEvery, nProbe, idCol, vecCol))
-    val cCells = parts.cCells.select("neighbor_id", "cid")
-    val qCells = parts.qCells.select("query_id", "cid")
+      ivfCells(corpus, queries, dim, coarseEvery, nProbe, idCol, vecCol))
+    val cand = cellPairs(parts.cCells.select("neighbor_id", "cid"),
+      parts.qCells.select("query_id", "cid")).select("query_id", "neighbor_id")
 
     val codes = pqAssign(corpus, dim, m, pqEv, idCol, vecCol)
       .select(col(idCol).as("neighbor_id"), col("s"),
@@ -1501,21 +1423,7 @@ object Knn {
         org.apache.spark.sql.graft.GraftExpressions
           .vec_sub_l2(col("qvec"), col("pcvec"), col("s"), subDim).as("d"))
 
-    val scored = cCells.join(qCells, Seq("cid"))
-      .where(col("neighbor_id") =!= col("query_id"))
-      .select("query_id", "neighbor_id")
-      .join(codes, Seq("neighbor_id"))
-      .join(dtab, Seq("query_id", "s", "pcid"))
-      .groupBy("query_id", "neighbor_id")
-      .agg(array_sort(collect_list(struct(col("s"), col("d")))).as("ds"))
-      .select(col("query_id"), col("neighbor_id"),
-        adcSum(col("ds"), m).as("adist"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("adist"), col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"),
-        round(col("adist"), 6).as("adist"))
+    adcTopK(cand, codes, dtab, Seq("query_id", "s", "pcid"), m, k)
   }
 
   /** [[ivfPqTopK]] with the LEARNED per-subspace PQ codebook
@@ -1535,9 +1443,9 @@ object Knn {
     val subDim = dim / m
     val pqEv = resolvePq(corpus, pqEvery)
     val parts = shared.getOrElse(
-      ivfCellsInline(corpus, queries, dim, coarseEvery, nProbe, idCol, vecCol))
-    val cCells = parts.cCells.select("neighbor_id", "cid")
-    val qCells = parts.qCells.select("query_id", "cid")
+      ivfCells(corpus, queries, dim, coarseEvery, nProbe, idCol, vecCol))
+    val cand = cellPairs(parts.cCells.select("neighbor_id", "cid"),
+      parts.qCells.select("query_id", "cid")).select("query_id", "neighbor_id")
 
     val book = cb.getOrElse(
       pqCodebookLearned(corpus, dim, m, pqEv, idCol, vecCol)
@@ -1552,21 +1460,7 @@ object Knn {
         org.apache.spark.sql.graft.GraftExpressions
           .vec_sub_l2_d(col("sv"), col("cs"), lit(0), subDim).as("d"))
 
-    val scored = cCells.join(qCells, Seq("cid"))
-      .where(col("neighbor_id") =!= col("query_id"))
-      .select("query_id", "neighbor_id")
-      .join(codes, Seq("neighbor_id"))
-      .join(dtab, Seq("query_id", "s", "pcid"))
-      .groupBy("query_id", "neighbor_id")
-      .agg(array_sort(collect_list(struct(col("s"), col("d")))).as("ds"))
-      .select(col("query_id"), col("neighbor_id"),
-        adcSum(col("ds"), m).as("adist"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("adist"), col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"),
-        round(col("adist"), 6).as("adist"))
+    adcTopK(cand, codes, dtab, Seq("query_id", "s", "pcid"), m, k)
   }
 
   /** IVF-PQ search with EXACT rerank — the standard two-stage serving
@@ -1633,8 +1527,7 @@ object Knn {
     val pqEv = resolvePq(corpus, pqEvery)
     val coarseEv = resolveCoarse(corpus, coarseEvery)
     val parts = shared.getOrElse(
-      ivfCellsInline(corpus, queries, dim, coarseEvery, nProbe, idCol,
-        vecCol))
+      ivfCells(corpus, queries, dim, coarseEvery, nProbe, idCol, vecCol))
     val cents = corpus.where(col(idCol) % coarseEv === (1 % coarseEv))
       .select(col(idCol).as("cid"), castD(col(vecCol)).as("cvd"))
     val cres = parts.cCells.select(col("neighbor_id"), col("nvec"),
@@ -1666,71 +1559,33 @@ object Knn {
       .crossJoin(broadcast(book))
       .select(col("query_id"), col("cid"), col("s"), col("pcid"),
         dq.as("d"))
-    val cand = parts.cCells.select("neighbor_id", "cid")
-      .join(parts.qCells.select("query_id", "cid"), Seq("cid"))
-      .where(col("neighbor_id") =!= col("query_id"))
-    val scored = cand
-      .join(codes, Seq("neighbor_id"))
-      .join(dtab, Seq("query_id", "cid", "s", "pcid"))
-      .groupBy("query_id", "neighbor_id")
-      .agg(array_sort(collect_list(struct(col("s"), col("d")))).as("ds"))
-      .select(col("query_id"), col("neighbor_id"),
-        adcSum(col("ds"), m).as("adist"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("adist"), col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"),
-        round(col("adist"), 6).as("adist"))
+    val cand = cellPairs(parts.cCells.select("neighbor_id", "cid"),
+      parts.qCells.select("query_id", "cid"))
+    adcTopK(cand, codes, dtab, Seq("query_id", "cid", "s", "pcid"), m, k)
   }
 
-  /** Exact-cosine rerank of a small (query_id, neighbor_id) candidate
-    * frame — the second stage every two-stage serving path shares
-    * ([[ivfPqRerankTopK]], and any eval that already holds an
-    * approximate ranking). The candidate list is BROADCAST against
-    * the corpus scan for the vector fetch — the corpus never shuffles.
+  /** Exact-cosine rerank of a small (query_id, neighbor_id, ...)
+    * candidate frame — the second stage every two-stage serving path
+    * shares ([[sqSearchTopK]], [[bqSearchTopK]], [[rqSearchTopK]],
+    * [[ivfPqRerankTopK]], and any eval that already holds an
+    * approximate ranking). Any further candidate column rides through
+    * to the output between neighbor_id and cos (bq's `ham`). The
+    * candidate list is BROADCAST against the corpus scan for the
+    * vector fetch — the corpus never shuffles.
     */
   def exactRerank(corpus: DataFrame, queries: DataFrame, cand: DataFrame,
                   dim: Int, k: Int, idCol: String = "vec_id",
                   vecCol: String = "embedding"): DataFrame = {
-    val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("nvec"),
-      sqrt(dot(col(vecCol), col(vecCol), dim)).as("nn"))
-    val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qvec"),
-      sqrt(dot(col(vecCol), col(vecCol), dim)).as("qn"))
-    val exact = c.join(broadcast(cand), Seq("neighbor_id"))
+    val q = queries.select(normed(idCol, vecCol, dim, "query_id", "qvec", "qn"): _*)
+    val exact = corpus
+      .select(normed(idCol, vecCol, dim, "neighbor_id", "nvec", "nn"): _*)
+      .join(broadcast(cand), Seq("neighbor_id"))
       .join(broadcast(q), Seq("query_id"))
-      .withColumn("cos",
-        dot(col("qvec"), col("nvec"), dim) / (col("qn") * col("nn")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id"))
-    exact.withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"),
-        round(col("cos"), 6).as("cos"))
+      .withColumn("cos", pairCos(dot(_, _, dim)))
+    ranked(exact, "cos", k,
+      extra = cand.columns.toSeq.diff(Seq("query_id", "neighbor_id")))
   }
 
-  /** Top principal direction of the (centered) embedding corpus via
-    * distributed power iteration — the dominant-component primitive
-    * behind embedding whitening / all-but-the-top post-processing.
-    * Each round computes u = Xᶜᵀ(Xᶜ·v) without ever materializing the
-    * d×d covariance: a scan produces sᵢ = ⟨xᵢ−μ, v⟩ per row, the
-    * per-dimension reduce sums sᵢ·(xᵢ−μ)d, and v ← u/‖u‖. Returns
-    * (dim 1..d, v) — the unit direction after `iters` rounds.
-    *
-    * Cross-engine parity: every CROSS-ROW sum is snapped to integer
-    * micro-units per row first (round(t·1e6) summed as BIGINT — the
-    * order-independent convention), μ comes from the same snapped sum,
-    * and v re-rounds to 6dp after each normalization, so both engines
-    * carry identical vectors into the next round. Per-row arithmetic
-    * (the dot folds) runs in index order on both sides.
-    *
-    * Scale shape: per round, one corpus scan + one (pos)-keyed
-    * partial-agg'd shuffle reducing to `dim` rows — the centroids
-    * pattern; μ and v ride broadcast 1-row arrays. The d×d covariance
-    * never exists anywhere. Rounds are a bounded driver loop over lazy
-    * plans (kmeans's shape), each round's d-row result lazily
-    * checkpointed so round r+1 doesn't re-derive rounds 1..r.
-    */
   /** Per-dim corpus mean as a 1-row array frame (exact integer
     * micro-sum / n / 1e6 — the centering pass [[pcaTopVec]] and
     * [[abtt]] share).
@@ -1781,6 +1636,28 @@ object Knn {
     v
   }
 
+  /** Top principal direction of the (centered) embedding corpus via
+    * distributed power iteration — the dominant-component primitive
+    * behind embedding whitening / all-but-the-top post-processing.
+    * Each round computes u = Xᶜᵀ(Xᶜ·v) without ever materializing the
+    * d×d covariance: a scan produces sᵢ = ⟨xᵢ−μ, v⟩ per row, the
+    * per-dimension reduce sums sᵢ·(xᵢ−μ)d, and v ← u/‖u‖. Returns
+    * (dim 1..d, v) — the unit direction after `iters` rounds.
+    *
+    * Cross-engine parity: every CROSS-ROW sum is snapped to integer
+    * micro-units per row first (round(t·1e6) summed as BIGINT — the
+    * order-independent convention), μ comes from the same snapped sum,
+    * and v re-rounds to 6dp after each normalization, so both engines
+    * carry identical vectors into the next round. Per-row arithmetic
+    * (the dot folds) runs in index order on both sides.
+    *
+    * Scale shape: per round, one corpus scan + one (pos)-keyed
+    * partial-agg'd shuffle reducing to `dim` rows — the centroids
+    * pattern; μ and v ride broadcast 1-row arrays. The d×d covariance
+    * never exists anywhere. Rounds are a bounded driver loop over lazy
+    * plans (kmeans's shape), each round's d-row result lazily
+    * checkpointed so round r+1 doesn't re-derive rounds 1..r.
+    */
   def pcaTop(emb: DataFrame, dim: Int, iters: Int = 2,
              idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
     pcaTopVec(emb, dim, iters, vecCol)
@@ -2081,42 +1958,11 @@ object Knn {
       df.select(col(idCol).as(id),
         castD(col(vecCol)).as(vec),
         sqrt(dot(col(vecCol), col(vecCol), dim)).as(norm))
-    // corpus top-1 as the partial-aggregable argmax (the nearestCells
-    // n == 1 shape — identical total order, map-side combined);
-    // queries keep the |Q|-sized nProbe window
-    def cells(s: DataFrame, id: String, vec: String, norm: String,
-              n: Int): DataFrame = {
-      val scored = s.crossJoin(broadcast(cents))
-        .withColumn("__ccos",
-          dotD(col(vec), col("cvec")) / (col(norm) * col("cn")))
-      if (n == 1)
-        scored.groupBy(col(id))
-          .agg(max(struct(col("__ccos"), (-col("cid")).as("ncid"))).as("__b"),
-            first(col(vec)).as(vec), first(col(norm)).as(norm))
-          .select(col(id), col(vec), col(norm), (-col("__b.ncid")).as("cid"))
-      else {
-        val w = Window.partitionBy(col(id))
-          .orderBy(col("__ccos").desc, col("cid"))
-        scored
-          .withColumn("__crk", row_number().over(w))
-          .where(col("__crk") <= n)
-          .drop("cvec", "cn", "__ccos", "__crk")
-      }
-    }
-    val cCells = cells(side(corpus, "neighbor_id", "nvec", "nn"),
-      "neighbor_id", "nvec", "nn", 1)
-    val qCells = cells(side(queries, "query_id", "qvec", "qn"),
-      "query_id", "qvec", "qn", nProbe)
-    val joined = cCells.join(qCells, Seq("cid"))
-      .where(col("neighbor_id") =!= col("query_id"))
-      .withColumn("cos",
-        dotD(col("qvec"), col("nvec")) / (col("qn") * col("nn")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id"))
-    joined.withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"),
-        round(col("cos"), 6).as("cos"))
+    val cells = nearestCells(cents, dotD) _
+    cellSearch(
+      cells(side(corpus, "neighbor_id", "nvec", "nn"), "neighbor_id", "nvec", 1, "nn"),
+      cells(side(queries, "query_id", "qvec", "qn"), "query_id", "qvec", nProbe, "qn"),
+      k, pairCos(dotD))
   }
 
   /** Embedding near-dup pairs above a cosine threshold, blocked by the
@@ -2147,23 +1993,17 @@ object Knn {
                         idCol: String = "vec_id",
                         vecCol: String = "embedding"): DataFrame = {
     val np = if (nPlanes > 0) nPlanes else autoPlanes(cachedCount(emb))
-    def cells(v: Column): Column = array((0 until nTables).map { t =>
-      struct(lit(t).as("tb"), bucketCode(v, dim, np, t * np).as("bk"))
-    }: _*)
     // r16: the knnGraph-style (tb, bk) width pin was tried here and
     // measured SLOWER paired (+0.46 emb_dedup_cosine, +0.24 _fixed,
     // +0.14 emb_semdedup): these callers' inputs are already fanned
     // out (Par.fanout whitelist), so the pin only added an exchange —
     // unlike knnGraph, whose cell-population window forces the (tb,
     // bk) exchange regardless. The r15 shape stays.
-    val banded = emb.select(col(idCol).as("id"), col(vecCol).as("v"),
-        sqrt(dot(col(vecCol), col(vecCol), dim)).as("n"),
-        explode(cells(col(vecCol))).as("tbk"))
-      .select(col("id"), col("v"), col("n"),
-        col("tbk.tb").as("tb"), col("tbk.bk").as("bk"))
-    val a = banded.select(col("id").as("id_a"), col("v").as("va"),
+    val cells = lshBand(emb, normed(idCol, vecCol, dim, "id", "v", "n"),
+      col(vecCol), dim, np, nTables)
+    val a = cells.select(col("id").as("id_a"), col("v").as("va"),
       col("n").as("na"), col("tb"), col("bk"))
-    val b = banded.select(col("id").as("id_b"), col("v").as("vb"),
+    val b = cells.select(col("id").as("id_b"), col("v").as("vb"),
       col("n").as("nb"), col("tb"), col("bk"))
     a.join(b, Seq("tb", "bk")).where(col("id_a") < col("id_b"))
       .withColumn("cos", dot(col("va"), col("vb"), dim) / (col("na") * col("nb")))
@@ -2184,10 +2024,10 @@ object Knn {
                      vecCol: String = "embedding"): DataFrame = {
     // r16: the width pin was tried here too and measured slower paired
     // (see cosineDupPairsLsh) — the r14 shape stays
-    val a = emb.select(col(blockCol).as("blk"), col(idCol).as("id_a"),
-      col(vecCol).as("va"), sqrt(dot(col(vecCol), col(vecCol), dim)).as("na"))
-    val b = emb.select(col(blockCol).as("blk"), col(idCol).as("id_b"),
-      col(vecCol).as("vb"), sqrt(dot(col(vecCol), col(vecCol), dim)).as("nb"))
+    val a = emb.select(col(blockCol).as("blk") +:
+      normed(idCol, vecCol, dim, "id_a", "va", "na"): _*)
+    val b = emb.select(col(blockCol).as("blk") +:
+      normed(idCol, vecCol, dim, "id_b", "vb", "nb"): _*)
     a.join(b, Seq("blk")).where(col("id_a") < col("id_b"))
       .withColumn("cos",
         dot(col("va"), col("vb"), dim) / (col("na") * col("nb")))
@@ -2279,14 +2119,11 @@ object Knn {
   def rangeSearch(corpus: DataFrame, queries: DataFrame, dim: Int,
                   tau: Double, idCol: String = "vec_id",
                   vecCol: String = "embedding"): DataFrame = {
-    val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qvec"),
-      sqrt(dot(col(vecCol), col(vecCol), dim)).as("qn"))
-    corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("nvec"),
-      sqrt(dot(col(vecCol), col(vecCol), dim)).as("nn"))
+    val q = queries.select(normed(idCol, vecCol, dim, "query_id", "qvec", "qn"): _*)
+    corpus.select(normed(idCol, vecCol, dim, "neighbor_id", "nvec", "nn"): _*)
       .crossJoin(broadcast(q))
       .where(col("neighbor_id") =!= col("query_id"))
-      .withColumn("cos",
-        dot(col("qvec"), col("nvec"), dim) / (col("qn") * col("nn")))
+      .withColumn("cos", pairCos(dot(_, _, dim)))
       .where(col("cos") >= tau)
       .select(col("query_id"), col("neighbor_id"),
         round(col("cos"), 6).as("cos"))
@@ -2313,17 +2150,13 @@ object Knn {
               k: Int = 5, pool: Int = 20,
               wRel: Double = 0.7, wDiv: Double = 0.3,
               idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qvec"),
-      sqrt(dot(col(vecCol), col(vecCol), dim)).as("qn"))
-    val cand = corpus.select(col(idCol).as("cid"), col(vecCol).as("cvec"),
-        sqrt(dot(col(vecCol), col(vecCol), dim)).as("cn"))
+    val q = queries.select(normed(idCol, vecCol, dim, "query_id", "qvec", "qn"): _*)
+    val scored = corpus.select(normed(idCol, vecCol, dim, "cid", "cvec", "cn"): _*)
       .crossJoin(broadcast(q))
       .where(col("cid") =!= col("query_id"))
       .withColumn("rel",
         dot(col("qvec"), col("cvec"), dim) / (col("qn") * col("cn")))
-      .withColumn("rk", row_number().over(Window.partitionBy("query_id")
-        .orderBy(col("rel").desc, col("cid"))))
-      .where(col("rk") <= pool)
+    val cand = topK(scored, "rel", pool, rank = "rk", nb = "cid")
     val arr = cand.groupBy("query_id")
       .agg(sort_array(collect_list(struct(col("rk"), col("cid"),
         col("cvec"), col("cn"), col("rel")))).as("cands"))

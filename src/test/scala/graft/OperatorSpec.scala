@@ -1100,6 +1100,30 @@ class OperatorSpec extends AnyFunSuite {
     assert(lsh.forall { case (k, c) => exact.get(k).contains(c) })
   }
 
+  test("Knn.lshCandidatesMinTable at min_tb < t ranks as lshTopK(nTables = t)") {
+    // emb_lsh_table_curve bands once over 4 tables and reads leg t as
+    // min_tb < t: sound only while this equality holds
+    val rnd = new scala.util.Random(7)
+    val emb = (0 until 400).map(i =>
+      (i.toLong, Array.fill(16)(rnd.nextGaussian().toFloat)))
+      .toDF("vec_id", "embedding")
+    val q = emb.where($"vec_id" % 20 === 0)
+    val cand = Knn.lshCandidatesMinTable(emb, q, 16)
+    val w = org.apache.spark.sql.expressions.Window.partitionBy("query_id")
+      .orderBy(col("cos").desc, col("neighbor_id"))
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3))).toSet
+    for (t <- Seq(1, 2, 4)) {
+      val fromMin = rows(cand.where(col("min_tb") < t)
+        .withColumn("rank", row_number().over(w)).where(col("rank") <= 3)
+        .select(col("query_id"), col("rank"), col("neighbor_id"),
+          round(col("cos"), 6)))
+      val direct = rows(Knn.lshTopK(emb, q, 16, 3, nTables = t))
+      assert(direct.nonEmpty, s"t=$t")
+      assert(fromMin == direct, s"t=$t")
+    }
+  }
+
   test("Multimodal.phashPairs: identical payloads pair at hamming 0") {
     val docs = Seq((1L, "the same picture bytes"), (2L, "the same picture bytes"),
       (3L, "completely different content here")).toDF("doc_id", "text")

@@ -7,6 +7,8 @@ import org.scalatest.funsuite.AnyFunSuite
 /** A plan's shape depends only on the query and its session: every
   * session in `src/main` is built by [[GraftSession.configure]], and no
   * JVM system property or mutable global steers what the engine plans.
+  * Knn keeps one copy each of the LSH band geometry and the per-query
+  * rank that the DuckDB oracles mirror.
   * Checked over the source text, so a new main or toggle fails here
   * before it can reach a measurement.
   */
@@ -47,5 +49,22 @@ class SessionInvariantSpec extends AnyFunSuite {
     assert(planning.exists(_._1.endsWith("graft/SparkEntry.scala")))
     val vars = offenders(planning, """@volatile\b[^=\n]*\bvar\b""")
     assert(vars.isEmpty, vars.mkString(", "))
+  }
+
+  test("Knn bands LSH tables and ranks per-query top-k in one helper each") {
+    // the DuckDB oracles mirror one band geometry (sqlLshCtes) and one
+    // rank order; a second copy in Knn could drift from both unseen
+    val knn = sources.collectFirst {
+      case (p, text) if p.endsWith("graft/operators/Knn.scala") => text
+    }.get
+    // one chunk per member of object Knn, up to the next member
+    val starts = """(?m)^  (?:private )?(?:def|val) (\w+)""".r
+      .findAllMatchIn(knn).toList
+    val members = starts.zip(starts.drop(1).map(_.start) :+ knn.length)
+      .map { case (m, end) => m.group(1) -> knn.substring(m.start, end) }
+    def callers(re: String): Seq[String] =
+      members.collect { case (name, body) if re.r.findFirstIn(body).nonEmpty => name }
+    assert(callers("""(?<!def )\bbucketCode\(""") == Seq("lshBand"))
+    assert(callers("""Window\.partitionBy\((?:col\()?"query_id"""") == Seq("topK"))
   }
 }
