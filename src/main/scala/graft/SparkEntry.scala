@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, RelationalGroupedDataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -52,59 +52,51 @@ object SparkEntry {
   private def events(s: SparkSession, dir: String): DataFrame =
     TimeIndex.normalizeUs(tbl(s, dir, "events"), "ts")
 
-  /** A per-process scratch directory for the built-once tables below,
-    * deleted with its contents at JVM exit.
+  /** Tables built once per process and dataset, keyed by (kind,
+    * dataset dir). Concurrent query runners may race, so the build is
+    * serialized and idempotent (same data, same deterministic layout).
+    * `build` writes into a fresh `kind`-prefixed temp dir, deleted with
+    * its contents at JVM exit; the dir is returned.
     */
-  private def processTempDir(prefix: String): String = {
-    val dir = java.nio.file.Files.createTempDirectory(prefix).toFile
-    sys.addShutdownHook(org.apache.commons.io.FileUtils.deleteQuietly(dir))
-    dir.toString
-  }
-
-  /** Per-dataset persisted IVF index paths (build once per process —
-    * concurrent query runners may race, so the build is serialized and
-    * idempotent: same data, same deterministic layout).
-    */
-  private val ivfIndexDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private def ivfIndexFor(s: SparkSession, dir: String,
-                          emb: DataFrame): String =
-    ivfIndexDirs.computeIfAbsent(dir, { _ =>
-      val path = processTempDir("graft_ivf_idx")
-      Knn.writeIvfIndex(emb, EmbDim, path)
-      path
+  private val builtDirs =
+    new java.util.concurrent.ConcurrentHashMap[(String, String), String]()
+  private def builtOnce(kind: String, dir: String)(build: String => Unit): String =
+    builtDirs.computeIfAbsent((kind, dir), { _ =>
+      val path = java.nio.file.Files.createTempDirectory(kind).toFile
+      sys.addShutdownHook(org.apache.commons.io.FileUtils.deleteQuietly(path))
+      build(path.toString)
+      path.toString
     })
 
-  /** Per-dataset z-ordered lake layout (events clustered on
-    * (user_id, value) + its file manifest), built once per process —
-    * the ivfIndexFor convention: the warmup pass pays the write, timed
-    * passes measure the manifest-pruned read.
+  /** Per-dataset persisted IVF index path: the bench's warmup pass pays
+    * the build, timed passes measure the search.
     */
-  private val lakeZDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private def ivfIndexFor(s: SparkSession, dir: String,
+                          emb: DataFrame): String =
+    builtOnce("graft_ivf_idx", dir)(Knn.writeIvfIndex(emb, EmbDim, _))
+
+  /** Per-dataset z-ordered lake layout (events clustered on
+    * (user_id, value) + its file manifest) — the ivfIndexFor
+    * convention: the warmup pass pays the write, timed passes measure
+    * the manifest-pruned read.
+    */
   private def lakeZFor(s: SparkSession, dir: String): String =
-    lakeZDirs.computeIfAbsent(dir, { _ =>
-      val path = processTempDir("graft_lake_z")
+    builtOnce("graft_lake_z", dir) { path =>
       Lake.writeZOrdered(
         events(s, dir).select("event_id", "user_id", "event_type", "value"),
         Seq("user_id", "value"), path, nFiles = 8)
-      path
-    })
+    }
 
   /** Per-dataset snapshot table (documents committed as two versions:
-    * even doc_ids, then odd), built once per process. Versions are
-    * immutable, so reads at v=1/v=2 are bit-stable across passes.
+    * even doc_ids, then odd). Versions are immutable, so reads at
+    * v=1/v=2 are bit-stable across passes.
     */
-  private val lakeSnapDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def lakeSnapFor(s: SparkSession, dir: String): String =
-    lakeSnapDirs.computeIfAbsent(dir, { _ =>
-      val path = processTempDir("graft_lake_snap")
+    builtOnce("graft_lake_snap", dir) { path =>
       val docs = tbl(s, dir, "documents").select("doc_id", "text")
       Lake.snapshotAppend(docs.where(col("doc_id") % 2 === 0), path)
       Lake.snapshotAppend(docs.where(col("doc_id") % 2 === 1), path)
-      path
-    })
+    }
 
   /** Per-dataset MERGE-INTO table: even doc_ids committed, then one
     * upsert whose update rows rewrite the %10==2 keys and whose
@@ -112,11 +104,8 @@ object SparkEntry {
     * table so the oracle can recompute the expected post-merge
     * content exactly.
     */
-  private val lakeMergeDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def lakeMergeFor(s: SparkSession, dir: String): String =
-    lakeMergeDirs.computeIfAbsent(dir, { _ =>
-      val path = processTempDir("graft_lake_merge")
+    builtOnce("graft_lake_merge", dir) { path =>
       val docs = tbl(s, dir, "documents").select("doc_id", "text")
       Lake.snapshotAppend(docs.where(col("doc_id") % 2 === 0), path)
       val updates = docs
@@ -124,8 +113,7 @@ object SparkEntry {
         .select(col("doc_id"),
           concat(lit("U:"), substring(col("text"), 1, 20)).as("text"))
       Lake.snapshotMergeInto(s, path, updates, "doc_id")
-      path
-    })
+    }
 
   /** Per-dataset streaming-CDC table: documents applied through
     * [[Lake.streamMergeInto]] as TWO file-source micro-batches.
@@ -135,15 +123,11 @@ object SparkEntry {
     * %10==1 inserts at seq=3. The every-2-batches compact+expire
     * maintenance hook is ON (keepLast=1), so the maintenance path
     * (compactSnapshot + expireSnapshots) sits under the oracle gate
-    * too: content must survive the rewrite bit-exactly. Built once
-    * per process (the lakeMergeFor convention).
+    * too: content must survive the rewrite bit-exactly.
     */
-  private val lakeStreamDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def lakeStreamFor(s: SparkSession, dir: String): String =
-    lakeStreamDirs.computeIfAbsent(dir, { _ =>
-      val base = processTempDir("graft_lake_cdc")
-      val src = s"$base/src"; val tblDir = s"$base/tbl"; val ck = s"$base/ck"
+    builtOnce("graft_lake_cdc", dir) { base =>
+      val src = s"$base/src"; val ck = s"$base/ck"
       val docs = tbl(s, dir, "documents").select("doc_id", "text")
       val b0 = docs.where(col("doc_id") % 2 === 0)
         .select(col("doc_id"), col("text"), lit(1L).as("seq"))
@@ -161,15 +145,14 @@ object SparkEntry {
       // cross-trigger caveat)
       b0.coalesce(1).write.parquet(s"$src/b0")
       val stream = s.readStream.schema(b0.schema).parquet(s"$src/*")
-      val q = Lake.streamMergeInto(stream, tblDir, "doc_id", "seq", ck,
+      val q = Lake.streamMergeInto(stream, s"$base/tbl", "doc_id", "seq", ck,
         compactEvery = 2, keepLast = 1)
       try {
         q.processAllAvailable()
         b1.coalesce(1).write.parquet(s"$src/b1")
         q.processAllAvailable()
       } finally q.stop()
-      tblDir
-    })
+    } + "/tbl"
 
   // time constants (epoch µs)
   private val UsMin = 60L * 1000000L
@@ -3465,6 +3448,75 @@ object SparkEntry {
 
   private val EmbDim = 64
 
+  // -------------------------------------------------- ANN eval vocabulary
+
+  /** EVERY ANN/retrieval query batch is the CONSTANT base-copy set
+    * (vec_id % 100 = 0 AND vec_id < 1e8, which pins it to the original
+    * rows under ScaleUp's +1e8-per-replica id shift): a serving batch's
+    * |Q| is an operational constant, so no registered plan — search,
+    * recall eval, probe curve, rerank — charges O(n·|Q|) = O(n²/100)
+    * work that no deployment pays. The pin is a no-op on the
+    * driver-generated test tables, whose ids all sit below 1e8. The
+    * oracles read the same constants through [[sqlAnnQueries]].
+    */
+  private val AnnQueryEvery = 100
+  private val AnnQueryIdMax = 100000000L
+
+  private def annQueries(emb: DataFrame): DataFrame =
+    emb.where(col("vec_id") % AnnQueryEvery === 0 &&
+      col("vec_id") < AnnQueryIdMax)
+
+  /** The (query, neighbor) keys every ANN eval joins truth to candidates on. */
+  private val AnnKeys = Seq("query_id", "neighbor_id")
+
+  /** The ANN evals' ground truth: brute-force cosine top-3 of the
+    * batch `q`, checkpointed once because it is the left side of every
+    * recall join in the query.
+    */
+  private def bruteTruth(emb: DataFrame, q: DataFrame): DataFrame =
+    Knn.bruteTopK(emb, q, EmbDim, 3).select("query_id", "neighbor_id")
+      .localCheckpoint(false)
+
+  /** The recall score every eval ends in, over truth rows left-joined
+    * to a candidate tag `__h`: n_truth counts truth rows, n_hits the
+    * ones a candidate found, recall = n_hits / n_truth at 6dp and NULL
+    * on an empty truth (a bare 0/0 raises DIVIDE_BY_ZERO under ANSI,
+    * where DuckDB reads NULL). [[sqlRecall]] is its oracle twin.
+    */
+  private def recallAgg(hits: RelationalGroupedDataset): DataFrame = {
+    val nTruth = count(lit(1))
+    val nHits = count(col("__h"))
+    hits.agg(nTruth.as("n_truth"), nHits.as("n_hits"),
+      when(nTruth === 0, lit(null).cast("double"))
+        .otherwise(round(nHits.cast("double") / nTruth, 6)).as("recall"))
+  }
+
+  /** Recall of one candidate frame: a single (n_truth, n_hits, recall)
+    * row, also on an empty truth. `cand` must be distinct per `keys`.
+    */
+  private def recall(truth: DataFrame, cand: DataFrame,
+                     keys: Seq[String] = AnnKeys): DataFrame =
+    recallAgg(truth.join(cand.select(keys.map(col): _*)
+      .withColumn("__h", lit(1)), keys, "left").groupBy())
+
+  /** Recall of several candidate legs in ONE left join: the truth,
+    * exploded once per method name, against the method-tagged union of
+    * the legs, grouped by method — one (method, n_truth, n_hits,
+    * recall) row per leg, and no row on an empty truth. Each leg must
+    * be distinct per `keys`, so join multiplicity is 1 and the counts
+    * equal per-leg [[recall]]s.
+    */
+  private def recallByMethod(truth: DataFrame, legs: Seq[(String, DataFrame)],
+                             keys: Seq[String] = AnnKeys): DataFrame = {
+    val cand = legs.map { case (m, df) =>
+        df.select(lit(m).as("method") +: keys.map(col) :+ lit(1).as("__h"): _*)
+      }.reduce(_ unionByName _)
+    recallAgg(truth.select(keys.map(col) :+
+        explode(array(legs.map(l => lit(l._1)): _*)).as("method"): _*)
+      .join(cand, "method" +: keys, "left").groupBy(col("method")))
+      .select(col("method"), col("n_truth"), col("n_hits"), col("recall"))
+  }
+
   /** doc_blocklist's fixed wordlist (shared with its oracle). */
   private val BlockTerms = Seq("slow", "skew", "stale")
 
@@ -3524,13 +3576,8 @@ object SparkEntry {
       .select(least(col("id_p"), col("id_c")).as("id_a"),
         greatest(col("id_p"), col("id_c")).as("id_b"))
       .distinct()
-    val cand = Multimodal.phashPairs(s, all)
-      .select(col("id_a"), col("id_b")).withColumn("__h", lit(1))
-    truth.join(cand, Seq("id_a", "id_b"), "left")
-      .agg(count(lit(1)).as("n_true"), count(col("__h")).as("n_hits"),
-        when(count(lit(1)) === 0, lit(null).cast("double"))
-          .otherwise(round(count(col("__h")).cast("double") /
-            count(lit(1)), 6)).as("recall"))
+    recall(truth, Multimodal.phashPairs(s, all), Seq("id_a", "id_b"))
+      .withColumnRenamed("n_truth", "n_true")
   }
 
   private def dataQueries: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -3635,11 +3682,6 @@ object SparkEntry {
     // against exact-Jaccard ground truth (pairs with J >= 0.5). The
     // number that says whether the approximate candidate generators
     // are safe to point at the full corpus.
-    // r15 shape: ONE tokenize+shingle pass shared by the exact truth
-    // and the MinHash signatures (the simhash leg tokenizes
-    // differently), and ONE method-tagged eval join replacing the
-    // per-leg join+agg pairs — values identical (join multiplicity is
-    // 1: candidate frames are distinct per (id_a, id_b)).
     "doc_dedup_eval" -> { (s, dir) =>
       // r16: fanout tried (the signature passes profile as single-task
       // stages) and measured SLOWER paired (+0.19/+0.21 s, two pairs in
@@ -3653,16 +3695,11 @@ object SparkEntry {
       // the (id, sids) checkpoint copies cost more than re-running the
       // native shingle hash), so the r14 per-leg broadcast-join shape
       // stays
-      def evalOf(cand: DataFrame, method: String): DataFrame =
-        truth.join(cand.select(col("id_a"), col("id_b"))
-            .withColumn("__h", lit(1)), Seq("id_a", "id_b"), "left")
-          .agg(count(lit(1)).as("n_truth"), count(col("__h")).as("n_hits"),
-            round(count(col("__h")).cast("double") / count(lit(1)), 6)
-              .as("recall"))
-          .select(lit(method).as("method"), col("n_truth"), col("n_hits"),
-            col("recall"))
-      evalOf(Dedup.minhashCandidates(docs), "minhash_lsh")
-        .unionByName(evalOf(Dedup.simhashPairs(docs), "simhash"))
+      Seq("minhash_lsh" -> Dedup.minhashCandidates(docs),
+          "simhash" -> Dedup.simhashPairs(docs)).map { case (m, cand) =>
+          recall(truth, cand, Seq("id_a", "id_b"))
+            .select(lit(m).as("method"), col("*"))
+        }.reduce(_ unionByName _)
     },
 
     // the (bands, rows) S-curve dial MEASURED over the SAME 16
@@ -4164,72 +4201,52 @@ object SparkEntry {
         count(lit(1)).as("n_docs"))
     },
 
-    // EVERY ANN/retrieval query batch below is the CONSTANT base-copy
-    // set (% 100 sampling AND vec_id < 1e8, which pins it to the
-    // original rows under ScaleUp's +1e8-per-replica id shift): a
-    // serving batch's |Q| is an operational constant, so no
-    // registered plan — search, recall eval, probe curve, rerank —
-    // charges O(n·|Q|) = O(n²/100) work that no deployment pays. The
-    // pin is mirrored verbatim in every oracle (it is a no-op on the
-    // driver-generated test tables, whose ids all sit below 1e8).
+    // every ANN/retrieval query batch below is annQueries' base copy
     "emb_knn_brute" -> { (s, dir) =>
       val emb = tbl(s, dir, "embeddings")
-      Knn.bruteTopK(emb, emb.where(col("vec_id") % 100 === 0 &&
-        col("vec_id") < 100000000L), EmbDim, 5)
+      Knn.bruteTopK(emb, annQueries(emb), EmbDim, 5)
     },
 
     // MMR diversified rerank of the brute top-20: relevant AND
     // mutually diverse; the greedy loop runs scan-side on a bounded
-    // 20-element array per query — never a corpus operation. The
-    // query batch is the CONSTANT base-copy set (vec_id < 1e8 pins it
-    // to the original rows under ScaleUp's +1e8-per-replica id
-    // shift): a serving rerank's |Q| is an operational constant, so
-    // the registered plan's candidate generation stays O(n·|Q|), not
-    // the O(n²/100) a corpus-growing sample would charge
+    // 20-element array per query — never a corpus operation
     "emb_mmr" -> { (s, dir) =>
       val emb = tbl(s, dir, "embeddings")
-      Knn.mmrTopK(emb, emb.where(col("vec_id") % 100 === 0 && col("vec_id") < 100000000L), EmbDim)
+      Knn.mmrTopK(emb, annQueries(emb), EmbDim)
     },
 
     "emb_knn_lsh" -> { (s, dir) =>
       val emb = tbl(s, dir, "embeddings")
-      Knn.lshTopK(emb, emb.where(col("vec_id") % 100 === 0 && col("vec_id") < 100000000L), EmbDim, 3)
+      Knn.lshTopK(emb, annQueries(emb), EmbDim, 3)
     },
 
     // max-inner-product retrieval, exact baseline: raw-dot top-5 per
     // query (norm-sensitive scoring — the operator cosine can't express)
     "emb_mips" -> { (s, dir) =>
       val emb = tbl(s, dir, "embeddings")
-      Knn.mipsTopK(emb, emb.where(col("vec_id") % 100 === 0 && col("vec_id") < 100000000L), EmbDim, 5)
+      Knn.mipsTopK(emb, annQueries(emb), EmbDim, 5)
     },
 
     // MIPS scale path: norm-augmentation reduction to hyperplane LSH
     // banding over dim+1 coordinates, exact-dot verification
     "emb_mips_lsh" -> { (s, dir) =>
       val emb = tbl(s, dir, "embeddings")
-      Knn.mipsLshTopK(emb, emb.where(col("vec_id") % 100 === 0 && col("vec_id") < 100000000L), EmbDim, 3)
+      Knn.mipsLshTopK(emb, annQueries(emb), EmbDim, 3)
     },
 
     // the eval that keeps the augmented-LSH MIPS honest: recall@3 of
     // emb_mips_lsh against the brute raw-dot ground truth
     "emb_mips_recall" -> { (s, dir) =>
       val emb = tbl(s, dir, "embeddings")
-      val q = emb.where(col("vec_id") % 100 === 0 && col("vec_id") < 100000000L)
+      val q = annQueries(emb)
       val truth = Knn.mipsTopK(emb, q, EmbDim, 3)
         .select("query_id", "neighbor_id").localCheckpoint(false)
-      truth.join(
-          Knn.mipsLshTopK(emb, q, EmbDim, 3)
-            .select(col("query_id"), col("neighbor_id"))
-            .withColumn("__h", lit(1)),
-          Seq("query_id", "neighbor_id"), "left")
-        .agg(count(lit(1)).as("n_truth"), count(col("__h")).as("n_hits"),
-          round(count(col("__h")).cast("double") / count(lit(1)), 6)
-            .as("recall"))
+      recall(truth, Knn.mipsLshTopK(emb, q, EmbDim, 3))
     },
 
     "emb_knn_ivf" -> { (s, dir) =>
       val emb = tbl(s, dir, "embeddings")
-      Knn.ivfTopK(emb, emb.where(col("vec_id") % 100 === 0 && col("vec_id") < 100000000L), EmbDim, 3)
+      Knn.ivfTopK(emb, annQueries(emb), EmbDim, 3)
     },
 
     // the PERSISTED index: build the cell-partitioned layout ONCE per
@@ -4241,7 +4258,7 @@ object SparkEntry {
     "emb_knn_ivf_indexed" -> { (s, dir) =>
       val emb = tbl(s, dir, "embeddings")
       val path = ivfIndexFor(s, dir, emb)
-      Knn.searchIvfIndex(s, path, emb.where(col("vec_id") % 100 === 0 && col("vec_id") < 100000000L),
+      Knn.searchIvfIndex(s, path, annQueries(emb),
         EmbDim, 3)
     },
 
@@ -4299,7 +4316,7 @@ object SparkEntry {
     // measured side by side in emb_ann_recall
     "emb_knn_ivf_learned" -> { (s, dir) =>
       val emb = tbl(s, dir, "embeddings")
-      Knn.ivfTopKLearned(emb, emb.where(col("vec_id") % 100 === 0 && col("vec_id") < 100000000L), EmbDim, 3)
+      Knn.ivfTopKLearned(emb, annQueries(emb), EmbDim, 3)
     },
 
     // ANN index quality evaluation: recall@3 of the LSH and IVF scale
@@ -4310,7 +4327,7 @@ object SparkEntry {
     // + one global agg
     "emb_ann_recall" -> { (s, dir) =>
       val emb = tbl(s, dir, "embeddings")
-      val q = emb.where(col("vec_id") % 100 === 0 && col("vec_id") < 100000000L)
+      val q = annQueries(emb)
       // r16: the r15 cells/book/lp15 lazy checkpoints are GONE — the
       // legs share the PLAN objects and AQE's ReuseExchange dedups the
       // identical subtrees at runtime (Knn.ivfCells' documented
@@ -4321,18 +4338,14 @@ object SparkEntry {
       // the ground truth keeps its checkpoint (it is the left side of
       // the single eval join, consumed once per method tag — cheap and
       // load-bearing for the 8-way explode).
-      val truth = Knn.bruteTopK(emb, q, EmbDim, 3)
-        .select("query_id", "neighbor_id").localCheckpoint(false)
+      val truth = bruteTruth(emb, q)
       val cells = Knn.ivfCells(emb, q, EmbDim)
       val book = Knn.pqCodebookLearned(emb, EmbDim)
       val lp15 = Knn.ivfPqTopKLearned(emb, q, EmbDim, 15,
         shared = Some(cells), cb = Some(book))
-      // r15 eval shape: one method-tagged union of the candidate legs
-      // and ONE left join + groupBy(method) replacing eight separate
-      // join+agg legs (each was its own AQE job chain — 85 jobs for
-      // this query at bench scale). Values identical: every leg is
-      // distinct per (query_id, neighbor_id), so join multiplicity is
-      // 1 and the per-method counts equal the per-leg counts.
+      // r15 eval shape: ONE recallByMethod join replaces eight
+      // separate join+agg legs (each was its own AQE job chain — 85
+      // jobs for this query at bench scale)
       val legs: Seq[(String, DataFrame)] = Seq(
         "lsh" -> Knn.lshTopK(emb, q, EmbDim, 3),
         "ivf" -> Knn.ivfTopK(emb, q, EmbDim, 3, shared = Some(cells)),
@@ -4344,18 +4357,7 @@ object SparkEntry {
         "ivf_pq_rerank" -> Knn.exactRerank(emb, q,
           lp15.select("query_id", "neighbor_id"), EmbDim, 3),
         "sq" -> Knn.sqSearchTopK(emb, q, EmbDim, 3))
-      val cand = legs.map { case (m, df) =>
-          df.select(lit(m).as("method"), col("query_id"),
-            col("neighbor_id"), lit(1).as("__h"))
-        }.reduce(_ unionByName _)
-      truth.select(col("query_id"), col("neighbor_id"),
-          explode(array(legs.map(l => lit(l._1)): _*)).as("method"))
-        .join(cand, Seq("method", "query_id", "neighbor_id"), "left")
-        .groupBy(col("method"))
-        .agg(count(lit(1)).as("n_truth"), count(col("__h")).as("n_hits"),
-          round(count(col("__h")).cast("double") / count(lit(1)), 6)
-            .as("recall"))
-        .select(col("method"), col("n_truth"), col("n_hits"), col("recall"))
+      recallByMethod(truth, legs)
     },
 
     // the nProbe dial MEASURED: IVF recall@3 at 1/2/4 probed cells —
@@ -4363,25 +4365,16 @@ object SparkEntry {
     // oracle reuses the shared IVF CTEs so index and eval can't drift
     "emb_ivf_probe_curve" -> { (s, dir) =>
       val emb = tbl(s, dir, "embeddings")
-      val q = emb.where(col("vec_id") % 100 === 0 && col("vec_id") < 100000000L)
-      val truth = Knn.bruteTopK(emb, q, EmbDim, 3)
-        .select("query_id", "neighbor_id").localCheckpoint(false)
+      val q = annQueries(emb)
+      val truth = bruteTruth(emb, q)
       // r15: the shared-corpus-assignment + single-eval-join reshape
       // was tried and measured SLOWER at bench scale (+0.43 s paired;
       // the checkpoint's row copies cost more than the re-run argmax),
       // so the r14 per-leg shape stays
-      def leg(p: Int): DataFrame =
-        truth.join(
-            Knn.ivfTopK(emb, q, EmbDim, 3, nProbe = p)
-              .select(col("query_id"), col("neighbor_id"))
-              .withColumn("__h", lit(1)),
-            Seq("query_id", "neighbor_id"), "left")
-          .agg(count(lit(1)).as("n_truth"), count(col("__h")).as("n_hits"),
-            round(count(col("__h")).cast("double") / count(lit(1)), 6)
-              .as("recall"))
-          .select(lit(s"probe_$p").as("method"), col("n_truth"),
-            col("n_hits"), col("recall"))
-      leg(1).unionByName(leg(2)).unionByName(leg(4))
+      Seq(1, 2, 4).map { p =>
+          recall(truth, Knn.ivfTopK(emb, q, EmbDim, 3, nProbe = p))
+            .select(lit(s"probe_$p").as("method"), col("*"))
+        }.reduce(_ unionByName _)
     },
 
     // the nTables dial MEASURED — the LSH counterpart of the IVF probe
@@ -4392,9 +4385,8 @@ object SparkEntry {
     // the index cannot drift apart
     "emb_lsh_table_curve" -> { (s, dir) =>
       val emb = tbl(s, dir, "embeddings")
-      val q = emb.where(col("vec_id") % 100 === 0 && col("vec_id") < 100000000L)
-      val truth = Knn.bruteTopK(emb, q, EmbDim, 3)
-        .select("query_id", "neighbor_id").localCheckpoint(false)
+      val q = annQueries(emb)
+      val truth = bruteTruth(emb, q)
       // r15: the banded self-join is computed ONCE over all 4 tables
       // with each pair's min colliding table riding the dedup agg —
       // leg t's candidates are exactly min_tb < t (1+2+4 table joins
@@ -4404,24 +4396,9 @@ object SparkEntry {
       // sets and cosines match lshTopK(nTables = t) pair for pair.
       val cand0 = Knn.lshCandidatesMinTable(emb, q, EmbDim)
         .localCheckpoint(false)
-      val tables = Seq(1, 2, 4)
-      val cand = tables.map { t =>
-          val w = Window.partitionBy(col("query_id"))
-            .orderBy(col("cos").desc, col("neighbor_id"))
-          cand0.where(col("min_tb") < t)
-            .withColumn("rank", row_number().over(w))
-            .where(col("rank") <= 3)
-            .select(lit(s"tables_$t").as("method"), col("query_id"),
-              col("neighbor_id"), lit(1).as("__h"))
-        }.reduce(_ unionByName _)
-      truth.select(col("query_id"), col("neighbor_id"),
-          explode(array(tables.map(t => lit(s"tables_$t")): _*)).as("method"))
-        .join(cand, Seq("method", "query_id", "neighbor_id"), "left")
-        .groupBy(col("method"))
-        .agg(count(lit(1)).as("n_truth"), count(col("__h")).as("n_hits"),
-          round(count(col("__h")).cast("double") / count(lit(1)), 6)
-            .as("recall"))
-        .select(col("method"), col("n_truth"), col("n_hits"), col("recall"))
+      recallByMethod(truth, Seq(1, 2, 4).map { t =>
+        s"tables_$t" -> Knn.topK(cand0.where(col("min_tb") < t), "cos", 3)
+      })
     },
 
     // embedding-compression eval: how much of the full-dim neighbor
@@ -4432,27 +4409,14 @@ object SparkEntry {
     // arrays, so candidate cost shrinks with d
     "emb_dim_tradeoff" -> { (s, dir) =>
       val emb = tbl(s, dir, "embeddings")
-      val q = emb.where(col("vec_id") % 100 === 0 && col("vec_id") < 100000000L)
-      val truth = Knn.bruteTopK(emb, q, EmbDim, 3)
-        .select("query_id", "neighbor_id").localCheckpoint(false)
+      val q = annQueries(emb)
+      val truth = bruteTruth(emb, q)
       def cut(df: DataFrame, d: Int): DataFrame =
         df.select(col("vec_id"), slice(col("embedding"), 1, d).as("embedding"))
       // r15: one method-tagged eval join instead of per-leg join+agg
-      // (values identical — see emb_ann_recall)
-      val dims = Seq(32, 16)
-      val cand = dims.map { d =>
-          Knn.bruteTopK(cut(emb, d), cut(q, d), d, 3)
-            .select(lit(s"dim$d").as("method"), col("query_id"),
-              col("neighbor_id"), lit(1).as("__h"))
-        }.reduce(_ unionByName _)
-      truth.select(col("query_id"), col("neighbor_id"),
-          explode(array(dims.map(d => lit(s"dim$d")): _*)).as("method"))
-        .join(cand, Seq("method", "query_id", "neighbor_id"), "left")
-        .groupBy(col("method"))
-        .agg(count(lit(1)).as("n_truth"), count(col("__h")).as("n_hits"),
-          round(count(col("__h")).cast("double") / count(lit(1)), 6)
-            .as("recall"))
-        .select(col("method"), col("n_truth"), col("n_hits"), col("recall"))
+      recallByMethod(truth, Seq(32, 16).map { d =>
+        s"dim$d" -> Knn.bruteTopK(cut(emb, d), cut(q, d), d, 3)
+      })
     },
 
     "emb_label_centroid" -> { (s, dir) =>
@@ -4630,7 +4594,7 @@ object SparkEntry {
     "emb_rq_search" -> { (s, dir) =>
       val emb = tbl(s, dir, "embeddings")
       Knn.rqSearchTopK(emb,
-        emb.where(col("vec_id") % 100 === 0 && col("vec_id") < 100000000L),
+        annQueries(emb),
         EmbDim, 3)
     },
 
@@ -4639,22 +4603,14 @@ object SparkEntry {
     // shape; every index in the suite carries a measured-recall leg)
     "emb_rq_recall" -> { (s, dir) =>
       val emb = tbl(s, dir, "embeddings")
-      val q = emb.where(col("vec_id") % 100 === 0 && col("vec_id") < 100000000L)
-      val truth = Knn.bruteTopK(emb, q, EmbDim, 3)
-        .select("query_id", "neighbor_id").localCheckpoint(false)
-      truth.join(
-          Knn.rqSearchTopK(emb, q, EmbDim, 3)
-            .select(col("query_id"), col("neighbor_id"))
-            .withColumn("__h", lit(1)),
-          Seq("query_id", "neighbor_id"), "left")
-        .agg(count(lit(1)).as("n_truth"), count(col("__h")).as("n_hits"),
-          round(count(col("__h")).cast("double") / count(lit(1)), 6)
-            .as("recall"))
+      val q = annQueries(emb)
+      val truth = bruteTruth(emb, q)
+      recall(truth, Knn.rqSearchTopK(emb, q, EmbDim, 3))
     },
 
     "emb_ivf_pq" -> { (s, dir) =>
       val emb = tbl(s, dir, "embeddings")
-      Knn.ivfPqTopK(emb, emb.where(col("vec_id") % 100 === 0 && col("vec_id") < 100000000L), EmbDim, 3)
+      Knn.ivfPqTopK(emb, annQueries(emb), EmbDim, 3)
     },
 
     // IVFADC with RESIDUAL encoding (the classic FAISS-style
@@ -4664,7 +4620,7 @@ object SparkEntry {
     "emb_ivf_pq_residual" -> { (s, dir) =>
       val emb = tbl(s, dir, "embeddings")
       Knn.ivfPqResidualTopK(emb,
-        emb.where(col("vec_id") % 100 === 0 && col("vec_id") < 100000000L),
+        annQueries(emb),
         EmbDim, 3)
     },
 
@@ -4673,7 +4629,7 @@ object SparkEntry {
     // counterpart of emb_ivf_pq_rerank's two-stage pattern
     "emb_sq_search" -> { (s, dir) =>
       val emb = tbl(s, dir, "embeddings")
-      Knn.sqSearchTopK(emb, emb.where(col("vec_id") % 100 === 0 && col("vec_id") < 100000000L), EmbDim, 3)
+      Knn.sqSearchTopK(emb, annQueries(emb), EmbDim, 3)
     },
 
     // binary quantization store: 1 sign bit per dim against the
@@ -4691,7 +4647,7 @@ object SparkEntry {
     // at 1 bit/dim — the ranking scan reads 8 bytes per corpus vector)
     "emb_bq_search" -> { (s, dir) =>
       val emb = tbl(s, dir, "embeddings")
-      Knn.bqSearchTopK(emb, emb.where(col("vec_id") % 100 === 0 && col("vec_id") < 100000000L), EmbDim, 3)
+      Knn.bqSearchTopK(emb, annQueries(emb), EmbDim, 3)
     },
 
     // the binary path's serving quality MEASURED: recall@3 of the
@@ -4699,17 +4655,9 @@ object SparkEntry {
     // suite carries a measured-recall leg)
     "emb_bq_recall" -> { (s, dir) =>
       val emb = tbl(s, dir, "embeddings")
-      val q = emb.where(col("vec_id") % 100 === 0 && col("vec_id") < 100000000L)
-      val truth = Knn.bruteTopK(emb, q, EmbDim, 3)
-        .select("query_id", "neighbor_id").localCheckpoint(false)
-      truth.join(
-          Knn.bqSearchTopK(emb, q, EmbDim, 3)
-            .select(col("query_id"), col("neighbor_id"))
-            .withColumn("__h", lit(1)),
-          Seq("query_id", "neighbor_id"), "left")
-        .agg(count(lit(1)).as("n_truth"), count(col("__h")).as("n_hits"),
-          round(count(col("__h")).cast("double") / count(lit(1)), 6)
-            .as("recall"))
+      val q = annQueries(emb)
+      val truth = bruteTruth(emb, q)
+      recall(truth, Knn.bqSearchTopK(emb, q, EmbDim, 3))
     },
 
     // ADC top-15 then exact-cosine rerank to top-3: the two-stage
@@ -4717,7 +4665,7 @@ object SparkEntry {
     // |Q|*15 true vectors (candidate list broadcast over the scan)
     "emb_ivf_pq_rerank" -> { (s, dir) =>
       val emb = tbl(s, dir, "embeddings")
-      Knn.ivfPqRerankTopK(emb, emb.where(col("vec_id") % 100 === 0 && col("vec_id") < 100000000L), EmbDim, 3)
+      Knn.ivfPqRerankTopK(emb, annQueries(emb), EmbDim, 3)
     },
 
     "mm_meta" -> { (s, dir) =>
@@ -4834,7 +4782,7 @@ object SparkEntry {
     // rank window — the dedup-mining sibling of emb_knn_brute
     "emb_range_search" -> { (s, dir) =>
       val emb = tbl(s, dir, "embeddings")
-      Knn.rangeSearch(emb, emb.where(col("vec_id") % 100 === 0 && col("vec_id") < 100000000L), EmbDim, 0.2)
+      Knn.rangeSearch(emb, annQueries(emb), EmbDim, 0.2)
     },
 
     // the radius query's scale path: candidates from the shared LSH
@@ -4842,7 +4790,7 @@ object SparkEntry {
     // recall dial = tables, like the top-k path
     "emb_range_search_lsh" -> { (s, dir) =>
       val emb = ftbl(s, dir, "embeddings")
-      Knn.lshRangeSearch(emb, emb.where(col("vec_id") % 100 === 0 && col("vec_id") < 100000000L), EmbDim, 0.2)
+      Knn.lshRangeSearch(emb, annQueries(emb), EmbDim, 0.2)
     },
 
     "mm_frames" -> { (s, dir) =>
@@ -5168,6 +5116,57 @@ object SparkEntry {
 
   private def sqlCos(a: String, b: String): String = sqlCosN(a, b, EmbDim)
 
+  /** [[annQueries]]' predicate over the id column `c`. */
+  private def sqlAnnQueries(c: String = "vec_id"): String =
+    s"$c % $AnnQueryEvery = 0 AND $c < $AnnQueryIdMax"
+
+  /** The SQL mirror of Knn.topK: `src`'s `cols` plus an INTEGER `rank`
+    * numbering each query's rows by `score` (descending, or ascending
+    * for a distance), ties on the lower neighbor_id; `k` > 0 keeps
+    * ranks <= k.
+    */
+  private def sqlTopK(src: String, score: String, k: Int = 0,
+                      asc: Boolean = false,
+                      cols: String = "query_id, neighbor_id"): String =
+    s"""SELECT $cols, CAST(row_number() OVER (PARTITION BY query_id
+       |    ORDER BY $score ${if (asc) "ASC" else "DESC"}, neighbor_id)
+       |    AS INTEGER) AS rank
+       |  FROM $src${if (k > 0) s" QUALIFY rank <= $k" else ""}""".stripMargin
+
+  /** Brute-force top-k CTEs (q, c, bj, brute) over the [[sqlAnnQueries]]
+    * batch — the mirror of Knn.bruteTopK (`score` "cos") or
+    * Knn.mipsTopK ("ip") — ending in `brute` = (query_id, neighbor_id,
+    * `score`, rank <= k): the ANN evals' ground truth.
+    */
+  private def sqlBruteCtes(k: Int, score: String = "cos"): String = {
+    val expr = if (score == "ip") sqlDot("qv", "nv") else sqlCos("qv", "nv")
+    s"""q AS (SELECT vec_id AS query_id, embedding AS qv
+       |  FROM embeddings WHERE ${sqlAnnQueries()}),
+       |c AS (SELECT vec_id AS neighbor_id, embedding AS nv FROM embeddings),
+       |bj AS (SELECT query_id, neighbor_id, $expr AS $score
+       |  FROM c, q WHERE neighbor_id <> query_id),
+       |brute AS (${sqlTopK("bj", score, k, cols = s"query_id, neighbor_id, $score")})""".stripMargin
+  }
+
+  /** The oracle twin of [[recall]] / [[recallByMethod]]: per (method,
+    * candidate CTE) leg, `truth` left-joined to the leg on `keys` and
+    * counted as n_truth / n_hits / recall (NULL on an empty truth). A
+    * leg named "" has no method column; `byMethod` groups on the
+    * method, so an empty truth yields no row, as recallByMethod does.
+    */
+  private def sqlRecall(truth: String, legs: Seq[(String, String)],
+                        byMethod: Boolean = false,
+                        keys: Seq[String] = AnnKeys): String = {
+    val on = keys.map(k => s"t.$k = l.$k").mkString(" AND ")
+    val hits = s"count(l.${keys.head})"
+    legs.map { case (m, leg) =>
+      s"""SELECT ${if (m.isEmpty) "" else s"'$m' AS method, "}count(*) AS n_truth,
+         |  $hits AS n_hits, CASE WHEN count(*) > 0
+         |    THEN round(CAST($hits AS DOUBLE) / count(*), 6) END AS recall
+         |FROM $truth t LEFT JOIN $leg l ON $on${if (byMethod) "\nGROUP BY 1" else ""}""".stripMargin
+    }.mkString("\nUNION ALL\n")
+  }
+
   private def sqlPlaneDot(v: String, j: Int): String =
     sqlPlaneDotN(v, j, EmbDim)
 
@@ -5285,18 +5284,15 @@ object SparkEntry {
        |      (a, b) -> a*2 + b)) AS nbw
        |  FROM embeddings, bqar),
        |bqq AS (SELECT neighbor_id AS query_id, nv AS qv, nbw AS qbw
-       |  FROM bqc WHERE neighbor_id % 100 = 0 AND neighbor_id < 100000000),
+       |  FROM bqc WHERE ${sqlAnnQueries("neighbor_id")}),
        |bqj AS (SELECT query_id, neighbor_id, qv, nv,
        |    CAST($ham AS BIGINT) AS ham
        |  FROM bqc, bqq WHERE neighbor_id <> query_id),
-       |bqrk AS (SELECT query_id, neighbor_id, qv, nv, ham, row_number() OVER (
-       |    PARTITION BY query_id ORDER BY ham ASC, neighbor_id) AS rk
-       |  FROM bqj),
+       |bqrk AS (${sqlTopK("bqj", "ham", 15, asc = true,
+                   cols = "query_id, neighbor_id, qv, nv, ham")}),
        |bqrr AS (SELECT query_id, neighbor_id, ham, ${sqlCos("qv", "nv")} AS cos
-       |  FROM bqrk WHERE rk <= 15),
-       |bqfin AS (SELECT query_id, neighbor_id, ham, cos,
-       |  CAST(row_number() OVER (PARTITION BY query_id
-       |    ORDER BY cos DESC, neighbor_id) AS INTEGER) AS rank FROM bqrr)""".stripMargin
+       |  FROM bqrk),
+       |bqfin AS (${sqlTopK("bqrr", "cos", cols = "query_id, neighbor_id, ham, cos")})""".stripMargin
   }
 
   private def sqlSqCtes: String =
@@ -5314,20 +5310,16 @@ object SparkEntry {
        |        END AS DOUBLE) / 255.0 * (mxs[i] - mns[i])) AS dv
        |  FROM embeddings, sqar),
        |sqq AS (SELECT vec_id AS query_id, embedding AS qv
-       |    FROM embeddings WHERE vec_id % 100 = 0 AND vec_id < 100000000),
+       |    FROM embeddings WHERE ${sqlAnnQueries()}),
        |sqj AS (SELECT query_id, neighbor_id, qv, nv,
        |    ${sqlDot("qv", "dv")}
        |      / (sqrt(${sqlDot("qv", "qv")}) * sqrt(${sqlDot("dv", "dv")}))
        |      AS acos_
        |  FROM sqc, sqq WHERE neighbor_id <> query_id),
-       |sqrk AS (SELECT query_id, neighbor_id, qv, nv, row_number() OVER (
-       |    PARTITION BY query_id ORDER BY acos_ DESC, neighbor_id) AS rk
-       |  FROM sqj),
+       |sqrk AS (${sqlTopK("sqj", "acos_", 15, cols = "query_id, neighbor_id, qv, nv")}),
        |sqrr AS (SELECT query_id, neighbor_id, ${sqlCos("qv", "nv")} AS cos
-       |  FROM sqrk WHERE rk <= 15),
-       |sqfin AS (SELECT query_id, neighbor_id, cos,
-       |  CAST(row_number() OVER (PARTITION BY query_id
-       |    ORDER BY cos DESC, neighbor_id) AS INTEGER) AS rank FROM sqrr)""".stripMargin
+       |  FROM sqrk),
+       |sqfin AS (${sqlTopK("sqrr", "cos", cols = "query_id, neighbor_id, cos")})""".stripMargin
 
   /** One unrolled Lloyd round as CTEs (kv/kc0/ka1/ke1/km1/kc1) ending
     * in `kc1` = the learned codebook after one centroid update —
@@ -5376,7 +5368,7 @@ object SparkEntry {
        |klcell AS (SELECT neighbor_id, nv, nn, cid FROM kla WHERE crk <= 1),
        |klq0 AS (SELECT vec_id AS query_id, embedding AS qv,
        |    sqrt(${sqlDot("embedding", "embedding")}) AS qn
-       |  FROM embeddings WHERE vec_id % 100 = 0 AND vec_id < 100000000),
+       |  FROM embeddings WHERE ${sqlAnnQueries()}),
        |klqa AS (SELECT query_id, qv, qn, cid,
        |    row_number() OVER (PARTITION BY query_id
        |      ORDER BY ${sqlDot("qv", "cvec")} / (qn * cn) DESC, cid) AS crk
@@ -5420,9 +5412,8 @@ object SparkEntry {
        |  JOIN dtab t ON t.query_id = c.query_id AND t.s = k.s
        |    AND t.pcid = k.pcid
        |  GROUP BY 1, 2),
-       |r AS (SELECT query_id, neighbor_id, adist,
-       |  CAST(row_number() OVER (PARTITION BY query_id
-       |    ORDER BY adist, neighbor_id) AS INTEGER) AS rank FROM sc)""".stripMargin
+       |r AS (${sqlTopK("sc", "adist", asc = true,
+              cols = "query_id, neighbor_id, adist")})""".stripMargin
 
   /** ANN-graph chain (gpop/gsalt/g0/g1/g2) ending in `g2` = the
     * salted, two-stage-ranked kNN edges (rank <= k filter applied by
@@ -5495,9 +5486,8 @@ object SparkEntry {
        |  JOIN rdtab t ON t.query_id = c.query_id AND t.cid = c.cid
        |    AND t.s = k.s AND t.pcid = k.pcid
        |  GROUP BY 1, 2),
-       |rr AS (SELECT query_id, neighbor_id, adist,
-       |  CAST(row_number() OVER (PARTITION BY query_id
-       |    ORDER BY adist, neighbor_id) AS INTEGER) AS rank FROM rsc)""".stripMargin
+       |rr AS (${sqlTopK("rsc", "adist", asc = true,
+               cols = "query_id, neighbor_id, adist")})""".stripMargin
 
   /** LEARNED-PQ codebook + corpus-assignment CTEs — mirrors
     * Knn.pqCodebookLearned / pqAssignLearned exactly: seed codewords
@@ -5611,7 +5601,7 @@ object SparkEntry {
   /** Learned-codebook ADC ranking (lpcode/lpdtab/lpsc/lpfin) — the
     * [[sqlIvfPqAdcCtes]] shape over [[sqlPqLearnedCtes]]' book:
     * `lpfin` = candidates ranked per query by the learned-ADC fold.
-    * Consumed by emb_ann_recall's ivf_pq_learned leg AND (rk <= 15)
+    * Consumed by emb_ann_recall's ivf_pq_learned leg AND (rank <= 15)
     * by the emb_ivf_pq_rerank candidate stage, mirroring
     * Knn.ivfPqRerankTopK's switch to learned candidates. Needs q0 from
     * [[sqlIvfCtes]], cand from [[sqlIvfCandCte]], lpcb/lpr from
@@ -5631,9 +5621,7 @@ object SparkEntry {
        |  JOIN lpdtab t ON t.query_id = c.query_id AND t.s = k.s
        |    AND t.pcid = k.pcid
        |  GROUP BY 1, 2),
-       |lpfin AS (SELECT query_id, neighbor_id, row_number() OVER (
-       |    PARTITION BY query_id ORDER BY adist, neighbor_id) AS rk
-       |  FROM lpsc)""".stripMargin
+       |lpfin AS (${sqlTopK("lpsc", "adist", asc = true)})""".stripMargin
 
   /** Quality-score CTEs ending in `qual` (doc_id, n_tokens,
     * avg_token_len, punct_ratio, digit_ratio, stop_ratio, quality) —
@@ -5789,6 +5777,36 @@ object SparkEntry {
        |rb2 AS (SELECT *, row_number() OVER (
        |    PARTITION BY vec_id ORDER BY d2, cid2) AS rn FROM ra2)""".stripMargin
 
+  /** RQ-flat serving over [[sqlRqCtes]]: the winners' c1+c2
+    * reconstruction ranks approximate-cosine top-15, exact cosine
+    * reranks them into `rfin` = (query_id, neighbor_id, cos, rank) —
+    * mirrors Knn.rqSearchTopK; shared by emb_rq_search and
+    * emb_rq_recall so the eval measures exactly the index served.
+    */
+  private def sqlRqSearchCtes: String =
+    s"""$sqlRqCtes,
+       |rw AS (SELECT vec_id, cid1, cid2 FROM rb2 WHERE rn = 1),
+       |rrec AS (SELECT w.vec_id AS neighbor_id,
+       |    list_transform(range(1, ${EmbDim + 1}),
+       |      i -> CAST(c.c1v[i] AS DOUBLE) + d.c2v[i]) AS rv
+       |  FROM rw w JOIN rc1 c ON c.cid1 = w.cid1
+       |    JOIN rc2 d ON d.cid2 = w.cid2),
+       |rqq AS (SELECT vec_id AS query_id, embedding AS qv,
+       |    sqrt(${sqlDot("embedding", "embedding")}) AS qn
+       |  FROM embeddings WHERE ${sqlAnnQueries()}),
+       |rs AS (SELECT q.query_id, r.neighbor_id,
+       |    ${sqlDot("q.qv", "r.rv")}
+       |      / (q.qn * sqrt(${sqlDot("r.rv", "r.rv")})) AS acos
+       |  FROM rrec r, rqq q WHERE r.neighbor_id <> q.query_id),
+       |rcand AS (${sqlTopK("rs", "acos", 15)}),
+       |rex AS (SELECT a.query_id, a.neighbor_id,
+       |    ${sqlDot("q.qv", "e.embedding")}
+       |      / (q.qn * sqrt(${sqlDot("e.embedding", "e.embedding")}))
+       |      AS cos
+       |  FROM rcand a JOIN rqq q ON q.query_id = a.query_id
+       |    JOIN embeddings e ON e.vec_id = a.neighbor_id),
+       |rfin AS (${sqlTopK("rex", "cos", cols = "query_id, neighbor_id, cos")})""".stripMargin
+
   /** IVF coarse-quantizer CTEs (cents/c0/ca/ccell/q0/qa/qcell) —
     * shared VERBATIM by the emb_knn_ivf oracle, emb_ann_recall's ivf
     * leg and emb_ivf_pq, so the index and every consumer of its cell
@@ -5808,7 +5826,7 @@ object SparkEntry {
        |ccell AS (SELECT neighbor_id, nv, nn, cid FROM ca WHERE crk <= 1),
        |q0 AS (SELECT vec_id AS query_id, embedding AS qv,
        |    sqrt(${sqlDot("embedding", "embedding")}) AS qn
-       |  FROM embeddings WHERE vec_id % 100 = 0 AND vec_id < 100000000),
+       |  FROM embeddings WHERE ${sqlAnnQueries()}),
        |qa AS (SELECT query_id, qv, qn, cid,
        |    row_number() OVER (PARTITION BY query_id
        |      ORDER BY ${sqlDot("qv", "cvec")} / (qn * cn) DESC, cid) AS crk
@@ -5891,7 +5909,7 @@ object SparkEntry {
        |mq0 AS (SELECT vec_id, embedding,
        |    list_append(list_transform(embedding, x -> CAST(x AS DOUBLE)),
        |      0.0) AS aug
-       |  FROM embeddings WHERE vec_id % 100 = 0 AND vec_id < 100000000),
+       |  FROM embeddings WHERE ${sqlAnnQueries()}),
        |mb AS (${(0 until LshTables).map(t =>
              s"SELECT vec_id, embedding, $t AS tb,\n    " +
                s"${sqlBucketN("aug", LshPlanes, t * LshPlanes, EmbDim + 1)} AS bk " +
@@ -5905,9 +5923,7 @@ object SparkEntry {
        |  FROM mb c JOIN qb q ON c.tb = q.tb AND c.bk = q.bk
        |    AND c.vec_id <> q.vec_id
        |  GROUP BY 1, 2),
-       |mr AS (SELECT query_id, neighbor_id, ip,
-       |  CAST(row_number() OVER (PARTITION BY query_id
-       |    ORDER BY ip DESC, neighbor_id) AS INTEGER) AS rank FROM mcand)""".stripMargin
+       |mr AS (${sqlTopK("mcand", "ip", cols = "query_id, neighbor_id, ip")})""".stripMargin
 
   private def sqlLshBandCte: String = sqlLshBandCteFrom("embeddings")
 
@@ -5954,7 +5970,7 @@ object SparkEntry {
   private def sqlLshCtes: String = {
     s"""$sqlLshBandCte,
        |lq AS (SELECT vec_id AS query_id, embedding AS qv, tb, bk FROM lb
-       |  WHERE vec_id % 100 = 0 AND vec_id < 100000000),
+       |  WHERE ${sqlAnnQueries()}),
        |lc AS (SELECT vec_id AS neighbor_id, embedding AS nv, tb, bk FROM lb),
        |lj0 AS (SELECT query_id, neighbor_id, ${sqlCos("qv", "nv")} AS cos
        |  FROM lc JOIN lq USING (tb, bk) WHERE neighbor_id <> query_id),
@@ -6376,17 +6392,8 @@ object SparkEntry {
          |  FROM sbands a JOIN sbands b ON a.band = b.band AND a.bk = b.bk
          |    AND a.doc_id < b.doc_id
          |  WHERE bit_count(xor(a.simhash, b.simhash)) <= 4)
-         |SELECT 'minhash_lsh' AS method, count(*) AS n_truth,
-         |  count(p.id_a) AS n_hits,
-         |  round(CAST(count(p.id_a) AS DOUBLE) / count(*), 6) AS recall
-         |FROM truth t LEFT JOIN pairs p
-         |  ON t.id_a = p.id_a AND t.id_b = p.id_b
-         |UNION ALL
-         |SELECT 'simhash' AS method, count(*) AS n_truth,
-         |  count(p.id_a) AS n_hits,
-         |  round(CAST(count(p.id_a) AS DOUBLE) / count(*), 6) AS recall
-         |FROM truth t LEFT JOIN spairs p
-         |  ON t.id_a = p.id_a AND t.id_b = p.id_b""".stripMargin
+         |${sqlRecall("truth", Seq("minhash_lsh" -> "pairs", "simhash" -> "spairs"),
+              keys = Seq("id_a", "id_b"))}""".stripMargin
     },
 
     "doc_dedup_ngram_jaccard" ->
@@ -7063,36 +7070,20 @@ object SparkEntry {
          |FROM d GROUP BY lang""".stripMargin,
 
     "emb_knn_brute" ->
-      s"""WITH q AS (SELECT vec_id AS query_id, embedding AS qv
-         |    FROM embeddings WHERE vec_id % 100 = 0 AND vec_id < 100000000),
-         |c AS (SELECT vec_id AS neighbor_id, embedding AS nv FROM embeddings),
-         |j AS (SELECT query_id, neighbor_id, ${sqlCos("qv", "nv")} AS cos
-         |  FROM c, q WHERE neighbor_id <> query_id),
-         |r AS (SELECT query_id, neighbor_id, cos,
-         |  CAST(row_number() OVER (PARTITION BY query_id
-         |    ORDER BY cos DESC, neighbor_id) AS INTEGER) AS rank FROM j)
+      s"""WITH ${sqlBruteCtes(5)}
          |SELECT query_id, rank, neighbor_id, round(cos, 6) AS cos
-         |FROM r WHERE rank <= 5""".stripMargin,
+         |FROM brute""".stripMargin,
 
     "emb_knn_lsh" ->
       s"""WITH $sqlLshCtes,
-         |lr AS (SELECT query_id, neighbor_id, cos,
-         |  CAST(row_number() OVER (PARTITION BY query_id
-         |    ORDER BY cos DESC, neighbor_id) AS INTEGER) AS rank FROM lj)
+         |lr AS (${sqlTopK("lj", "cos", 3, cols = "query_id, neighbor_id, cos")})
          |SELECT query_id, rank, neighbor_id, round(cos, 6) AS cos
-         |FROM lr WHERE rank <= 3""".stripMargin,
+         |FROM lr""".stripMargin,
 
     "emb_mips" ->
-      s"""WITH q AS (SELECT vec_id AS query_id, embedding AS qv
-         |    FROM embeddings WHERE vec_id % 100 = 0 AND vec_id < 100000000),
-         |c AS (SELECT vec_id AS neighbor_id, embedding AS nv FROM embeddings),
-         |j AS (SELECT query_id, neighbor_id, ${sqlDot("qv", "nv")} AS ip
-         |  FROM c, q WHERE neighbor_id <> query_id),
-         |r AS (SELECT query_id, neighbor_id, ip,
-         |  CAST(row_number() OVER (PARTITION BY query_id
-         |    ORDER BY ip DESC, neighbor_id) AS INTEGER) AS rank FROM j)
+      s"""WITH ${sqlBruteCtes(5, "ip")}
          |SELECT query_id, rank, neighbor_id, round(ip, 6) AS ip
-         |FROM r WHERE rank <= 5""".stripMargin,
+         |FROM brute""".stripMargin,
 
     // mirrors the norm-augmentation banding exactly: corpus vectors
     // padded with sqrt(M^2 - |x|^2), queries with 0, buckets over
@@ -7107,22 +7098,9 @@ object SparkEntry {
     // measures
     "emb_mips_recall" ->
       s"""WITH $sqlMipsLshCtes,
-         |mbq AS (SELECT vec_id AS query_id, embedding AS qv
-         |    FROM embeddings WHERE vec_id % 100 = 0 AND vec_id < 100000000),
-         |mbc AS (SELECT vec_id AS neighbor_id, embedding AS nv
-         |  FROM embeddings),
-         |mbj AS (SELECT query_id, neighbor_id, ${sqlDot("qv", "nv")} AS ip
-         |  FROM mbc, mbq WHERE neighbor_id <> query_id),
-         |mbr AS (SELECT query_id, neighbor_id,
-         |  row_number() OVER (PARTITION BY query_id
-         |    ORDER BY ip DESC, neighbor_id) AS rank FROM mbj),
-         |mt AS (SELECT query_id, neighbor_id FROM mbr WHERE rank <= 3),
+         |${sqlBruteCtes(3, "ip")},
          |ml AS (SELECT query_id, neighbor_id FROM mr WHERE rank <= 3)
-         |SELECT count(*) AS n_truth,
-         |  count(ml.query_id) AS n_hits,
-         |  round(CAST(count(ml.query_id) AS DOUBLE) / count(*), 6) AS recall
-         |FROM mt LEFT JOIN ml ON mt.query_id = ml.query_id
-         |  AND mt.neighbor_id = ml.neighbor_id""".stripMargin,
+         |${sqlRecall("brute", Seq("" -> "ml"))}""".stripMargin,
 
     "emb_knn_ivf" ->
       s"""WITH $sqlIvfCtes,
@@ -7130,11 +7108,9 @@ object SparkEntry {
          |    ${sqlDot("qv", "nv")} / (qn * nn) AS cos
          |  FROM ccell JOIN qcell USING (cid)
          |  WHERE neighbor_id <> query_id),
-         |r AS (SELECT query_id, neighbor_id, cos,
-         |  CAST(row_number() OVER (PARTITION BY query_id
-         |    ORDER BY cos DESC, neighbor_id) AS INTEGER) AS rank FROM j)
+         |r AS (${sqlTopK("j", "cos", 3, cols = "query_id, neighbor_id, cos")})
          |SELECT query_id, rank, neighbor_id, round(cos, 6) AS cos
-         |FROM r WHERE rank <= 3""".stripMargin,
+         |FROM r""".stripMargin,
 
     // lake round trip: the z-ordered rewrite + manifest-pruned read
     // must equal the raw-table predicate scan — any file the manifest
@@ -7190,11 +7166,9 @@ object SparkEntry {
          |    ${sqlDot("qv", "nv")} / (qn * nn) AS cos
          |  FROM ccell JOIN qcell USING (cid)
          |  WHERE neighbor_id <> query_id),
-         |r AS (SELECT query_id, neighbor_id, cos,
-         |  CAST(row_number() OVER (PARTITION BY query_id
-         |    ORDER BY cos DESC, neighbor_id) AS INTEGER) AS rank FROM j)
+         |r AS (${sqlTopK("j", "cos", 3, cols = "query_id, neighbor_id, cos")})
          |SELECT query_id, rank, neighbor_id, round(cos, 6) AS cos
-         |FROM r WHERE rank <= 3""".stripMargin,
+         |FROM r""".stripMargin,
 
     "emb_knn_ivf_learned" ->
       s"""WITH $sqlIvfLearnedCtes,
@@ -7202,85 +7176,41 @@ object SparkEntry {
          |    ${sqlDot("qv", "nv")} / (qn * nn) AS cos
          |  FROM klcell JOIN kqcell USING (cid)
          |  WHERE neighbor_id <> query_id),
-         |r AS (SELECT query_id, neighbor_id, cos,
-         |  CAST(row_number() OVER (PARTITION BY query_id
-         |    ORDER BY cos DESC, neighbor_id) AS INTEGER) AS rank FROM j)
+         |r AS (${sqlTopK("j", "cos", 3, cols = "query_id, neighbor_id, cos")})
          |SELECT query_id, rank, neighbor_id, round(cos, 6) AS cos
-         |FROM r WHERE rank <= 3""".stripMargin,
+         |FROM r""".stripMargin,
 
     // the three index legs are verbatim re-statements of the
     // emb_knn_{brute,lsh,ivf} oracle chains at k=3 (same helpers, same
     // tie-breaks), so the recall eval cannot drift from the indexes it
     // measures
-    "emb_dim_tradeoff" ->
-      s"""WITH q AS (SELECT vec_id AS query_id, embedding AS qv
-         |    FROM embeddings WHERE vec_id % 100 = 0 AND vec_id < 100000000),
-         |c AS (SELECT vec_id AS neighbor_id, embedding AS nv FROM embeddings),
-         |bj AS (SELECT query_id, neighbor_id, ${sqlCos("qv", "nv")} AS cos
-         |  FROM c, q WHERE neighbor_id <> query_id),
-         |br AS (SELECT query_id, neighbor_id, row_number() OVER (
-         |    PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rk
-         |  FROM bj),
-         |brute AS (SELECT query_id, neighbor_id FROM br WHERE rk <= 3),
-         |t32j AS (SELECT query_id, neighbor_id,
-         |    ${sqlCosN("qv", "nv", 32)} AS cos
-         |  FROM c, q WHERE neighbor_id <> query_id),
-         |t32r AS (SELECT query_id, neighbor_id, row_number() OVER (
-         |    PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rk
-         |  FROM t32j),
-         |d32 AS (SELECT query_id, neighbor_id FROM t32r WHERE rk <= 3),
-         |t16j AS (SELECT query_id, neighbor_id,
-         |    ${sqlCosN("qv", "nv", 16)} AS cos
-         |  FROM c, q WHERE neighbor_id <> query_id),
-         |t16r AS (SELECT query_id, neighbor_id, row_number() OVER (
-         |    PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rk
-         |  FROM t16j),
-         |d16 AS (SELECT query_id, neighbor_id FROM t16r WHERE rk <= 3)
-         |SELECT 'dim32' AS method, count(*) AS n_truth,
-         |  count(d.query_id) AS n_hits,
-         |  round(CAST(count(d.query_id) AS DOUBLE) / count(*), 6) AS recall
-         |FROM brute b LEFT JOIN d32 d
-         |  ON b.query_id = d.query_id AND b.neighbor_id = d.neighbor_id
-         |GROUP BY 1
-         |UNION ALL
-         |SELECT 'dim16' AS method, count(*) AS n_truth,
-         |  count(d.query_id) AS n_hits,
-         |  round(CAST(count(d.query_id) AS DOUBLE) / count(*), 6) AS recall
-         |FROM brute b LEFT JOIN d16 d
-         |  ON b.query_id = d.query_id AND b.neighbor_id = d.neighbor_id
-         |GROUP BY 1""".stripMargin,
+    "emb_dim_tradeoff" -> {
+      val dims = Seq(32, 16)
+      val legCtes = dims.map { d =>
+        s"""t${d}j AS (SELECT query_id, neighbor_id,
+           |    ${sqlCosN("qv", "nv", d)} AS cos
+           |  FROM c, q WHERE neighbor_id <> query_id),
+           |d$d AS (${sqlTopK(s"t${d}j", "cos", 3)})""".stripMargin
+      }.mkString(",\n")
+      s"""WITH ${sqlBruteCtes(3)},
+         |$legCtes
+         |${sqlRecall("brute", dims.map(d => s"dim$d" -> s"d$d"), byMethod = true)}""".stripMargin
+    },
 
     "emb_ann_recall" ->
-      s"""WITH q AS (SELECT vec_id AS query_id, embedding AS qv
-         |    FROM embeddings WHERE vec_id % 100 = 0 AND vec_id < 100000000),
-         |c AS (SELECT vec_id AS neighbor_id, embedding AS nv FROM embeddings),
-         |bj AS (SELECT query_id, neighbor_id, ${sqlCos("qv", "nv")} AS cos
-         |  FROM c, q WHERE neighbor_id <> query_id),
-         |br AS (SELECT query_id, neighbor_id, row_number() OVER (
-         |    PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rk
-         |  FROM bj),
-         |brute AS (SELECT query_id, neighbor_id FROM br WHERE rk <= 3),
+      s"""WITH ${sqlBruteCtes(3)},
          |$sqlLshCtes,
-         |lr AS (SELECT query_id, neighbor_id, row_number() OVER (
-         |    PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rk
-         |  FROM lj),
-         |lsh AS (SELECT query_id, neighbor_id FROM lr WHERE rk <= 3),
+         |lsh AS (${sqlTopK("lj", "cos", 3)}),
          |$sqlIvfCtes,
          |ij AS (SELECT query_id, neighbor_id,
          |    ${sqlDot("qv", "nv")} / (qn * nn) AS cos
          |  FROM ccell JOIN qcell USING (cid) WHERE neighbor_id <> query_id),
-         |ir AS (SELECT query_id, neighbor_id, row_number() OVER (
-         |    PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rk
-         |  FROM ij),
-         |ivf AS (SELECT query_id, neighbor_id FROM ir WHERE rk <= 3),
+         |ivf AS (${sqlTopK("ij", "cos", 3)}),
          |$sqlIvfLearnedCtes,
          |klj AS (SELECT query_id, neighbor_id,
          |    ${sqlDot("qv", "nv")} / (qn * nn) AS cos
          |  FROM klcell JOIN kqcell USING (cid) WHERE neighbor_id <> query_id),
-         |klr AS (SELECT query_id, neighbor_id, row_number() OVER (
-         |    PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rk
-         |  FROM klj),
-         |ivfl AS (SELECT query_id, neighbor_id FROM klr WHERE rk <= 3),
+         |ivfl AS (${sqlTopK("klj", "cos", 3)}),
          |$sqlIvfCandCte,
          |$sqlIvfPqAdcCtes,
          |pq3 AS (SELECT query_id, neighbor_id FROM r WHERE rank <= 3),
@@ -7288,74 +7218,19 @@ object SparkEntry {
          |pqres3 AS (SELECT query_id, neighbor_id FROM rr WHERE rank <= 3),
          |$sqlPqLearnedCtes,
          |$sqlPqLearnedAdcCtes,
-         |pql3 AS (SELECT query_id, neighbor_id FROM lpfin WHERE rk <= 3),
+         |pql3 AS (SELECT query_id, neighbor_id FROM lpfin WHERE rank <= 3),
          |prr0 AS (SELECT lp.query_id, lp.neighbor_id,
          |    ${sqlDot("q0.qv", "c0.nv")} / (q0.qn * c0.nn) AS cos
          |  FROM lpfin lp JOIN q0 USING (query_id)
          |  JOIN c0 ON c0.neighbor_id = lp.neighbor_id
-         |  WHERE lp.rk <= 15),
-         |prr AS (SELECT query_id, neighbor_id, row_number() OVER (
-         |    PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rk
-         |  FROM prr0),
-         |pqr3 AS (SELECT query_id, neighbor_id FROM prr WHERE rk <= 3),
+         |  WHERE lp.rank <= 15),
+         |pqr3 AS (${sqlTopK("prr0", "cos", 3)}),
          |$sqlSqCtes,
          |sq3 AS (SELECT query_id, neighbor_id FROM sqfin WHERE rank <= 3)
-         |SELECT 'lsh' AS method, count(*) AS n_truth,
-         |  count(l.query_id) AS n_hits,
-         |  round(CAST(count(l.query_id) AS DOUBLE) / count(*), 6) AS recall
-         |FROM brute b LEFT JOIN lsh l
-         |  ON b.query_id = l.query_id AND b.neighbor_id = l.neighbor_id
-         |GROUP BY 1
-         |UNION ALL
-         |SELECT 'ivf' AS method, count(*) AS n_truth,
-         |  count(i.query_id) AS n_hits,
-         |  round(CAST(count(i.query_id) AS DOUBLE) / count(*), 6) AS recall
-         |FROM brute b LEFT JOIN ivf i
-         |  ON b.query_id = i.query_id AND b.neighbor_id = i.neighbor_id
-         |GROUP BY 1
-         |UNION ALL
-         |SELECT 'ivf_learned' AS method, count(*) AS n_truth,
-         |  count(kl.query_id) AS n_hits,
-         |  round(CAST(count(kl.query_id) AS DOUBLE) / count(*), 6) AS recall
-         |FROM brute b LEFT JOIN ivfl kl
-         |  ON b.query_id = kl.query_id AND b.neighbor_id = kl.neighbor_id
-         |GROUP BY 1
-         |UNION ALL
-         |SELECT 'ivf_pq' AS method, count(*) AS n_truth,
-         |  count(p.query_id) AS n_hits,
-         |  round(CAST(count(p.query_id) AS DOUBLE) / count(*), 6) AS recall
-         |FROM brute b LEFT JOIN pq3 p
-         |  ON b.query_id = p.query_id AND b.neighbor_id = p.neighbor_id
-         |GROUP BY 1
-         |UNION ALL
-         |SELECT 'ivf_pq_residual' AS method, count(*) AS n_truth,
-         |  count(prs.query_id) AS n_hits,
-         |  round(CAST(count(prs.query_id) AS DOUBLE) / count(*), 6)
-         |    AS recall
-         |FROM brute b LEFT JOIN pqres3 prs
-         |  ON b.query_id = prs.query_id AND b.neighbor_id = prs.neighbor_id
-         |GROUP BY 1
-         |UNION ALL
-         |SELECT 'ivf_pq_learned' AS method, count(*) AS n_truth,
-         |  count(pl.query_id) AS n_hits,
-         |  round(CAST(count(pl.query_id) AS DOUBLE) / count(*), 6) AS recall
-         |FROM brute b LEFT JOIN pql3 pl
-         |  ON b.query_id = pl.query_id AND b.neighbor_id = pl.neighbor_id
-         |GROUP BY 1
-         |UNION ALL
-         |SELECT 'ivf_pq_rerank' AS method, count(*) AS n_truth,
-         |  count(pr.query_id) AS n_hits,
-         |  round(CAST(count(pr.query_id) AS DOUBLE) / count(*), 6) AS recall
-         |FROM brute b LEFT JOIN pqr3 pr
-         |  ON b.query_id = pr.query_id AND b.neighbor_id = pr.neighbor_id
-         |GROUP BY 1
-         |UNION ALL
-         |SELECT 'sq' AS method, count(*) AS n_truth,
-         |  count(sq.query_id) AS n_hits,
-         |  round(CAST(count(sq.query_id) AS DOUBLE) / count(*), 6) AS recall
-         |FROM brute b LEFT JOIN sq3 sq
-         |  ON b.query_id = sq.query_id AND b.neighbor_id = sq.neighbor_id
-         |GROUP BY 1""".stripMargin,
+         |${sqlRecall("brute", Seq("lsh" -> "lsh", "ivf" -> "ivf",
+              "ivf_learned" -> "ivfl", "ivf_pq" -> "pq3",
+              "ivf_pq_residual" -> "pqres3", "ivf_pq_learned" -> "pql3",
+              "ivf_pq_rerank" -> "pqr3", "sq" -> "sq3"), byMethod = true)}""".stripMargin,
 
     // greedy MMR unrolled: 5 chained selects, each appending the FIRST
     // index attaining the max score; weights are decimal literals both
@@ -7378,7 +7253,7 @@ object SparkEntry {
       }
       s"""WITH mq AS (SELECT vec_id AS query_id, embedding AS qv,
          |    sqrt(${sqlDot("embedding", "embedding")}) AS qn
-         |  FROM embeddings WHERE vec_id % 100 = 0 AND vec_id < 100000000),
+         |  FROM embeddings WHERE ${sqlAnnQueries()}),
          |mc0 AS (SELECT vec_id AS cid, embedding AS cvec,
          |    sqrt(${sqlDot("embedding", "embedding")}) AS cn
          |  FROM embeddings),
@@ -7414,92 +7289,42 @@ object SparkEntry {
     // the probe legs reuse the shared IVF CTEs; qcell (crk<=2) IS the
     // probe_2 leg, the others re-slice the same assignment ranking
     "emb_ivf_probe_curve" -> {
-      def legSql(p: Int, qc: String) =
+      val probes = Seq(1 -> "pq1", 2 -> "qcell", 4 -> "pq4")
+      val legCtes = probes.map { case (p, qc) =>
         s"""pj$p AS (SELECT query_id, neighbor_id,
            |    ${sqlDot("qv", "nv")} / (qn * nn) AS cos
            |  FROM ccell JOIN $qc USING (cid) WHERE neighbor_id <> query_id),
-           |pr$p AS (SELECT query_id, neighbor_id, row_number() OVER (
-           |    PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rk
-           |  FROM pj$p),
-           |pt$p AS (SELECT query_id, neighbor_id FROM pr$p
-           |  WHERE rk <= 3)""".stripMargin
-      def recSql(p: Int) =
-        s"""SELECT 'probe_$p' AS method, count(*) AS n_truth,
-           |  count(t$p.query_id) AS n_hits,
-           |  round(CAST(count(t$p.query_id) AS DOUBLE) / count(*), 6)
-           |    AS recall
-           |FROM brute b LEFT JOIN pt$p t$p
-           |  ON b.query_id = t$p.query_id
-           |  AND b.neighbor_id = t$p.neighbor_id""".stripMargin
-      s"""WITH q AS (SELECT vec_id AS query_id, embedding AS qv
-         |    FROM embeddings WHERE vec_id % 100 = 0 AND vec_id < 100000000),
-         |c AS (SELECT vec_id AS neighbor_id, embedding AS nv
-         |  FROM embeddings),
-         |bj AS (SELECT query_id, neighbor_id, ${sqlCos("qv", "nv")} AS cos
-         |  FROM c, q WHERE neighbor_id <> query_id),
-         |br AS (SELECT query_id, neighbor_id, row_number() OVER (
-         |    PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rk
-         |  FROM bj),
-         |brute AS (SELECT query_id, neighbor_id FROM br WHERE rk <= 3),
+           |pt$p AS (${sqlTopK(s"pj$p", "cos", 3)})""".stripMargin
+      }.mkString(",\n")
+      s"""WITH ${sqlBruteCtes(3)},
          |$sqlIvfCtes,
          |pq1 AS (SELECT query_id, qv, qn, cid FROM qa WHERE crk <= 1),
          |pq4 AS (SELECT query_id, qv, qn, cid FROM qa WHERE crk <= 4),
-         |${legSql(1, "pq1")},
-         |${legSql(2, "qcell")},
-         |${legSql(4, "pq4")}
-         |${recSql(1)}
-         |UNION ALL
-         |${recSql(2)}
-         |UNION ALL
-         |${recSql(4)}""".stripMargin
+         |$legCtes
+         |${sqlRecall("brute", probes.map { case (p, _) => s"probe_$p" -> s"pt$p" })}""".stripMargin
     },
 
     // nTables dial: per-leg candidates = pairs colliding in any table
     // tb < t (the absolute-plane-index family makes the t-table
     // geometry literally a prefix of the 4-table banding)
     "emb_lsh_table_curve" -> {
-      def legSql(t: Int) =
+      val tables = Seq(1, 2, 4)
+      val legCtes = tables.map { t =>
         s"""lp$t AS (SELECT query_id, neighbor_id, max(cos) AS cos
            |  FROM ltj WHERE tb < $t GROUP BY 1, 2),
-           |lr$t AS (SELECT query_id, neighbor_id, row_number() OVER (
-           |    PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rk
-           |  FROM lp$t),
-           |lt$t AS (SELECT query_id, neighbor_id FROM lr$t
-           |  WHERE rk <= 3)""".stripMargin
-      def recSql(t: Int) =
-        s"""SELECT 'tables_$t' AS method, count(*) AS n_truth,
-           |  count(t$t.query_id) AS n_hits,
-           |  round(CAST(count(t$t.query_id) AS DOUBLE) / count(*), 6)
-           |    AS recall
-           |FROM brute b LEFT JOIN lt$t t$t
-           |  ON b.query_id = t$t.query_id
-           |  AND b.neighbor_id = t$t.neighbor_id""".stripMargin
-      s"""WITH q AS (SELECT vec_id AS query_id, embedding AS qv
-         |    FROM embeddings WHERE vec_id % 100 = 0 AND vec_id < 100000000),
-         |c AS (SELECT vec_id AS neighbor_id, embedding AS nv
-         |  FROM embeddings),
-         |bj AS (SELECT query_id, neighbor_id, ${sqlCos("qv", "nv")} AS cos
-         |  FROM c, q WHERE neighbor_id <> query_id),
-         |br AS (SELECT query_id, neighbor_id, row_number() OVER (
-         |    PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rk
-         |  FROM bj),
-         |brute AS (SELECT query_id, neighbor_id FROM br WHERE rk <= 3),
+           |lt$t AS (${sqlTopK(s"lp$t", "cos", 3)})""".stripMargin
+      }.mkString(",\n")
+      s"""WITH ${sqlBruteCtes(3)},
          |$sqlLshBandCte,
          |ltq AS (SELECT vec_id AS query_id, embedding AS qv, tb, bk FROM lb
-         |  WHERE vec_id % 100 = 0 AND vec_id < 100000000),
+         |  WHERE ${sqlAnnQueries()}),
          |ltc AS (SELECT vec_id AS neighbor_id, embedding AS nv, tb, bk
          |  FROM lb),
          |ltj AS (SELECT tb, query_id, neighbor_id,
          |    ${sqlCos("qv", "nv")} AS cos
          |  FROM ltc JOIN ltq USING (tb, bk) WHERE neighbor_id <> query_id),
-         |${legSql(1)},
-         |${legSql(2)},
-         |${legSql(4)}
-         |${recSql(1)}
-         |UNION ALL
-         |${recSql(2)}
-         |UNION ALL
-         |${recSql(4)}""".stripMargin
+         |$legCtes
+         |${sqlRecall("brute", tables.map(t => s"tables_$t" -> s"lt$t"), byMethod = true)}""".stripMargin
     },
 
     "emb_label_centroid" ->
@@ -7815,81 +7640,16 @@ object SparkEntry {
     // rq recall: brute truth + the full two-stage rq_search chain
     // (shared CTEs verbatim) + the tiny pair join and 1-row agg
     "emb_rq_recall" ->
-      s"""WITH $sqlRqCtes,
-         |rw AS (SELECT vec_id, cid1, cid2 FROM rb2 WHERE rn = 1),
-         |rrec AS (SELECT w.vec_id AS neighbor_id,
-         |    list_transform(range(1, ${EmbDim + 1}),
-         |      i -> CAST(c.c1v[i] AS DOUBLE) + d.c2v[i]) AS rv
-         |  FROM rw w JOIN rc1 c ON c.cid1 = w.cid1
-         |    JOIN rc2 d ON d.cid2 = w.cid2),
-         |rqq AS (SELECT vec_id AS query_id, embedding AS qv,
-         |    sqrt(${sqlDot("embedding", "embedding")}) AS qn
-         |  FROM embeddings WHERE vec_id % 100 = 0 AND vec_id < 100000000),
-         |rs AS (SELECT q.query_id, r.neighbor_id,
-         |    ${sqlDot("q.qv", "r.rv")}
-         |      / (q.qn * sqrt(${sqlDot("r.rv", "r.rv")})) AS acos
-         |  FROM rrec r, rqq q WHERE r.neighbor_id <> q.query_id),
-         |rsr AS (SELECT query_id, neighbor_id, row_number() OVER (
-         |    PARTITION BY query_id ORDER BY acos DESC, neighbor_id) AS rk
-         |  FROM rs),
-         |rcand AS (SELECT query_id, neighbor_id FROM rsr WHERE rk <= 15),
-         |rex AS (SELECT a.query_id, a.neighbor_id,
-         |    ${sqlDot("q.qv", "e.embedding")}
-         |      / (q.qn * sqrt(${sqlDot("e.embedding", "e.embedding")}))
-         |      AS cos
-         |  FROM rcand a JOIN rqq q ON q.query_id = a.query_id
-         |    JOIN embeddings e ON e.vec_id = a.neighbor_id),
-         |rfin AS (SELECT query_id, neighbor_id,
-         |    row_number() OVER (PARTITION BY query_id
-         |      ORDER BY cos DESC, neighbor_id) AS rank FROM rex),
-         |rtop AS (SELECT query_id, neighbor_id FROM rfin WHERE rank <= 3),
-         |rbj AS (SELECT q.query_id, e.vec_id AS neighbor_id,
-         |    ${sqlDot("q.qv", "e.embedding")}
-         |      / (q.qn * sqrt(${sqlDot("e.embedding", "e.embedding")}))
-         |      AS cos
-         |  FROM embeddings e, rqq q WHERE e.vec_id <> q.query_id),
-         |rbr AS (SELECT query_id, neighbor_id, row_number() OVER (
-         |    PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rk
-         |  FROM rbj),
-         |rbrute AS (SELECT query_id, neighbor_id FROM rbr WHERE rk <= 3)
-         |SELECT count(*) AS n_truth, count(t.query_id) AS n_hits,
-         |  round(CAST(count(t.query_id) AS DOUBLE) / count(*), 6) AS recall
-         |FROM rbrute b LEFT JOIN rtop t
-         |  ON b.query_id = t.query_id
-         |  AND b.neighbor_id = t.neighbor_id""".stripMargin,
+      s"""WITH $sqlRqSearchCtes,
+         |${sqlBruteCtes(3)},
+         |rtop AS (SELECT query_id, neighbor_id FROM rfin WHERE rank <= 3)
+         |${sqlRecall("brute", Seq("" -> "rtop"))}""".stripMargin,
 
     // RQ-flat serving: the shared RQ chain's winner rebuilds the
     // c1+c2 reconstruction; approx-cos top-15, exact rerank top-3
     // (the emb_sq_search two-stage tail)
     "emb_rq_search" ->
-      s"""WITH $sqlRqCtes,
-         |rw AS (SELECT vec_id, cid1, cid2 FROM rb2 WHERE rn = 1),
-         |rrec AS (SELECT w.vec_id AS neighbor_id,
-         |    list_transform(range(1, ${EmbDim + 1}),
-         |      i -> CAST(c.c1v[i] AS DOUBLE) + d.c2v[i]) AS rv
-         |  FROM rw w JOIN rc1 c ON c.cid1 = w.cid1
-         |    JOIN rc2 d ON d.cid2 = w.cid2),
-         |rqq AS (SELECT vec_id AS query_id, embedding AS qv,
-         |    sqrt(${sqlDot("embedding", "embedding")}) AS qn
-         |  FROM embeddings WHERE vec_id % 100 = 0 AND vec_id < 100000000),
-         |rs AS (SELECT q.query_id, r.neighbor_id,
-         |    ${sqlDot("q.qv", "r.rv")}
-         |      / (q.qn * sqrt(${sqlDot("r.rv", "r.rv")})) AS acos
-         |  FROM rrec r, rqq q WHERE r.neighbor_id <> q.query_id),
-         |rsr AS (SELECT query_id, neighbor_id, row_number() OVER (
-         |    PARTITION BY query_id ORDER BY acos DESC, neighbor_id) AS rk
-         |  FROM rs),
-         |rcand AS (SELECT query_id, neighbor_id FROM rsr WHERE rk <= 15),
-         |rex AS (SELECT a.query_id, a.neighbor_id,
-         |    ${sqlDot("q.qv", "e.embedding")}
-         |      / (q.qn * sqrt(${sqlDot("e.embedding", "e.embedding")}))
-         |      AS cos
-         |  FROM rcand a JOIN rqq q ON q.query_id = a.query_id
-         |    JOIN embeddings e ON e.vec_id = a.neighbor_id),
-         |rfin AS (SELECT query_id, neighbor_id, cos,
-         |    CAST(row_number() OVER (PARTITION BY query_id
-         |      ORDER BY cos DESC, neighbor_id) AS INTEGER) AS rank
-         |  FROM rex)
+      s"""WITH $sqlRqSearchCtes
          |SELECT query_id, rank, neighbor_id, round(cos, 6) AS cos
          |FROM rfin WHERE rank <= 3""".stripMargin,
 
@@ -7967,21 +7727,9 @@ object SparkEntry {
     // verbatim) vs the brute truth + the tiny pair join and 1-row agg
     "emb_bq_recall" ->
       s"""WITH $sqlBqCtes,
-         |bqtop AS (SELECT query_id, neighbor_id FROM bqfin WHERE rank <= 3),
-         |bqbj AS (SELECT q.query_id, e.vec_id AS neighbor_id,
-         |    ${sqlDot("q.qv", "e.embedding")}
-         |      / (sqrt(${sqlDot("q.qv", "q.qv")})
-         |         * sqrt(${sqlDot("e.embedding", "e.embedding")})) AS cos
-         |  FROM embeddings e, bqq q WHERE e.vec_id <> q.query_id),
-         |bqbr AS (SELECT query_id, neighbor_id, row_number() OVER (
-         |    PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rk
-         |  FROM bqbj),
-         |bqbrute AS (SELECT query_id, neighbor_id FROM bqbr WHERE rk <= 3)
-         |SELECT count(*) AS n_truth, count(t.query_id) AS n_hits,
-         |  round(CAST(count(t.query_id) AS DOUBLE) / count(*), 6) AS recall
-         |FROM bqbrute b LEFT JOIN bqtop t
-         |  ON b.query_id = t.query_id
-         |  AND b.neighbor_id = t.neighbor_id""".stripMargin,
+         |${sqlBruteCtes(3)},
+         |bqtop AS (SELECT query_id, neighbor_id FROM bqfin WHERE rank <= 3)
+         |${sqlRecall("brute", Seq("" -> "bqtop"))}""".stripMargin,
 
     // two-stage serving: LEARNED-codebook ADC top-15 (the shared
     // lpfin chain — Knn.ivfPqRerankTopK's candidates come from the
@@ -7997,12 +7745,10 @@ object SparkEntry {
          |    ${sqlDot("q0.qv", "c0.nv")} / (q0.qn * c0.nn) AS cos
          |  FROM lpfin lp JOIN q0 USING (query_id)
          |  JOIN c0 ON c0.neighbor_id = lp.neighbor_id
-         |  WHERE lp.rk <= 15),
-         |rr AS (SELECT query_id, neighbor_id, cos,
-         |  CAST(row_number() OVER (PARTITION BY query_id
-         |    ORDER BY cos DESC, neighbor_id) AS INTEGER) AS rank FROM rr0)
+         |  WHERE lp.rank <= 15),
+         |rr AS (${sqlTopK("rr0", "cos", 3, cols = "query_id, neighbor_id, cos")})
          |SELECT query_id, rank, neighbor_id, round(cos, 6) AS cos
-         |FROM rr WHERE rank <= 3""".stripMargin,
+         |FROM rr""".stripMargin,
 
     "doc_pipeline" -> {
       def lst(words: Seq[String]): String = words.map(w => s"'$w'").mkString(", ")
@@ -8129,11 +7875,8 @@ object SparkEntry {
          |  FROM ph c JOIN probes p ON c.doc_id <> p.id_p
          |  WHERE bit_count(xor(p.ph_p, c.phash)) <= 3),
          |ca AS (SELECT DISTINCT id_a, id_b FROM pp WHERE hamming <= 3)
-         |SELECT count(*) AS n_true, count(ca.id_a) AS n_hits,
-         |  CASE WHEN count(*) = 0 THEN NULL
-         |    ELSE round(CAST(count(ca.id_a) AS DOUBLE) / count(*), 6) END
-         |    AS recall
-         |FROM tr LEFT JOIN ca ON tr.id_a = ca.id_a AND tr.id_b = ca.id_b"""
+         |SELECT n_truth AS n_true, n_hits, recall FROM (
+         |${sqlRecall("tr", Seq("" -> "ca"), keys = Seq("id_a", "id_b"))})"""
         .stripMargin,
 
     // per-doc most frequent bigram counted per shingle HASH (the
@@ -8162,7 +7905,7 @@ object SparkEntry {
       s"""SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
          |  round(${sqlCos("q.embedding", "c.embedding")}, 6) AS cos
          |FROM embeddings c,
-         |  (SELECT * FROM embeddings WHERE vec_id % 100 = 0 AND vec_id < 100000000) q
+         |  (SELECT * FROM embeddings WHERE ${sqlAnnQueries()}) q
          |WHERE c.vec_id <> q.vec_id
          |  AND ${sqlCos("q.embedding", "c.embedding")} >= 0.2""".stripMargin,
 

@@ -62,8 +62,9 @@ object Knn {
     * query's rows by `score` (descending, or ascending for a distance),
     * ties on the lower `nb`, into column `rank`, and keep ranks <= k.
     */
-  private def topK(df: DataFrame, score: String, k: Int, asc: Boolean = false,
-                   rank: String = "rank", nb: String = "neighbor_id"): DataFrame = {
+  private[graft] def topK(df: DataFrame, score: String, k: Int,
+                          asc: Boolean = false, rank: String = "rank",
+                          nb: String = "neighbor_id"): DataFrame = {
     val w = Window.partitionBy(col("query_id"))
       .orderBy(if (asc) col(score).asc else col(score).desc, col(nb))
     df.withColumn(rank, row_number().over(w)).where(col(rank) <= k)
@@ -338,26 +339,38 @@ object Knn {
     * sink would write binary, not arrays-of-int.
     */
   def quantizeInt8(emb: DataFrame, idCol: String = "vec_id",
-                   vecCol: String = "embedding"): DataFrame = {
+                   vecCol: String = "embedding"): DataFrame =
+    emb.crossJoin(broadcast(int8Bounds(emb, vecCol)))
+      .select(col(idCol), concat_ws(",",
+        int8Codes(vecCol)((code, _, _) => code.cast("string"))).as("codes"))
+
+  /** The int8 stats pass: per-dimension min/max partial-agg'd to `dim`
+    * rows, folded to one row of dim-ordered arrays (mns, mxs) —
+    * broadcastable at any corpus size.
+    */
+  private def int8Bounds(emb: DataFrame, vecCol: String): DataFrame = {
     val stats = emb
       .select(posexplode(col(vecCol)).as(Seq("pos", "x")))
       .groupBy("pos").agg(min(col("x").cast("double")).as("mn"),
         max(col("x").cast("double")).as("mx"))
-    val arrs = stats.groupBy().agg(
+    stats.groupBy().agg(
       transform(array_sort(collect_list(struct(col("pos"), col("mn")))),
         s => s.getField("mn")).as("mns"),
       transform(array_sort(collect_list(struct(col("pos"), col("mx")))),
         s => s.getField("mx")).as("mxs"))
-    emb.crossJoin(broadcast(arrs))
-      .select(col(idCol), concat_ws(",",
-        transform(col(vecCol), (x, i) => {
-          val mn = element_at(col("mns"), i + 1)
-          val mx = element_at(col("mxs"), i + 1)
-          when(mx === mn, lit(0)).otherwise(
-            floor((x.cast("double") - mn) / (mx - mn) * lit(255.0)).cast("int"))
-            .cast("string")
-        })).as("codes"))
   }
+
+  /** `vecCol` mapped element-wise through `f(code, mn, mx)`, where code
+    * is the element's int8 floor code against its dimension's
+    * [[int8Bounds]] (0 on a constant dimension).
+    */
+  private def int8Codes(vecCol: String)(f: (Column, Column, Column) => Column): Column =
+    transform(col(vecCol), (x, i) => {
+      val mn = element_at(col("mns"), i + 1)
+      val mx = element_at(col("mxs"), i + 1)
+      f(when(mx === mn, lit(0)).otherwise(
+        floor((x.cast("double") - mn) / (mx - mn) * lit(255.0)).cast("int")), mn, mx)
+    })
 
   /** Int8 scalar-quantized flat search with exact rerank — serving
     * against the [[quantizeInt8]] store (faiss SQ8-flat shape): stage 1
@@ -380,26 +393,11 @@ object Knn {
   def sqSearchTopK(corpus: DataFrame, queries: DataFrame, dim: Int, k: Int,
                    rerank: Int = 15, idCol: String = "vec_id",
                    vecCol: String = "embedding"): DataFrame = {
-    val stats = corpus
-      .select(posexplode(col(vecCol)).as(Seq("pos", "x")))
-      .groupBy("pos").agg(min(col("x").cast("double")).as("mn"),
-        max(col("x").cast("double")).as("mx"))
-    val arrs = stats.groupBy().agg(
-      transform(array_sort(collect_list(struct(col("pos"), col("mn")))),
-        s => s.getField("mn")).as("mns"),
-      transform(array_sort(collect_list(struct(col("pos"), col("mx")))),
-        s => s.getField("mx")).as("mxs"))
     // dequantized corpus vector: the int8 code round-tripped to double
-    // with quantizeInt8's exact floor-code arithmetic
-    val deq = corpus.crossJoin(broadcast(arrs))
+    val deq = corpus.crossJoin(broadcast(int8Bounds(corpus, vecCol)))
       .select(col(idCol).as("neighbor_id"), col(vecCol).as("nvec"),
-        transform(col(vecCol), (x, i) => {
-          val mn = element_at(col("mns"), i + 1)
-          val mx = element_at(col("mxs"), i + 1)
-          val code = when(mx === mn, lit(0)).otherwise(
-            floor((x.cast("double") - mn) / (mx - mn) * lit(255.0)).cast("int"))
-          mn + code.cast("double") / lit(255.0) * (mx - mn)
-        }).as("dv"))
+        int8Codes(vecCol)((code, mn, mx) =>
+          mn + code.cast("double") / lit(255.0) * (mx - mn)).as("dv"))
     val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qvec"),
       castD(col(vecCol)).as("qd"),
       sqrt(dot(col(vecCol), col(vecCol), dim)).as("qn"))

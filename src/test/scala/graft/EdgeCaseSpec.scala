@@ -237,6 +237,27 @@ class EdgeCaseSpec extends AnyFunSuite {
     assert(row.isNullAt(row.fieldIndex("significant")))
   }
 
+  test("doc_dedup_eval surfaces NULL recall when no pair reaches the " +
+    "Jaccard truth threshold") {
+    // no two documents share a 3-shingle, so the exact-Jaccard truth is
+    // empty: the per-method read-out is 0 truth, 0 hits, NULL recall
+    // (DuckDB's 0/0), never an ANSI divide error
+    val dir = java.nio.file.Files.createTempDirectory("dedup_eval_edge")
+      .toString
+    Seq((1L, "alpha beta gamma delta epsilon"),
+        (2L, "one two three four five six"),
+        (3L, "red green blue cyan magenta yellow black"))
+      .toDF("doc_id", "text")
+      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    val rows = SparkEntry.queries("doc_dedup_eval")(spark, dir).collect()
+    assert(rows.map(_.getAs[String]("method")).sorted.toSeq ==
+      Seq("minhash_lsh", "simhash"))
+    rows.foreach { r =>
+      assert(r.getAs[Long]("n_truth") == 0L && r.getAs[Long]("n_hits") == 0L)
+      assert(r.isNullAt(r.fieldIndex("recall")))
+    }
+  }
+
   test("q_ab_test surfaces NULL z when both variants are constant " +
     "(zero pooled standard error)") {
     // two rows per variant, identical values within each: both sample

@@ -8,7 +8,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * session in `src/main` is built by [[GraftSession.configure]], and no
   * JVM system property or mutable global steers what the engine plans.
   * Knn keeps one copy each of the LSH band geometry and the per-query
-  * rank that the DuckDB oracles mirror.
+  * rank, and SparkEntry one copy each of the ANN query batch and the
+  * recall score, that the DuckDB oracles mirror.
   * Checked over the source text, so a new main or toggle fails here
   * before it can reach a measurement.
   */
@@ -51,20 +52,37 @@ class SessionInvariantSpec extends AnyFunSuite {
     assert(vars.isEmpty, vars.mkString(", "))
   }
 
+  /** One chunk per top-level member of an object in `file`, up to the
+    * next member: (member name, source text).
+    */
+  private def members(file: String): Seq[(String, String)] = {
+    val text = sources.collectFirst { case (p, t) if p.endsWith(file) => t }.get
+    val starts = """(?m)^  (?:private(?:\[\w+\])? )?(?:def|val) (\w+)""".r
+      .findAllMatchIn(text).toList
+    starts.zip(starts.drop(1).map(_.start) :+ text.length)
+      .map { case (m, end) => m.group(1) -> text.substring(m.start, end) }
+  }
+
+  private def callers(members: Seq[(String, String)], re: String): Seq[String] =
+    members.collect { case (name, body) if re.r.findFirstIn(body).nonEmpty => name }
+
+  private val queryWindow = """Window\.partitionBy\((?:col\()?"query_id""""
+
   test("Knn bands LSH tables and ranks per-query top-k in one helper each") {
     // the DuckDB oracles mirror one band geometry (sqlLshCtes) and one
     // rank order; a second copy in Knn could drift from both unseen
-    val knn = sources.collectFirst {
-      case (p, text) if p.endsWith("graft/operators/Knn.scala") => text
-    }.get
-    // one chunk per member of object Knn, up to the next member
-    val starts = """(?m)^  (?:private )?(?:def|val) (\w+)""".r
-      .findAllMatchIn(knn).toList
-    val members = starts.zip(starts.drop(1).map(_.start) :+ knn.length)
-      .map { case (m, end) => m.group(1) -> knn.substring(m.start, end) }
-    def callers(re: String): Seq[String] =
-      members.collect { case (name, body) if re.r.findFirstIn(body).nonEmpty => name }
-    assert(callers("""(?<!def )\bbucketCode\(""") == Seq("lshBand"))
-    assert(callers("""Window\.partitionBy\((?:col\()?"query_id"""") == Seq("topK"))
+    val knn = members("graft/operators/Knn.scala")
+    assert(callers(knn, """(?<!def )\bbucketCode\(""") == Seq("lshBand"))
+    assert(callers(knn, queryWindow) == Seq("topK"))
+  }
+
+  test("SparkEntry picks ANN query batches, ranks and scores recall in one helper each") {
+    // the oracles mirror one batch (sqlAnnQueries), one rank (sqlTopK)
+    // and one recall (sqlRecall); a query-local copy could drift unseen
+    val entry = members("graft/SparkEntry.scala")
+    assert(callers(entry, queryWindow).isEmpty)
+    assert(callers(entry, """count\(col\("__h"\)\)""") == Seq("recallAgg"))
+    assert(callers(entry, """col\("vec_id"\) % (?:100|AnnQueryEvery)\b""") ==
+      Seq("annQueries"))
   }
 }
