@@ -25,6 +25,11 @@ import org.apache.spark.sql.functions._
   * replicating 60M lineitem rows for it would be pure write cost.
   */
 object ScaleUp {
+  /** Replica `i`'s key shift is `i * KeyOff`, beyond every sf0.1 key
+    * range, so ids below KeyOff are the unshifted base copy.
+    */
+  val KeyOff = 100000000L
+
   def main(args: Array[String]): Unit = {
     val (src, out) = (args(0), args(1))
     val copies = args.lift(2).map(_.toInt).getOrElse(10)
@@ -38,7 +43,6 @@ object ScaleUp {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    val KeyOff = 100000000L // beyond every sf0.1 key range
     val UserOff = 10000000L
 
     def replicate(table: String)(copy: (DataFrame, Int) => DataFrame): Unit =

@@ -3460,11 +3460,24 @@ object SparkEntry {
     * oracles read the same constants through [[sqlAnnQueries]].
     */
   private val AnnQueryEvery = 100
-  private val AnnQueryIdMax = 100000000L
+  /** Ids below this are ScaleUp's unshifted base copy. */
+  private val BaseIdMax = ScaleUp.KeyOff
+  /** Planted payload copies take `id + PlantedIdOff`: clear of every
+    * ScaleUp replica range (+1e8 would collide with replica 1's ids).
+    */
+  private val PlantedIdOff = 100000000000L
+  /** The contamination benchmark set: every 97th BASE-COPY doc. An
+    * eval suite is operationally constant, so the broadcast/bloom side
+    * stays fixed while only the corpus side scales — the ANN query
+    * batches' policy. [[sqlBenchDocs]] is its oracle twin.
+    */
+  private val BenchDocEvery = 97
+  private val BenchDocs =
+    col("doc_id") % BenchDocEvery === 0 && col("doc_id") < BaseIdMax
 
   private def annQueries(emb: DataFrame): DataFrame =
     emb.where(col("vec_id") % AnnQueryEvery === 0 &&
-      col("vec_id") < AnnQueryIdMax)
+      col("vec_id") < BaseIdMax)
 
   /** The (query, neighbor) keys every ANN eval joins truth to candidates on. */
   private val AnnKeys = Seq("query_id", "neighbor_id")
@@ -3563,11 +3576,11 @@ object SparkEntry {
   private def mmPhashEvalSampledDf(s: SparkSession, dir: String): DataFrame = {
     val docs0 = tbl(s, dir, "documents").select("doc_id", "text")
     val planted = docs0.where(col("doc_id") % 50 === 0 &&
-        col("doc_id") < 100000000L)
-      .withColumn("doc_id", col("doc_id") + lit(100000000000L))
+        col("doc_id") < BaseIdMax)
+      .withColumn("doc_id", col("doc_id") + lit(PlantedIdOff))
     val all = docs0.unionByName(planted)
     val ph = Multimodal.phashAll(s, all).toDF()
-    val probes = ph.where(col("doc_id") >= 100000000000L)
+    val probes = ph.where(col("doc_id") >= PlantedIdOff)
       .select(col("doc_id").as("id_p"), col("phash").as("ph_p"))
     val truth = ph
       .select(col("doc_id").as("id_c"), col("phash").as("ph_c"))
@@ -3776,21 +3789,15 @@ object SparkEntry {
             col("n_hits").cast("double") / col("n_cand"), 6)).as("prec"))
     },
 
-    // the benchmark set is pinned to the BASE-COPY docs (doc_id < 1e8
-    // under ScaleUp's replica shift): an eval suite is operationally
-    // constant, so the broadcast/bloom side stays fixed while only
-    // the corpus side scales — same policy as the ANN query batches
     "doc_contamination" -> { (s, dir) =>
-      Dedup.contamination(tbl(s, dir, "documents"),
-        col("doc_id") % 97 === 0 && col("doc_id") < 100000000L)
+      Dedup.contamination(tbl(s, dir, "documents"), BenchDocs)
     },
 
     // char-level decontamination: catches verbatim benchmark text the
     // token n-gram screen misses when token boundaries shift; span
     // edges are exact char offsets so the overlap can be CUT
     "doc_contamination_spans" -> { (s, dir) =>
-      Dedup.contaminationSpans(tbl(s, dir, "documents"),
-        col("doc_id") % 97 === 0 && col("doc_id") < 100000000L)
+      Dedup.contaminationSpans(tbl(s, dir, "documents"), BenchDocs)
     },
 
     // fixed-size-sketch scale path, wrapped in its own contract so
@@ -3803,8 +3810,7 @@ object SparkEntry {
     // once and shared by the exact and sketch legs (Dedup
     // .contaminationAudit), not re-derived per leg.
     "doc_contamination_bloom" -> { (s, dir) =>
-      Dedup.contaminationAudit(tbl(s, dir, "documents"),
-        col("doc_id") % 97 === 0 && col("doc_id") < 100000000L)
+      Dedup.contaminationAudit(tbl(s, dir, "documents"), BenchDocs)
     },
 
     "doc_dup_ngram_frac" -> { (s, dir) =>
@@ -4463,7 +4469,7 @@ object SparkEntry {
     "emb_dedup_cosine_fixed" -> { (s, dir) =>
       val emb = ftbl(s, dir, "embeddings")
       val base = if (Knn.corpusCount(emb) > EmbDedupFixedMaxVecs)
-        emb.where(col("vec_id") < 100000000L)
+        emb.where(col("vec_id") < BaseIdMax)
       else emb
       Knn.cosineDupPairsLsh(base, EmbDim, 0.3, nPlanes = 4)
     },
@@ -4724,7 +4730,7 @@ object SparkEntry {
     "mm_phash_wide" -> { (s, dir) =>
       val docs = tbl(s, dir, "documents").select("doc_id", "text")
       val planted = docs.where(col("doc_id") % 50 === 0)
-        .withColumn("doc_id", col("doc_id") + lit(100000000000L))
+        .withColumn("doc_id", col("doc_id") + lit(PlantedIdOff))
       Multimodal.phashPairs(s, docs.unionByName(planted),
         maxHamming = 3, bandBits = 16, nPixels = 64)
     },
@@ -4808,8 +4814,8 @@ object SparkEntry {
     "mm_frame_dedup" -> { (s, dir) =>
       val docs = tbl(s, dir, "documents").select("doc_id", "text")
       val planted = docs.where(col("doc_id") % 50 === 0 &&
-          col("doc_id") < 100000000L)
-        .withColumn("doc_id", col("doc_id") + lit(100000000000L))
+          col("doc_id") < BaseIdMax)
+        .withColumn("doc_id", col("doc_id") + lit(PlantedIdOff))
       Multimodal.frameDupPairs(s, docs.unionByName(planted),
         everyKth = MmFramesEveryKth)
     },
@@ -4824,8 +4830,8 @@ object SparkEntry {
     "mm_audio_dedup" -> { (s, dir) =>
       val docs = tbl(s, dir, "documents").select("doc_id", "text")
       val planted = docs.where(col("doc_id") % 50 === 0 &&
-          col("doc_id") < 100000000L)
-        .withColumn("doc_id", col("doc_id") + lit(100000000000L))
+          col("doc_id") < BaseIdMax)
+        .withColumn("doc_id", col("doc_id") + lit(PlantedIdOff))
       Multimodal.audioDupPairs(s, docs.unionByName(planted))
     },
 
@@ -5118,7 +5124,11 @@ object SparkEntry {
 
   /** [[annQueries]]' predicate over the id column `c`. */
   private def sqlAnnQueries(c: String = "vec_id"): String =
-    s"$c % $AnnQueryEvery = 0 AND $c < $AnnQueryIdMax"
+    s"$c % $AnnQueryEvery = 0 AND $c < $BaseIdMax"
+
+  /** [[BenchDocs]]' predicate over the id column `c`. */
+  private def sqlBenchDocs(c: String = "doc_id"): String =
+    s"$c % $BenchDocEvery = 0 AND $c < $BaseIdMax"
 
   /** The SQL mirror of Knn.topK: `src`'s `cols` plus an INTEGER `rank`
     * numbering each query's rows by `score` (descending, or ascending
@@ -5185,12 +5195,6 @@ object SparkEntry {
       s"(CASE WHEN ${sqlPlaneDot(v, offset + j)} > 0 THEN ${1L << j} ELSE 0 END)"
     }.mkString("(", " + ", ")")
 
-  /** SQ8 two-stage search as CTEs ending in `sqfin` = (query_id,
-    * neighbor_id, cos, rank) after the exact-cosine rerank of the
-    * dequantized-cosine top-15 — the SQL twin of Knn.sqSearchTopK,
-    * shared by emb_sq_search and emb_ann_recall's sq leg so the eval
-    * cannot drift from the index it measures.
-    */
   /** Greedy k-center replay (emb_kcenter): round i picks the argmin
     * (running-max-cos asc, id asc) among not-yet-selected vectors;
     * the running max chains incrementally through `greatest`, which
@@ -5295,6 +5299,12 @@ object SparkEntry {
        |bqfin AS (${sqlTopK("bqrr", "cos", cols = "query_id, neighbor_id, ham, cos")})""".stripMargin
   }
 
+  /** SQ8 two-stage search as CTEs ending in `sqfin` = (query_id,
+    * neighbor_id, cos, rank) after the exact-cosine rerank of the
+    * dequantized-cosine top-15 — the SQL twin of Knn.sqSearchTopK,
+    * shared by emb_sq_search and emb_ann_recall's sq leg so the eval
+    * cannot drift from the index it measures.
+    */
   private def sqlSqCtes: String =
     s"""sqdd AS (SELECT i FROM range(1, ${EmbDim + 1}) t(i)),
        |sqst AS (SELECT i, min(CAST(embedding[i] AS DOUBLE)) AS mn,
@@ -5489,18 +5499,6 @@ object SparkEntry {
        |rr AS (${sqlTopK("rsc", "adist", asc = true,
                cols = "query_id, neighbor_id, adist")})""".stripMargin
 
-  /** LEARNED-PQ codebook + corpus-assignment CTEs — mirrors
-    * Knn.pqCodebookLearned / pqAssignLearned exactly: seed codewords
-    * from the every-Nth corpus sample (vec_id % N = 1, the same
-    * [[sqlPqEvery]] stride as the sampled PQ), assign every (vector,
-    * subspace) to its nearest seed (squared sub-L2, min-cid tie-break),
-    * move each codeword to its cell's per-dim mean rounded to 6dp (the
-    * kmeans convention both engines replay identically), then re-assign
-    * the corpus against the learned book. Ends in `lpcb` (s, cid, cs)
-    * and `lpr` (vec_id, s, cid, dist, rn; rn = 1 is the code). Shared
-    * VERBATIM by the emb_pq_learned oracle and emb_ann_recall's
-    * ivf_pq_learned leg so the store and its eval cannot drift.
-    */
   /** The SAMPLED-codebook PQ store as a complete statement
     * (vec_id, codes CSV, err2) — the emb_pq oracle, and one arm of
     * emb_pq_err_curve's distortion dial (shared verbatim so the store
@@ -5573,6 +5571,18 @@ object SparkEntry {
        |    (x, y) -> x + y), 6) AS err2
        |FROM r WHERE rn = 1 GROUP BY vec_id""".stripMargin
 
+  /** LEARNED-PQ codebook + corpus-assignment CTEs — mirrors
+    * Knn.pqCodebookLearned / pqAssignLearned exactly: seed codewords
+    * from the every-Nth corpus sample (vec_id % N = 1, the same
+    * [[sqlPqEvery]] stride as the sampled PQ), assign every (vector,
+    * subspace) to its nearest seed (squared sub-L2, min-cid tie-break),
+    * move each codeword to its cell's per-dim mean rounded to 6dp (the
+    * kmeans convention both engines replay identically), then re-assign
+    * the corpus against the learned book. Ends in `lpcb` (s, cid, cs)
+    * and `lpr` (vec_id, s, cid, dist, rn; rn = 1 is the code). Shared
+    * VERBATIM by the emb_pq_learned oracle and emb_ann_recall's
+    * ivf_pq_learned leg so the store and its eval cannot drift.
+    */
   private def sqlPqLearnedCtes: String =
     s"""lpseed AS (SELECT vec_id AS cid, embedding AS cvec
        |  FROM embeddings WHERE vec_id % $sqlPqEvery = (1 % $sqlPqEvery)),
@@ -5841,11 +5851,6 @@ object SparkEntry {
   private val LshPlanes = 4
   private val LshTables = 4
 
-  /** The banded corpus `lb(vec_id, embedding, tb, bk)` — one row per
-    * (vector, LSH table) with that table's bucket code. Shared by
-    * [[sqlLshCtes]] and the emb_dedup_cosine oracle so the dedup blocks
-    * are exactly the ANN index's cells.
-    */
   /** The stub-decode perceptual-hash chain shared by mm_phash and its
     * recall eval: `ph(doc_id, phash)` and the byte-banded candidate
     * pairs `pp(id_a, id_b, hamming)` — every constant interpolated
@@ -5925,6 +5930,11 @@ object SparkEntry {
        |  GROUP BY 1, 2),
        |mr AS (${sqlTopK("mcand", "ip", cols = "query_id, neighbor_id, ip")})""".stripMargin
 
+  /** The banded corpus `lb(vec_id, embedding, tb, bk)` — one row per
+    * (vector, LSH table) with that table's bucket code. Shared by
+    * [[sqlLshCtes]] and the emb_dedup_cosine oracle so the dedup blocks
+    * are exactly the ANN index's cells.
+    */
   private def sqlLshBandCte: String = sqlLshBandCteFrom("embeddings")
 
   /** [[sqlLshBandCte]] over an arbitrary source relation — the
@@ -6097,21 +6107,21 @@ object SparkEntry {
     "doc_contamination" ->
       s"""WITH $sqlSidsCte,
          |bench AS (SELECT DISTINCT unnest(sids) AS sid FROM sids
-         |  WHERE doc_id % 97 = 0 AND doc_id < 100000000),
+         |  WHERE ${sqlBenchDocs()}),
          |corpus AS (SELECT doc_id, unnest(sids) AS sid FROM sids
-         |  WHERE NOT (doc_id % 97 = 0 AND doc_id < 100000000)),
+         |  WHERE NOT (${sqlBenchDocs()})),
          |hits AS (SELECT doc_id, count(*) AS n_shared FROM corpus
          |  WHERE sid IN (SELECT sid FROM bench) GROUP BY doc_id)
          |SELECT d.doc_id, coalesce(h.n_shared, 0) AS n_shared,
          |  coalesce(h.n_shared, 0) > 0 AS contaminated
          |FROM documents d LEFT JOIN hits h ON h.doc_id = d.doc_id
-         |WHERE NOT (d.doc_id % 97 = 0 AND d.doc_id < 100000000)""".stripMargin,
+         |WHERE NOT (${sqlBenchDocs("d.doc_id")})""".stripMargin,
 
     // char-gram decontamination: the dup_spans rolling-hash chain with
     // the bench/corpus split of the contamination oracle
     "doc_contamination_spans" ->
       s"""WITH csg AS (SELECT doc_id,
-         |    (doc_id % 97 = 0 AND doc_id < 100000000) AS bench, text,
+         |    (${sqlBenchDocs()}) AS bench, text,
          |    unnest(range(0, greatest(len(text) - 19, 0))) AS pos
          |  FROM documents),
          |csh AS (SELECT doc_id, bench, pos,
@@ -6143,16 +6153,16 @@ object SparkEntry {
          |  ELSE 0.0 END AS contam_frac,
          |  coalesce(a.cchars, 0) > 0 AS contaminated
          |FROM documents d LEFT JOIN csa a ON d.doc_id = a.doc_id
-         |WHERE NOT (d.doc_id % 97 = 0 AND d.doc_id < 100000000)""".stripMargin,
+         |WHERE NOT (${sqlBenchDocs("d.doc_id")})""".stripMargin,
 
     // Bloom internals are engine-specific; the exact columns and the
     // contract verdicts are not (see the query comment)
     "doc_contamination_bloom" ->
       s"""WITH $sqlSidsCte,
          |bench AS (SELECT DISTINCT unnest(sids) AS sid FROM sids
-         |  WHERE doc_id % 97 = 0 AND doc_id < 100000000),
+         |  WHERE ${sqlBenchDocs()}),
          |corpus AS (SELECT doc_id, unnest(sids) AS sid FROM sids
-         |  WHERE NOT (doc_id % 97 = 0 AND doc_id < 100000000)),
+         |  WHERE NOT (${sqlBenchDocs()})),
          |hits AS (SELECT doc_id, count(*) AS n_shared FROM corpus
          |  WHERE sid IN (SELECT sid FROM bench) GROUP BY doc_id)
          |SELECT d.doc_id, coalesce(h.n_shared, 0) AS n_shared,
@@ -6160,7 +6170,7 @@ object SparkEntry {
          |  TRUE AS bloom_no_false_neg,
          |  TRUE AS bloom_flags_all_contaminated
          |FROM documents d LEFT JOIN hits h ON h.doc_id = d.doc_id
-         |WHERE NOT (d.doc_id % 97 = 0 AND d.doc_id < 100000000)""".stripMargin,
+         |WHERE NOT (${sqlBenchDocs("d.doc_id")})""".stripMargin,
 
     "doc_dup_ngram_frac" ->
       s"""WITH $sqlSidsCte,
@@ -7521,7 +7531,7 @@ object SparkEntry {
     "emb_dedup_cosine_fixed" ->
       s"""WITH gemb AS (SELECT vec_id, embedding FROM embeddings
          |  WHERE (SELECT count(*) FROM embeddings) <= $EmbDedupFixedMaxVecs
-         |    OR vec_id < 100000000),
+         |    OR vec_id < $BaseIdMax),
          |${sqlLshBandCteFrom("gemb")},
          |p0 AS (SELECT a.vec_id AS id_a, b.vec_id AS id_b,
          |    ${sqlCos("a.embedding", "b.embedding")} AS cos
@@ -7842,7 +7852,7 @@ object SparkEntry {
     // plus planted payload copies; identical chain, wider constants
     "mm_phash_wide" ->
       s"""WITH pdocs AS (SELECT doc_id, text FROM documents
-         |  UNION ALL SELECT doc_id + 100000000000, text FROM documents
+         |  UNION ALL SELECT doc_id + $PlantedIdOff, text FROM documents
          |  WHERE doc_id % 50 = 0),
          |${sqlPhashCtesN(64, 16, "pdocs")}
          |SELECT id_a, id_b, hamming FROM pp WHERE hamming <= 3""".stripMargin,
@@ -7865,11 +7875,11 @@ object SparkEntry {
     // production eval geometry, same CTE chain over the planted frame
     "mm_phash_eval_sampled" ->
       s"""WITH pdocs AS (SELECT doc_id, text FROM documents
-         |  UNION ALL SELECT doc_id + 100000000000, text FROM documents
-         |  WHERE doc_id % 50 = 0 AND doc_id < 100000000),
+         |  UNION ALL SELECT doc_id + $PlantedIdOff, text FROM documents
+         |  WHERE doc_id % 50 = 0 AND doc_id < $BaseIdMax),
          |${sqlPhashCtesN(64, 16, "pdocs")},
          |probes AS (SELECT doc_id AS id_p, phash AS ph_p FROM ph
-         |  WHERE doc_id >= 100000000000),
+         |  WHERE doc_id >= $PlantedIdOff),
          |tr AS (SELECT DISTINCT least(p.id_p, c.doc_id) AS id_a,
          |    greatest(p.id_p, c.doc_id) AS id_b
          |  FROM ph c JOIN probes p ON c.doc_id <> p.id_p
@@ -7940,8 +7950,8 @@ object SparkEntry {
     // peak*1001+next, distinct per doc, df-capped 2..16, containment
     "mm_audio_dedup" ->
       s"""WITH adocs AS (SELECT doc_id, text FROM documents
-         |  UNION ALL SELECT doc_id + 100000000000, text FROM documents
-         |  WHERE doc_id % 50 = 0 AND doc_id < 100000000),
+         |  UNION ALL SELECT doc_id + $PlantedIdOff, text FROM documents
+         |  WHERE doc_id % 50 = 0 AND doc_id < $BaseIdMax),
          |m AS (SELECT doc_id, ${sqlPoly("text")} AS h FROM adocs),
          |aa AS (SELECT doc_id, h, 64 + h % 64 AS n FROM m),
          |ax AS (SELECT doc_id, h, n, unnest(range(n)) AS i FROM aa),
@@ -7986,8 +7996,8 @@ object SparkEntry {
     // chain; overlap = containment vs the smaller sampled set
     "mm_frame_dedup" ->
       s"""WITH fdocs AS (SELECT doc_id, text FROM documents
-         |  UNION ALL SELECT doc_id + 100000000000, text FROM documents
-         |  WHERE doc_id % 50 = 0 AND doc_id < 100000000),
+         |  UNION ALL SELECT doc_id + $PlantedIdOff, text FROM documents
+         |  WHERE doc_id % 50 = 0 AND doc_id < $BaseIdMax),
          |m AS (SELECT doc_id, ${sqlPoly("text")} AS fp FROM fdocs),
          |f AS (SELECT doc_id, fp, 1 + fp % 8 AS n_frames FROM m),
          |x AS (SELECT doc_id, fp,

@@ -1104,15 +1104,15 @@ object Knn {
 
   /** Bounded per-plan corpus-count cache behind the auto-sizing
     * resolvers: keyed on the CANONICALIZED analyzed plan (exprIds
-    * normalized; parquet relations compare by root path), so repeated
-    * auto-sizes over the same corpus — [[ivfPqTopK]] resolving both
-    * its coarse and PQ strides, a bench suite running the pq /
-    * ivf_pq / rerank legs over one table — pay ONE count job total
-    * instead of one per resolver call. LRU-bounded at 64 plans so a
-    * long-lived session never accumulates stale keys; counts are
-    * stable for the cache's purpose because auto-sizing is
-    * index-BUILD semantics (the codebook is derived from the corpus
-    * snapshot being indexed).
+    * normalized) plus the files it reads, so repeated auto-sizes over
+    * the same corpus — [[ivfPqTopK]] resolving both its coarse and PQ
+    * strides, a bench suite running the pq / ivf_pq / rerank legs over
+    * one table — pay ONE count job total instead of one per resolver
+    * call. A parquet relation's plan compares equal by root path
+    * alone, so the file list (the read's own listing, no job) is what
+    * makes a re-read after files under that path changed count afresh.
+    * LRU-bounded at 64 plans so a long-lived session never accumulates
+    * stale keys.
     */
   private val countCache =
     new java.util.LinkedHashMap[AnyRef, java.lang.Long](16, 0.75f, true) {
@@ -1122,7 +1122,7 @@ object Knn {
     }
 
   private def cachedCount(df: DataFrame): Long = {
-    val key = df.queryExecution.analyzed.canonicalized
+    val key = (df.queryExecution.analyzed.canonicalized, df.inputFiles.toSet)
     val hit = countCache.synchronized(countCache.get(key))
     if (hit != null) hit.longValue()
     else {

@@ -36,10 +36,8 @@ object StreamAbTest {
             watermark: String = "1 hour"): DataFrame = {
     def side(v: Int, c: Column) =
       sum(when(col("user_id") % 2 === v, c))
-    val agg = events
-      .where(col("event_type") === "purchase")
-      .withColumn("__event_time", timestamp_micros(col("ts")))
-      .withWatermark("__event_time", watermark)
+    val agg = StreamRollup.eventTime(
+        events.where(col("event_type") === "purchase"), "ts", watermark)
       .groupBy(window(col("__event_time"), windowLen).as("__w"))
       .agg(
         side(0, lit(1L)).as("n0"), side(1, lit(1L)).as("n1"),

@@ -1,8 +1,8 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Dataset, SparkSession}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import graft.functions.TimeIndex
+import SeriesFold.Ev
 
 /** Streaming align — unbounded form of graft.operators.Align
   * (reference: pypond/processor/align.py, which is itself a streaming
@@ -17,7 +17,6 @@ import graft.functions.TimeIndex
   */
 object StreamAlign {
 
-  final case class Ev(user_id: Long, ts: Long, value: Double)
   final case class Prev(ts: Long, value: Double)
   final case class Aligned(user_id: Long, ts: Long, value: Option[Double])
 
@@ -27,41 +26,28 @@ object StreamAlign {
     val durUs = TimeIndex.durationUs(window)
     import spark.implicits._
 
-    def step(user: Long, batch: Iterator[Ev],
-             state: GroupState[Prev]): Iterator[Aligned] = {
-      val sorted = batch.toVector.sortBy(_.ts)
-      var out = Vector.empty[Aligned]
-      var prev = state.getOption
-      sorted.foreach { e =>
-        prev match {
-          case None =>
-            if (Math.floorMod(e.ts, durUs) == 0) out :+= Aligned(user, e.ts, Some(e.value))
-          case Some(p) =>
-            val prevPos = Math.floorDiv(p.ts, durUs)
-            val curPos = Math.floorDiv(e.ts, durUs)
-            val nBounds = curPos - prevPos
-            val overLimit = limit.exists(l => nBounds > l)
-            var pos = prevPos + 1
-            while (pos <= curPos) {
-              val bTs = pos * durUs
-              val v =
-                if (overLimit) None
-                else if (method == "hold") Some(p.value)
-                else {
-                  val frac = (bTs - p.ts).toDouble / (e.ts - p.ts).toDouble
-                  Some(p.value + (e.value - p.value) * frac)
-                }
-              out :+= Aligned(user, bTs, v)
-              pos += 1
-            }
-        }
-        prev = Some(Prev(e.ts, e.value))
+    SeriesFold(events) { (user, prev: Option[Prev], e) =>
+      val out = prev match {
+        case None =>
+          if (Math.floorMod(e.ts, durUs) == 0) Seq(Aligned(user, e.ts, Some(e.value)))
+          else Nil
+        case Some(p) =>
+          val prevPos = Math.floorDiv(p.ts, durUs)
+          val curPos = Math.floorDiv(e.ts, durUs)
+          val overLimit = limit.exists(l => curPos - prevPos > l)
+          (prevPos + 1 to curPos).map { pos =>
+            val bTs = pos * durUs
+            val v =
+              if (overLimit) None
+              else if (method == "hold") Some(p.value)
+              else {
+                val frac = (bTs - p.ts).toDouble / (e.ts - p.ts).toDouble
+                Some(p.value + (e.value - p.value) * frac)
+              }
+            Aligned(user, bTs, v)
+          }
       }
-      prev.foreach(state.update)
-      out.iterator
+      (Some(Prev(e.ts, e.value)), out)
     }
-
-    events.groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(step)
   }
 }

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Dataset, SparkSession}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming as-of lookup — the unbounded form of
   * graft.operators.Combine.asof (reference: pypond/series.py:335,395
@@ -22,7 +21,11 @@ object StreamAsOf {
   final case class Lookup(user_id: Long, ts: Long, event_id: Long)
   final case class Ref(user_id: Long, ts: Long, value: Double)
   final case class Tagged(user_id: Long, ts: Long, isL: Boolean,
-                          event_id: Long, value: Double)
+                          event_id: Long, value: Double) extends SeriesFold.Keyed
+  object Tagged {
+    /** refs before lookups at equal ts: the batch operator's tag order */
+    implicit val byTsTag: Ordering[Tagged] = Ordering.by(t => (t.ts, t.isL))
+  }
   final case class Latest(ts: Long, value: Double)
   final case class Out(user_id: Long, ts: Long, event_id: Long,
                        asof_value: Option[Double])
@@ -40,22 +43,11 @@ object StreamAsOf {
       .map(l => Tagged(l.user_id, l.ts, isL = true, l.event_id, 0.0))
       .unionByName(refs.map(r => Tagged(r.user_id, r.ts, isL = false, 0L, r.value)))
 
-    def step(user: Long, batch: Iterator[Tagged],
-             state: GroupState[Latest]): Iterator[Out] = {
-      val sorted = batch.toVector.sortBy(t => (t.ts, t.isL))
-      var cur = state.getOption
-      var out = Vector.empty[Out]
-      sorted.foreach { t =>
-        if (!t.isL) cur = Some(Latest(t.ts, t.value))
-        else out :+= Out(user, t.ts, t.event_id,
-          cur.filter(c => toleranceUs < 0 || t.ts - c.ts <= toleranceUs)
-            .map(_.value))
-      }
-      cur.foreach(state.update)
-      out.iterator
+    SeriesFold(tagged) { (user, cur: Option[Latest], t) =>
+      if (!t.isL) (Some(Latest(t.ts, t.value)), None)
+      else (cur, Some(Out(user, t.ts, t.event_id,
+        cur.filter(c => toleranceUs < 0 || t.ts - c.ts <= toleranceUs)
+          .map(_.value))))
     }
-
-    tagged.groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(step)
   }
 }

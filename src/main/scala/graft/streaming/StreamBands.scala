@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Dataset, SparkSession}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import SeriesFold.Ev
 
 /** Streaming Bollinger bands — the unbounded form of the ts_bands
   * query: trailing-20 mean ± 2σ envelope + breach flag per event.
@@ -16,8 +16,6 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   */
 object StreamBands {
 
-  final case class Ev(user_id: Long, ts: Long, value: Double)
-  final case class Hist(vals: Seq[Double])
   final case class BandOut(user_id: Long, ts: Long, value: Double,
                            mid: Double, sigma: Double, band_up: Double,
                            band_dn: Double, breach: String)
@@ -30,39 +28,28 @@ object StreamBands {
             span: Int = 20, width: Double = 2.0): Dataset[BandOut] = {
     import spark.implicits._
 
-    def step(user: Long, batch: Iterator[Ev],
-             state: GroupState[Hist]): Iterator[BandOut] = {
-      val sorted = batch.toVector.sortBy(e => (e.ts, e.value))
-      var hist = state.getOption.map(_.vals.toVector).getOrElse(Vector.empty)
-      val out = sorted.map { e =>
-        hist = (hist :+ e.value).takeRight(span)
-        // Spark Average: sequential frame-order sum, one divide
-        var sum = 0.0
-        hist.foreach(sum += _)
-        val mid = round6(sum / hist.length)
-        // Spark CentralMomentAgg (stddev_pop): Welford fold
-        var n = 0.0
-        var avg = 0.0
-        var m2 = 0.0
-        hist.foreach { x =>
-          n += 1.0
-          val delta = x - avg
-          val deltaN = delta / n
-          avg += deltaN
-          m2 += delta * (delta - deltaN)
-        }
-        val sigma = round6(math.sqrt(m2 / n))
-        val up = round6(mid + width * sigma)
-        val dn = round6(mid - width * sigma)
-        val breach =
-          if (e.value > up) "up" else if (e.value < dn) "down" else "in"
-        BandOut(user, e.ts, e.value, mid, sigma, up, dn, breach)
+    SeriesFold.trailing(events, span)(_.value) { (e, hist) =>
+      // Spark Average: sequential frame-order sum, one divide
+      var sum = 0.0
+      hist.foreach(sum += _)
+      val mid = round6(sum / hist.length)
+      // Spark CentralMomentAgg (stddev_pop): Welford fold
+      var n = 0.0
+      var avg = 0.0
+      var m2 = 0.0
+      hist.foreach { x =>
+        n += 1.0
+        val delta = x - avg
+        val deltaN = delta / n
+        avg += deltaN
+        m2 += delta * (delta - deltaN)
       }
-      state.update(Hist(hist))
-      out.iterator
+      val sigma = round6(math.sqrt(m2 / n))
+      val up = round6(mid + width * sigma)
+      val dn = round6(mid - width * sigma)
+      val breach =
+        if (e.value > up) "up" else if (e.value < dn) "down" else "in"
+      BandOut(e.user_id, e.ts, e.value, mid, sigma, up, dn, breach)
     }
-
-    events.groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(step)
   }
 }

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Dataset, SparkSession}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming Kleinberg burst alarms — the unbounded form of
   * graft.operators.Trend.burst, same bounded-span contract: each
@@ -30,12 +29,13 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   */
 object StreamBurst {
 
-  final case class Ev(user_id: Long, ts: Long)
+  final case class Ev(user_id: Long, ts: Long) extends SeriesFold.Keyed
+  object Ev {
+    implicit val byTs: Ordering[Ev] = Ordering.by(_.ts)
+  }
   final case class Hist(lastTs: Long, gaps: Seq[Double])
   final case class BurstOut(user_id: Long, ts: Long, gap_s: Double,
                             burst: Boolean, score: Double)
-
-  private def floor6(x: Double): Double = math.floor(x * 1e6) / 1e6
 
   def apply(spark: SparkSession, events: Dataset[Ev],
             lam0: Double, lam1: Double, gamma: Double,
@@ -43,19 +43,15 @@ object StreamBurst {
     import spark.implicits._
     val (k0, k1) = (-math.log(lam0), -math.log(lam1))
 
-    def step(user: Long, batch: Iterator[Ev],
-             state: GroupState[Hist]): Iterator[BurstOut] = {
-      var lastTs = state.getOption.map(_.lastTs)
-      var gaps = state.getOption.map(_.gaps.toVector).getOrElse(Vector.empty)
-      // cross-batch stragglers (ts older than the stored lastTs) are
-      // dropped before the fold — see the class doc
-      val sorted = batch.toVector.sortBy(_.ts)
-        .dropWhile(e => lastTs.exists(e.ts < _))
-      val out = Vector.newBuilder[BurstOut]
-      sorted.foreach { e =>
-        lastTs.foreach { p =>
-          val gap = (e.ts - p).toDouble / 1e6
-          gaps = (gaps :+ gap).takeRight(span)
+    SeriesFold(events) { (user, st: Option[Hist], e) =>
+      st match {
+        case None => (Some(Hist(e.ts, Vector.empty)), None)
+        // a cross-batch straggler (older than the stored lastTs) is
+        // dropped, state untouched — see the class doc
+        case Some(h) if e.ts < h.lastTs => (st, None)
+        case Some(h) =>
+          val gap = (e.ts - h.lastTs).toDouble / 1e6
+          val gaps = (h.gaps.toVector :+ gap).takeRight(span)
           var c0 = 0.0
           var c1 = gamma
           gaps.foreach { x =>
@@ -65,15 +61,9 @@ object StreamBurst {
             c0 = r0 - m
             c1 = r1 - m
           }
-          out += BurstOut(user, e.ts, gap, c1 < c0, floor6(c0 - c1))
-        }
-        lastTs = Some(e.ts)
+          (Some(Hist(e.ts, gaps)),
+            Some(BurstOut(user, e.ts, gap, c1 < c0, SeriesFold.floor6(c0 - c1))))
       }
-      state.update(Hist(lastTs.get, gaps))
-      out.result().iterator
     }
-
-    events.groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(step)
   }
 }

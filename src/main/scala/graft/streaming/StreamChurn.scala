@@ -72,9 +72,7 @@ object StreamChurn {
       }
     }
 
-    events
-      .withColumn("__event_time", timestamp_micros(col("ts")))
-      .withWatermark("__event_time", watermark)
+    StreamRollup.eventTime(events, "ts", watermark)
       .select(col("user_id"), col("ts"), col("__event_time"))
       .as[Ev]
       .groupByKey(_.user_id)

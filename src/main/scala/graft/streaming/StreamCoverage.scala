@@ -30,18 +30,15 @@ object StreamCoverage {
   def scorecard(stream: DataFrame, tsCol: String, keyCol: String,
                 win: String, watermark: String, cadenceUs: Long,
                 minPpm: Long = 900000L): DataFrame =
-    stream
-      .withColumn("__event_time", timestamp_micros(col(tsCol)))
-      .withWatermark("__event_time", watermark)
+    StreamRollup.windowBounds(StreamRollup.eventTime(stream, tsCol, watermark)
       .groupBy(window(col("__event_time"), StreamRollup.interval(win)).as("w"),
         col(keyCol))
       .agg(min(col(tsCol)).as("first_ts"), max(col(tsCol)).as("last_ts"),
         count(lit(1)).as("n_events"))
       .withColumn("expected",
         org.apache.spark.sql.graft.Bridge.fldiv(
-          col("last_ts") - col("first_ts"), cadenceUs) + lit(1L))
-      .select(unix_micros(col("w.start")).as("ts_begin"),
-        unix_micros(col("w.end")).as("ts_end"),
+          col("last_ts") - col("first_ts"), cadenceUs) + lit(1L)))
+      .select(col("ts_begin"), col("ts_end"),
         col(keyCol), col("first_ts"), col("last_ts"), col("n_events"),
         col("expected"),
         round(col("n_events").cast("double") / col("expected"), 6)

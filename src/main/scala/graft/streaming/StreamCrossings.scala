@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Dataset, SparkSession}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import SeriesFold.Ev
 
 /** Streaming threshold-crossing detection — the unbounded form of the
   * `ts_crossings` batch shape (per-series lag + direction test), the
@@ -15,7 +15,6 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   */
 object StreamCrossings {
 
-  final case class Ev(user_id: Long, ts: Long, value: Double)
   final case class Prev(value: Double)
   final case class Crossing(user_id: Long, ts: Long, prev_v: Double,
                             value: Double, direction: String)
@@ -24,25 +23,14 @@ object StreamCrossings {
             threshold: Double): Dataset[Crossing] = {
     import spark.implicits._
 
-    def step(user: Long, batch: Iterator[Ev],
-             state: GroupState[Prev]): Iterator[Crossing] = {
-      val sorted = batch.toVector.sortBy(_.ts)
-      var out = Vector.empty[Crossing]
-      var prev = state.getOption
-      sorted.foreach { e =>
-        prev.foreach { p =>
-          if (p.value < threshold && e.value >= threshold)
-            out :+= Crossing(user, e.ts, p.value, e.value, "up")
-          else if (p.value >= threshold && e.value < threshold)
-            out :+= Crossing(user, e.ts, p.value, e.value, "down")
-        }
-        prev = Some(Prev(e.value))
+    SeriesFold(events) { (user, prev: Option[Prev], e) =>
+      val out = prev.collect {
+        case p if p.value < threshold && e.value >= threshold =>
+          Crossing(user, e.ts, p.value, e.value, "up")
+        case p if p.value >= threshold && e.value < threshold =>
+          Crossing(user, e.ts, p.value, e.value, "down")
       }
-      prev.foreach(state.update)
-      out.iterator
+      (Some(Prev(e.value)), out)
     }
-
-    events.groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(step)
   }
 }

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Dataset, SparkSession}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import SeriesFold.Ev
 
 /** Streaming CUSUM drift alarms — the unbounded form of `Trend.cusum`
   * (Page's cumulative sum): S := max(0, S + (x - target)), emit while
@@ -16,7 +16,6 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   */
 object StreamCusum {
 
-  final case class Ev(user_id: Long, ts: Long, value: Double)
   final case class Sum(sUs: Long)
   final case class Alarm(user_id: Long, ts: Long, value: Double, cusum: Double)
 
@@ -26,21 +25,11 @@ object StreamCusum {
     val targetUs = math.round(target * 1e6)
     val hUs = math.round(h * 1e6)
 
-    def step(user: Long, batch: Iterator[Ev],
-             state: GroupState[Sum]): Iterator[Alarm] = {
-      // (ts, value) order mirrors the batch window's equal-ts tie-break
-      val sorted = batch.toVector.sortBy(e => (e.ts, e.value))
-      var s = state.getOption.map(_.sUs).getOrElse(0L)
-      var out = Vector.empty[Alarm]
-      sorted.foreach { e =>
-        s = math.max(0L, s + math.floor(e.value * 1e6).toLong - targetUs)
-        if (s > hUs) out :+= Alarm(user, e.ts, e.value, s.toDouble / 1e6)
-      }
-      state.update(Sum(s))
-      out.iterator
+    SeriesFold(events) { (user, st: Option[Sum], e) =>
+      val s = math.max(0L,
+        st.fold(0L)(_.sUs) + math.floor(e.value * 1e6).toLong - targetUs)
+      (Some(Sum(s)),
+        Option.when(s > hUs)(Alarm(user, e.ts, e.value, s.toDouble / 1e6)))
     }
-
-    events.groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(step)
   }
 }

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
 
 /** Streaming exact deduplication (the unbounded twin of Dedup.exact /
   * Shape.dedup — reference: pypond/collection.py:434 dedup over an
@@ -21,8 +20,7 @@ object StreamDedup {
     */
   def apply(df: DataFrame, tsCol: String, keyCols: Seq[String],
             delay: String = "1 hour"): DataFrame =
-    df.withColumn("__event_time", timestamp_micros(col(tsCol)))
-      .withWatermark("__event_time", delay)
+    StreamRollup.eventTime(df, tsCol, delay)
       .dropDuplicatesWithinWatermark(keyCols)
       .drop("__event_time")
 }

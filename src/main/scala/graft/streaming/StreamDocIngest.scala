@@ -72,19 +72,16 @@ object StreamDocIngest {
   def apply(docs: DataFrame, benchBlob: Array[Byte], tsCol: String,
             minQuality: Double, win: String, watermark: String,
             shingleN: Int = 3): DataFrame = {
-    val cleaned = cleanDocs(docs, benchBlob, minQuality, shingleN)
-      .withColumn("__text_hash", xxhash64(col("text")))
-      .withColumn("__event_time", timestamp_micros(col(tsCol)))
-      .withWatermark("__event_time", watermark)
+    val cleaned = StreamRollup.eventTime(
+        cleanDocs(docs, benchBlob, minQuality, shingleN)
+          .withColumn("__text_hash", xxhash64(col("text"))), tsCol, watermark)
       .dropDuplicatesWithinWatermark("source", "__text_hash")
-    cleaned
+    StreamRollup.windowBounds(cleaned
       .groupBy(col("source"),
         window(col("__event_time"), StreamRollup.interval(win)).as("w"))
       .agg(count(lit(1)).as("n_docs"),
         sum(col("n_tokens")).as("n_tokens"),
-        Aggs2.avgQ.as("avg_quality"))
-      .withColumn("ts_begin", unix_micros(col("w.start")))
-      .withColumn("ts_end", unix_micros(col("w.end")))
+        Aggs2.avgQ.as("avg_quality")))
       .drop("w")
   }
 

@@ -37,13 +37,12 @@ object StreamDrift {
       lit(nBins - 1)).cast("int")
     val counts = (0 until nBins).map(i =>
       sum(when(col("__b") === i, 1L).otherwise(0L)).as(s"__c$i"))
-    val agged = stream
-      .withColumn("__event_time", timestamp_micros(col(tsCol)))
-      .withWatermark("__event_time", watermark)
-      .withColumn("__b", bin)
-      .groupBy(keyCols.map(col) :+
-        window(col("__event_time"), StreamRollup.interval(win)).as("w"): _*)
-      .agg(counts.head, counts.tail: _*)
+    val agged = StreamRollup.windowBounds(
+      StreamRollup.eventTime(stream, tsCol, watermark)
+        .withColumn("__b", bin)
+        .groupBy(keyCols.map(col) :+
+          window(col("__event_time"), StreamRollup.interval(win)).as("w"): _*)
+        .agg(counts.head, counts.tail: _*))
     val n = (0 until nBins).map(i => col(s"__c$i")).reduce(_ + _)
     val terms = (0 until nBins).map { i =>
       val pw = (col(s"__c$i").cast("double") + lit(0.5)) /
@@ -51,9 +50,7 @@ object StreamDrift {
       val pr = lit(refProbs(i))
       (pw - pr) * (log(pw) - log(pr))
     }
-    agged.select(keyCols.map(col) ++ Seq(
-      unix_micros(col("w.start")).as("ts_begin"),
-      unix_micros(col("w.end")).as("ts_end"),
+    agged.select(keyCols.map(col) ++ Seq(col("ts_begin"), col("ts_end"),
       n.as("n"), round(terms.reduce(_ + _), 6).as("psi")): _*)
   }
 }

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Dataset, SparkSession}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import SeriesFold.Ev
 
 /** Streaming EWMA — the unbounded form of graft.operators.Trend.ewma,
   * same bounded-span contract: each emitted row is the recursive fold
@@ -17,35 +17,16 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   */
 object StreamEwma {
 
-  final case class Ev(user_id: Long, ts: Long, value: Double)
-  final case class Hist(vals: Seq[Double])
   final case class EwmaOut(user_id: Long, ts: Long, value: Double, ewma: Double)
-
-  /** µ-unit floor — Trend.ewma's output contract (tie-free across
-    * engines, unlike round()).
-    */
-  private def floor6(x: Double): Double = math.floor(x * 1e6) / 1e6
 
   def apply(spark: SparkSession, events: Dataset[Ev],
             alpha: Double = 0.3, span: Int = 20): Dataset[EwmaOut] = {
     import spark.implicits._
     val keep = 1.0 - alpha
 
-    def step(user: Long, batch: Iterator[Ev],
-             state: GroupState[Hist]): Iterator[EwmaOut] = {
-      // (ts, value) order = the batch operator's window order
-      val sorted = batch.toVector.sortBy(e => (e.ts, e.value))
-      var hist = state.getOption.map(_.vals.toVector).getOrElse(Vector.empty)
-      val out = sorted.map { e =>
-        hist = (hist :+ e.value).takeRight(span)
-        val ew = hist.tail.foldLeft(hist.head)((acc, x) => acc * keep + x * alpha)
-        EwmaOut(user, e.ts, e.value, floor6(ew))
-      }
-      state.update(Hist(hist))
-      out.iterator
+    SeriesFold.trailing(events, span)(_.value) { (e, hist) =>
+      val ew = hist.tail.foldLeft(hist.head)((acc, x) => acc * keep + x * alpha)
+      EwmaOut(e.user_id, e.ts, e.value, SeriesFold.floor6(ew))
     }
-
-    events.groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(step)
   }
 }

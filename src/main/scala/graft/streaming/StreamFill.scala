@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Dataset, SparkSession}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming pad-fill — the unbounded form of graft.operators.Fill.pad
   * (reference: pypond/processor/filler.py _pad_and_zero): a missing
@@ -18,6 +17,11 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
 object StreamFill {
 
   final case class Ev(user_id: Long, ts: Long, value: Option[Double])
+      extends SeriesFold.Keyed
+  object Ev {
+    /** (ts, value), a miss first: the shared series order */
+    implicit val byTsValue: Ordering[Ev] = Ordering.by(e => (e.ts, e.value))
+  }
   final case class PadState(lastGood: Option[Double], missRun: Int)
   final case class Out(user_id: Long, ts: Long, value: Option[Double])
 
@@ -27,27 +31,16 @@ object StreamFill {
 
     def good(v: Option[Double]): Boolean = v.exists(x => !x.isNaN)
 
-    def step(user: Long, batch: Iterator[Ev],
-             state: GroupState[PadState]): Iterator[Out] = {
-      var st = state.getOption.getOrElse(PadState(None, 0))
-      val out = batch.toVector.sortBy(_.ts).map { e =>
-        if (good(e.value)) {
-          st = PadState(e.value, 0)
-          Out(user, e.ts, e.value)
-        } else {
-          st = st.copy(missRun = st.missRun + 1)
-          // miss #r of a gap fills only while r <= fillLimit — exactly
-          // the batch operator's rn - last_good_rn <= lim condition; no
-          // previous good value means the miss stays null either way
-          val fill = if (fillLimit.forall(st.missRun <= _)) st.lastGood else None
-          Out(user, e.ts, fill)
-        }
+    SeriesFold(events) { (user, prev: Option[PadState], e) =>
+      if (good(e.value)) (Some(PadState(e.value, 0)), Some(Out(user, e.ts, e.value)))
+      else {
+        val st = prev.fold(PadState(None, 1))(p => p.copy(missRun = p.missRun + 1))
+        // miss #r of a gap fills only while r <= fillLimit — exactly
+        // the batch operator's rn - last_good_rn <= lim condition; no
+        // previous good value means the miss stays null either way
+        val fill = if (fillLimit.forall(st.missRun <= _)) st.lastGood else None
+        (Some(st), Some(Out(user, e.ts, fill)))
       }
-      state.update(st)
-      out.iterator
     }
-
-    events.groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(step)
   }
 }

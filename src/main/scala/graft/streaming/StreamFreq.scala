@@ -31,21 +31,17 @@ object StreamFreq {
   def cmsGrid(stream: DataFrame, tsCol: String, textCol: String,
               win: String, watermark: String,
               depth: Int = 4, width: Int = 256): DataFrame = {
-    val toks = stream
-      .withColumn("__event_time", timestamp_micros(col(tsCol)))
-      .withWatermark("__event_time", watermark)
+    val toks = StreamRollup.eventTime(stream, tsCol, watermark)
       .select(col("__event_time"),
         explode(TextOps.tokens(col(textCol))).as("tok"))
       .withColumn("__h", poly_hash(col("tok")))
       .withColumn("r", explode(sequence(lit(0), lit(depth - 1))))
       .select(col("__event_time"), col("r"),
         Freq.bucket(col("__h"), col("r"), width).as("bk"))
-    toks
+    StreamRollup.windowBounds(toks
       .groupBy(window(col("__event_time"), StreamRollup.interval(win)).as("w"),
         col("r"), col("bk"))
-      .agg(count(lit(1)).as("c"))
-      .withColumn("ts_begin", unix_micros(col("w.start")))
-      .withColumn("ts_end", unix_micros(col("w.end")))
+      .agg(count(lit(1)).as("c")))
       .select("ts_begin", "ts_end", "r", "bk", "c")
   }
 

@@ -83,9 +83,7 @@ object StreamFunnel {
       }
     }
 
-    events
-      .withColumn("__event_time", timestamp_micros(col("ts")))
-      .withWatermark("__event_time", watermark)
+    StreamRollup.eventTime(events, "ts", watermark)
       .select(col("user_id"), col("ts"), col("event_type"),
         col("__event_time"))
       .as[Ev]

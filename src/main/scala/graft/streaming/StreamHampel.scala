@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Dataset, SparkSession}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import SeriesFold.Ev
 
 /** Streaming Hampel despike — the unbounded form of
   * graft.operators.Trend.hampel in its TRAILING geometry (a live
@@ -19,8 +19,6 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   */
 object StreamHampel {
 
-  final case class Ev(user_id: Long, ts: Long, value: Double)
-  final case class Hist(vals: Seq[Long])
   final case class Out(user_id: Long, ts: Long, value: Double,
                        med: Double, mad: Double, is_outlier: Boolean,
                        repaired: Double)
@@ -30,27 +28,16 @@ object StreamHampel {
     import spark.implicits._
     val span = 2 * halfW + 1
 
-    def step(user: Long, batch: Iterator[Ev],
-             state: GroupState[Hist]): Iterator[Out] = {
-      // (ts, value) order = the batch operator's window order
-      val sorted = batch.toVector.sortBy(e => (e.ts, e.value))
-      var hist = state.getOption.map(_.vals.toVector).getOrElse(Vector.empty)
-      val out = sorted.map { e =>
-        val v6 = math.floor(e.value * 1e6).toLong
-        hist = (hist :+ v6).takeRight(span)
+    SeriesFold.trailing(events, span)(e => math.floor(e.value * 1e6).toLong) {
+      (e, hist) =>
+        val v6 = hist.last
         val lst = hist.sorted
         val idx = (lst.size + 1) / 2 - 1 // lower median, 0-based
         val med = lst(idx)
         val mad = lst.map(y => math.abs(y - med)).sorted.apply(idx)
         val flag = math.abs(v6 - med) * 10000L > nSigma * 14826L * mad
-        Out(user, e.ts, e.value, med.toDouble / 1e6, mad.toDouble / 1e6,
+        Out(e.user_id, e.ts, e.value, med.toDouble / 1e6, mad.toDouble / 1e6,
           flag, if (flag) med.toDouble / 1e6 else e.value)
-      }
-      state.update(Hist(hist))
-      out.iterator
     }
-
-    events.groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(step)
   }
 }

@@ -29,14 +29,10 @@ object StreamHist {
                 bucketWidth: Double = 25.0, nBuckets: Int = 20): DataFrame = {
     val b = least(greatest(floor(col(valCol) / bucketWidth), lit(0)),
       lit(nBuckets - 1)).cast("int")
-    stream
-      .withColumn("__event_time", timestamp_micros(col(tsCol)))
-      .withWatermark("__event_time", watermark)
+    StreamRollup.windowBounds(StreamRollup.eventTime(stream, tsCol, watermark)
       .groupBy(window(col("__event_time"), StreamRollup.interval(win)).as("w"),
         col(grpCol), b.as("bucket"))
-      .agg(count(lit(1)).as("n"))
-      .withColumn("ts_begin", unix_micros(col("w.start")))
-      .withColumn("ts_end", unix_micros(col("w.end")))
+      .agg(count(lit(1)).as("n")))
       .select(col("ts_begin"), col("ts_end"), col(grpCol), col("bucket"),
         (col("bucket") * bucketWidth).as("lo"),
         ((col("bucket") + 1) * bucketWidth).as("hi"),

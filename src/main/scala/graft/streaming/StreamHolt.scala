@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Dataset, SparkSession}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import SeriesFold.Ev
 
 /** Streaming Holt double-exponential smoothing — the unbounded form of
   * graft.operators.Trend.holt, same bounded-span contract: each
@@ -18,39 +18,23 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   */
 object StreamHolt {
 
-  final case class Ev(user_id: Long, ts: Long, value: Double)
-  final case class Hist(vals: Seq[Double])
   final case class HoltOut(user_id: Long, ts: Long, value: Double,
                            level: Double, trend: Double)
-
-  private def floor6(x: Double): Double = math.floor(x * 1e6) / 1e6
 
   def apply(spark: SparkSession, events: Dataset[Ev],
             alpha: Double = 0.3, beta: Double = 0.2,
             span: Int = 20): Dataset[HoltOut] = {
     import spark.implicits._
 
-    def step(user: Long, batch: Iterator[Ev],
-             state: GroupState[Hist]): Iterator[HoltOut] = {
-      // (ts, value) order = the batch operator's window order
-      val sorted = batch.toVector.sortBy(e => (e.ts, e.value))
-      var hist = state.getOption.map(_.vals.toVector).getOrElse(Vector.empty)
-      val out = sorted.map { e =>
-        hist = (hist :+ e.value).takeRight(span)
-        var l = hist.head
-        var b = 0.0
-        hist.tail.foreach { x =>
-          val ln = x * alpha + (l + b) * (1.0 - alpha)
-          b = (ln - l) * beta + b * (1.0 - beta)
-          l = ln
-        }
-        HoltOut(user, e.ts, e.value, floor6(l), floor6(b))
+    SeriesFold.trailing(events, span)(_.value) { (e, hist) =>
+      var l = hist.head
+      var b = 0.0
+      hist.tail.foreach { x =>
+        val ln = x * alpha + (l + b) * (1.0 - alpha)
+        b = (ln - l) * beta + b * (1.0 - beta)
+        l = ln
       }
-      state.update(Hist(hist))
-      out.iterator
+      HoltOut(e.user_id, e.ts, e.value, SeriesFold.floor6(l), SeriesFold.floor6(b))
     }
-
-    events.groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(step)
   }
 }

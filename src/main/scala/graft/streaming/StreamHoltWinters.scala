@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Dataset, SparkSession}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import SeriesFold.Ev
 
 /** Streaming Holt-Winters triple smoothing — the unbounded form of
   * graft.operators.Trend.holtWinters, same bounded-span contract: each
@@ -19,48 +19,33 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   */
 object StreamHoltWinters {
 
-  final case class Ev(user_id: Long, ts: Long, value: Double)
-  final case class Hist(vals: Seq[Double])
   final case class HwOut(user_id: Long, ts: Long, value: Double,
                          level: Double, trend: Double, seasonal: Double,
                          forecast: Double)
-
-  private def floor6(x: Double): Double = math.floor(x * 1e6) / 1e6
 
   def apply(spark: SparkSession, events: Dataset[Ev],
             alpha: Double = 0.3, beta: Double = 0.2, gamma: Double = 0.3,
             period: Int = 7, span: Int = 28): Dataset[HwOut] = {
     import spark.implicits._
 
-    def step(user: Long, batch: Iterator[Ev],
-             state: GroupState[Hist]): Iterator[HwOut] = {
-      // (ts, value) order = the batch operator's window order
-      val sorted = batch.toVector.sortBy(e => (e.ts, e.value))
-      var hist = state.getOption.map(_.vals.toVector).getOrElse(Vector.empty)
-      val out = sorted.map { e =>
-        hist = (hist :+ e.value).takeRight(span)
-        var l = hist.head
-        var b = 0.0
-        var cnt = 1
-        val s = new Array[Double](period)
-        hist.tail.foreach { x =>
-          val p = cnt % period
-          val sp = s(p)
-          val ln = (x - sp) * alpha + (l + b) * (1.0 - alpha)
-          b = (ln - l) * beta + b * (1.0 - beta)
-          s(p) = (x - ln) * gamma + sp * (1.0 - gamma)
-          l = ln
-          cnt += 1
-        }
-        HwOut(user, e.ts, e.value, floor6(l), floor6(b),
-          floor6(s((cnt - 1) % period)),
-          floor6(l + b + s(cnt % period)))
+    import SeriesFold.floor6
+    SeriesFold.trailing(events, span)(_.value) { (e, hist) =>
+      var l = hist.head
+      var b = 0.0
+      var cnt = 1
+      val s = new Array[Double](period)
+      hist.tail.foreach { x =>
+        val p = cnt % period
+        val sp = s(p)
+        val ln = (x - sp) * alpha + (l + b) * (1.0 - alpha)
+        b = (ln - l) * beta + b * (1.0 - beta)
+        s(p) = (x - ln) * gamma + sp * (1.0 - gamma)
+        l = ln
+        cnt += 1
       }
-      state.update(Hist(hist))
-      out.iterator
+      HwOut(e.user_id, e.ts, e.value, floor6(l), floor6(b),
+        floor6(s((cnt - 1) % period)),
+        floor6(l + b + s(cnt % period)))
     }
-
-    events.groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(step)
   }
 }

@@ -26,9 +26,7 @@ object StreamM4 {
     */
   def m4(stream: DataFrame, tsCol: String, valCol: String,
          keyCols: Seq[String], win: String, watermark: String): DataFrame = {
-    val withTime = stream
-      .withColumn("__event_time", timestamp_micros(col(tsCol)))
-      .withWatermark("__event_time", watermark)
+    val withTime = StreamRollup.eventTime(stream, tsCol, watermark)
     val gb = keyCols.map(col) :+
       window(col("__event_time"), StreamRollup.interval(win)).as("w")
     withTime.groupBy(gb: _*)

@@ -56,20 +56,16 @@ object StreamNearDedup {
       val hs = (0 until r).map(i => sigs(bnd * r + i))
       struct(lit(bnd).as("band"), Dedup.bandKey(hs).as("bk"))
     }
-    docs
-      .where(size(sids) > 0)
-      .withColumn("__event_time", timestamp_micros(col(tsCol)))
-      .withColumn("__bb", explode(array(bandStructs: _*)))
-      .select(col(idCol), col("__event_time"),
-        col("__bb.band").as("__band"), col("__bb.bk").as("__bk"))
-      .withWatermark("__event_time", watermark)
-      .dropDuplicatesWithinWatermark("__band", "__bk")
-      .groupBy(col(idCol),
-        window(col("__event_time"), StreamRollup.interval(win)).as("w"))
-      .agg(count(lit(1)).as("__n"))
-      .where(col("__n") === bands)
-      .select(col(idCol),
-        unix_micros(col("w.start")).as("ts_begin"),
-        unix_micros(col("w.end")).as("ts_end"))
+    StreamRollup.windowBounds(
+      StreamRollup.eventTime(docs.where(size(sids) > 0), tsCol, watermark)
+        .withColumn("__bb", explode(array(bandStructs: _*)))
+        .select(col(idCol), col("__event_time"),
+          col("__bb.band").as("__band"), col("__bb.bk").as("__bk"))
+        .dropDuplicatesWithinWatermark("__band", "__bk")
+        .groupBy(col(idCol),
+          window(col("__event_time"), StreamRollup.interval(win)).as("w"))
+        .agg(count(lit(1)).as("__n"))
+        .where(col("__n") === bands))
+      .select(col(idCol), col("ts_begin"), col("ts_end"))
   }
 }

@@ -34,17 +34,12 @@ object StreamQuantile {
                win: String, watermark: String, valueCol: String,
                percentages: Seq[Double],
                accuracy: Int = 10000): DataFrame = {
-    val withTime = stream
-      .withColumn("__event_time", timestamp_micros(col(tsCol)))
-      .withWatermark("__event_time", watermark)
     val gb = keyCols.map(col) :+
       window(col("__event_time"), StreamRollup.interval(win)).as("w")
-    withTime
+    StreamRollup.windowBounds(StreamRollup.eventTime(stream, tsCol, watermark)
       .groupBy(gb: _*)
       .agg(percentile_approx(col(valueCol),
-        array(percentages.map(lit): _*), lit(accuracy)).as("quantiles"))
-      .withColumn("ts_begin", unix_micros(col("w.start")))
-      .withColumn("ts_end", unix_micros(col("w.end")))
+        array(percentages.map(lit): _*), lit(accuracy)).as("quantiles")))
       .drop("w")
   }
 }

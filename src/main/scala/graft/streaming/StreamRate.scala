@@ -1,8 +1,8 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Dataset, SparkSession}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import graft.functions.TimeIndex
+import SeriesFold.Ev
 
 /** Streaming per-second derivative — the unbounded form of
   * graft.operators.Rate (reference: pypond/processor/rate.py keeps one
@@ -16,7 +16,6 @@ import graft.functions.TimeIndex
   */
 object StreamRate {
 
-  final case class Ev(user_id: Long, ts: Long, value: Double)
   final case class Prev(ts: Long, value: Double)
   final case class RateOut(user_id: Long, ts_begin: Long, ts_end: Long,
                            value_rate: Option[Double])
@@ -25,27 +24,16 @@ object StreamRate {
             allowNegative: Boolean = true): Dataset[RateOut] = {
     import spark.implicits._
 
-    def step(user: Long, batch: Iterator[Ev],
-             state: GroupState[Prev]): Iterator[RateOut] = {
-      val sorted = batch.toVector.sortBy(_.ts)
-      var out = Vector.empty[RateOut]
-      var prev = state.getOption
-      sorted.foreach { e =>
-        prev.foreach { p =>
-          val dtSec = (e.ts - p.ts).toDouble / TimeIndex.UsPerSec.toDouble
-          // dt == 0 -> null like the batch operator's SQL division
-          // (Scala '/' would produce Infinity/NaN); reference keeps the
-          // row and nulls a disallowed negative rate (rate.py:120-124)
-          val r = if (dtSec == 0.0) None else Some((e.value - p.value) / dtSec)
-          out :+= RateOut(user, p.ts, e.ts, r.filter(v => allowNegative || v >= 0))
-        }
-        prev = Some(Prev(e.ts, e.value))
+    SeriesFold(events) { (user, prev: Option[Prev], e) =>
+      val out = prev.map { p =>
+        val dtSec = (e.ts - p.ts).toDouble / TimeIndex.UsPerSec.toDouble
+        // dt == 0 -> null like the batch operator's SQL division
+        // (Scala '/' would produce Infinity/NaN); reference keeps the
+        // row and nulls a disallowed negative rate (rate.py:120-124)
+        val r = if (dtSec == 0.0) None else Some((e.value - p.value) / dtSec)
+        RateOut(user, p.ts, e.ts, r.filter(v => allowNegative || v >= 0))
       }
-      prev.foreach(state.update)
-      out.iterator
+      (Some(Prev(e.ts, e.value)), out)
     }
-
-    events.groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(step)
   }
 }

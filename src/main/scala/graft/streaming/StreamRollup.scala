@@ -23,23 +23,31 @@ object StreamRollup {
     */
   def interval(win: String): String = s"${TimeIndex.durationMs(win) / 1000} seconds"
 
+  /** The event-time prologue of every watermarked streaming operator:
+    * `__event_time` is the epoch-µs long `tsCol` as a timestamp, and
+    * the watermark trails its maximum by `watermark`.
+    */
+  def eventTime(stream: DataFrame, tsCol: String, watermark: String): DataFrame =
+    stream.withColumn("__event_time", timestamp_micros(col(tsCol)))
+      .withWatermark("__event_time", watermark)
+
+  /** The bounds of window column `w` as epoch-µs `ts_begin`/`ts_end`. */
+  def windowBounds(df: DataFrame): DataFrame =
+    df.withColumn("ts_begin", unix_micros(col("w.start")))
+      .withColumn("ts_end", unix_micros(col("w.end")))
+
   /** Fixed-window rollup over a STREAMING DataFrame whose `tsCol` is an
     * epoch-µs long (the canonical graft shape). Emits the same
     * "5m-NNN" index string as the batch Rollup, plus window bounds.
     */
   def fixedWindow(stream: DataFrame, tsCol: String, keyCols: Seq[String],
                   win: String, watermark: String, aggs: Seq[Column]): DataFrame = {
-    val ts = timestamp_micros(col(tsCol)).as("__event_time")
-    val withTime = stream.withColumn("__event_time", ts)
-      .withWatermark("__event_time", watermark)
     val gb = keyCols.map(col) :+ window(col("__event_time"), interval(win)).as("w")
-    withTime
+    windowBounds(eventTime(stream, tsCol, watermark)
       .groupBy(gb: _*)
       .agg(aggs.head, aggs.tail: _*)
       .withColumn("idx",
-        TimeIndex.indexOf(unix_micros(col("w.start")), win))
-      .withColumn("ts_begin", unix_micros(col("w.start")))
-      .withColumn("ts_end", unix_micros(col("w.end")))
+        TimeIndex.indexOf(unix_micros(col("w.start")), win)))
       .drop("w")
   }
 
@@ -54,16 +62,11 @@ object StreamRollup {
   def slidingWindow(stream: DataFrame, tsCol: String, keyCols: Seq[String],
                     size: String, slide: String, watermark: String,
                     aggs: Seq[Column]): DataFrame = {
-    val withTime = stream
-      .withColumn("__event_time", timestamp_micros(col(tsCol)))
-      .withWatermark("__event_time", watermark)
     val gb = keyCols.map(col) :+
       window(col("__event_time"), interval(size), interval(slide)).as("w")
-    withTime
+    windowBounds(eventTime(stream, tsCol, watermark)
       .groupBy(gb: _*)
-      .agg(aggs.head, aggs.tail: _*)
-      .withColumn("ts_begin", unix_micros(col("w.start")))
-      .withColumn("ts_end", unix_micros(col("w.end")))
+      .agg(aggs.head, aggs.tail: _*))
       .drop("w")
   }
 }

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Dataset, SparkSession}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import SeriesFold.Ev
 
 /** Streaming sustained-breach runs — the unbounded form of
   * graft.operators.Trend.runsList: a maximal run of consecutive
@@ -18,7 +18,6 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   */
 object StreamRuns {
 
-  final case class Ev(user_id: Long, ts: Long, value: Double)
   final case class Open(start: Long, last: Long, len: Long)
   final case class Run(user_id: Long, start_ts: Long, end_ts: Long,
                        len: Long, dur: Long)
@@ -27,29 +26,11 @@ object StreamRuns {
             threshold: Double): Dataset[Run] = {
     import spark.implicits._
 
-    def step(user: Long, batch: Iterator[Ev],
-             state: GroupState[Open]): Iterator[Run] = {
-      // (ts, value) order = the batch operator's window order
-      val sorted = batch.toVector.sortBy(e => (e.ts, e.value))
-      var open = state.getOption
-      val out = Vector.newBuilder[Run]
-      sorted.foreach { e =>
-        if (e.value > threshold)
-          open = Some(open.map(o => Open(o.start, e.ts, o.len + 1))
-            .getOrElse(Open(e.ts, e.ts, 1)))
-        else open.foreach { o =>
-          out += Run(user, o.start, o.last, o.len, o.last - o.start)
-          open = None
-        }
-      }
-      open match {
-        case Some(o) => state.update(o)
-        case None    => state.remove()
-      }
-      out.result().iterator
+    SeriesFold(events) { (user, open: Option[Open], e) =>
+      if (e.value > threshold)
+        (Some(open.fold(Open(e.ts, e.ts, 1))(o => Open(o.start, e.ts, o.len + 1))),
+          None)
+      else (None, open.map(o => Run(user, o.start, o.last, o.len, o.last - o.start)))
     }
-
-    events.groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(step)
   }
 }

@@ -1,11 +1,11 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Dataset, SparkSession}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import SeriesFold.Ev
 
-/** Stateful streaming sessionization via
-  * `KeyValueGroupedDataset.flatMapGroupsWithState` — the custom-state
-  * streaming path (SURVEY.md §2.10): pypond's unbounded Pipeline kept
+/** Stateful streaming sessionization via [[SeriesFold]]
+  * (`flatMapGroupsWithState`) — the custom-state streaming path
+  * (SURVEY.md §2.10): pypond's unbounded Pipeline kept
   * per-processor driver state; here the state lives in Spark's
   * fault-tolerant state store, partitioned by series key.
   *
@@ -15,7 +15,6 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   */
 object StreamSessionize {
 
-  final case class Ev(user_id: Long, ts: Long, value: Double)
   final case class SessState(start: Long, last: Long, n: Long, sum: Double)
   final case class Session(user_id: Long, session_start: Long,
                            session_end: Long, n_events: Long, sum_value: Double)
@@ -23,27 +22,14 @@ object StreamSessionize {
   def apply(spark: SparkSession, events: Dataset[Ev], gapUs: Long): Dataset[Session] = {
     import spark.implicits._
 
-    def step(user: Long, batch: Iterator[Ev],
-             state: GroupState[SessState]): Iterator[Session] = {
-      val sorted = batch.toVector.sortBy(_.ts)
-      var closed = Vector.empty[Session]
-      var open = state.getOption
-      sorted.foreach { e =>
-        open = open match {
-          case Some(s) if e.ts - s.last <= gapUs =>
-            Some(s.copy(last = e.ts, n = s.n + 1, sum = s.sum + e.value))
-          case Some(s) =>
-            closed :+= Session(user, s.start, s.last, s.n, s.sum)
-            Some(SessState(e.ts, e.ts, 1L, e.value))
-          case None =>
-            Some(SessState(e.ts, e.ts, 1L, e.value))
-        }
+    SeriesFold(events) { (user, open: Option[SessState], e) =>
+      open match {
+        case Some(s) if e.ts - s.last <= gapUs =>
+          (Some(s.copy(last = e.ts, n = s.n + 1, sum = s.sum + e.value)), None)
+        case _ =>
+          (Some(SessState(e.ts, e.ts, 1L, e.value)),
+            open.map(s => Session(user, s.start, s.last, s.n, s.sum)))
       }
-      open.foreach(state.update)
-      closed.iterator
     }
-
-    events.groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(step)
   }
 }

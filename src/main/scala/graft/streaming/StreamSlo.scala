@@ -22,15 +22,11 @@ object StreamSlo {
   def burn(stream: DataFrame, tsCol: String, typeCol: String,
            keyCol: String, win: String, watermark: String,
            sloPpm: Long = 100000L, errType: String = "error"): DataFrame =
-    stream
-      .withColumn("__event_time", timestamp_micros(col(tsCol)))
-      .withWatermark("__event_time", watermark)
+    StreamRollup.windowBounds(StreamRollup.eventTime(stream, tsCol, watermark)
       .groupBy(window(col("__event_time"), StreamRollup.interval(win)).as("w"),
         col(keyCol))
       .agg(count(lit(1)).as("n_events"),
-        count(when(col(typeCol) === errType, 1)).as("n_errors"))
-      .withColumn("ts_begin", unix_micros(col("w.start")))
-      .withColumn("ts_end", unix_micros(col("w.end")))
+        count(when(col(typeCol) === errType, 1)).as("n_errors")))
       .select(col("ts_begin"), col("ts_end"), col(keyCol),
         col("n_events"), col("n_errors"),
         round(col("n_errors").cast("double") / col("n_events"), 6)

@@ -52,9 +52,7 @@ object StreamStickiness {
     * and this latency cost are the two sides of the same dial.
     */
   def daily(events: DataFrame, watermark: String = "25 hours"): DataFrame =
-    events
-      .withColumn("__event_time", timestamp_micros(col("ts")))
-      .withWatermark("__event_time", watermark)
+    StreamRollup.eventTime(events, "ts", watermark)
       .withColumn("__day", date_trunc("DAY", col("__event_time")))
       .dropDuplicatesWithinWatermark("user_id", "__day")
       .groupBy(window(col("__event_time"), "1 day").as("__w"))

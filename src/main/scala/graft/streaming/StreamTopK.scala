@@ -68,9 +68,7 @@ object StreamTopK {
       }
     }
 
-    events
-      .withColumn("__event_time", timestamp_micros(col("ts")))
-      .withWatermark("__event_time", watermark)
+    StreamRollup.eventTime(events, "ts", watermark)
       .select(
         (org.apache.spark.sql.graft.Bridge.fldiv(col("ts"), winUs)
           * winUs).as("w"),

@@ -3,7 +3,6 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming event-type transitions — the live twin of q_transitions
   * (the session Markov chain): each user's stream pairs every event
@@ -44,6 +43,10 @@ object StreamTransitions {
   final case class Ev(user_id: Long, ts: Long, event_id: Long,
                       event_type: String,
                       __event_time: java.sql.Timestamp)
+      extends SeriesFold.Keyed
+  object Ev {
+    implicit val byTsId: Ordering[Ev] = Ordering.by(e => (e.ts, e.event_id))
+  }
   final case class Last(ts: Long, event_id: Long, event_type: String)
   final case class Edge(user_id: Long, from_type: String, to_type: String,
                         ts: Long)
@@ -64,40 +67,26 @@ object StreamTransitions {
     val skipAcc = skipped.getOrElse(
       spark.sparkContext.longAccumulator("graft.transitions.skipped"))
 
-    def step(user: Long, batch: Iterator[Ev],
-             state: GroupState[Last]): Iterator[Edge] = {
-      // within-batch arrival order is not event order: sort by the
-      // batch operator's (ts, event_id) key, then chain off the
-      // stored last event. An event OLDER than the stored last (a
-      // cross-batch reordering inside the watermark) is SKIPPED —
-      // emitting it would produce a reversed edge, and regressing the
-      // state to it would corrupt every subsequent edge for the user;
-      // the chain advances over the monotone event suffix only
-      // (spec-pinned, documented below).
-      val evs = batch.toVector.sortBy(e => (e.ts, e.event_id))
-      val out = Vector.newBuilder[Edge]
-      var last = state.getOption
-      evs.foreach { e =>
-        if (last.forall(l =>
-            l.ts < e.ts || (l.ts == e.ts && l.event_id < e.event_id))) {
-          last.foreach(l =>
-            out += Edge(user, l.event_type, e.event_type, e.ts))
-          last = Some(Last(e.ts, e.event_id, e.event_type))
-        } else skipAcc.add(1)
-      }
-      last.foreach(state.update)
-      out.result().iterator
-    }
-
-    events
-      .withColumn("__event_time", timestamp_micros(col("ts")))
-      .withWatermark("__event_time", watermark)
+    val evs = StreamRollup.eventTime(events, "ts", watermark)
       .select(col("user_id"), col("ts"), col("event_id"),
         col("event_type"), col("__event_time"))
       .as[Ev]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout)(step)
+    // Events chain off the stored last event in (ts, event_id) order.
+    // An event OLDER than the stored last (a cross-batch reordering
+    // inside the watermark) is SKIPPED — emitting it would produce a
+    // reversed edge, and regressing the state to it would corrupt
+    // every subsequent edge for the user; the chain advances over the
+    // monotone event suffix only (spec-pinned, see the class doc).
+    SeriesFold(evs) { (user, last: Option[Last], e) =>
+      if (last.forall(l =>
+          l.ts < e.ts || (l.ts == e.ts && l.event_id < e.event_id)))
+        (Some(Last(e.ts, e.event_id, e.event_type)),
+          last.map(l => Edge(user, l.event_type, e.event_type, e.ts)))
+      else {
+        skipAcc.add(1)
+        (last, None)
+      }
+    }
   }
 
   /** Fold emitted edges into the batch operator's normalized matrix:

@@ -620,6 +620,14 @@ class OperatorSpec extends AnyFunSuite {
     assert(out(3L) == ((0L, 0L, "unique str !")))
   }
 
+  test("Knn.corpusCount counts afresh once the files under a path change") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_ccount") + "/t"
+    (1L to 5L).toDF("vec_id").write.parquet(dir)
+    assert(Knn.corpusCount(spark.read.parquet(dir)) == 5L)
+    (6L to 8L).toDF("vec_id").write.mode("append").parquet(dir)
+    assert(Knn.corpusCount(spark.read.parquet(dir)) == 8L)
+  }
+
   test("Knn.mmrTopK trades relevance for diversity in greedy order") {
     import spark.implicits._
     // query (1,0); a and b are the same direction (mutual cos 1), c is

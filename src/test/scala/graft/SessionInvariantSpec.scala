@@ -9,7 +9,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * JVM system property or mutable global steers what the engine plans.
   * Knn keeps one copy each of the LSH band geometry and the per-query
   * rank, and SparkEntry one copy each of the ANN query batch and the
-  * recall score, that the DuckDB oracles mirror.
+  * recall score, that the DuckDB oracles mirror. `graft.streaming`
+  * keeps one per-series fold and one event-time prologue.
   * Checked over the source text, so a new main or toggle fails here
   * before it can reach a measurement.
   */
@@ -84,5 +85,26 @@ class SessionInvariantSpec extends AnyFunSuite {
     assert(callers(entry, """count\(col\("__h"\)\)""") == Seq("recallAgg"))
     assert(callers(entry, """col\("vec_id"\) % (?:100|AnnQueryEvery)\b""") ==
       Seq("annQueries"))
+  }
+
+  test("graft.streaming folds per series and stamps event time in one helper each") {
+    // one batch sort order and state-row contract per key (SeriesFold),
+    // one event-time column (StreamRollup.eventTime); the EventTimeTimeout
+    // operators and the range join's two time columns keep their own
+    def outside(re: String, keep: String*): Seq[String] = offenders(
+      sources.filterNot { case (p, _) =>
+        keep.exists(k => p.endsWith(s"graft/streaming/$k.scala"))
+      }, re)
+    val fold = outside("""flatMapGroupsWithState\(""",
+      "SeriesFold", "StreamChurn", "StreamFunnel", "StreamTopK")
+    assert(fold.isEmpty, fold.mkString(", "))
+    val ev = outside("""case class Ev\(user_id: Long, ts: Long, value: Double\)""",
+      "SeriesFold")
+    assert(ev.isEmpty, ev.mkString(", "))
+    val time = outside("""timestamp_micros\(""", "StreamRollup", "StreamRangeJoin")
+      .filter(_.contains("graft/streaming/"))
+    assert(time.isEmpty, time.mkString(", "))
+    assert(callers(members("graft/streaming/StreamRollup.scala"),
+      """timestamp_micros\(""") == Seq("eventTime"))
   }
 }

@@ -3,7 +3,7 @@ package graft
 import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.streaming.StreamSessionize
+import graft.streaming.{SeriesFold, StreamSessionize}
 import graft.operators.Sessionize
 
 class StreamRateSpec extends AnyFunSuite {
@@ -20,7 +20,7 @@ class StreamRateSpec extends AnyFunSuite {
     val dir = Files.createTempDirectory("graft_rate").toString
     batch.write.mode("overwrite").parquet(dir)
     val stream = spark.readStream.schema(batch.schema).parquet(dir)
-      .as[graft.streaming.StreamRate.Ev]
+      .as[graft.streaming.SeriesFold.Ev]
 
     val q = graft.streaming.StreamRate(spark, stream)
       .writeStream.outputMode("append").format("memory")
@@ -52,7 +52,7 @@ class StreamAlignSpec extends AnyFunSuite {
     val dir = Files.createTempDirectory("graft_salign").toString
     batch.write.mode("overwrite").parquet(dir)
     val stream = spark.readStream.schema(batch.schema).parquet(dir)
-      .as[graft.streaming.StreamAlign.Ev]
+      .as[graft.streaming.SeriesFold.Ev]
 
     val q = graft.streaming.StreamAlign(spark, stream, "1d", "linear")
       .writeStream.outputMode("append").format("memory")
@@ -184,7 +184,7 @@ class StreamSessionizeSpec extends AnyFunSuite {
     val dir = Files.createTempDirectory("graft_sess").toString
     batch.write.mode("overwrite").parquet(dir)
     val stream = spark.readStream.schema(batch.schema).parquet(dir)
-      .as[StreamSessionize.Ev]
+      .as[SeriesFold.Ev]
 
     val q = StreamSessionize(spark, stream, gapUs)
       .writeStream.outputMode("append").format("memory")

@@ -213,7 +213,7 @@ class StreamStateSpec extends AnyFunSuite {
     val batches = advancingBatches(nKeys = 5, perKey = 50)
     val (out, ps) = StreamHarness.feedBatches(spark, batches,
       s => graft.streaming.StreamEwma(spark,
-        s.as[graft.streaming.StreamEwma.Ev], alpha = 0.3).toDF(),
+        s.as[graft.streaming.SeriesFold.Ev], alpha = 0.3).toDF(),
       "append", "ewma_state")
     assert(out.count() == 4L * 5 * 50)
     val rows = StreamHarness.stateRows(ps)
@@ -234,22 +234,22 @@ class StreamStateSpec extends AnyFunSuite {
     val nKeys = 4
     val batches = advancingBatches(nKeys, perKey = 12, nBatches = 3)
     val comps: Seq[(String, DataFrame => DataFrame)] = Seq(
-      "holt" -> (s => StreamHolt(spark, s.as[StreamHolt.Ev]).toDF()),
+      "holt" -> (s => StreamHolt(spark, s.as[SeriesFold.Ev]).toDF()),
       "holt_winters" -> (s =>
-        StreamHoltWinters(spark, s.as[StreamHoltWinters.Ev]).toDF()),
-      "bands" -> (s => StreamBands(spark, s.as[StreamBands.Ev]).toDF()),
+        StreamHoltWinters(spark, s.as[SeriesFold.Ev]).toDF()),
+      "bands" -> (s => StreamBands(spark, s.as[SeriesFold.Ev]).toDF()),
       "cusum" -> (s =>
-        StreamCusum(spark, s.as[StreamCusum.Ev], 5.0, 20.0).toDF()),
+        StreamCusum(spark, s.as[SeriesFold.Ev], 5.0, 20.0).toDF()),
       "crossings" -> (s =>
-        StreamCrossings(spark, s.as[StreamCrossings.Ev], 5.0).toDF()),
-      "rate" -> (s => StreamRate(spark, s.as[StreamRate.Ev]).toDF()),
+        StreamCrossings(spark, s.as[SeriesFold.Ev], 5.0).toDF()),
+      "rate" -> (s => StreamRate(spark, s.as[SeriesFold.Ev]).toDF()),
       "fill" -> (s => StreamFill(spark, s.select(col("user_id"), col("ts"),
           when(pmod(col("value"), lit(3.0)) =!= 0.0, col("value"))
             .as("value")).as[StreamFill.Ev]).toDF()),
       "align" -> (s =>
-        StreamAlign(spark, s.as[StreamAlign.Ev], "5m", "linear").toDF()),
+        StreamAlign(spark, s.as[SeriesFold.Ev], "5m", "linear").toDF()),
       "sessionize" -> (s =>
-        StreamSessionize(spark, s.as[StreamSessionize.Ev], 30 * M).toDF()),
+        StreamSessionize(spark, s.as[SeriesFold.Ev], 30 * M).toDF()),
       "burst" -> (s => StreamBurst(spark,
         s.select("user_id", "ts").as[StreamBurst.Ev],
         lam0 = 2.5e-5, lam1 = 1.25e-4, gamma = 2.0).toDF()),
@@ -265,6 +265,33 @@ class StreamStateSpec extends AnyFunSuite {
       val rows = StreamHarness.stateRows(ps)
       assert(rows.nonEmpty && rows.forall(_ <= nKeys),
         s"$nm state exceeded |keys|=$nKeys: $rows")
+    }
+  }
+
+  test("equal-ts events fold in (ts, value) order whatever their arrival order") {
+    import spark.implicits._
+    import graft.streaming._
+    // one key, two events at the same ts on both sides of the threshold,
+    // in ONE micro-batch (one file, so arrival order is the row order),
+    // then a next batch whose output depends on the state left behind
+    val S = 1000000L
+    def batches(first: Double, second: Double) = Seq(
+      Seq((1L, 10 * S, first), (1L, 10 * S, second))
+        .toDF("user_id", "ts", "value").coalesce(1),
+      Seq((1L, 20 * S, 3.0)).toDF("user_id", "ts", "value"))
+    val comps: Seq[(String, DataFrame => DataFrame, Set[String])] = Seq(
+      ("crossings", s => StreamCrossings(spark, s.as[SeriesFold.Ev], 5.0).toDF(),
+        Set("[1,10000000,1.0,9.0,up]", "[1,20000000,9.0,3.0,down]")),
+      ("rate", s => StreamRate(spark, s.as[SeriesFold.Ev]).toDF(),
+        Set("[1,10000000,10000000,null]", "[1,10000000,20000000,-0.6]")))
+    comps.foreach { case (nm, build, want) =>
+      val runs = Seq((1.0, 9.0), (9.0, 1.0)).map { case (a, b) =>
+        val (out, _) = StreamHarness.feedBatches(spark, batches(a, b), build,
+          "append", s"tie_${nm}_${a.toInt}")
+        out.collect().map(_.toString).toSet
+      }
+      assert(runs.head == runs.last, s"$nm depends on arrival order: $runs")
+      assert(runs.head == want, s"$nm: ${runs.head}")
     }
   }
 

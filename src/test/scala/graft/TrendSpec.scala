@@ -679,7 +679,7 @@ class StreamEwmaSpec extends AnyFunSuite {
     val dir = Files.createTempDirectory("graft_sewma").toString
     batch.write.mode("overwrite").parquet(dir)
     val stream = spark.readStream.schema(batch.schema).parquet(dir)
-      .as[graft.streaming.StreamEwma.Ev]
+      .as[graft.streaming.SeriesFold.Ev]
 
     val q = graft.streaming.StreamEwma(spark, stream)
       .writeStream.outputMode("append").format("memory")
@@ -708,7 +708,7 @@ class StreamCrossingsSpec extends AnyFunSuite {
     val dir = Files.createTempDirectory("graft_scross").toString
     batch.write.mode("overwrite").parquet(dir)
     val stream = spark.readStream.schema(batch.schema).parquet(dir)
-      .as[graft.streaming.StreamCrossings.Ev]
+      .as[graft.streaming.SeriesFold.Ev]
 
     val q = graft.streaming.StreamCrossings(spark, stream, 100.0)
       .writeStream.outputMode("append").format("memory")
@@ -746,7 +746,7 @@ class StreamCusumSpec extends AnyFunSuite {
     val dir = Files.createTempDirectory("graft_scusum").toString
     batch.write.mode("overwrite").parquet(dir)
     val stream = spark.readStream.schema(batch.schema).parquet(dir)
-      .as[graft.streaming.StreamCusum.Ev]
+      .as[graft.streaming.SeriesFold.Ev]
 
     val q = graft.streaming.StreamCusum(spark, stream, 50.0, 500.0)
       .writeStream.outputMode("append").format("memory")
@@ -806,7 +806,7 @@ class StreamHoltSpec extends AnyFunSuite {
     val dir = Files.createTempDirectory("graft_sholt").toString
     batch.write.mode("overwrite").parquet(dir)
     val stream = spark.readStream.schema(batch.schema).parquet(dir)
-      .as[graft.streaming.StreamHolt.Ev]
+      .as[graft.streaming.SeriesFold.Ev]
 
     val q = graft.streaming.StreamHolt(spark, stream)
       .writeStream.outputMode("append").format("memory")
@@ -839,7 +839,7 @@ class StreamBandsSpec extends AnyFunSuite {
     val dir = Files.createTempDirectory("graft_sbands").toString
     batch.write.mode("overwrite").parquet(dir)
     val stream = spark.readStream.schema(batch.schema).parquet(dir)
-      .as[graft.streaming.StreamBands.Ev]
+      .as[graft.streaming.SeriesFold.Ev]
 
     val q = graft.streaming.StreamBands(spark, stream)
       .writeStream.outputMode("append").format("memory")
@@ -875,7 +875,7 @@ class StreamHoltWintersSpec extends AnyFunSuite {
     val dir = Files.createTempDirectory("graft_shw").toString
     batch.write.mode("overwrite").parquet(dir)
     val stream = spark.readStream.schema(batch.schema).parquet(dir)
-      .as[graft.streaming.StreamHoltWinters.Ev]
+      .as[graft.streaming.SeriesFold.Ev]
 
     val q = graft.streaming.StreamHoltWinters(spark, stream)
       .writeStream.outputMode("append").format("memory")
@@ -910,7 +910,7 @@ class StreamHampelSpec extends AnyFunSuite {
     val dir = Files.createTempDirectory("graft_shamp").toString
     batch.write.mode("overwrite").parquet(dir)
     val stream = spark.readStream.schema(batch.schema).parquet(dir)
-      .as[graft.streaming.StreamHampel.Ev]
+      .as[graft.streaming.SeriesFold.Ev]
 
     val q = graft.streaming.StreamHampel(spark, stream)
       .writeStream.outputMode("append").format("memory")
@@ -948,7 +948,7 @@ class StreamRunsSpec extends AnyFunSuite {
     val dir = Files.createTempDirectory("graft_sruns").toString
     batch.write.mode("overwrite").parquet(dir)
     val stream = spark.readStream.schema(batch.schema).parquet(dir)
-      .as[graft.streaming.StreamRuns.Ev]
+      .as[graft.streaming.SeriesFold.Ev]
     val q = graft.streaming.StreamRuns(spark, stream, 60.0)
       .writeStream.outputMode("append").format("memory")
       .queryName("sruns_test").start()
