@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.sources.Parquet
 
 /** Scaling spot-run for the families whose cost is super-linear
   * without their dials turned (SURVEY §5): times a fixed subset at
@@ -30,7 +31,7 @@ object BenchScale {
 
     val canary = BenchCanary.measure(spark)
 
-    def emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
+    def emb = Parquet.read(spark, s"$sfDir/embeddings.parquet")
     val nEmb = emb.count()
     val planes = graft.operators.Knn.autoPlanes(nEmb)
 

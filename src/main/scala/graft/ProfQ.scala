@@ -9,7 +9,9 @@ import scala.jdk.CollectionConverters._
   * total executor task time for each named query — separates fixed
   * driver/scheduling overhead (many tiny jobs) from real task compute —
   * followed by the query's six costliest stages (executor seconds,
-  * task count, call site).
+  * task count, call site). `build_s` and `build_jobs` are the part
+  * spent inside `SparkEntry.queries(name)`, building the plan before
+  * the action; the last line totals them over every query run.
   *
   *   sbt "runMain graft.ProfQ emb_ann_recall doc_dedup_eval"
   *
@@ -17,6 +19,9 @@ import scala.jdk.CollectionConverters._
   * timed runs for the wall clock; listener deltas from the LAST run).
   */
 object ProfQ {
+  /** Local property marking the jobs a plan build starts. */
+  private val Phase = "graft.profq.phase"
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -27,6 +32,7 @@ object ProfQ {
     spark.sparkContext.setLogLevel("WARN")
 
     val jobs = new AtomicInteger(0)
+    val buildJobs = new AtomicInteger(0)
     val stages = new AtomicInteger(0)
     val tasks = new AtomicInteger(0)
     val taskTimeMs = new AtomicLong(0L)
@@ -37,8 +43,11 @@ object ProfQ {
     val stageTimeMs = new java.util.concurrent.ConcurrentHashMap[Int, AtomicLong]()
     val stageTasks = new java.util.concurrent.ConcurrentHashMap[Int, AtomicInteger]()
     spark.sparkContext.addSparkListener(new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
+      override def onJobStart(j: SparkListenerJobStart): Unit = {
         jobs.incrementAndGet()
+        if (Option(j.properties).exists(_.getProperty(Phase) == "build"))
+          buildJobs.incrementAndGet()
+      }
       override def onStageCompleted(s: SparkListenerStageCompleted): Unit = {
         stages.incrementAndGet()
         stageInfoMap.put(s.stageInfo.stageId,
@@ -59,30 +68,41 @@ object ProfQ {
       }
     })
 
-    def runOnce(name: String): Double = {
+    /** (build seconds, wall seconds) of one build + noop write. */
+    def runOnce(name: String): (Double, Double) = {
+      val sc = spark.sparkContext
       val t0 = System.nanoTime()
-      SparkEntry.queries(name)(spark, sfDir)
-        .write.format("noop").mode("overwrite").save()
-      (System.nanoTime() - t0) / 1e9
+      sc.setLocalProperty(Phase, "build")
+      val df = try SparkEntry.queries(name)(spark, sfDir)
+        finally sc.setLocalProperty(Phase, null)
+      val build = (System.nanoTime() - t0) / 1e9
+      df.write.format("noop").mode("overwrite").save()
+      (build, (System.nanoTime() - t0) / 1e9)
     }
 
     val names = if (args.nonEmpty) args.toSeq
       else SparkEntry.queries.keys.toSeq.sorted
-    println(f"${"query"}%-32s ${"wall_s"}%8s ${"jobs"}%5s ${"stages"}%6s " +
-      f"${"tasks"}%6s ${"task_s"}%8s ${"gc_s"}%6s ${"shufMB"}%8s")
+    println(f"${"query"}%-32s ${"wall_s"}%8s ${"build_s"}%8s ${"jobs"}%5s " +
+      f"${"build_jobs"}%10s ${"stages"}%6s ${"tasks"}%6s ${"task_s"}%8s " +
+      f"${"gc_s"}%6s ${"shufMB"}%8s")
+    var totalBuildS = 0.0
+    var totalBuildJobs = 0
     names.foreach { n =>
       try {
         runOnce(n) // warm
-        val w1 = runOnce(n)
-        jobs.set(0); stages.set(0); tasks.set(0)
+        val (_, w1) = runOnce(n)
+        jobs.set(0); buildJobs.set(0); stages.set(0); tasks.set(0)
         taskTimeMs.set(0); gcTimeMs.set(0); shufWrite.set(0)
         stageInfoMap.clear(); stageTimeMs.clear(); stageTasks.clear()
-        val w2 = runOnce(n)
+        val (b2, w2) = runOnce(n)
         // listener is async; let the queue drain
         Thread.sleep(300)
-        println(f"$n%-32s ${math.min(w1, w2)}%8.3f ${jobs.get}%5d " +
-          f"${stages.get}%6d ${tasks.get}%6d ${taskTimeMs.get / 1e3}%8.2f " +
-          f"${gcTimeMs.get / 1e3}%6.2f ${shufWrite.get / 1e6}%8.1f")
+        totalBuildS += b2
+        totalBuildJobs += buildJobs.get
+        println(f"$n%-32s ${math.min(w1, w2)}%8.3f $b2%8.3f ${jobs.get}%5d " +
+          f"${buildJobs.get}%10d ${stages.get}%6d ${tasks.get}%6d " +
+          f"${taskTimeMs.get / 1e3}%8.2f ${gcTimeMs.get / 1e3}%6.2f " +
+          f"${shufWrite.get / 1e6}%8.1f")
         stageTimeMs.asScala.toSeq.sortBy(-_._2.get).take(6).foreach {
           case (sid, ms) =>
             println(f"    stage $sid%4d ${ms.get / 1e3}%8.2f s " +
@@ -93,6 +113,8 @@ object ProfQ {
         println(s"$n FAILED: ${e.getMessage}")
       }
     }
+    println(f"${"TOTAL (last builds)"}%-32s ${""}%8s $totalBuildS%8.3f " +
+      f"${""}%5s $totalBuildJobs%10d")
     spark.stop()
   }
 }

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.sources.Parquet
 
 /** Scaling-curve data builder: replicates the sf0.1 fact tables
   * `copies`× with shifted keys into a synthetic "sf1" directory, so
@@ -47,7 +48,7 @@ object ScaleUp {
 
     def replicate(table: String)(copy: (DataFrame, Int) => DataFrame): Unit =
       if (wanted(table)) {
-        val base = spark.read.parquet(s"$src/$table.parquet")
+        val base = Parquet.read(spark, s"$src/$table.parquet")
         (0 until copies).map(i => copy(base, i)).reduce(_ unionByName _)
           .write.mode("overwrite").parquet(s"$out/$table.parquet")
         println(s"[scaleup] $table x$copies")
@@ -56,7 +57,7 @@ object ScaleUp {
     // dims: broadcast side, kept fixed
     Seq("region", "nation", "customer", "supplier", "part")
       .filter(wanted).foreach { t =>
-        spark.read.parquet(s"$src/$t.parquet")
+        Parquet.read(spark, s"$src/$t.parquet")
           .write.mode("overwrite").parquet(s"$out/$t.parquet")
         println(s"[scaleup] $t (dim, copied)")
       }

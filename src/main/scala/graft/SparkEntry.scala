@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.{Aggs, TimeIndex}
 import graft.operators._
-import graft.sources.Lake
+import graft.sources.{Lake, Parquet}
 import graft.ts.{TimeRange, TimeSeries}
 
 /** Driver contract — see /root/repo/SURVEY.md §2 for the inventory.
@@ -26,12 +26,14 @@ object SparkEntry {
 
   // ---------------------------------------------------------------- I/O
 
-  /** Older testdata wrote events.ts as TIMESTAMP(NANOS); the session's
-    * `nanosAsLong` conf ([[GraftSession.configure]]) surfaces it as an
-    * epoch-ns long so normalizeUs can key off the schema.
+  /** One sf table through [[Parquet.read]] (schema from the footer, no
+    * inference job while the query is built). Older testdata wrote
+    * events.ts as TIMESTAMP(NANOS); the session's `nanosAsLong` conf
+    * ([[GraftSession.configure]]) surfaces it as an epoch-ns long so
+    * normalizeUs can key off the schema.
     */
   private def tbl(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
+    Parquet.read(s, s"$dir/$name.parquet")
   /** [[tbl]] + scale-adaptive scan fan-out ([[operators.Par.fanout]]):
     * the sf-dir test tables are single-row-group files, so every scan
     * is ONE task and compute-dense per-row work (vec_dot folds, hashed

@@ -1,8 +1,10 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.sources.Parquet
 
 /** Similarity search over an embedding column (Array[Float]) —
   * SURVEY.md §2.8: brute-force cosine top-k as the baseline and a
@@ -103,12 +105,18 @@ object Knn {
     */
   private def lshBand(df: DataFrame, keep: Seq[Column], v: Column, dim: Int,
                       nPlanes: Int, nTables: Int): DataFrame = {
+    // `keep` (a norm, say) is projected BELOW the explode, once per row
+    // rather than once per (row, table). The explode stays over the
+    // literal array: exploding a projected array column would let
+    // Catalyst infer a `size(...) > 0` filter and push it, bucket codes
+    // and all, into the scan's Filter, hashing every row twice
+    val rows = df.select(keep :+ v.as("__v"): _*)
+    val kept = rows.columns.init.toSeq.map(col)
     val cells = array((0 until nTables).map { t =>
-      struct(lit(t).as("tb"), bucketCode(v, dim, nPlanes, t * nPlanes).as("bk"))
+      struct(lit(t).as("tb"), bucketCode(col("__v"), dim, nPlanes, t * nPlanes).as("bk"))
     }: _*)
-    val out = df.select(keep :+ explode(cells).as("tbk"): _*)
-    out.select(out.columns.init.map(col) ++
-      Seq(col("tbk.tb").as("tb"), col("tbk.bk").as("bk")): _*)
+    rows.select(kept :+ explode(cells).as("tbk"): _*)
+      .select(kept ++ Seq(col("tbk.tb").as("tb"), col("tbk.bk").as("bk")): _*)
   }
 
   /** Corpus and queries banded ([[lshBand]]) and joined on their shared
@@ -1111,8 +1119,11 @@ object Knn {
     * call. A parquet relation's plan compares equal by root path
     * alone, so the file list (the read's own listing, no job) is what
     * makes a re-read after files under that path changed count afresh.
-    * LRU-bounded at 64 plans so a long-lived session never accumulates
-    * stale keys.
+    * Only plans whose leaves are all file relations are stored: any
+    * other leaf (a checkpointed `LogicalRDD` above all) is a new plan
+    * on every build, so its key never hits again while the entry pins
+    * the leaf's cached partitions. LRU-bounded at 64 plans so a
+    * long-lived session never accumulates stale keys.
     */
   private val countCache =
     new java.util.LinkedHashMap[AnyRef, java.lang.Long](16, 0.75f, true) {
@@ -1122,13 +1133,21 @@ object Knn {
     }
 
   private def cachedCount(df: DataFrame): Long = {
-    val key = (df.queryExecution.analyzed.canonicalized, df.inputFiles.toSet)
-    val hit = countCache.synchronized(countCache.get(key))
-    if (hit != null) hit.longValue()
+    val plan = df.queryExecution.analyzed
+    val fileLeaves = plan.collectLeaves().forall {
+      case r: LogicalRelation => r.relation.isInstanceOf[HadoopFsRelation]
+      case _ => false
+    }
+    if (!fileLeaves) df.count()
     else {
-      val n = df.count()
-      countCache.synchronized(countCache.put(key, java.lang.Long.valueOf(n)))
-      n
+      val key = (plan.canonicalized, df.inputFiles.toSet)
+      val hit = countCache.synchronized(countCache.get(key))
+      if (hit != null) hit.longValue()
+      else {
+        val n = df.count()
+        countCache.synchronized(countCache.put(key, java.lang.Long.valueOf(n)))
+        n
+      }
     }
   }
 
@@ -1315,7 +1334,7 @@ object Knn {
                        batch: DataFrame, path: String, dim: Int,
                        idCol: String = "vec_id",
                        vecCol: String = "embedding"): Unit = {
-    val cents = spark.read.parquet(s"$path/centroids")
+    val cents = Parquet.read(spark, s"$path/centroids")
     val c = batch.select(normed(idCol, vecCol, dim, "neighbor_id", "nvec", "nn"): _*)
     nearestCells(cents, dot(_, _, dim))(c, "neighbor_id", "nvec", 1, "nn")
       .withColumnRenamed("cid", "cell")
@@ -1337,13 +1356,13 @@ object Knn {
                      queries: DataFrame, dim: Int, k: Int, nProbe: Int = 2,
                      idCol: String = "vec_id",
                      vecCol: String = "embedding"): DataFrame = {
-    val cents = spark.read.parquet(s"$path/centroids")
+    val cents = Parquet.read(spark, s"$path/centroids")
     val q = queries.select(normed(idCol, vecCol, dim, "query_id", "qvec", "qn"): _*)
     val qCells = nearestCells(cents, dot(_, _, dim))(
         q, "query_id", "qvec", nProbe, "qn")
       .localCheckpoint(false) // probed twice: the id collect + the join
     val probed = qCells.select("cid").distinct().collect().map(_.getLong(0))
-    val idx = spark.read.parquet(s"$path/cells")
+    val idx = Parquet.read(spark, s"$path/cells")
       .where(col("cell").isin(probed: _*))
       .withColumnRenamed("cell", "cid")
     cellSearch(idx, qCells, k, pairCos(dot(_, _, dim)))

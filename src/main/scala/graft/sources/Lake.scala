@@ -26,7 +26,7 @@ object Lake {
     */
   def read(spark: SparkSession, path: String, tsCol: String,
            keyCols: Seq[String] = Nil): TimeSeries =
-    TimeSeries(spark.read.parquet(path), tsCol, keyCols)
+    TimeSeries(Parquet.read(spark, path), tsCol, keyCols)
 
   /** Bucketed layout for co-located joins: two tables bucketed by the
     * same key into the same bucket count join (or groupBy that key)
@@ -67,7 +67,7 @@ object Lake {
     val newPart = rollupPartials(df, tsCol, valCol, keyCols, win)
     val existing =
       try {
-        val prior = spark.read.parquet(path)
+        val prior = Parquet.read(spark, path)
         // planning-time partition pruning: only the days the new
         // batch touches are read back for the merge
         val days = newPart.select("dt").distinct()
@@ -112,7 +112,7 @@ object Lake {
     */
   def readRollup(spark: SparkSession, path: String,
                  keyCols: Seq[String]): DataFrame =
-    spark.read.parquet(path)
+    Parquet.read(spark, path)
       .select((keyCols.map(col) :+ col("idx") :+ col("ts_begin") :+
         col("cnt") :+ col("vsum").cast("double").as("sum_value") :+
         round(col("vsum").cast("double") / col("cnt"), 6).as("avg_value") :+
@@ -150,7 +150,7 @@ object Lake {
     val prev = spark.conf.getOption(key)
     spark.conf.set(key, "dynamic")
     try days.foreach { day =>
-      spark.read.parquet(path).where(col("dt") === day)
+      Parquet.read(spark, path).where(col("dt") === day)
         .localCheckpoint()
         .coalesce(filesPerDay)
         .write.mode("overwrite").partitionBy("dt").parquet(path)
@@ -201,7 +201,7 @@ object Lake {
                     statsCols: Seq[String]): Unit = {
     val aggs = statsCols.flatMap(c =>
       Seq(min(col(c)).as(s"min_$c"), max(col(c)).as(s"max_$c")))
-    spark.read.parquet(path)
+    Parquet.read(spark, path)
       .groupBy(col("_metadata.file_path").as("file_path"))
       .agg(aggs.head, aggs.tail: _*)
       .coalesce(1)
@@ -219,14 +219,14 @@ object Lake {
   def readManifestPruned(spark: SparkSession, path: String, c: String,
                          lo: Any, hi: Any): DataFrame = {
     import spark.implicits._
-    val paths = spark.read.parquet(s"$path/_graft_manifest")
+    val paths = Parquet.read(spark, s"$path/_graft_manifest")
       .where(col(s"min_$c") <= lit(hi) && col(s"max_$c") >= lit(lo))
       .select("file_path").as[String].collect().toSeq
     val pred = col(c) >= lit(lo) && col(c) <= lit(hi)
     if (paths.isEmpty)
-      spark.read.option("basePath", path).parquet(path).where(lit(false))
+      Parquet.readUnder(spark, path, path).where(lit(false))
     else
-      spark.read.option("basePath", path).parquet(paths: _*).where(pred)
+      Parquet.readUnder(spark, path, paths: _*).where(pred)
   }
 
   /** Z-order (Morton-curve) clustered rewrite: interleave the bits of
@@ -317,11 +317,11 @@ object Lake {
     val dataDir = s"$path/data/s${"%05d".format(v)}"
     reclaimOrphan(spark, dataDir)
     df.write.mode("error").parquet(dataDir)
-    val newFiles = spark.read.parquet(dataDir)
+    val newFiles = Parquet.read(spark, dataDir)
       .select(col("_metadata.file_path").as("file_path")).distinct()
     val manifest =
       if (v == 1) newFiles
-      else spark.read.parquet(s"$path/_graft_snapshots/v=${v - 1}")
+      else Parquet.read(spark, s"$path/_graft_snapshots/v=${v - 1}")
         .unionByName(newFiles)
     // a crash between manifest-dir creation and _SUCCESS leaves a
     // partial v=N dir that snapshotVersions (rightly) ignores — the
@@ -376,9 +376,9 @@ object Lake {
     val vs = snapshotVersions(spark, path)
     require(vs.nonEmpty, s"no snapshots at $path")
     val v = vs.last + 1
-    val files = spark.read.parquet(s"$path/_graft_snapshots/v=${vs.last}")
+    val files = Parquet.read(spark, s"$path/_graft_snapshots/v=${vs.last}")
       .select("file_path").as[String].collect().toSeq
-    val cur = spark.read.parquet(files: _*)
+    val cur = Parquet.read(spark, files: _*)
       .withColumn("__file", col("_metadata.file_path"))
     // the hit-file list is metadata-scale (one entry per matched FILE,
     // the planning cost every table format pays) — collected once,
@@ -395,10 +395,10 @@ object Lake {
       else {
         val dataDir = s"$path/data/s${"%05d".format(v)}"
         reclaimOrphan(spark, dataDir)
-        spark.read.parquet(hit.toSeq: _*)
+        Parquet.read(spark, hit.toSeq: _*)
           .where(!(predicate <=> lit(true)))
           .write.mode("error").parquet(dataDir)
-        spark.read.parquet(dataDir)
+        Parquet.read(spark, dataDir)
           .select(col("_metadata.file_path")).distinct()
           .as[String].collect().toSeq
       }
@@ -443,9 +443,9 @@ object Lake {
     val vs = snapshotVersions(spark, path)
     require(vs.nonEmpty, s"no snapshots at $path")
     val v = vs.last + 1
-    val files = spark.read.parquet(s"$path/_graft_snapshots/v=${vs.last}")
+    val files = Parquet.read(spark, s"$path/_graft_snapshots/v=${vs.last}")
       .select("file_path").as[String].collect().toSeq
-    val cur = spark.read.parquet(files: _*)
+    val cur = Parquet.read(spark, files: _*)
       .withColumn("__file", col("_metadata.file_path"))
     val keys = updates.select(keyCols.map(col): _*).distinct()
       .localCheckpoint(false)
@@ -457,9 +457,10 @@ object Lake {
     // hit-file rows come from a re-read of EXACTLY the matched files —
     // O(matching files) I/O with no `isin` literal over file paths
     // (see the snapshotDeleteWhere note)
-    // the rewrite schema is the TABLE schema carried on `cur` (footer
-    // union over ALL current files), selected explicitly — inferring it
-    // from only the matched files tied the rewrite to whichever files
+    // the rewrite schema is the TABLE schema carried on `cur` (read
+    // from the first current file's footer), selected explicitly —
+    // inferring it from only the matched files tied the rewrite to
+    // whichever files
     // happened to match, and a hit-file re-read missing a column the
     // table has would silently drop it from the rewritten region
     // (ADVICE r14). The snapshot layer does not support add-column
@@ -468,7 +469,7 @@ object Lake {
     val tableCols = cur.drop("__file").columns.toSeq
     val hitRows =
       if (hit.isEmpty) cur.drop("__file").where(lit(false))
-      else spark.read.parquet(hit.toSeq: _*).select(tableCols.map(col): _*)
+      else Parquet.read(spark, hit.toSeq: _*).select(tableCols.map(col): _*)
     val newData = hitRows
       .join(keys, keyCols, "left_anti")
       .unionByName(updates.select(tableCols.map(col): _*))
@@ -478,7 +479,7 @@ object Lake {
         val dataDir = s"$path/data/s${"%05d".format(v)}"
         reclaimOrphan(spark, dataDir)
         newData.write.mode("error").parquet(dataDir)
-        spark.read.parquet(dataDir)
+        Parquet.read(spark, dataDir)
           .select(col("_metadata.file_path")).distinct()
           .as[String].collect().toSeq
       }
@@ -506,14 +507,14 @@ object Lake {
     val vs = snapshotVersions(spark, path)
     require(vs.nonEmpty, s"no snapshots at $path")
     val v = vs.last + 1
-    val files = spark.read.parquet(s"$path/_graft_snapshots/v=${vs.last}")
+    val files = Parquet.read(spark, s"$path/_graft_snapshots/v=${vs.last}")
       .select("file_path").as[String].collect().toSeq
     val dataDir = s"$path/data/s${"%05d".format(v)}"
     reclaimOrphan(spark, dataDir)
-    spark.read.parquet(files: _*)
+    Parquet.read(spark, files: _*)
       .coalesce(nFiles)
       .write.mode("error").parquet(dataDir)
-    val newFiles = spark.read.parquet(dataDir)
+    val newFiles = Parquet.read(spark, dataDir)
       .select(col("_metadata.file_path")).distinct()
       .as[String].collect().toSeq
     reclaimOrphan(spark, s"$path/_graft_snapshots/v=$v")
@@ -623,7 +624,7 @@ object Lake {
     val (drop, keep) = vs.splitAt(math.max(0, vs.size - math.max(1, keepLast)))
     if (drop.isEmpty) return 0
     def filesOf(v: Int): Set[String] =
-      spark.read.parquet(s"$path/_graft_snapshots/v=$v")
+      Parquet.read(spark, s"$path/_graft_snapshots/v=$v")
         .select("file_path").as[String].collect().toSet
     val referenced = keep.map(filesOf).foldLeft(Set.empty[String])(_ ++ _)
     val retired = drop.map(filesOf).foldLeft(Set.empty[String])(_ ++ _)
@@ -642,9 +643,9 @@ object Lake {
     val v = if (version > 0) version
       else snapshotVersions(spark, path).lastOption.getOrElse(
         sys.error(s"no snapshots at $path"))
-    val files = spark.read.parquet(s"$path/_graft_snapshots/v=$v")
+    val files = Parquet.read(spark, s"$path/_graft_snapshots/v=$v")
       .select("file_path").as[String].collect().toSeq
-    spark.read.parquet(files: _*)
+    Parquet.read(spark, files: _*)
   }
 
   /** Range-crop that ALSO constrains the partition column, so the

@@ -2,6 +2,7 @@ package graft.ts
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.sources.Parquet
 import graft.operators._
 import graft.functions.TimeIndex
 
@@ -211,14 +212,14 @@ object TimeSeries {
   def readParquetNanos(spark: SparkSession, path: String, tsCol: String,
                        keyCols: Seq[String] = Nil): TimeSeries = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val df = spark.read.parquet(path)
+    val df = Parquet.read(spark, path)
     TimeSeries(graft.functions.TimeIndex.normalizeUs(df, tsCol), tsCol, keyCols)
   }
 
   /** Parquet with a regular timestamp column. */
   def readParquet(spark: SparkSession, path: String, tsCol: String,
                   keyCols: Seq[String] = Nil): TimeSeries =
-    fromTimestamp(spark.read.parquet(path), tsCol, keyCols)
+    fromTimestamp(Parquet.read(spark, path), tsCol, keyCols)
 
   /** CSV with header; the time column may be a timestamp or ISO string. */
   def readCsv(spark: SparkSession, path: String, tsCol: String,

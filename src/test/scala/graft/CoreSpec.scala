@@ -20,6 +20,24 @@ object SparkTestSession {
     s.sparkContext.setLogLevel("WARN")
     s
   }
+
+  /** The columns the file scans of `df`'s physical plan prune
+    * partitions on by value at planning time. Every `FileScan` prints
+    * a `PartitionFilters` list, empty or not, so the plan text alone
+    * cannot show pruning. Left out: `isnotnull` (a join key infers
+    * one, and it keeps every partition) and dynamic pruning filters
+    * (decided at run time).
+    */
+  def partitionFilterCols(df: org.apache.spark.sql.DataFrame): Set[String] = {
+    import org.apache.spark.sql.catalyst.expressions.{DynamicPruningExpression, IsNotNull}
+    df.queryExecution.sparkPlan.collect {
+      case s: org.apache.spark.sql.execution.FileSourceScanExec =>
+        s.partitionFilters.filter {
+          case _: IsNotNull | _: DynamicPruningExpression => false
+          case _ => true
+        }.flatMap(_.references.map(_.name))
+    }.flatten.toSet
+  }
 }
 
 class TimeIndexSpec extends AnyFunSuite {

@@ -10,7 +10,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * Knn keeps one copy each of the LSH band geometry and the per-query
   * rank, and SparkEntry one copy each of the ANN query batch and the
   * recall score, that the DuckDB oracles mirror. `graft.streaming`
-  * keeps one per-series fold and one event-time prologue.
+  * keeps one per-series fold and one event-time prologue, and
+  * `graft.sources.Parquet` is the one parquet reader.
   * Checked over the source text, so a new main or toggle fails here
   * before it can reach a measurement.
   */
@@ -51,6 +52,15 @@ class SessionInvariantSpec extends AnyFunSuite {
     assert(planning.exists(_._1.endsWith("graft/SparkEntry.scala")))
     val vars = offenders(planning, """@volatile\b[^=\n]*\bvar\b""")
     assert(vars.isEmpty, vars.mkString(", "))
+  }
+
+  test("src/main reads parquet only through graft.sources.Parquet") {
+    // any other batch read infers its schema with a Spark job while the
+    // query's plan is built (a streaming read must state its schema)
+    val reads = offenders(
+      sources.filterNot(_._1.endsWith("graft/sources/Parquet.scala")),
+      """\bread\b(?:\s*\.\w+\([^()]*\))*\s*\.(?:parquet\(|format\("parquet"\))""")
+    assert(reads.isEmpty, reads.mkString(", "))
   }
 
   /** One chunk per top-level member of an object in `file`, up to the
