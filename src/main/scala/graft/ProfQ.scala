@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.scheduler._
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
@@ -11,7 +12,11 @@ import scala.jdk.CollectionConverters._
   * followed by the query's six costliest stages (executor seconds,
   * task count, call site). `build_s` and `build_jobs` are the part
   * spent inside `SparkEntry.queries(name)`, building the plan before
-  * the action; the last line totals them over every query run.
+  * the action. `cg_classes` counts the classes compiled during the
+  * measured (third) run: a warm rerun compiles none, so a nonzero
+  * count marks a query that recompiles on every run (plans that differ
+  * only in literals, or a loader per session). The last line totals
+  * `build_s`, `build_jobs` and `cg_classes` over every query run.
   *
   *   sbt "runMain graft.ProfQ emb_ann_recall doc_dedup_eval"
   *
@@ -84,9 +89,10 @@ object ProfQ {
       else SparkEntry.queries.keys.toSeq.sorted
     println(f"${"query"}%-32s ${"wall_s"}%8s ${"build_s"}%8s ${"jobs"}%5s " +
       f"${"build_jobs"}%10s ${"stages"}%6s ${"tasks"}%6s ${"task_s"}%8s " +
-      f"${"gc_s"}%6s ${"shufMB"}%8s")
+      f"${"gc_s"}%6s ${"shufMB"}%8s ${"cg_classes"}%10s")
     var totalBuildS = 0.0
     var totalBuildJobs = 0
+    var totalCgClasses = 0L
     names.foreach { n =>
       try {
         runOnce(n) // warm
@@ -94,15 +100,18 @@ object ProfQ {
         jobs.set(0); buildJobs.set(0); stages.set(0); tasks.set(0)
         taskTimeMs.set(0); gcTimeMs.set(0); shufWrite.set(0)
         stageInfoMap.clear(); stageTimeMs.clear(); stageTasks.clear()
+        val cg0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
         val (b2, w2) = runOnce(n)
+        val cgClasses = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - cg0
         // listener is async; let the queue drain
         Thread.sleep(300)
         totalBuildS += b2
         totalBuildJobs += buildJobs.get
+        totalCgClasses += cgClasses
         println(f"$n%-32s ${math.min(w1, w2)}%8.3f $b2%8.3f ${jobs.get}%5d " +
           f"${buildJobs.get}%10d ${stages.get}%6d ${tasks.get}%6d " +
           f"${taskTimeMs.get / 1e3}%8.2f ${gcTimeMs.get / 1e3}%6.2f " +
-          f"${shufWrite.get / 1e6}%8.1f")
+          f"${shufWrite.get / 1e6}%8.1f $cgClasses%10d")
         stageTimeMs.asScala.toSeq.sortBy(-_._2.get).take(6).foreach {
           case (sid, ms) =>
             println(f"    stage $sid%4d ${ms.get / 1e3}%8.2f s " +
@@ -114,7 +123,8 @@ object ProfQ {
       }
     }
     println(f"${"TOTAL (last builds)"}%-32s ${""}%8s $totalBuildS%8.3f " +
-      f"${""}%5s $totalBuildJobs%10d")
+      f"${""}%5s $totalBuildJobs%10d ${""}%6s ${""}%6s ${""}%8s ${""}%6s ${""}%8s " +
+      f"$totalCgClasses%10d")
     spark.stop()
   }
 }

@@ -43,13 +43,6 @@ object Lake {
       .bucketBy(nBuckets, keyCol).sortBy(keyCol)
       .format("parquet").saveAsTable(table)
 
-  /** Backfill: replace ONLY the UTC-day partitions present in `df`,
-    * leaving every other day's files untouched — the late-data /
-    * correction path a daily-partitioned 100 TB lake needs (a static
-    * overwrite would truncate the whole table to relay one day).
-    * Implemented with dynamic partition overwrite, scoped to this one
-    * write so the session default is preserved.
-    */
   /** Incrementally-maintained rollup table (materialized-view
     * maintenance): per (key, window) the PARTIAL aggregate state —
     * cnt, exact decimal sum, min, max — stored partitioned by the
@@ -84,15 +77,17 @@ object Lake {
         col("dt")): _*)
       .agg(sum(col("cnt")).as("cnt"), sum(col("vsum")).as("vsum"),
         min(col("vmin")).as("vmin"), max(col("vmax")).as("vmax"))
-    val key = "spark.sql.sources.partitionOverwriteMode"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "dynamic")
-    try merged.write.mode("overwrite").partitionBy("dt").parquet(path)
-    finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
+    overwriteDays(merged, path)
   }
+
+  /** Replace only the `dt` partitions present in `df`. Dynamic
+    * partition overwrite is a write option, which Spark prefers over
+    * the session conf, so concurrent writers on one session cannot
+    * flip each other into a static overwrite of the whole table.
+    */
+  private def overwriteDays(df: DataFrame, path: String): Unit =
+    df.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+      .partitionBy("dt").parquet(path)
 
   private def rollupPartials(df: DataFrame, tsCol: String, valCol: String,
                              keyCols: Seq[String], win: String): DataFrame = {
@@ -118,19 +113,13 @@ object Lake {
         round(col("vsum").cast("double") / col("cnt"), 6).as("avg_value") :+
         col("vmin").as("min_value") :+ col("vmax").as("max_value")): _*)
 
-  def backfillDaily(df: DataFrame, tsCol: String, path: String): Unit = {
-    val spark = df.sparkSession
-    val key = "spark.sql.sources.partitionOverwriteMode"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "dynamic")
-    try
-      df.withColumn("dt", TimeIndex.dailyIndex(col(tsCol)))
-        .write.mode("overwrite").partitionBy("dt").parquet(path)
-    finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
+  /** Backfill: replace ONLY the UTC-day partitions present in `df`,
+    * leaving every other day's files untouched — the late-data /
+    * correction path a daily-partitioned 100 TB lake needs (a static
+    * overwrite would truncate the whole table to relay one day).
+    */
+  def backfillDaily(df: DataFrame, tsCol: String, path: String): Unit =
+    overwriteDays(df.withColumn("dt", TimeIndex.dailyIndex(col(tsCol))), path)
 
   /** Small-file compaction, scoped to the named UTC-day partitions: a
     * streaming ingest (or many tiny backfills) leaves a day's data as
@@ -145,20 +134,12 @@ object Lake {
     * real scale, schedule them as parallel jobs.
     */
   def compactDaily(spark: SparkSession, path: String, days: Seq[String],
-                   filesPerDay: Int = 1): Unit = {
-    val key = "spark.sql.sources.partitionOverwriteMode"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "dynamic")
-    try days.foreach { day =>
-      Parquet.read(spark, path).where(col("dt") === day)
+                   filesPerDay: Int = 1): Unit =
+    days.foreach { day =>
+      overwriteDays(Parquet.read(spark, path).where(col("dt") === day)
         .localCheckpoint()
-        .coalesce(filesPerDay)
-        .write.mode("overwrite").partitionBy("dt").parquet(path)
-    } finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
+        .coalesce(filesPerDay), path)
     }
-  }
 
   /** Streaming ingest INTO the daily-partitioned layout: an unbounded
     * event stream lands under the same `dt=YYYY-MM-DD/` directories

@@ -11,7 +11,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * rank, and SparkEntry one copy each of the ANN query batch and the
   * recall score, that the DuckDB oracles mirror. `graft.streaming`
   * keeps one per-series fold and one event-time prologue, and
-  * `graft.sources.Parquet` is the one parquet reader.
+  * `graft.sources.Parquet` is the one parquet reader; `graft.sources`
+  * leaves the session's confs as it found them.
   * Checked over the source text, so a new main or toggle fails here
   * before it can reach a measurement.
   */
@@ -61,6 +62,16 @@ class SessionInvariantSpec extends AnyFunSuite {
       sources.filterNot(_._1.endsWith("graft/sources/Parquet.scala")),
       """\bread\b(?:\s*\.\w+\([^()]*\))*\s*\.(?:parquet\(|format\("parquet"\))""")
     assert(reads.isEmpty, reads.mkString(", "))
+  }
+
+  test("graft.sources sets or unsets no session conf") {
+    // a save/set/restore of a conf on a shared session races with every
+    // other caller of that session (Lake's dynamic partition overwrite
+    // is a per-write option for this reason)
+    val sets = offenders(
+      sources.filter(_._1.startsWith(root.resolve("graft/sources"))),
+      """\bconf\s*\.\s*(?:set|unset)\b""")
+    assert(sets.isEmpty, sets.mkString(", "))
   }
 
   /** One chunk per top-level member of an object in `file`, up to the
