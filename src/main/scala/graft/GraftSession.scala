@@ -27,6 +27,17 @@ object GraftSession {
     configure(SparkSession.builder().master(s"local[$cores]"), cores * 2)
       .getOrCreate()
 
+  /** A new session on `s`'s context with `confs` set: a query that
+    * needs a conf builds its plan there instead of writing the conf
+    * on a session its caller shares. The new session shares the
+    * executor class loader (see configure), so it recompiles nothing.
+    */
+  def withConfs(s: SparkSession, confs: (String, String)*): SparkSession = {
+    val d = s.newSession()
+    confs.foreach { case (k, v) => d.conf.set(k, v) }
+    d
+  }
+
   /** Apply graft's required/recommended confs to any builder. */
   def configure(b: SparkSession.Builder, shufflePartitions: Int): SparkSession.Builder =
     b.config("spark.sql.extensions", "org.apache.spark.sql.graft.GraftExtensions")

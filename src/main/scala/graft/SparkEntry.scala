@@ -1024,13 +1024,13 @@ object SparkEntry {
     // NAIVE keyless containment join a user would write; the
     // BandedRangeJoinRule (injected via GraftExtensions) rewrites it
     // to the banded equi-join, replacing the BroadcastNestedLoopJoin
-    // the stock planner would emit. The conf stays set for the
-    // session: the rule only fires on keyless long-containment joins,
-    // and no other registered query has one (semantics are preserved
-    // even if one appears).
-    "q_interval_join_auto" -> { (s, dir) =>
-      s.conf.set(org.apache.spark.sql.graft.BandedRangeJoinRule.BucketConfKey,
-        (30 * UsMin).toString)
+    // the stock planner would emit. The rule's bucket conf is set on a
+    // session of its own, so the caller's session decides nothing
+    // about which later joins get rewritten.
+    "q_interval_join_auto" -> { (s0, dir) =>
+      val s = GraftSession.withConfs(s0,
+        org.apache.spark.sql.graft.BandedRangeJoinRule.BucketConfKey ->
+          (30 * UsMin).toString)
       val ev = events(s, dir)
       val iv = ev.where(col("event_type") === "error" && col("user_id") % 50 === 0)
         .select(col("event_id"), col("ts").as("begin"),
@@ -4996,68 +4996,114 @@ object SparkEntry {
     s"list_transform(range(1, greatest(len($t)-2, 0) + 1), " +
       s"i -> array_to_string(list_slice($t, i, i+2), ' '))"
 
-  /** SimHash banded candidate pairs as a CTE chain ending in
-    * `spairs(id_a, id_b, hamming)` — the exact restatement of
-    * Dedup.simhashPairs, shared by doc_dedup_simhash and the
-    * edit-distance verification built on its candidates.
+  /** The oracle of [[Dedup.bitBands]]: `src`'s rows once per band,
+    * with `band` and `bk` (bits [band·bandBits, (band+1)·bandBits) of
+    * the BIGINT `sig`). Arithmetic `>>` and signed `%` match Spark's
+    * shiftright / % for negative 64-bit hashes.
     */
-  /** The 60-bit / 4×15-band simhash chain (Dedup.simhashPairsWide):
-    * two 30-bit mixes per token vote the low/high bit halves; every
-    * product stays under 2^62 so the arithmetic is plain BIGINT.
-    */
-  private def sqlSimhashWideCtes(maxHamming: Int): String = {
-    val bitSums = (0 until 60).map { i =>
-      val (src, sh) = if (i < 30) ("th1", i) else ("th2", i - 30)
-      s"sum(CASE WHEN ($src // ${1L << sh}) % 2 = 1 THEN 1 ELSE -1 END)" +
-        s" AS ws$i"
-    }.mkString(",\n  ")
-    val shExpr = (0 until 60).map { i =>
-      s"(CASE WHEN ws$i > 0 THEN ${1L << i} ELSE 0 END)"
-    }.mkString(" + ")
-    val bandSelects = (0 until 4).map { b =>
-      s"SELECT doc_id, simhash, $b AS band, " +
-        s"(simhash // ${1L << (b * 15)}) % 32768 AS bk FROM wsh2"
-    }.mkString("\nUNION ALL\n")
-    s"""wstoks AS (SELECT doc_id, unnest($sqlToks) AS t FROM documents),
-       |wth0 AS (SELECT doc_id, ${sqlPoly("t")} AS p FROM wstoks),
-       |wth AS (SELECT doc_id,
-       |    (p * 2654435761) % 1073741824 AS th1,
-       |    (((p * 2246822519 + 1013904223) % 1000000007)
-       |      * ((p * 2246822519 + 1013904223) % 1000000007))
-       |      % 1000000007 AS th2
-       |  FROM wth0),
-       |wbits AS (SELECT doc_id, $bitSums FROM wth GROUP BY doc_id),
-       |wsh2 AS (SELECT doc_id, $shExpr AS simhash FROM wbits),
-       |wbands AS ($bandSelects),
-       |wpairs AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b,
-       |  CAST(bit_count(xor(a.simhash, b.simhash)) AS INTEGER) AS hamming
-       |FROM wbands a JOIN wbands b ON a.band = b.band AND a.bk = b.bk
-       |  AND a.doc_id < b.doc_id
-       |WHERE bit_count(xor(a.simhash, b.simhash)) <= $maxHamming)""".stripMargin
-  }
+  private def sqlBitBands(src: String, sig: String, bandBits: Int,
+                          bands: Int): String =
+    s"""SELECT s.*, b.band, (s.$sig >> (b.band * $bandBits)) % ${1L << bandBits} AS bk
+       |  FROM $src s, (SELECT unnest(range($bands)) AS band) b""".stripMargin
 
-  private def sqlSimhashPairCtes(maxHamming: Int): String = {
-    val bitSums = (0 until Dedup.SimhashBits).map { i =>
-      s"sum(CASE WHEN (th // ${1L << i}) % 2 = 1 THEN 1 ELSE -1 END) AS bs$i"
+  /** The oracle of [[Dedup.bandPairs]]: CTE `out(id_a, id_b, hamming)`
+    * over the doc_id-keyed [[sqlBitBands]] CTE `banded`.
+    */
+  private def sqlBandPairs(out: String, banded: String, sig: String,
+                           maxHamming: Int): String =
+    s"""$out AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b,
+       |  CAST(bit_count(xor(a.$sig, b.$sig)) AS INTEGER) AS hamming
+       |FROM $banded a JOIN $banded b ON a.band = b.band AND a.bk = b.bk
+       |  AND a.doc_id < b.doc_id
+       |WHERE bit_count(xor(a.$sig, b.$sig)) <= $maxHamming)""".stripMargin
+
+  /** SimHash banded pairs as CTEs named `pre`… ending in
+    * `${pre}pairs(id_a, id_b, hamming)`. `mixes` are the per-token
+    * hashes of the token poly hash `p`; mix j votes signature bits
+    * [j·bitsPer, (j+1)·bitsPer) from its own low bits. Dedup.simhashPairs
+    * is one 31-bit mix voting 24 bits in 3×8 bands
+    * ([[sqlSimhashPairCtes]]), Dedup.simhashPairsWide two 30-bit mixes
+    * in 4×15 bands ([[sqlSimhashWideCtes]]); every product stays under
+    * 2^62, so the arithmetic is plain BIGINT.
+    */
+  private def sqlSimhashCtes(pre: String, mixes: Seq[String], bitsPer: Int,
+                             bandBits: Int, maxHamming: Int): String = {
+    val nBits = mixes.size * bitsPer
+    val bitSums = (0 until nBits).map { i =>
+      s"sum(CASE WHEN (th${i / bitsPer} // ${1L << (i % bitsPer)}) % 2 = 1" +
+        s" THEN 1 ELSE -1 END) AS bs$i"
     }.mkString(",\n  ")
-    val shExpr = (0 until Dedup.SimhashBits).map { i =>
+    val shExpr = (0 until nBits).map { i =>
       s"(CASE WHEN bs$i > 0 THEN ${1L << i} ELSE 0 END)"
     }.mkString(" + ")
-    val bandSelects = (0 until 3).map { b =>
-      s"SELECT doc_id, simhash, $b AS band, (simhash // ${1L << (b * 8)}) % 256 AS bk FROM sh2"
-    }.mkString("\nUNION ALL\n")
-    s"""shtoks AS (SELECT doc_id, unnest($sqlToks) AS t FROM documents),
-       |th AS (SELECT doc_id, (${sqlPoly("t")} * 2654435761) % 2147483648 AS th
-       |  FROM shtoks),
-       |bits AS (SELECT doc_id, $bitSums FROM th GROUP BY doc_id),
-       |sh2 AS (SELECT doc_id, $shExpr AS simhash FROM bits),
-       |bands AS ($bandSelects),
-       |spairs AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b,
-       |  CAST(bit_count(xor(a.simhash, b.simhash)) AS INTEGER) AS hamming
-       |FROM bands a JOIN bands b ON a.band = b.band AND a.bk = b.bk
-       |  AND a.doc_id < b.doc_id
-       |WHERE bit_count(xor(a.simhash, b.simhash)) <= $maxHamming)""".stripMargin
+    val ths = mixes.zipWithIndex.map { case (m, j) => s"$m AS th$j" }
+      .mkString(",\n    ")
+    s"""${pre}toks AS (SELECT doc_id, unnest($sqlToks) AS t FROM documents),
+       |${pre}tp AS (SELECT doc_id, ${sqlPoly("t")} AS p FROM ${pre}toks),
+       |${pre}th AS (SELECT doc_id,
+       |    $ths
+       |  FROM ${pre}tp),
+       |${pre}bits AS (SELECT doc_id, $bitSums FROM ${pre}th GROUP BY doc_id),
+       |${pre}sig AS (SELECT doc_id, $shExpr AS simhash FROM ${pre}bits),
+       |${pre}bands AS (${sqlBitBands(s"${pre}sig", "simhash", bandBits, nBits / bandBits)}),
+       |${sqlBandPairs(s"${pre}pairs", s"${pre}bands", "simhash", maxHamming)}""".stripMargin
   }
+
+  /** [[sqlSimhashCtes]] for Dedup.simhashPairs, ending in `spairs`. */
+  private def sqlSimhashPairCtes(maxHamming: Int): String =
+    sqlSimhashCtes("s", Seq("(p * 2654435761) % 2147483648"),
+      Dedup.SimhashBits, 8, maxHamming)
+
+  /** [[sqlSimhashCtes]] for Dedup.simhashPairsWide, ending in `wpairs`:
+    * two 30-bit mixes vote the low/high bit halves.
+    */
+  private def sqlSimhashWideCtes(maxHamming: Int): String = {
+    val m = "((p * 2246822519 + 1013904223) % 1000000007)"
+    sqlSimhashCtes("w", Seq("(p * 2654435761) % 1073741824",
+      s"($m * $m) % 1000000007"), Dedup.SimhashWideBits / 2, 15, maxHamming)
+  }
+
+  /** The oracle of [[Dedup.postingPairs]]: CTEs ending in
+    * `postpairs(id_a, id_b, n_shared, n_a, n_b)` over the (doc_id,
+    * `key`) postings CTE `src`; n is a doc's posting count before the
+    * cap, and `maxDf` keeps the keys held by 2..maxDf docs.
+    */
+  private def sqlPostingPairs(src: String, key: String,
+                              maxDf: Option[Int]): String = {
+    val cap = maxDf.fold("") { f =>
+      s"""
+         |  WHERE a.$key IN (SELECT $key FROM $src GROUP BY $key
+         |    HAVING count(*) BETWEEN 2 AND $f)""".stripMargin
+    }
+    s"""postn AS (SELECT doc_id, count(*) AS n FROM $src GROUP BY doc_id),
+       |posts AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b,
+       |    count(*) AS n_shared
+       |  FROM $src a JOIN $src b ON a.$key = b.$key AND a.doc_id < b.doc_id$cap
+       |  GROUP BY 1, 2),
+       |postpairs AS (SELECT id_a, id_b, n_shared, na.n AS n_a, nb.n AS n_b
+       |  FROM posts JOIN postn na ON na.doc_id = id_a
+       |    JOIN postn nb ON nb.doc_id = id_b)""".stripMargin
+  }
+
+  /** The doc_dedup_ngram_jaccard oracle (Dedup.ngramJaccardPairs at
+    * J >= 0.5) with posting cap `maxDf`.
+    */
+  private def sqlNgramJaccard(maxDf: Option[Int]): String =
+    s"""WITH $sqlSidsCte,
+       |inv AS (SELECT doc_id, unnest(sids) AS sid FROM sids),
+       |${sqlPostingPairs("inv", "sid", maxDf)}
+       |SELECT id_a, id_b,
+       |  round(CAST(n_shared AS DOUBLE) / (n_a + n_b - n_shared), 6) AS jaccard
+       |FROM postpairs
+       |WHERE CAST(n_shared AS DOUBLE) / (n_a + n_b - n_shared) >= 0.5""".stripMargin
+
+  /** Containment over [[sqlPostingPairs]]: the final SELECT of the
+    * frame and audio dedups (Multimodal.overlapPairs).
+    */
+  private val sqlOverlapSelect =
+    """SELECT id_a, id_b, n_shared,
+      |  round(CAST(n_shared AS DOUBLE) / least(n_a, n_b), 6) AS overlap
+      |FROM postpairs""".stripMargin
 
   /** doc_id + distinct shingle-hash list, as a CTE body. */
   private val sqlSidsCte =
@@ -5864,11 +5910,12 @@ object SparkEntry {
       "documents")
 
   /** The aHash chain parameterized by hash width / band width / source
-    * CTE — `1::BIGINT << i` and the BIGINT cast matter at 64 bits
-    * (bit 63's term is negative; the HUGEINT sum restores the same
-    * two's-complement long Spark's bitwise-or builds), and the
-    * arithmetic >> / signed % band keys match Spark's shiftright / %
-    * for negative hashes.
+    * CTE, ending in `pp(id_a, id_b, hamming)` = the hamming <= 3 pairs
+    * (Multimodal.phashPairs at doc grain: the equal-hash arm plus the
+    * hot-cell-capped band pairs, UNION-deduped). `1::BIGINT << i` and
+    * the BIGINT cast matter at 64 bits (bit 63's term is negative; the
+    * HUGEINT sum restores the same two's-complement long Spark's
+    * bitwise-or builds).
     */
   private def sqlPhashCtesN(n: Int, bandBits: Int, src: String): String =
     s"""m AS (SELECT doc_id, ${sqlPoly("text")} AS h FROM $src),
@@ -5883,23 +5930,17 @@ object SparkEntry {
        |    WHEN i = 63 THEN CAST(-9223372036854775808 AS BIGINT)
        |    ELSE CAST(1 AS BIGINT) << i END) AS BIGINT) AS phash
        |  FROM px JOIN pt ON px.doc_id = pt.doc_id GROUP BY px.doc_id),
-       |bd0 AS (SELECT doc_id, phash, b.band,
-       |    (phash >> (b.band * $bandBits)) % ${1L << bandBits} AS bk
-       |  FROM ph, (SELECT unnest(range(${n / bandBits}))
-       |    AS band) b),
+       |bd0 AS (${sqlBitBands("ph", "phash", bandBits, n / bandBits)}),
        |bdh AS (SELECT band, bk FROM bd0 GROUP BY band, bk
        |  HAVING count(DISTINCT phash) <= 1024),
        |bd AS (SELECT bd0.doc_id, bd0.phash, bd0.band, bd0.bk
        |  FROM bd0 JOIN bdh USING (band, bk)),
+       |${sqlBandPairs("bp", "bd", "phash", 3)},
        |pp AS (
        |  SELECT a.doc_id AS id_a, b2.doc_id AS id_b, 0 AS hamming
        |  FROM ph a JOIN ph b2
        |    ON a.phash = b2.phash AND a.doc_id < b2.doc_id
-       |  UNION ALL
-       |  SELECT DISTINCT a.doc_id, b2.doc_id,
-       |    bit_count(xor(a.phash, b2.phash))
-       |  FROM bd a JOIN bd b2 ON a.band = b2.band AND a.bk = b2.bk
-       |    AND a.doc_id < b2.doc_id AND a.phash <> b2.phash)""".stripMargin
+       |  UNION SELECT * FROM bp)""".stripMargin
 
   /** Augmented-LSH MIPS chain ending in `mr` = (query_id, neighbor_id,
     * ip, rank) — shared by emb_mips_lsh and emb_mips_recall so the
@@ -6353,16 +6394,9 @@ object SparkEntry {
            |  (SELECT count(*) AS n FROM truth
            |     JOIN cand$bands USING (id_a, id_b)) h""".stripMargin
       s"""WITH $sqlMinhashCtes,
-         |sz AS (SELECT doc_id, len(sids) AS n_sh FROM sids),
-         |inv AS (SELECT doc_id, unnest(sids) AS sid FROM sids),
-         |tshared AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-         |    count(*) AS n_shared
-         |  FROM inv a JOIN inv b ON a.sid = b.sid AND a.doc_id < b.doc_id
-         |  GROUP BY 1, 2),
-         |truth AS (SELECT id_a, id_b FROM tshared
-         |  JOIN sz na ON na.doc_id = id_a JOIN sz nb ON nb.doc_id = id_b
-         |  WHERE CAST(n_shared AS DOUBLE) / (na.n_sh + nb.n_sh - n_shared)
-         |    >= 0.5),
+         |${sqlPostingPairs("sh", "sid", None)},
+         |truth AS (SELECT id_a, id_b FROM postpairs
+         |  WHERE CAST(n_shared AS DOUBLE) / (n_a + n_b - n_shared) >= 0.5),
          |${legCtes(2)},
          |${legCtes(4)},
          |${legCtes(8)}
@@ -6373,82 +6407,22 @@ object SparkEntry {
          |${legSel(8)}""".stripMargin
     },
 
-    "doc_dedup_eval" -> {
-      val bitSums = (0 until Dedup.SimhashBits).map { i =>
-        s"sum(CASE WHEN (th // ${1L << i}) % 2 = 1 THEN 1 ELSE -1 END) AS bs$i"
-      }.mkString(",\n  ")
-      val shExpr = (0 until Dedup.SimhashBits).map { i =>
-        s"(CASE WHEN bs$i > 0 THEN ${1L << i} ELSE 0 END)"
-      }.mkString(" + ")
-      val sBandSelects = (0 until 3).map { b =>
-        s"SELECT doc_id, simhash, $b AS band, (simhash // ${1L << (b * 8)}) % 256 AS bk FROM ssh2"
-      }.mkString("\nUNION ALL\n")
+    "doc_dedup_eval" ->
       s"""WITH $sqlMinhashCtes,
-         |sz AS (SELECT doc_id, len(sids) AS n_sh FROM sids),
-         |inv AS (SELECT doc_id, unnest(sids) AS sid FROM sids),
-         |tshared AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-         |    count(*) AS n_shared
-         |  FROM inv a JOIN inv b ON a.sid = b.sid AND a.doc_id < b.doc_id
-         |  GROUP BY 1, 2),
-         |truth AS (SELECT id_a, id_b FROM tshared
-         |  JOIN sz na ON na.doc_id = id_a JOIN sz nb ON nb.doc_id = id_b
-         |  WHERE CAST(n_shared AS DOUBLE) / (na.n_sh + nb.n_sh - n_shared)
-         |    >= 0.5),
-         |stoks AS (SELECT doc_id, unnest($sqlToks) AS t FROM documents),
-         |sth AS (SELECT doc_id,
-         |    (${sqlPoly("t")} * 2654435761) % 2147483648 AS th FROM stoks),
-         |sbits AS (SELECT doc_id, $bitSums FROM sth GROUP BY doc_id),
-         |ssh2 AS (SELECT doc_id, $shExpr AS simhash FROM sbits),
-         |sbands AS ($sBandSelects),
-         |spairs AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-         |  FROM sbands a JOIN sbands b ON a.band = b.band AND a.bk = b.bk
-         |    AND a.doc_id < b.doc_id
-         |  WHERE bit_count(xor(a.simhash, b.simhash)) <= 4)
+         |${sqlPostingPairs("sh", "sid", None)},
+         |truth AS (SELECT id_a, id_b FROM postpairs
+         |  WHERE CAST(n_shared AS DOUBLE) / (n_a + n_b - n_shared) >= 0.5),
+         |${sqlSimhashPairCtes(4)}
          |${sqlRecall("truth", Seq("minhash_lsh" -> "pairs", "simhash" -> "spairs"),
-              keys = Seq("id_a", "id_b"))}""".stripMargin
-    },
+              keys = Seq("id_a", "id_b"))}""".stripMargin,
 
-    "doc_dedup_ngram_jaccard" ->
-      s"""WITH $sqlSidsCte,
-         |sz AS (SELECT doc_id, len(sids) AS n_sh FROM sids),
-         |inv AS (SELECT doc_id, unnest(sids) AS sid FROM sids),
-         |shared AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-         |    count(*) AS n_shared
-         |  FROM inv a JOIN inv b ON a.sid = b.sid AND a.doc_id < b.doc_id
-         |  GROUP BY 1, 2)
-         |SELECT id_a, id_b,
-         |  round(CAST(n_shared AS DOUBLE) / (na.n_sh + nb.n_sh - n_shared), 6)
-         |    AS jaccard
-         |FROM shared
-         |JOIN sz na ON na.doc_id = id_a
-         |JOIN sz nb ON nb.doc_id = id_b
-         |WHERE CAST(n_shared AS DOUBLE) / (na.n_sh + nb.n_sh - n_shared)
-         |  >= 0.5""".stripMargin,
+    "doc_dedup_ngram_jaccard" -> sqlNgramJaccard(None),
 
     // identical chain with the df cap applied to the inverted index
     // BEFORE the self-join (sizes stay the full shingle-set sizes, so
     // the Jaccard denominator is unchanged — only candidate generation
     // is pruned), mirroring Dedup.ngramJaccardPairs(maxDocFreq)
-    "doc_dedup_ngram_jaccard_pruned" ->
-      s"""WITH $sqlSidsCte,
-         |sz AS (SELECT doc_id, len(sids) AS n_sh FROM sids),
-         |inv0 AS (SELECT doc_id, unnest(sids) AS sid FROM sids),
-         |keep AS (SELECT sid FROM inv0 GROUP BY sid
-         |  HAVING count(*) <= $NgramJaccardMaxDf),
-         |inv AS (SELECT doc_id, sid FROM inv0
-         |  WHERE sid IN (SELECT sid FROM keep)),
-         |shared AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-         |    count(*) AS n_shared
-         |  FROM inv a JOIN inv b ON a.sid = b.sid AND a.doc_id < b.doc_id
-         |  GROUP BY 1, 2)
-         |SELECT id_a, id_b,
-         |  round(CAST(n_shared AS DOUBLE) / (na.n_sh + nb.n_sh - n_shared), 6)
-         |    AS jaccard
-         |FROM shared
-         |JOIN sz na ON na.doc_id = id_a
-         |JOIN sz nb ON nb.doc_id = id_b
-         |WHERE CAST(n_shared AS DOUBLE) / (na.n_sh + nb.n_sh - n_shared)
-         |  >= 0.5""".stripMargin,
+    "doc_dedup_ngram_jaccard_pruned" -> sqlNgramJaccard(Some(NgramJaccardMaxDf)),
 
     "doc_langid" ->
       s"""WITH $sqlLangidChain
@@ -7968,17 +7942,8 @@ object SparkEntry {
          |af AS (SELECT DISTINCT doc_id,
          |    CAST(peak * 1001 + np AS BIGINT) AS fp
          |  FROM al WHERE np IS NOT NULL),
-         |pd AS (SELECT doc_id, count(*) AS n FROM af GROUP BY 1),
-         |dfc AS (SELECT fp FROM af GROUP BY fp
-         |  HAVING count(*) >= 2 AND count(*) <= 16),
-         |sh AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-         |    count(*) AS n_shared
-         |  FROM af a JOIN af b ON a.fp = b.fp AND a.doc_id < b.doc_id
-         |  WHERE a.fp IN (SELECT fp FROM dfc) GROUP BY 1, 2)
-         |SELECT id_a, id_b, n_shared,
-         |  round(CAST(n_shared AS DOUBLE) / least(pa.n, pb.n), 6) AS overlap
-         |FROM sh JOIN pd pa ON pa.doc_id = sh.id_a
-         |  JOIN pd pb ON pb.doc_id = sh.id_b""".stripMargin,
+         |${sqlPostingPairs("af", "fp", Some(16))}
+         |$sqlOverlapSelect""".stripMargin,
 
     // step / multiplier / modulus interpolated from the SAME constants
     // the Spark side uses (MmFramesEveryKth, TextOps.HashMul/HashMod) —
@@ -8007,17 +7972,8 @@ object SparkEntry {
          |fr AS (SELECT doc_id,
          |  (fp * ${TextOps.HashMul} + frame_idx) % ${TextOps.HashMod}
          |    AS ref FROM x),
-         |pd AS (SELECT doc_id, count(*) AS n FROM fr GROUP BY 1),
-         |dfc AS (SELECT ref FROM fr GROUP BY ref
-         |  HAVING count(*) >= 2 AND count(*) <= 16),
-         |sh AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-         |    count(*) AS n_shared
-         |  FROM fr a JOIN fr b ON a.ref = b.ref AND a.doc_id < b.doc_id
-         |  WHERE a.ref IN (SELECT ref FROM dfc) GROUP BY 1, 2)
-         |SELECT id_a, id_b, n_shared,
-         |  round(CAST(n_shared AS DOUBLE) / least(pa.n, pb.n), 6) AS overlap
-         |FROM sh JOIN pd pa ON pa.doc_id = sh.id_a
-         |  JOIN pd pb ON pb.doc_id = sh.id_b""".stripMargin,
+         |${sqlPostingPairs("fr", "ref", Some(16))}
+         |$sqlOverlapSelect""".stripMargin,
 
     // shot segmentation: per-video scene length 1..3 from the decode
     // fingerprint, signature keyed on frame_idx // scene_len; cut =

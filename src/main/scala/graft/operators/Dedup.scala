@@ -176,27 +176,9 @@ object Dedup {
           .simhash_wide(col("__toks")).as("simhash"))
 
   def simhashPairsWide(docs: DataFrame, maxHamming: Int = 3,
-                       idCol: String = "doc_id"): DataFrame = {
-    val sh = simhashWide(docs, idCol)
-    val bands = 4 // 4 bands of 15 bits over 60
-    val bandStructs = (0 until bands).map { b =>
-      struct(lit(b).as("band"),
-        (shiftright(col("simhash"), b * 15) % 32768).as("bk"))
-    }
-    val banded = sh
-      .select(col(idCol), col("simhash"), explode(array(bandStructs: _*)).as("bb"))
-      .select(col(idCol), col("simhash"), col("bb.band").as("band"),
-        col("bb.bk").as("bk"))
-    val a = banded.select(col(idCol).as("id_a"), col("simhash").as("sh_a"),
-      col("band"), col("bk"))
-    val b = banded.select(col(idCol).as("id_b"), col("simhash").as("sh_b"),
-      col("band"), col("bk"))
-    a.join(b, Seq("band", "bk")).where(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"),
-        bit_count(col("sh_a").bitwiseXOR(col("sh_b"))).as("hamming"))
-      .where(col("hamming") <= maxHamming)
-      .distinct()
-  }
+                       idCol: String = "doc_id"): DataFrame =
+    bandPairs(bitBands(simhashWide(docs, idCol), "simhash", 15, 4),
+      idCol, "simhash", maxHamming)
 
   /** SimHash near-dup pairs: band the signature into 3 byte-wide
     * blocks; candidates collide in >= 1 block, then the true hamming
@@ -205,23 +187,45 @@ object Dedup {
     * the standard recall/cost dial for SimHash at corpus scale.
     */
   def simhashPairs(docs: DataFrame, maxHamming: Int = 4,
-                   idCol: String = "doc_id"): DataFrame = {
-    val sh = simhash(docs, idCol)
-    val bands = 3 // 3 bands of 8 bits over 24
+                   idCol: String = "doc_id"): DataFrame =
+    bandPairs(bitBands(simhash(docs, idCol), "simhash", 8, 3),
+      idCol, "simhash", maxHamming)
+
+  /** `df`'s rows once per band, with (`band`, `bk`) appended: band b's
+    * key is bits [b·bandBits, (b+1)·bandBits) of the long `sig`. ONE
+    * explode (not a union of per-band selects), so the band self-join's
+    * two sides are identical subplans ReuseExchange can share. Shared
+    * by the SimHash and pHash families; the oracle twin is
+    * `SparkEntry.sqlBitBands`.
+    */
+  def bitBands(df: DataFrame, sig: String, bandBits: Int, bands: Int): DataFrame = {
+    val cols = df.columns.toSeq.map(col)
     val bandStructs = (0 until bands).map { b =>
-      struct(lit(b).as("band"), (shiftright(col("simhash"), b * 8) % 256).as("bk"))
+      struct(lit(b).as("band"),
+        (shiftright(col(sig), b * bandBits) % (1L << bandBits)).as("bk"))
     }
-    val banded = sh
-      .select(col(idCol), col("simhash"), explode(array(bandStructs: _*)).as("bb"))
-      .select(col(idCol), col("simhash"), col("bb.band").as("band"),
-        col("bb.bk").as("bk"))
-    val a = banded.select(col(idCol).as("id_a"), col("simhash").as("sh_a"),
-      col("band"), col("bk"))
-    val b = banded.select(col(idCol).as("id_b"), col("simhash").as("sh_b"),
-      col("band"), col("bk"))
-    a.join(b, Seq("band", "bk")).where(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"),
-        bit_count(col("sh_a").bitwiseXOR(col("sh_b"))).as("hamming"))
+    df.select(cols :+ explode(array(bandStructs: _*)).as("bb"): _*)
+      .select(cols ++ Seq(col("bb.band").as("band"), col("bb.bk").as("bk")): _*)
+  }
+
+  /** Near-dup pairs of a [[bitBands]] frame: rows sharing a (band, bk)
+    * cell pair up once (`id_a < id_b`), the true hamming distance of
+    * their `sig`s is verified against `maxHamming`, and a pair that
+    * collides in several bands is kept once. Output: id_a, id_b,
+    * hamming, then each `carry` column as `<c>_a`, `<c>_b` (the id
+    * must determine every carried value). The oracle twin is
+    * `SparkEntry.sqlBandPairs`.
+    */
+  def bandPairs(banded: DataFrame, id: String, sig: String, maxHamming: Int,
+                carry: String*): DataFrame = {
+    def side(s: String) = banded.select(
+      Seq(col(id).as(s"id_$s"), col(sig).as(s"sh_$s")) ++
+        carry.map(c => col(c).as(s"${c}_$s")) ++ Seq(col("band"), col("bk")): _*)
+    side("a").join(side("b"), Seq("band", "bk"))
+      .where(col("id_a") < col("id_b"))
+      .select(Seq(col("id_a"), col("id_b"),
+        bit_count(col("sh_a").bitwiseXOR(col("sh_b"))).as("hamming")) ++
+        carry.flatMap(c => Seq(col(s"${c}_a"), col(s"${c}_b"))): _*)
       .where(col("hamming") <= maxHamming)
       .distinct()
   }
@@ -291,32 +295,14 @@ object Dedup {
         org.apache.spark.sql.graft.GraftExpressions.simhash_wide(col("__toks"))
           .as("simhash"),
         col("__len"))
-    val bands = 4 // 4 bands of 15 bits over 60 (simhashPairsWide geometry)
-    val bandStructs = (0 until bands).map { b =>
-      struct(lit(b).as("band"),
-        (shiftright(col("simhash"), b * 15) % 32768).as("bk"))
-    }
-    val banded = sh
-      .select(col(idCol), col("simhash"), col("__len"),
-        explode(array(bandStructs: _*)).as("bb"))
-      .select(col(idCol), col("simhash"), col("__len"),
-        col("bb.band").as("band"), col("bb.bk").as("bk"))
-    val a = banded.select(col(idCol).as("id_a"), col("simhash").as("sh_a"),
-      col("__len").as("__la"), col("band"), col("bk"))
-    val b = banded.select(col(idCol).as("id_b"), col("simhash").as("sh_b"),
-      col("__len").as("__lb"), col("band"), col("bk"))
-    val cand = a.join(b, Seq("band", "bk")).where(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"),
-        bit_count(col("sh_a").bitwiseXOR(col("sh_b"))).as("hamming"),
-        col("__la"), col("__lb"))
-      .where(col("hamming") <= maxHamming)
-      .distinct()
+    val cand = bandPairs(bitBands(sh, "simhash", 15, 4), idCol, "simhash",
+      maxHamming, "__len")
     // the cap each pair's DP would actually run with, from lengths alone
-    val mlLen = greatest(col("__la"), col("__lb"))
+    val mlLen = greatest(col("__len_a"), col("__len_b"))
     val capCol = (1 to 3).foldLeft(when(lit(false), lit(0))) { (w, i) =>
       w.when(mlLen <= i * bandW, lit(thr(i * bandW)))
     }.otherwise(lit(maxDist))
-    val gap = abs(col("__la") - col("__lb"))
+    val gap = abs(col("__len_a") - col("__len_b"))
     // branch 1: gap within cap — join text, run the banded DP
     val ta = docs.select(col(idCol).as("id_a"), col("text").as("__ta"))
     val tb = docs.select(col(idCol).as("id_b"), col("text").as("__tb"))
@@ -1001,7 +987,7 @@ object Dedup {
   def ngramJaccardPairsFromShingles(withSh: DataFrame,
                                     threshold: Double = 0.5,
                                     idCol: String = "doc_id",
-                                    maxDocFreq: Option[Int] = None): DataFrame = {
+                                    maxDocFreq: Option[Int] = None): DataFrame =
     // each posting row carries its doc's shingle count: +1 int on the
     // sid shuffle buys the union sizes AT the pair join, so no
     // doc-size lookup join exists at all (r14 — the size frame is one
@@ -1009,48 +995,58 @@ object Dedup {
     // OOM and the AQE alternative shuffles the much larger pair frame
     // twice; measured same-protocol at the sf10 harness: 44.1 s
     // pinned-broadcast / 66.8 s AQE-unpinned / 12.7 s this shape)
-    val invAll = withSh.select(col(idCol), size(col("sids")).as("n_sh"),
-      explode(col("sids")).as("sid"))
-    // Scale path: a shingle occurring in >maxDocFreq docs generates
-    // O(df^2) candidate pairs but carries ~no Jaccard signal; dropping
-    // it bounds the hottest key (classic posting-list pruning). The
-    // default (None) stays exact for oracle parity. The df count is a
-    // WINDOW over sid, not a groupBy+join: the window's sid-hash
-    // exchange is the same partitioning the self-join needs, so
-    // pruning rides the shuffle that was already required (the hot
-    // key's rows land on one task either way — that is exactly the
-    // skew the cap then removes from the join).
-    val inv = maxDocFreq match {
-      case None => invAll
-      case Some(f) =>
-        val w = org.apache.spark.sql.expressions.Window.partitionBy("sid")
-        invAll.withColumn("__df", count(lit(1)).over(w))
-          .where(col("__df") <= f).drop("__df")
-    }
-    // shuffle-hash pinned: the posting list is uniformly keyed (df is
-    // bounded), so hash join on sid beats both sort-merge (no order to
-    // exploit) and a broadcast AQE might flip-flop to. n_a/n_b ride
-    // the posting rows (see invAll above), so the pair agg's grouping
-    // key carries them for free — id_a/id_b functionally determine
-    // them, the group count is unchanged.
-    // r16 (guide §2): the sid exchange is byte-light but the work AFTER
-    // the shuffle read — per-cell pair explosion + the partial pair agg
-    // — is the query's dominant compute, and AQE byte-coalescing parks
-    // it on a few partitions. Pin the exchange's width; both join sides
-    // read the SAME spread frame, so ReuseExchange still dedups it.
-    val invW = Par.spread(inv, col("sid"))
-    val a = invW.select(col(idCol).as("id_a"), col("n_sh").as("n_a"),
-      col("sid"))
-    val b = invW.select(col(idCol).as("id_b"), col("n_sh").as("n_b"),
-      col("sid"))
-    a.hint("shuffle_hash").join(b, Seq("sid"))
-      .where(col("id_a") < col("id_b"))
-      .groupBy("id_a", "id_b", "n_a", "n_b")
-      .agg(count(lit(1)).as("n_shared"))
+    postingPairs(withSh.select(col(idCol).as("id"), size(col("sids")).as("n"),
+        explode(col("sids")).as("sid")), "sid", maxDocFreq)
       .select(col("id_a"), col("id_b"),
         round(col("n_shared").cast("double")
           / (col("n_a") + col("n_b") - col("n_shared")), 6).as("jaccard"))
       .where(col("jaccard") >= threshold)
+
+  /** Pairs of ids that share posting-list keys: `postings` holds one
+    * (`id`, `n`, `key`) row per distinct (id, key), `n` being the id's
+    * posting count before any cap. Output: id_a < id_b, n_shared (keys
+    * in common), n_a, n_b — Jaccard or containment is the caller's
+    * last projection. Shared by the n-gram, video-frame and audio
+    * fingerprint dedups; the oracle twin is `SparkEntry.sqlPostingPairs`.
+    *
+    * Scale path: a key held by more than `maxDf` ids generates O(df²)
+    * candidate pairs but carries ~no signal; dropping it bounds the
+    * hottest key (classic posting-list pruning), and a key held by one
+    * id pairs with nothing, so the cap keeps df in 2..maxDf. `None`
+    * keeps every key (exact). The df count is a WINDOW over the key,
+    * not a groupBy + semi-join back: the window's key-hash exchange is
+    * the partitioning the self-join needs, so pruning rides the shuffle
+    * that was already required, and the postings are computed once —
+    * no checkpoint, no second pass over them.
+    */
+  def postingPairs(postings: DataFrame, key: String,
+                   maxDf: Option[Int]): DataFrame = {
+    val inv = maxDf match {
+      case None => postings
+      case Some(f) =>
+        val w = org.apache.spark.sql.expressions.Window.partitionBy(key)
+        postings.withColumn("__df", count(lit(1)).over(w))
+          .where(col("__df").between(2, f)).drop("__df")
+    }
+    // shuffle-hash pinned: the posting list is uniformly keyed (df is
+    // bounded), so hash join on the key beats both sort-merge (no order
+    // to exploit) and a broadcast AQE might flip-flop to. n_a/n_b ride
+    // the posting rows, so the pair agg's grouping key carries them for
+    // free — id_a/id_b functionally determine them, the group count is
+    // unchanged.
+    // r16 (guide §2): the key exchange is byte-light but the work AFTER
+    // the shuffle read — per-cell pair explosion + the partial pair agg
+    // — is the dominant compute, and AQE byte-coalescing parks it on a
+    // few partitions. Pin the exchange's width; both join sides read
+    // the SAME spread frame, so ReuseExchange still dedups it.
+    val invW = Par.spread(inv, col(key))
+    def side(s: String) =
+      invW.select(col("id").as(s"id_$s"), col("n").as(s"n_$s"), col(key))
+    side("a").hint("shuffle_hash").join(side("b"), Seq(key))
+      .where(col("id_a") < col("id_b"))
+      .groupBy("id_a", "id_b", "n_a", "n_b")
+      .agg(count(lit(1)).as("n_shared"))
+      .select("id_a", "id_b", "n_shared", "n_a", "n_b")
   }
 
   // --- incremental dedup against a persisted signature store ----------

@@ -301,31 +301,16 @@ object Multimodal {
       .select(col("id_a"), explode(slice(col("ms"), col("i") + lit(2),
         greatest(size(col("ms")) - col("i") - 1, lit(0)))).as("id_b"))
       .select(col("id_a"), col("id_b"), lit(0).as("hamming"))
-    val bandStructs = (0 until bands).map { b =>
-      struct(lit(b).as("band"),
-        (shiftright(col("phash"), b * bandBits) % (1L << bandBits)).as("bk"))
-    }
-    val banded0 = clusters
-      .select(col("phash"), col("ms"), explode(array(bandStructs: _*)).as("bb"))
-      .select(col("phash"), col("ms"), col("bb.band").as("band"),
-        col("bb.bk").as("bk"))
+    val banded0 = Dedup.bitBands(clusters, "phash", bandBits, bands)
     val hot = banded0.groupBy(col("band"), col("bk"))
       .agg(count(lit(1)).as("__df"))
       .where(col("__df") > maxBucket)
       .select("band", "bk")
     val banded = banded0.join(broadcast(hot), Seq("band", "bk"), "left_anti")
-    val a = banded.select(col("phash").as("ph_a"), col("ms").as("ms_a"),
-      col("band"), col("bk"))
-    val b = banded.select(col("phash").as("ph_b"), col("ms").as("ms_b"),
-      col("band"), col("bk"))
-    // rep-level candidates: tiny after the hamming verify, so the
-    // multi-band dedup is a dropDuplicates over thousands of rows
-    val repPairs = a.join(b, Seq("band", "bk"))
-      .where(col("ph_a") < col("ph_b"))
-      .withColumn("hamming",
-        bit_count(col("ph_a").bitwiseXOR(col("ph_b"))))
-      .where(col("hamming") <= maxHamming)
-      .dropDuplicates("ph_a", "ph_b")
+    // rep-level candidates (the distinct phash is the id, its member
+    // ids ride along): tiny after the hamming verify, so the multi-band
+    // dedup runs over thousands of rows
+    val repPairs = Dedup.bandPairs(banded, "phash", "phash", maxHamming, "ms")
     val cross = repPairs
       .select(col("hamming"), explode(col("ms_a")).as("da"), col("ms_b"))
       .select(col("hamming"), col("da"), explode(col("ms_b")).as("db"))
@@ -351,37 +336,25 @@ object Multimodal {
     */
   def frameDupPairs(spark: SparkSession, docs: DataFrame,
                     everyKth: Int = 2, maxRefDf: Int = 16): DataFrame = {
-    // the sampled-frame table feeds four consumers (per-doc counts,
-    // the df cap, both self-join sides); lazily checkpoint it so the
-    // decode pass runs ONCE and the consumers share the materialized
-    // (doc_id, ref) rows — the minhash-estimate convention
+    import org.apache.spark.sql.graft.Bridge.ldiv
+    // one posting per sampled frame; the decode emits every
+    // `everyKth`-th of a doc's n_frames, so its posting count is known
+    // scan-side
     val fr = sampleFrames(spark, docs, everyKth).toDF()
-      .select(col("doc_id"), col("frame_ref"))
-      .localCheckpoint(false)
-    // both derived frames are doc-count-sized and feed TWO consumers
-    // each (the join-back sides / the self-join sides) — checkpoint
-    // so each aggregate runs once instead of once per consumer
-    val perDoc = fr.groupBy("doc_id").agg(count(lit(1)).as("__n"))
-      .localCheckpoint(false)
-    val dupRefs = fr.groupBy("frame_ref")
-      .agg(count(lit(1)).as("__df"))
-      .where(col("__df") >= 2 && col("__df") <= maxRefDf)
-      .select("frame_ref")
-      .localCheckpoint(false)
-    val pruned = fr.hint("shuffle_hash")
-      .join(dupRefs, Seq("frame_ref"), "left_semi")
-    val a = pruned.select(col("frame_ref"), col("doc_id").as("id_a"))
-    val b = pruned.select(col("frame_ref"), col("doc_id").as("id_b"))
-    a.join(b, Seq("frame_ref")).where(col("id_a") < col("id_b"))
-      .groupBy("id_a", "id_b").agg(count(lit(1)).as("n_shared"))
-      .join(perDoc.select(col("doc_id").as("id_a"), col("__n").as("__na")),
-        Seq("id_a"))
-      .join(perDoc.select(col("doc_id").as("id_b"), col("__n").as("__nb")),
-        Seq("id_b"))
-      .select(col("id_a"), col("id_b"), col("n_shared"),
-        round(col("n_shared").cast("double") /
-          least(col("__na"), col("__nb")), 6).as("overlap"))
+      .select(col("doc_id").as("id"),
+        ldiv(col("n_frames") + lit(everyKth - 1L), everyKth.toLong).as("n"),
+        col("frame_ref"))
+    overlapPairs(Dedup.postingPairs(fr, "frame_ref", Some(maxRefDf)))
   }
+
+  /** Containment of a [[Dedup.postingPairs]] pair: shared keys over the
+    * smaller id's posting count, so a clip inside a longer media row
+    * scores 1.0. Output: id_a, id_b, n_shared, overlap.
+    */
+  private[graft] def overlapPairs(pairs: DataFrame): DataFrame =
+    pairs.select(col("id_a"), col("id_b"), col("n_shared"),
+      round(col("n_shared").cast("double") /
+        least(col("n_a"), col("n_b")), 6).as("overlap"))
 
   /** Audio near-dup via CONSTELLATION fingerprints (the Shazam-family
     * landmark idea — Wang 2003 — at stub granularity): each
@@ -406,30 +379,17 @@ object Multimodal {
                     maxRefDf: Int = 16): DataFrame = {
     val wOrd = org.apache.spark.sql.expressions.Window
       .partitionBy(col("doc_id")).orderBy(col("win_idx"))
+    // the distinct fingerprints keep the lead window's doc-keyed
+    // partitioning, so the per-doc count window adds no exchange
     val fp = audioFeatures(spark, docs).toDF()
       .withColumn("__np", lead(col("peak"), 1).over(wOrd))
       .where(col("__np").isNotNull)
-      .select(col("doc_id"),
+      .select(col("doc_id").as("id"),
         (col("peak") * lit(1001L) + col("__np")).as("fp"))
       .distinct()
-      .localCheckpoint(false)
-    val perDoc = fp.groupBy("doc_id").agg(count(lit(1)).as("__n"))
-      .localCheckpoint(false)
-    val dupFps = fp.groupBy("fp").agg(count(lit(1)).as("__df"))
-      .where(col("__df") >= 2 && col("__df") <= maxRefDf)
-      .select("fp").localCheckpoint(false)
-    val pruned = fp.hint("shuffle_hash").join(dupFps, Seq("fp"), "left_semi")
-    val a = pruned.select(col("fp"), col("doc_id").as("id_a"))
-    val b = pruned.select(col("fp"), col("doc_id").as("id_b"))
-    a.join(b, Seq("fp")).where(col("id_a") < col("id_b"))
-      .groupBy("id_a", "id_b").agg(count(lit(1)).as("n_shared"))
-      .join(perDoc.select(col("doc_id").as("id_a"), col("__n").as("__na")),
-        Seq("id_a"))
-      .join(perDoc.select(col("doc_id").as("id_b"), col("__n").as("__nb")),
-        Seq("id_b"))
-      .select(col("id_a"), col("id_b"), col("n_shared"),
-        round(col("n_shared").cast("double") /
-          least(col("__na"), col("__nb")), 6).as("overlap"))
+      .withColumn("n", count(lit(1)).over(
+        org.apache.spark.sql.expressions.Window.partitionBy(col("id"))))
+    overlapPairs(Dedup.postingPairs(fp, "fp", Some(maxRefDf)))
   }
 
   /** One sampled frame carrying a CONTENT signature that persists

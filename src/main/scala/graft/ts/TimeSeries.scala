@@ -207,11 +207,16 @@ object TimeSeries {
 
   /** Read parquet whose time column may be any supported physical type
     * (TIMESTAMP(NANOS) surfaced as long under nanosAsLong, TIMESTAMP, or
-    * TIMESTAMP_NTZ); normalized to the canonical epoch-µs long.
+    * TIMESTAMP_NTZ); normalized to the canonical epoch-µs long. The
+    * session must read nanos as longs, as every session built by
+    * [[graft.GraftSession.configure]] does.
     */
   def readParquetNanos(spark: SparkSession, path: String, tsCol: String,
                        keyCols: Seq[String] = Nil): TimeSeries = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    require(spark.conf.getOption("spark.sql.legacy.parquet.nanosAsLong")
+        .contains("true"),
+      "readParquetNanos needs spark.sql.legacy.parquet.nanosAsLong=true: " +
+        "build the session with graft.GraftSession.configure")
     val df = Parquet.read(spark, path)
     TimeSeries(graft.functions.TimeIndex.normalizeUs(df, tsCol), tsCol, keyCols)
   }

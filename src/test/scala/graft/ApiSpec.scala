@@ -75,6 +75,20 @@ class ApiSpec extends AnyFunSuite {
     assert(rows(1).getAs[Double]("v") == 6.5)
   }
 
+  test("readParquetNanos needs nanos-as-long reads and never sets the conf") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft_pq").toString
+    Seq((1L, 1000L, 5.5)).toDF("k", "ts", "v").write.mode("overwrite").parquet(dir)
+    val t = TimeSeries.readParquetNanos(spark, dir, "ts", Seq("k"))
+    assert(t.df.collect().map(_.getAs[Long]("ts")).toSeq == Seq(1L)) // ns -> µs
+    val other = spark.newSession()
+    other.conf.set("spark.sql.legacy.parquet.nanosAsLong", "false")
+    val e = intercept[IllegalArgumentException](
+      TimeSeries.readParquetNanos(other, dir, "ts"))
+    assert(e.getMessage.contains("GraftSession.configure"))
+    assert(other.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "false")
+  }
+
   test("GraftExtensions injection path runs; registered SQL names work") {
     // a shared-JVM test can't build a second SparkContext, so exercise
     // the extension object directly + the runtime registration path

@@ -588,6 +588,66 @@ class OperatorSpec extends AnyFunSuite {
     assert(got == Set((1L, 2L, 0)))
   }
 
+  test("Dedup.bandPairs keeps hamming == maxHamming, drops maxHamming + 1") {
+    // 24-bit sigs in 3 byte bands; every pair shares bands 1 and 2, so
+    // each is a candidate twice and must come out once
+    val df = Seq((1L, 0x000000L, "t1"), (2L, 0x000003L, "t2"),
+      (3L, 0x000007L, "t3")).toDF("id", "sig", "tag")
+    val got = Dedup.bandPairs(Dedup.bitBands(df, "sig", 8, 3), "id", "sig",
+        maxHamming = 2, "tag")
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2),
+        r.getString(3), r.getString(4))).toSet
+    // (1, 3) is at hamming 3: a candidate, dropped by the verify
+    assert(got == Set((1L, 2L, 2, "t1", "t2"), (2L, 3L, 1, "t2", "t3")))
+  }
+
+  test("Dedup.postingPairs equals a brute force; the cap keeps df in 2..maxDf") {
+    val maxDf = 4
+    val rnd = new scala.util.Random(7)
+    // random sets over a small key universe, plus one key held by
+    // exactly maxDf ids (kept) and one held by maxDf + 1 ids (dropped)
+    val sets: Map[Long, Set[Long]] =
+      (1L to 40L).map(i => i -> Seq.fill(1 + rnd.nextInt(6))(
+        rnd.nextInt(30).toLong).toSet).toMap ++
+        (101L to 100L + maxDf).map(_ -> Set(1000L)) ++
+        (201L to 201L + maxDf).map(_ -> Set(2000L))
+    val withSh = sets.toSeq.map { case (id, ks) => (id, ks.toSeq) }
+      .toDF("doc_id", "sids")
+    def brute(cap: Option[Int]): Map[(Long, Long), (Long, Long, Long)] = {
+      val df = sets.values.toSeq.flatten.groupBy(identity).map {
+        case (k, ks) => k -> ks.size }
+      val kept = (k: Long) => cap.forall(df(k) <= _)
+      (for {
+        (a, ka) <- sets.toSeq
+        (b, kb) <- sets.toSeq
+        if a < b
+        n = (ka intersect kb).count(kept).toLong
+        if n > 0
+      } yield (a, b) -> ((n, ka.size.toLong, kb.size.toLong))).toMap
+    }
+    for (cap <- Seq(None, Some(maxDf))) {
+      val postings = withSh.select(col("doc_id").as("id"),
+        size(col("sids")).as("n"), explode(col("sids")).as("sid"))
+      val got = Dedup.postingPairs(postings, "sid", cap).collect()
+        .map(r => (r.getLong(0), r.getLong(1)) ->
+          ((r.getLong(2), r.getInt(3).toLong, r.getInt(4).toLong))).toMap
+      val want = brute(cap)
+      assert(got == want, cap)
+      assert(want.contains((101L, 100L + maxDf)))
+      assert(want.contains((201L, 201L + maxDf)) == cap.isEmpty)
+      // the two callers' last projections over the same pairs
+      val jac = Dedup.ngramJaccardPairsFromShingles(withSh, threshold = 0.0,
+          maxDocFreq = cap).collect()
+        .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
+      assert(jac == want.map { case (p, (n, na, nb)) =>
+        p -> math.round(n.toDouble / (na + nb - n) * 1e6) / 1e6 })
+      val ovl = Multimodal.overlapPairs(Dedup.postingPairs(postings, "sid", cap))
+        .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(3)).toMap
+      assert(ovl == want.map { case (p, (n, na, nb)) =>
+        p -> math.round(n.toDouble / math.min(na, nb) * 1e6) / 1e6 })
+    }
+  }
+
   test("Dedup.duplicateSpans coalesces overlapping grams into maximal spans") {
     val docs = Seq(
       (0L, "abcdefghij"),   // shares "abcdefgh" with doc 1 -> span [0,8)

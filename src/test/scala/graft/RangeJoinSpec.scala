@@ -94,6 +94,20 @@ class BandedRangeJoinRuleSpec extends AnyFunSuite {
       .contains("__graft_band"))
   }
 
+  test("q_interval_join_auto is rewritten without setting the caller's conf") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft_ivj").toString
+    Seq((0L, 1L, "error", 0L), (0L, 2L, "click", 60000000L))
+      .toDF("user_id", "event_id", "event_type", "ts")
+      .withColumn("ts", timestamp_micros(col("ts")))
+      .write.parquet(s"$dir/events.parquet")
+    val q = SparkEntry.queries("q_interval_join_auto")(spark, dir)
+    assert(q.queryExecution.executedPlan.toString.contains("__graft_band"))
+    assert(q.collect().map(r => (r.getLong(0), r.getLong(2))).toSeq ==
+      Seq((1L, 1L)))
+    assert(spark.conf.getOption(BucketKey).isEmpty)
+  }
+
   test("inverted intervals are dropped, not exploded") {
     import spark.implicits._
     // end < begin by a huge margin: unguarded sequence() would DESCEND

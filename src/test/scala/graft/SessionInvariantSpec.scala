@@ -11,8 +11,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * rank, and SparkEntry one copy each of the ANN query batch and the
   * recall score, that the DuckDB oracles mirror. `graft.streaming`
   * keeps one per-series fold and one event-time prologue, and
-  * `graft.sources.Parquet` is the one parquet reader; `graft.sources`
-  * leaves the session's confs as it found them.
+  * `graft.sources.Parquet` is the one parquet reader. Outside
+  * [[GraftSession]] no code writes a session conf, and the dedup
+  * family pairs ids in one bit-band and one posting-list self-join.
   * Checked over the source text, so a new main or toggle fails here
   * before it can reach a measurement.
   */
@@ -64,12 +65,13 @@ class SessionInvariantSpec extends AnyFunSuite {
     assert(reads.isEmpty, reads.mkString(", "))
   }
 
-  test("graft.sources sets or unsets no session conf") {
-    // a save/set/restore of a conf on a shared session races with every
-    // other caller of that session (Lake's dynamic partition overwrite
-    // is a per-write option for this reason)
+  test("src/main sets no session conf outside GraftSession") {
+    // a conf written on a shared session changes every later plan of
+    // its other callers, and a save/set/restore races with them (Lake's
+    // dynamic partition overwrite is a per-write option for this
+    // reason); a query that needs a conf plans on GraftSession.withConfs
     val sets = offenders(
-      sources.filter(_._1.startsWith(root.resolve("graft/sources"))),
+      sources.filterNot(_._1.endsWith("graft/GraftSession.scala")),
       """\bconf\s*\.\s*(?:set|unset)\b""")
     assert(sets.isEmpty, sets.mkString(", "))
   }
@@ -106,6 +108,20 @@ class SessionInvariantSpec extends AnyFunSuite {
     assert(callers(entry, """count\(col\("__h"\)\)""") == Seq("recallAgg"))
     assert(callers(entry, """col\("vec_id"\) % (?:100|AnnQueryEvery)\b""") ==
       Seq("annQueries"))
+  }
+
+  test("dedup pairs come from bandPairs and postingPairs only") {
+    // the oracles mirror one banded-bit pair join (sqlBandPairs) and one
+    // posting-list pair join (sqlPostingPairs); MinHash banding keys on
+    // signature slots, not bits, and keeps its own
+    val pairJoin = """col\("(?:id|ph)_a"\) < col\("(?:id|ph)_b"\)"""
+    val sites = Seq("Dedup", "Multimodal").flatMap { o =>
+      callers(members(s"graft/operators/$o.scala"), pairJoin).map(m => s"$o.$m")
+    }
+    val one = Set("Dedup.bandPairs", "Dedup.postingPairs",
+      "Dedup.candidatesFromSigs")
+    assert(sites.toSet == one, sites.filterNot(one).mkString(", "))
+    assert(sites.size == one.size)
   }
 
   test("graft.streaming folds per series and stamps event time in one helper each") {
