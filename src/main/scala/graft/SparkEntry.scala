@@ -4138,13 +4138,14 @@ object SparkEntry {
     // the doc-side twin of emb_kmeans/emb_cluster_sample
     "doc_topic_cluster" -> { (s, dir) =>
       val dim = 16
-      // lazily checkpointed: the Lloyd loop re-reads its input FOUR
-      // times (seed pick, 2 assignment scans, 1 update join), and
-      // re-deriving this frame re-runs tokenization + 16 token-array
-      // filter folds per doc each time — the dominant cost of the
-      // whole query at sf10 (r13 verdict #5). Materializing the
-      // 16-float vectors once is values-identical and turns the loop
-      // into what it is for emb_kmeans: scans over stored vectors.
+      // lazily checkpointed: the Lloyd loop re-reads its input THREE
+      // times (seed pick and 2 assignment scans; the update aggregates
+      // the first assignment scan), and re-deriving this frame re-runs
+      // tokenization + 16 token-array filter folds per doc each time —
+      // the dominant cost of the whole query at sf10 (r13 verdict #5).
+      // Materializing the 16-float vectors once is values-identical and
+      // turns the loop into what it is for emb_kmeans: scans over
+      // stored vectors.
       // r16 (guide §4): native single-pass featurization — the
       // transform/filter fold hashed every token once PER BUCKET (16x
       // the hash work) through interpreted lambdas; TokenCountVec is

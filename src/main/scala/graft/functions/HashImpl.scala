@@ -1,7 +1,9 @@
 package graft.functions
 
 import org.apache.spark.SparkException
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData, SQLOrderingUtil}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Tight-loop implementations backing the native Catalyst expressions
@@ -434,5 +436,153 @@ object HashImpl {
     while (j < dim) { out(j) = counts(j).toFloat; j += 1 }
     org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
       .fromPrimitiveArray(out)
+  }
+
+  /** The max-cosine entry of a codebook for one vector, as
+    * `(cid, cos)`. `book` is `array<struct<cid, cvec, cn>>`, and each
+    * entry scores cos = dot(vec, cvec) / (norm * cn), the dot being
+    * [[vecDotD]] for double vectors and [[vecDot]] for float ones.
+    * The result is bit-identical to `max(struct(cos, −cid))` over the
+    * vector's crossJoin with the codebook rows:
+    *  - each cos follows Catalyst's `Divide`: a null divisor gives
+    *    null; a zero divisor gives null without ANSI; a null dividend
+    *    gives null; a zero divisor with a non-null dividend raises the
+    *    ANSI DIVIDE_BY_ZERO error;
+    *  - entries compare like Spark's struct order: a null cos is the
+    *    smallest, doubles compare by `SQLOrderingUtil.compareDoubles`
+    *    (NaN largest, −0.0 == 0.0), and a cos tie goes to the smaller
+    *    cid.
+    * Every entry is scored, so a zero divisor anywhere fails the row,
+    * as it fails the crossJoin. An empty or null codebook yields null
+    * (the crossJoin yields no row).
+    */
+  def nearestCentroid(vec: ArrayData, normNull: Boolean, norm: Double,
+                      book: ArrayData, isDouble: Boolean,
+                      ansi: Boolean): InternalRow = {
+    if (book == null) return null
+    var found = false
+    var bestCid = 0L
+    var bestNull = true
+    var bestCos = 0.0
+    val n = book.numElements()
+    var j = 0
+    while (j < n) {
+      if (!book.isNullAt(j)) {
+        val e = book.getStruct(j, 3)
+        val cid = e.getLong(0)
+        var cosNull = true
+        var cos = 0.0
+        if (!normNull && !e.isNullAt(2)) {
+          val den = norm * e.getDouble(2)
+          if ((ansi || den != 0.0) && vec != null && !e.isNullAt(1)) {
+            val cv = e.getArray(1)
+            val d = if (isDouble) vecDotD(vec, cv) else vecDot(vec, cv)
+            if (den == 0.0) throw org.apache.spark.sql.graft.Bridge.divideByZero()
+            cos = d / den
+            cosNull = false
+          }
+        }
+        val c =
+          if (cosNull) { if (bestNull) 0 else -1 }
+          else if (bestNull) 1
+          else SQLOrderingUtil.compareDoubles(cos, bestCos)
+        if (!found || c > 0 || (c == 0 && -cid > -bestCid)) {
+          found = true
+          bestCid = cid
+          bestNull = cosNull
+          bestCos = cos
+        }
+      }
+      j += 1
+    }
+    if (!found) null
+    else new GenericInternalRow(Array[Any](bestCid, if (bestNull) null else bestCos))
+  }
+
+  /** One cluster's running member count and per-component vector sum:
+    * the buffer entry of [[centroidAdd]].
+    */
+  final class ClusterSum(var n: Long, val sum: Array[Double])
+
+  /** Fold one non-null member vector into its cluster's
+    * [[ClusterSum]] (the aggregate skips null vectors: they have no
+    * components to average). A null element, or a length that differs
+    * from the cluster's first member, fails the task.
+    */
+  def centroidAdd(buf: scala.collection.mutable.LongMap[ClusterSum],
+                  cid: Long, v: ArrayData): Unit = {
+    val len = v.numElements()
+    val acc = buf.getOrElseUpdate(cid, new ClusterSum(0L, new Array[Double](len)))
+    if (acc.sum.length != len) throw new SparkException(
+      s"CentroidUpdate: array lengths differ (${acc.sum.length} vs $len) in cluster $cid")
+    var i = 0
+    while (i < len) {
+      if (v.isNullAt(i)) throw nullElement("CentroidUpdate", i)
+      acc.sum(i) += v.getDouble(i)
+      i += 1
+    }
+    acc.n += 1
+  }
+
+  /** Add partial buffer `b` into `a`, component by component. */
+  def centroidMerge(a: scala.collection.mutable.LongMap[ClusterSum],
+                    b: scala.collection.mutable.LongMap[ClusterSum]): Unit =
+    b.foreach { case (cid, x) =>
+      a.get(cid) match {
+        case None => a.update(cid, x)
+        case Some(acc) =>
+          if (acc.sum.length != x.sum.length) throw new SparkException(
+            s"CentroidUpdate: array lengths differ (${acc.sum.length} vs " +
+              s"${x.sum.length}) in cluster $cid")
+          var i = 0
+          while (i < x.sum.length) { acc.sum(i) += x.sum(i); i += 1 }
+          acc.n += x.n
+      }
+    }
+
+  /** The next codebook, sorted by cid: each cluster's centroid is
+    * `round(sum / n, 6)` per component, exactly what `avg` and then
+    * `round(·, 6)` give (Spark rounds a double HALF_UP through
+    * `BigDecimal.valueOf`), and `cn` is its [[vecDotD]] norm.
+    */
+  def centroidBook(buf: scala.collection.mutable.LongMap[ClusterSum]): ArrayData = {
+    val rows = buf.keys.toArray.sorted.map[Any] { cid =>
+      val acc = buf(cid)
+      val c = acc.sum.map { s =>
+        val m = s / acc.n.toDouble
+        if (m.isNaN || m.isInfinite) m
+        else java.math.BigDecimal.valueOf(m)
+          .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
+      }
+      val cv = org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+        .fromPrimitiveArray(c)
+      new GenericInternalRow(Array[Any](cid, cv, math.sqrt(vecDotD(cv, cv))))
+    }
+    new GenericArrayData(rows)
+  }
+
+  def centroidSerialize(buf: scala.collection.mutable.LongMap[ClusterSum]): Array[Byte] = {
+    val bytes = buf.valuesIterator.map(x => 20 + 8 * x.sum.length).sum
+    val bb = java.nio.ByteBuffer.allocate(4 + bytes)
+    bb.putInt(buf.size)
+    buf.foreach { case (cid, x) =>
+      bb.putLong(cid).putLong(x.n).putInt(x.sum.length)
+      x.sum.foreach(s => bb.putDouble(s))
+    }
+    bb.array()
+  }
+
+  def centroidDeserialize(bytes: Array[Byte]): scala.collection.mutable.LongMap[ClusterSum] = {
+    val bb = java.nio.ByteBuffer.wrap(bytes)
+    val buf = scala.collection.mutable.LongMap.empty[ClusterSum]
+    (0 until bb.getInt()).foreach { _ =>
+      val cid = bb.getLong()
+      val n = bb.getLong()
+      val sum = Array.fill(bb.getInt())(0.0)
+      var i = 0
+      while (i < sum.length) { sum(i) = bb.getDouble(); i += 1 }
+      buf.update(cid, new ClusterSum(n, sum))
+    }
+    buf
   }
 }

@@ -1187,52 +1187,54 @@ object Knn {
     corpus.where(col(idCol) % centroidEvery === (1 % centroidEvery))
       .select(normed(idCol, vecCol, dim, "cid", "cvec", "cn"): _*)
 
+  /** A (cid, cvec, cn) centroid frame as ONE row whose `cb` holds every
+    * entry as `array<struct<cid, cvec, cn>>`: the codebook that
+    * [[nearestCell]] broadcasts. k entries, whatever the corpus size.
+    */
+  private def codebook(cents: DataFrame): DataFrame =
+    cents.agg(collect_list(struct(col("cid"), col("cvec"), col("cn"))).as("cb"))
+
+  /** Every row of `side` with the max-cosine entry of the one-row
+    * codebook `book` appended as (cid, cos); ties break on min cid.
+    * The broadcast row meets each side row in its own partition, and
+    * one `nearest_centroid` call scores the whole codebook there, so
+    * the side is neither multiplied by k nor shuffled. The kernel is
+    * bit-identical to the crossJoin + `max(struct(cos, −cid))` argmax
+    * it replaced (Spark's double order ties −0.0 with 0.0; a zero norm
+    * is the ANSI divide error), so the oracles' row_number replay still
+    * matches. An empty codebook assigns no row.
+    */
+  private def nearestCell(side: DataFrame, book: DataFrame, vec: String,
+                          norm: String): DataFrame = {
+    val keep = side.columns.toSeq.map(col)
+    side.crossJoin(broadcast(book.where(size(col("cb")) > 0)))
+      .select(keep :+ org.apache.spark.sql.graft.GraftExpressions
+        .nearest_centroid(col(vec), col(norm), col("cb")).as("__nc"): _*)
+      .select(keep ++ Seq(col("__nc.cid").as("cid"), col("__nc.cos").as("cos")): _*)
+  }
+
   /** Assign each row of `side` to its `n` nearest (max-cosine) cells
-    * of the broadcast centroid frame (cid, cvec, cn); ties break on min
-    * cid. `vdot` is [[dot]] for float centroids or [[dotD]] for the
-    * widened learned codebook — the one thing the callers vary.
-    *
-    * n == 1 (the corpus-side assignment — by far the bigger side) is
-    * a PARTIAL-AGGREGABLE argmax instead of a rank window: the window
-    * shape shuffles and sorts all |side|·k scored rows, the
-    * max(struct(cos, −cid)) agg map-side combines to |side| rows
-    * before the exchange. Spark's struct total order replicates
-    * ORDER BY cos DESC, cid ASC exactly (−0.0 < 0.0, ties on cos
-    * maximize −cid = min cid; a zero-norm vector is a 0.0 divisor
-    * that ANSI rejects before either formulation ranks it), so cell
-    * assignment — and the oracles' unchanged row_number replay — is
-    * bit-identical. n > 1 (the |Q|-sized query probing) keeps the
+    * of the centroid frame (cid, cvec, cn); ties break on min cid.
+    * `vdot` is [[dot]] for float centroids or [[dotD]] for the widened
+    * learned codebook — the one thing the callers vary. n == 1 (the
+    * corpus-side assignment — by far the bigger side) is
+    * [[nearestCell]] over the frame's [[codebook]] row; n > 1 (the
+    * |Q|-sized query probing) ranks the broadcast crossJoin in a
     * window.
     */
   private def nearestCells(cents: DataFrame, vdot: (Column, Column) => Column)(
       side: DataFrame, id: String, vec: String, n: Int,
-      norm: String): DataFrame = {
-    val scored = side.crossJoin(broadcast(cents))
-      .withColumn("__ccos", vdot(col(vec), col("cvec")) / (col(norm) * col("cn")))
-    // CONTRACT (n == 1 branch): `side` must be exactly (id, vec, norm)
-    // — the argmax rebuilds the frame as those three columns plus cid,
-    // so any extra side column would be silently dropped (the n > 1
-    // window branch preserves all columns). first(vec)/first(norm) are
-    // deterministic only because the crossJoin replicates one side row
-    // per centroid: vec/norm are constant within each id group.
-    if (n == 1) {
-      require(side.columns.toSeq == Seq(id, vec, norm),
-        s"nearestCells n=1 expects side columns ($id, $vec, $norm), " +
-          s"got ${side.columns.mkString(", ")}")
-      scored.groupBy(col(id))
-        .agg(max(struct(col("__ccos"), (-col("cid")).as("ncid"))).as("__b"),
-          first(col(vec)).as(vec), first(col(norm)).as(norm))
-        .select(col(id), col(vec), col(norm), (-col("__b.ncid")).as("cid"))
-    }
+      norm: String): DataFrame =
+    if (n == 1) nearestCell(side, codebook(cents), vec, norm).drop("cos")
     else {
       val w = Window.partitionBy(col(id))
         .orderBy(col("__ccos").desc, col("cid"))
-      scored
+      side.crossJoin(broadcast(cents))
+        .withColumn("__ccos", vdot(col(vec), col("cvec")) / (col(norm) * col("cn")))
         .withColumn("__crk", row_number().over(w))
         .where(col("__crk") <= n)
         .drop("cvec", "cn", "__ccos", "__crk")
     }
-  }
 
   /** The shared IVF coarse-cell assignment of a multi-leg eval:
     * `cCells` = (neighbor_id, nvec, nn, cid) — each corpus vector in
@@ -1557,7 +1559,10 @@ object Knn {
       .select(col("neighbor_id").as("pcid"), col("rv").as("pcv"))
     val d = org.apache.spark.sql.graft.GraftExpressions
       .vec_sub_l2_d(col("rv"), col("pcv"), col("s"), subDim)
-    val codes = cres
+    // one neighbor_id exchange serves both the (neighbor_id, s) argmin
+    // and adcTopK's neighbor_id join (a hash on a subset of the keys
+    // satisfies both)
+    val codes = Par.spread(cres, col("neighbor_id"))
       .withColumn("s", explode(sequence(lit(0), lit(m - 1))))
       .crossJoin(broadcast(book))
       .withColumn("d", d)
@@ -1849,12 +1854,14 @@ object Knn {
     * carry identical centroids into the next round]. Returns the final
     * assignment (vec_id, cluster_id, cos).
     *
-    * Scale shape: the centroid table is k rows and BROADCAST each
-    * round; assignment is a corpus scan + per-vector top-1 window keyed
-    * by vec_id (AQE-even); the update is one partial-agg'd shuffle
-    * keyed by (cid, dim) — k*dim reduce rows regardless of corpus
-    * size. Rounds are a driver-side loop over lazy plans, the classic
-    * Spark iterative-ML shape.
+    * Scale shape: the k centroids travel as ONE broadcast codebook row
+    * each round; assignment is a corpus scan that scores the whole
+    * codebook per vector in one native call — the corpus is never
+    * multiplied by k and never shuffled. The update is one global
+    * aggregate whose map-side buffers hold at most k × dim doubles, so
+    * its single-partition exchange moves that much per map task
+    * whatever the corpus size. Rounds are a driver-side loop over lazy
+    * plans, the classic Spark iterative-ML shape. `iters` must be >= 1.
     */
   def kmeans(emb: DataFrame, dim: Int, iters: Int = 2, centroidEvery: Int = 0,
              idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
@@ -1871,10 +1878,10 @@ object Knn {
     * lower-element percentile of the 6dp-rounded assignment cosines,
     * so the flag set is engine-exact.
     *
-    * Scale shape: the Lloyd assignment (broadcast centroids + per-key
-    * window) plus ONE corpus-wide percentile agg whose 1-row result
-    * broadcasts back over the assignment — the doc_quality_filter
-    * posture. At 100 TB swap the exact percentile for
+    * Scale shape: the Lloyd assignment (one broadcast codebook row,
+    * scored scan-side) plus ONE corpus-wide percentile agg whose 1-row
+    * result broadcasts back over the assignment — the
+    * doc_quality_filter posture. At 100 TB swap the exact percentile for
     * [[graft.functions.Aggs.percentileApprox]]; nothing else changes.
     */
   def centroidOutliers(emb: DataFrame, dim: Int, frac: Double = 0.1,
@@ -1900,59 +1907,35 @@ object Knn {
                       centroidEvery: Int = 0, idCol: String = "vec_id",
                       vecCol: String = "embedding"): DataFrame =
     lloyd(emb, dim, iters, centroidEvery, idCol, vecCol)._2
+      .select(inline(col("cb"))).select(col("cid"), col("cvec"))
 
-  /** Shared Lloyd loop: (final assignment, centroids it was run against). */
+  /** Shared Lloyd loop: (final assignment (vid, cid, cos), the
+    * [[codebook]] row it ran against). Each round assigns against one
+    * broadcast codebook row ([[nearestCell]]) and folds the update into
+    * ONE global `centroid_update` aggregate — partial buffers of at
+    * most k × dim doubles — whose single row is the next codebook.
+    */
   private def lloyd(emb: DataFrame, dim: Int, iters: Int, centroidEvery: Int,
                     idCol: String, vecCol: String): (DataFrame, DataFrame) = {
+    require(iters >= 1, s"k-means needs iters >= 1, got $iters")
     val every = resolveCoarse(emb, centroidEvery)
     val v = emb.select(col(idCol).as("vid"),
       castD(col(vecCol)).as("v"),
       sqrt(dot(col(vecCol), col(vecCol), dim)).as("vn"))
-    var cents = emb.where(col(idCol) % every === (1 % every))
+    var book = codebook(emb.where(col(idCol) % every === (1 % every))
       .select(col(idCol).as("cid"), castD(col(vecCol)).as("cvec"))
-    var assigned: DataFrame = null
-    for (i <- 1 to iters) {
-      // top-1 as a PARTIAL-AGGREGABLE argmax, not a rank window: the
-      // window shape shuffles and sorts all n·k (vid, cid, cos) rows;
-      // max(struct(cos, −cid)) map-side combines to n rows before the
-      // exchange — the shuffle that dominated the sf10 kmeans legs.
-      // struct ordering replicates ORDER BY cos DESC, cid ASC under
-      // Spark's total order exactly (−0.0 < 0.0 on both paths; ties
-      // on cos maximize −cid = min cid — spec-pinned), so the
-      // assignment — and the DuckDB oracle's unchanged row_number
-      // replay — is bit-identical. (A zero-norm vector is a 0.0
-      // divisor, which ANSI mode rejects before EITHER formulation
-      // ranks it, so NaN ordering never has to match.)
-      // r16: riding `v` through this argmax agg with first() (to drop
-      // the update's join-back onto `v`) was tried and measured SLOWER
-      // paired (+0.06 emb_kmeans, +0.31 emb_knn_ivf_learned, +0.12
-      // doc_topic_cluster): at these assignment sizes the join-back
-      // plans as a near-free broadcast join while the carried vector
-      // fattens the agg's partial/final exchange — the r14 shape stays.
-      assigned = v
-        .crossJoin(broadcast(
-          cents.withColumn("cn", sqrt(dotD(col("cvec"), col("cvec"))))))
-        .withColumn("cos", dotD(col("v"), col("cvec")) / (col("vn") * col("cn")))
-        .groupBy(col("vid"))
-        .agg(max(struct(col("cos"), (-col("cid")).as("ncid"))).as("b"))
-        .select(col("vid"), (-col("b.ncid")).as("cid"), col("b.cos").as("cos"))
-      if (i < iters) {
-        cents = assigned
-          .join(v.select(col("vid"), col("v")), Seq("vid"))
-          .select(col("cid"), posexplode(col("v")).as(Seq("pos", "x")))
-          .groupBy("cid", "pos")
-          .agg(round(avg(col("x").cast("double")), 6).as("c"))
-          .groupBy("cid")
-          .agg(transform(
-            array_sort(collect_list(struct(col("pos"), col("c")))),
-            s => s.getField("c")).as("cvec"))
-        // long Lloyd runs: truncate lineage so round r's plan doesn't
-        // nest all r-1 previous rounds (same pattern as
-        // Dedup.components); short runs stay one fused lazy plan
-        if (iters > 2) cents = cents.localCheckpoint()
-      }
+      .withColumn("cn", sqrt(dotD(col("cvec"), col("cvec")))))
+    for (_ <- 2 to iters) {
+      book = nearestCell(v, book, "v", "vn")
+        .agg(org.apache.spark.sql.graft.GraftExpressions
+          .centroid_update(col("cid"), col("v")).as("cb"))
+      // long Lloyd runs: truncate lineage so round r's plan doesn't
+      // nest all r-1 previous rounds (same pattern as
+      // Dedup.components); short runs stay one fused lazy plan
+      if (iters > 2) book = book.localCheckpoint()
     }
-    (assigned, cents)
+    (nearestCell(v, book, "v", "vn").select(col("vid"), col("cid"), col("cos")),
+      book)
   }
 
   /** IVF flat search over the LEARNED k-means codebook instead of the
@@ -1967,18 +1950,18 @@ object Knn {
                      iters: Int = 2, centroidEvery: Int = 0, nProbe: Int = 2,
                      idCol: String = "vec_id",
                      vecCol: String = "embedding"): DataFrame = {
-    val cents = kmeansCentroids(corpus, dim, iters, centroidEvery, idCol, vecCol)
-      .withColumn("cn", sqrt(dotD(col("cvec"), col("cvec"))))
+    val book = lloyd(corpus, dim, iters, centroidEvery, idCol, vecCol)._2
     // widen each side ONCE; float->double is exact, so every cosine is
     // bit-identical to the float-array path / the oracle's CAST fold
     def side(df: DataFrame, id: String, vec: String, norm: String): DataFrame =
       df.select(col(idCol).as(id),
         castD(col(vecCol)).as(vec),
         sqrt(dot(col(vecCol), col(vecCol), dim)).as(norm))
-    val cells = nearestCells(cents, dotD) _
     cellSearch(
-      cells(side(corpus, "neighbor_id", "nvec", "nn"), "neighbor_id", "nvec", 1, "nn"),
-      cells(side(queries, "query_id", "qvec", "qn"), "query_id", "qvec", nProbe, "qn"),
+      nearestCell(side(corpus, "neighbor_id", "nvec", "nn"), book, "nvec", "nn")
+        .drop("cos"),
+      nearestCells(book.select(inline(col("cb"))), dotD)(
+        side(queries, "query_id", "qvec", "qn"), "query_id", "qvec", nProbe, "qn"),
       k, pairCos(dotD))
   }
 

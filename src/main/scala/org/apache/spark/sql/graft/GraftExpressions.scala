@@ -1,9 +1,14 @@
 package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, TernaryExpression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -131,6 +136,116 @@ case class VecDotD(left: Expression, right: Expression)
     defineCodeGen(ctx, ev, (a, b) => s"graft.functions.HashImpl.vecDotD($a, $b)")
   override protected def withNewChildrenInternal(l: Expression, r: Expression): VecDotD =
     copy(left = l, right = r)
+}
+
+/** The max-cosine entry of a broadcast codebook for one vector, as
+  * struct(cid, cos): `nearest_centroid(vec, norm, codebook)`, where
+  * `codebook` is `array<struct<cid: bigint, cvec, cn: double>>` and
+  * `cvec` has the element type of `vec` (float or double). One pass
+  * over the codebook per row replaces the n×k crossJoin and the
+  * `groupBy(id).agg(max(struct(cos, −cid)))` argmax, bit for bit (see
+  * HashImpl.nearestCentroid). Null for an empty codebook.
+  */
+case class NearestCentroid(first: Expression, second: Expression,
+                           third: Expression,
+                           failOnError: Boolean = SQLConf.get.ansiEnabled)
+    extends TernaryExpression {
+  override def dataType: DataType = StructType(Seq(
+    StructField("cid", LongType, nullable = false),
+    StructField("cos", DoubleType)))
+  override def nullable: Boolean = true
+  private def vecType: DataType = first.dataType match {
+    case ArrayType(et, _) => et
+    case other => other
+  }
+  override def checkInputDataTypes(): TypeCheckResult =
+    (vecType, second.dataType, third.dataType) match {
+      case (et @ (FloatType | DoubleType), DoubleType, ArrayType(StructType(Array(
+          StructField(_, LongType, _, _), StructField(_, ArrayType(ct, _), _, _),
+          StructField(_, DoubleType, _, _))), _)) if ct == et =>
+        TypeCheckResult.TypeCheckSuccess
+      case _ => TypeCheckResult.TypeCheckFailure(
+        "nearest_centroid expects (array<float|double>, double, " +
+          "array<struct<cid: bigint, cvec: array<same element type>, cn: double>>), " +
+          s"got (${first.dataType.simpleString}, ${second.dataType.simpleString}, " +
+          s"${third.dataType.simpleString})")
+    }
+  private def isDouble: Boolean = vecType == DoubleType
+  override def eval(input: InternalRow): Any = {
+    val norm = second.eval(input)
+    graft.functions.HashImpl.nearestCentroid(
+      first.eval(input).asInstanceOf[ArrayData], norm == null,
+      if (norm == null) 0.0 else norm.asInstanceOf[Double],
+      third.eval(input).asInstanceOf[ArrayData], isDouble, failOnError)
+  }
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val v = first.genCode(ctx)
+    val n = second.genCode(ctx)
+    val b = third.genCode(ctx)
+    ev.copy(code = code"""
+      ${v.code}
+      ${n.code}
+      ${b.code}
+      InternalRow ${ev.value} = graft.functions.HashImpl.nearestCentroid(
+        ${v.isNull} ? null : ${v.value}, ${n.isNull}, ${n.value},
+        ${b.isNull} ? null : ${b.value}, $isDouble, $failOnError);
+      boolean ${ev.isNull} = ${ev.value} == null;""")
+  }
+  override protected def withNewChildrenInternal(
+      f: Expression, s: Expression, t: Expression): NearestCentroid =
+    copy(first = f, second = s, third = t)
+}
+
+/** One Lloyd update as one aggregate: `centroid_update(cid, vec)` folds
+  * each cluster's member count and double vector sum (a buffer of at
+  * most k × dim doubles, merged across partitions) and evaluates to the
+  * next codebook for [[NearestCentroid]]: per cluster, in cid order,
+  * `cvec` = round(sum / n, 6) per component (what `avg` then
+  * `round(·, 6)` give) and `cn` = its norm. A cluster without members
+  * is absent. See HashImpl.centroidAdd.
+  */
+case class CentroidUpdate(cid: Expression, vec: Expression,
+                          mutableAggBufferOffset: Int = 0,
+                          inputAggBufferOffset: Int = 0)
+    extends TypedImperativeAggregate[
+      scala.collection.mutable.LongMap[graft.functions.HashImpl.ClusterSum]]
+    with ExpectsInputTypes {
+  private type Buf =
+    scala.collection.mutable.LongMap[graft.functions.HashImpl.ClusterSum]
+  override def children: Seq[Expression] = Seq(cid, vec)
+  override def inputTypes: Seq[AbstractDataType] =
+    Seq(LongType, ArrayType(DoubleType))
+  override def nullable: Boolean = false
+  override def dataType: DataType = ArrayType(StructType(Seq(
+    StructField("cid", LongType, nullable = false),
+    StructField("cvec", ArrayType(DoubleType, containsNull = false), nullable = false),
+    StructField("cn", DoubleType, nullable = false))), containsNull = false)
+  override def prettyName: String = "centroid_update"
+  override def createAggregationBuffer(): Buf = scala.collection.mutable.LongMap.empty
+  override def update(buf: Buf, row: InternalRow): Buf = {
+    val c = cid.eval(row)
+    val v = vec.eval(row)
+    if (c != null && v != null)
+      graft.functions.HashImpl.centroidAdd(buf, c.asInstanceOf[Long],
+        v.asInstanceOf[ArrayData])
+    buf
+  }
+  override def merge(buf: Buf, other: Buf): Buf = {
+    graft.functions.HashImpl.centroidMerge(buf, other)
+    buf
+  }
+  override def eval(buf: Buf): Any = graft.functions.HashImpl.centroidBook(buf)
+  override def serialize(buf: Buf): Array[Byte] =
+    graft.functions.HashImpl.centroidSerialize(buf)
+  override def deserialize(bytes: Array[Byte]): Buf =
+    graft.functions.HashImpl.centroidDeserialize(bytes)
+  override def withNewMutableAggBufferOffset(o: Int): CentroidUpdate =
+    copy(mutableAggBufferOffset = o)
+  override def withNewInputAggBufferOffset(o: Int): CentroidUpdate =
+    copy(inputAggBufferOffset = o)
+  override protected def withNewChildrenInternal(
+      cs: IndexedSeq[Expression]): CentroidUpdate =
+    copy(cid = cs(0), vec = cs(1))
 }
 
 /** Σ weights[indices(i)] — the hashed-classifier margin fold over a
@@ -583,6 +698,12 @@ object GraftExpressions {
     Bridge.toCol(VecDot(Bridge.toExpr(a), Bridge.toExpr(b)))
   def vec_dot_d(a: Column, b: Column): Column =
     Bridge.toCol(VecDotD(Bridge.toExpr(a), Bridge.toExpr(b)))
+  def nearest_centroid(vec: Column, norm: Column, codebook: Column): Column =
+    Bridge.toCol(NearestCentroid(Bridge.toExpr(vec), Bridge.toExpr(norm),
+      Bridge.toExpr(codebook)))
+  def centroid_update(cid: Column, vec: Column): Column =
+    Bridge.toCol(CentroidUpdate(Bridge.toExpr(cid), Bridge.toExpr(vec))
+      .toAggregateExpression(isDistinct = false))
   def vec_cast_d(a: Column): Column =
     Bridge.toCol(VecCastD(Bridge.toExpr(a)))
   def vec_sub_dd(a: Column, b: Column): Column =

@@ -20,6 +20,12 @@ object Bridge {
     * would silently round; Catalyst's `IntegralDivide` (SQL `div`) is
     * exact and codegen'd.
     */
+  /** Catalyst's ANSI DIVIDE_BY_ZERO error (`QueryExecutionErrors` is
+    * `private[sql]`), for kernels that replay `Divide`.
+    */
+  def divideByZero(): ArithmeticException =
+    org.apache.spark.sql.errors.QueryExecutionErrors.divideByZeroError(null)
+
   def ldiv(c: Column, d: Long): Column =
     toCol(IntegralDivide(toExpr(c), toExpr(lit(d))))
 

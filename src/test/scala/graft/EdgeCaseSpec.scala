@@ -219,6 +219,16 @@ class EdgeCaseSpec extends AnyFunSuite {
     assert(full.length == 2, "poolEvery = 1 must mean the full corpus")
   }
 
+  test("kmeans and kmeansCentroids reject iters < 1") {
+    // zero Lloyd rounds has no assignment to return and no learned
+    // codebook: both entry points fail fast instead of a null frame or
+    // the untrained seeds
+    val emb = Seq((1L, Array(1.0f, 0.0f)), (2L, Array(0.0f, 1.0f)))
+      .toDF("vec_id", "embedding")
+    intercept[IllegalArgumentException](Knn.kmeans(emb, 2, iters = 0))
+    intercept[IllegalArgumentException](Knn.kmeansCentroids(emb, 2, iters = 0))
+  }
+
   test("q_ab_test surfaces NULL z/significant when a variant is empty") {
     // only odd user_ids purchase -> variant 0 has zero rows; the
     // documented degenerate read-out is NULL z / NULL significant

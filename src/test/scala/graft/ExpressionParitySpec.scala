@@ -1,8 +1,10 @@
 package graft
 
-import org.apache.spark.SparkException
-import org.apache.spark.sql.DataFrame
+import scala.jdk.CollectionConverters._
+import org.apache.spark.{SparkException, SparkThrowable}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.{Knn, TextOps}
 import graft.functions.Aggs
@@ -250,6 +252,173 @@ class ExpressionParitySpec extends AnyFunSuite {
     org.apache.spark.sql.graft.GraftExpressions.register(spark)
     assert(spark.sql("SELECT poly_hash('abc') AS h").head().getLong(0) ==
       ((('a' * 31 + 'b') % 1000000007L) * 31 + 'c') % 1000000007L)
+  }
+
+  /** `f` once per codegen factory mode, on a session of its own:
+    * CODEGEN_ONLY runs the generated code (whole-stage on), NO_CODEGEN
+    * the interpreted `eval` (whole-stage off).
+    */
+  private def inBothCodegenModes(f: SparkSession => Unit): Unit =
+    Seq("CODEGEN_ONLY" -> "true", "NO_CODEGEN" -> "false").foreach {
+      case (mode, wholeStage) =>
+        withClue(s"$mode: ")(f(GraftSession.withConfs(spark,
+          "spark.sql.codegen.factoryMode" -> mode,
+          "spark.sql.codegen.wholeStage" -> wholeStage)))
+    }
+
+  private def vecSchema(et: DataType): StructType = StructType(Seq(
+    StructField("id", LongType), StructField("vec", ArrayType(et)),
+    StructField("norm", DoubleType)))
+
+  private def bookSchema(et: DataType): StructType = StructType(Seq(
+    StructField("cid", LongType), StructField("cvec", ArrayType(et)),
+    StructField("cn", DoubleType)))
+
+  /** The argmax nearest_centroid replaced: crossJoin every (id, vec,
+    * norm) row with every (cid, cvec, cn) centroid, then
+    * max(struct(cos, −cid)) per id.
+    */
+  private def crossJoinArgmax(side: DataFrame, cents: DataFrame,
+                              vdot: (Column, Column) => Column): DataFrame =
+    side.crossJoin(cents)
+      .withColumn("cos", vdot(col("vec"), col("cvec")) / (col("norm") * col("cn")))
+      .groupBy("id").agg(max(struct(col("cos"), (-col("cid")).as("ncid"))).as("b"))
+      .select(col("id"), (-col("b.ncid")).as("cid"), col("b.cos").as("cos"))
+
+  private def kernelArgmax(side: DataFrame, cents: DataFrame): DataFrame =
+    side.crossJoin(cents.agg(collect_list(struct("cid", "cvec", "cn")).as("cb")))
+      .select(col("id"), org.apache.spark.sql.graft.GraftExpressions
+        .nearest_centroid(col("vec"), col("norm"), col("cb")).as("nc"))
+      .where(col("nc").isNotNull)
+      .select(col("id"), col("nc.cid").as("cid"), col("nc.cos").as("cos"))
+
+  /** id -> (cid, cos bits): −0.0 and 0.0 differ, every NaN is one. */
+  private def byId(df: DataFrame): Map[Long, (Long, Option[Long])] =
+    df.collect().map(r => r.getLong(0) -> ((r.getLong(1),
+      if (r.isNullAt(2)) None
+      else Some(java.lang.Double.doubleToLongBits(r.getDouble(2)))))).toMap
+
+  test("nearest_centroid == crossJoin + max(struct(cos, -cid)) argmax, " +
+    "float and double, codegen and interpreted") {
+    val rnd = new scala.util.Random(29)
+    // components from a 5-value grid: many exact cosine ties
+    val grid = Array(-1.0, -0.5, 0.0, 0.5, 1.0)
+    def draw(): Array[Double] = {
+      val v = Array.fill(3)(grid(rnd.nextInt(grid.length)))
+      if (v.forall(_ == 0.0)) draw() else v
+    }
+    val vecs = Seq.fill(120)(draw())
+    val cents0 = Seq.fill(9)(draw())
+    // centroid 40 duplicates centroid 10 (an exact tie on every vector,
+    // broken to the smaller cid) and 41 mirrors it (the exact negative
+    // cosine; both are 0.0 on an orthogonal vector)
+    val cents = cents0.zipWithIndex.map { case (c, i) => (10L + 3 * i) -> c } ++
+      Seq(40L -> cents0.head, 41L -> cents0.head.map(-_))
+    inBothCodegenModes { s =>
+      for ((et, conv, vdot) <- Seq[(DataType, Array[Double] => Seq[Any],
+          (Column, Column) => Column)](
+        (FloatType, _.toSeq.map(_.toFloat), Knn.dot(_, _, 3)),
+        (DoubleType, _.toSeq, org.apache.spark.sql.graft.GraftExpressions
+          .vec_dot_d))) withClue(s"$et: ") {
+        // the norm column is exactly sqrt(dot(vec, vec)) in the element
+        // type's fold (float squares widened to double)
+        val side = s.createDataFrame(
+          vecs.zipWithIndex.map { case (v, i) => Row(i.toLong, conv(v), 0.0) }.asJava,
+          vecSchema(et)).repartition(3)
+          .withColumn("norm", sqrt(vdot(col("vec"), col("vec"))))
+        val book = s.createDataFrame(
+          cents.map { case (cid, c) => Row(cid, conv(c), 0.0) }.asJava,
+          bookSchema(et)).withColumn("cn", sqrt(vdot(col("cvec"), col("cvec"))))
+        val want = byId(crossJoinArgmax(side, book, vdot))
+        assert(want.size == vecs.size)
+        assert(byId(kernelArgmax(side, book)) == want)
+      }
+    }
+  }
+
+  test("nearest_centroid edge rows: ±0.0 tie, NaN, null vector, zero norm, " +
+    "empty codebook") {
+    val d = org.apache.spark.sql.graft.GraftExpressions.vec_dot_d _
+    inBothCodegenModes { s =>
+      def side(rows: Row*) =
+        s.createDataFrame(rows.asJava, vecSchema(DoubleType)).repartition(2)
+      def book(rows: Row*) = s.createDataFrame(rows.asJava, bookSchema(DoubleType))
+      def same(sd: DataFrame, bk: DataFrame): Map[Long, (Long, Option[Long])] = {
+        val want = byId(crossJoinArgmax(sd, bk, d))
+        assert(byId(kernelArgmax(sd, bk)) == want)
+        want
+      }
+      // (1, 0) is orthogonal to both centroids; cn = −1 makes cid 5's
+      // cosine −0.0 and cid 7's 0.0: Spark's order ties them -> cid 5,
+      // whichever sign sits on the smaller cid
+      val xAxis = Seq(1.0, 0.0)
+      val pm = same(side(Row(1L, xAxis, 1.0)),
+        book(Row(7L, Seq(0.0, 1.0), 1.0), Row(5L, Seq(0.0, 1.0), -1.0)))
+      assert(pm(1L)._1 == 5L)
+      assert(pm(1L)._2.contains(java.lang.Double.doubleToLongBits(-0.0)))
+      assert(same(side(Row(1L, xAxis, 1.0)),
+        book(Row(7L, Seq(0.0, 1.0), -1.0), Row(5L, Seq(0.0, 1.0), 1.0)))(1L)._1 == 5L)
+      // NaN: a NaN component makes every cosine NaN (a tie -> min cid);
+      // a NaN centroid outranks every finite cosine; a null vector
+      // scores null everywhere (the smallest value -> min cid)
+      val mixed = same(
+        side(Row(1L, Seq(Double.NaN, 1.0), 1.0), Row(2L, Seq(1.0, 0.0), 1.0),
+          Row(3L, null, null)),
+        book(Row(9L, Seq(1.0, 0.0), 1.0), Row(4L, Seq(0.0, 1.0), 1.0),
+          Row(6L, Seq(1.0, Double.NaN), 1.0)))
+      assert(mixed(1L)._1 == 4L && mixed(2L)._1 == 6L)
+      assert(mixed(3L) == ((4L, None)))
+      // an empty codebook assigns nothing, as the inner crossJoin
+      assert(same(side(Row(1L, xAxis, 1.0)), book()).isEmpty)
+      // a zero norm is ANSI's divide-by-zero on both paths
+      val zero = side(Row(1L, Seq(0.0, 0.0), 0.0))
+      val cb = book(Row(1L, Seq(1.0, 0.0), 1.0))
+      def condition(f: => Any): String = {
+        val e = intercept[Exception](f)
+        Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+          .collectFirst { case t: SparkThrowable if t.getCondition != null =>
+            t.getCondition }.getOrElse(e.toString)
+      }
+      assert(condition(crossJoinArgmax(zero, cb, d).collect()) == "DIVIDE_BY_ZERO")
+      assert(condition(kernelArgmax(zero, cb).collect()) == "DIVIDE_BY_ZERO")
+    }
+  }
+
+  test("centroid_update == per-(cid, dim) round(avg, 6), with its norm") {
+    val G = org.apache.spark.sql.graft.GraftExpressions
+    val rnd = new scala.util.Random(31)
+    // cluster 2 has one member; the others several; every vector is
+    // widened from float, as Lloyd's are
+    val rows = (Seq.fill(60)(rnd.nextInt(4).toLong * 3 + 5) :+ 2L).map(c =>
+      (c, Array.fill(8)((rnd.nextGaussian() * 3).toFloat)))
+    val df = rows.toDF("cid", "f").repartition(3)
+      .select(col("cid"), G.vec_cast_d(col("f")).as("v"))
+    val want = df.select(col("cid"), posexplode(col("v")).as(Seq("pos", "x")))
+      .groupBy("cid", "pos").agg(round(avg(col("x")), 6).as("c"))
+      .collect().map(r => (r.getLong(0), r.getInt(1)) -> r.getDouble(2)).toMap
+    val book = df.agg(G.centroid_update(col("cid"), col("v")).as("cb"))
+      .select(inline(col("cb")))
+      .withColumn("n2", sqrt(G.vec_dot_d(col("cvec"), col("cvec"))))
+      .collect()
+    assert(book.map(_.getLong(0)).toSeq == rows.map(_._1).distinct.sorted)
+    val got = book.flatMap { r =>
+      assert(r.getDouble(2) == r.getDouble(3), s"cn of cluster ${r.getLong(0)}")
+      r.getSeq[Double](1).zipWithIndex.map { case (c, i) => (r.getLong(0), i) -> c }
+    }.toMap
+    assert(got == want)
+  }
+
+  test("kmeansCentroids: a seed that loses all its members drops out") {
+    // seeds are ids 1 and 3 (every 2nd) and sit on the same point: every
+    // vector ties and goes to cid 1, so cid 3 has no members after the
+    // first round and the learned codebook holds cid 1 alone, at the
+    // 6dp mean of all four vectors
+    val e = Seq((0L, Array(0.5f, 0.25f)), (1L, Array(1.0f, 0.0f)),
+      (2L, Array(0.75f, 0.5f)), (3L, Array(1.0f, 0.0f)))
+      .toDF("vec_id", "embedding")
+    val got = Knn.kmeansCentroids(e, 2, iters = 2, centroidEvery = 2).collect()
+    assert(got.length == 1 && got(0).getLong(0) == 1L)
+    assert(got(0).getSeq[Double](1) == Seq(0.8125, 0.1875))
   }
 
   test("LevBanded == builtin 3-arg levenshtein on adversarial pairs") {

@@ -385,15 +385,16 @@ class PlanBudgetSpec extends AnyFunSuite {
     // first-occurrence selection (groupBy h) + join-back + per-doc
     // kept-position collect + broadcast reassembly join
     "doc_block_dedup" -> 8,
-    // one Lloyd subplan (shown once; lazily checkpointed at runtime so
-    // five consumers share ONE materialization) + blocked self-join +
-    // pair->drop joins + final left join
-    "emb_semdedup" -> 20,
-    // iterative-ML composite: one Lloyd round (assignment window +
-    // k*dim centroid partial-aggs) + both cell assignments + final
-    // rank window — every exchange carries ids/centroid rows, never
-    // the corpus cross product
-    "emb_knn_ivf_learned" -> 17,
+    // the Lloyd assignment is checkpointed (its exchanges run behind
+    // it); visible: the blocked self-join + pair->drop joins and their
+    // broadcasts + the drop-set agg + final left join
+    "emb_semdedup" -> 8,
+    // iterative-ML composite: one Lloyd round (seed codebook row +
+    // centroid_update row: a single-partition agg + broadcast each),
+    // shown once per cell side (ReusedExchange at runtime), the probe
+    // window + its broadcast, and the final rank window — every
+    // exchange carries ids or codebook rows, never the corpus
+    "emb_knn_ivf_learned" -> 11,
     // dsir: per-doc micro-nat reduce + broadcast weight/normalizer
     // frames off the lazily-checkpointed bucket model — the stats
     // scan's own agg exchange lives behind the checkpoint
@@ -418,13 +419,12 @@ class PlanBudgetSpec extends AnyFunSuite {
     // agg, the (hash, id) join back, the per-doc agg, and the doc-id
     // left join — nothing pairwise, text never shuffles
     "doc_novelty" -> 4,
-    // kmeans Lloyd round (assignment window + k*dim centroid partial
-    // aggs) + the per-cluster top-m window keyed by cluster_id
-    "emb_cluster_sample" -> 8,
+    // the emb_kmeans Lloyd shape (4) + the per-cluster top-m window
+    // keyed by cluster_id
+    "emb_cluster_sample" -> 5,
     // topic clustering: vectors fan out scan-side (hashed counts);
-    // the two Lloyd assignments' windows + the (cid, dim) centroid
-    // partial aggs — identical shape to emb_kmeans at dim 16
-    "doc_topic_cluster" -> 7,
+    // identical Lloyd shape to emb_kmeans at dim 16
+    "doc_topic_cluster" -> 4,
     // checkpointed Lloyd assignment + the 1-row threshold agg and its
     // broadcast back — the doc_quality_filter posture
     "emb_outliers" -> 2,
@@ -513,13 +513,17 @@ class PlanBudgetSpec extends AnyFunSuite {
     // chains rebuilt side by side
     "doc_dedup_eval" -> 11,
     // ANN index chains: codebook/cell assignment exchanges +
-    // candidate join + rank window per chain
-    "emb_knn_brute" -> 2, "emb_knn_lsh" -> 3, "emb_knn_ivf" -> 7,
-    "emb_knn_ivf_indexed" -> 2, "emb_kmeans" -> 7, "emb_pq_learned" -> 8,
-    "emb_ivf_pq" -> 15, "emb_ivf_pq_rerank" -> 18,
+    // candidate join + rank window per chain. A corpus-side cell or
+    // cluster assignment is one codebook row (single-partition agg +
+    // broadcast) scored scan-side — the corpus itself never shuffles
+    // for it; emb_kmeans is two such rows (seeds, one update)
+    "emb_knn_brute" -> 2, "emb_knn_lsh" -> 3, "emb_knn_ivf" -> 5,
+    "emb_knn_ivf_indexed" -> 2, "emb_kmeans" -> 4, "emb_pq_learned" -> 8,
+    "emb_ivf_pq" -> 14, "emb_ivf_pq_rerank" -> 17,
     // residual IVFADC: the ivf_pq chain + the residual frame rebuilt
     // for the codes / dtab legs (byte-identical subplans —
-    // ReusedExchange dedups them at runtime)
+    // ReusedExchange dedups them at runtime); the codes leg's one
+    // neighbor_id exchange serves both its argmin and the ADC join
     "emb_ivf_pq_residual" -> 25,
     // permuted PQ: the (dim) variance agg + the 64-row rank window +
     // permutation broadcast, then the plain PQ chain
@@ -534,10 +538,10 @@ class PlanBudgetSpec extends AnyFunSuite {
     // shared (checkpointed / ReusedExchange-deduped) truth set —
     // budget = sum of leg budgets, pinned so a leg regression still
     // fails loudly
-    "emb_dim_tradeoff" -> 10, "emb_ivf_probe_curve" -> 30,
+    "emb_dim_tradeoff" -> 10, "emb_ivf_probe_curve" -> 25,
     // r11: + the ivf_pq_residual leg (the residual chain's exchanges,
     // ReusedExchange-deduped at runtime against the shared cells)
-    "emb_ann_recall" -> 132)
+    "emb_ann_recall" -> 120)
 
   test("no query exceeds its exchange budget") {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")

@@ -9,7 +9,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * JVM system property or mutable global steers what the engine plans.
   * Knn keeps one copy each of the LSH band geometry and the per-query
   * rank, and SparkEntry one copy each of the ANN query batch and the
-  * recall score, that the DuckDB oracles mirror. `graft.streaming`
+  * recall score, that the DuckDB oracles mirror; Knn picks nearest
+  * centroids in one native kernel. `graft.streaming`
   * keeps one per-series fold and one event-time prologue, and
   * `graft.sources.Parquet` is the one parquet reader. Outside
   * [[GraftSession]] no code writes a session conf, and the dedup
@@ -98,6 +99,21 @@ class SessionInvariantSpec extends AnyFunSuite {
     val knn = members("graft/operators/Knn.scala")
     assert(callers(knn, """(?<!def )\bbucketCode\(""") == Seq("lshBand"))
     assert(callers(knn, queryWindow) == Seq("topK"))
+  }
+
+  test("Knn assigns nearest centroids through the nearest_centroid kernel only") {
+    // the crossJoin + groupBy(id) max(struct(cos, -cid)) argmax shuffled
+    // the whole corpus to pick one row per id; a second copy of it beside
+    // the kernel could drift from the kernel's tie and NaN order unseen
+    val (path, text) = sources.collectFirst {
+      case (p, t) if p.endsWith("graft/operators/Knn.scala") => (p, t)
+    }.get
+    val argmax = text.linesIterator.zipWithIndex.collect {
+      case (line, i) if !line.trim.startsWith("*") && !line.trim.startsWith("/*") &&
+          line.split("//", 2)(0).contains("max(struct(") =>
+        s"$path:${i + 1}"
+    }.toSeq
+    assert(argmax.isEmpty, argmax.mkString(", "))
   }
 
   test("SparkEntry picks ANN query batches, ranks and scores recall in one helper each") {

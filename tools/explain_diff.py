@@ -7,8 +7,9 @@ Each dump is the stdout of `sbt "runMain graft.Explain"` (one
 `========== name ==========` section per query). Before comparing, each
 plan is stripped of what changes from run to run without the plan
 changing: expression ids (`#123`), `plan_id`s, RDD ids, temp paths,
-JVM lambda class names and hash codes, lambda variable names (`x_87`)
-and source line numbers. `-v` prints a unified diff per differing query.
+JVM lambda class names and hash codes, lambda variable names (`x_87`,
+`lambda y_638`) and source line numbers. `-v` prints a unified diff
+per differing query.
 Exit status: 0 when every query common to both dumps is identical.
 """
 import difflib
@@ -24,6 +25,7 @@ RULES = [
     (re.compile(r"\$+Lambda\$[\w/$]*(?:@[0-9a-f]+)?"), "$Lambda"),
     (re.compile(r"@[0-9a-f]{5,}\b"), "@"),
     (re.compile(r"\bx_\d+\b"), "x_"),
+    (re.compile(r"\b(lambda \w+?)_\d+\b"), r"\1_"),
     (re.compile(r"(\.(?:scala|java)):\d+"), r"\1"),
 ]
 
