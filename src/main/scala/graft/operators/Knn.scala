@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DoubleType}
 import graft.sources.Parquet
 
 /** Similarity search over an embedding column (Array[Float]) —
@@ -1215,18 +1216,24 @@ object Knn {
 
   /** Assign each row of `side` to its `n` nearest (max-cosine) cells
     * of the centroid frame (cid, cvec, cn); ties break on min cid.
-    * `vdot` is [[dot]] for float centroids or [[dotD]] for the widened
-    * learned codebook — the one thing the callers vary. n == 1 (the
-    * corpus-side assignment — by far the bigger side) is
+    * n == 1 (the corpus-side assignment — by far the bigger side) is
     * [[nearestCell]] over the frame's [[codebook]] row; n > 1 (the
     * |Q|-sized query probing) ranks the broadcast crossJoin in a
-    * window.
+    * window. The window crosses the k-row frame, not the codebook row:
+    * the row is an aggregate, so reading it here would add its
+    * single-partition exchange to the query side too. Both fold the dot by the vectors' element type, so float
+    * and widened (learned-codebook) vectors need no caller choice:
+    * [[dot]] over float, [[dotD]] over double.
     */
-  private def nearestCells(cents: DataFrame, vdot: (Column, Column) => Column)(
+  private def nearestCells(cents: DataFrame)(
       side: DataFrame, id: String, vec: String, n: Int,
       norm: String): DataFrame =
     if (n == 1) nearestCell(side, codebook(cents), vec, norm).drop("cos")
     else {
+      val vdot: (Column, Column) => Column = side.schema(vec).dataType match {
+        case ArrayType(DoubleType, _) => dotD
+        case _ => org.apache.spark.sql.graft.GraftExpressions.vec_dot
+      }
       val w = Window.partitionBy(col(id))
         .orderBy(col("__ccos").desc, col("cid"))
       side.crossJoin(broadcast(cents))
@@ -1261,7 +1268,7 @@ object Knn {
                vecCol: String = "embedding"): IvfCells = {
     val cents = coarseCents(corpus, dim, resolveCoarse(corpus, centroidEvery),
       idCol, vecCol)
-    val cells = nearestCells(cents, dot(_, _, dim)) _
+    val cells = nearestCells(cents) _
     IvfCells(
       cells(corpus.select(normed(idCol, vecCol, dim, "neighbor_id", "nvec", "nn"): _*),
         "neighbor_id", "nvec", 1, "nn"),
@@ -1318,7 +1325,7 @@ object Knn {
     val cents = coarseCents(corpus, dim, resolveCoarse(corpus, centroidEvery),
       idCol, vecCol)
     val c = corpus.select(normed(idCol, vecCol, dim, "neighbor_id", "nvec", "nn"): _*)
-    nearestCells(cents, dot(_, _, dim))(c, "neighbor_id", "nvec", 1, "nn")
+    nearestCells(cents)(c, "neighbor_id", "nvec", 1, "nn")
       .withColumnRenamed("cid", "cell")
       .write.mode("overwrite").partitionBy("cell").parquet(s"$path/cells")
     cents.write.mode("overwrite").parquet(s"$path/centroids")
@@ -1338,7 +1345,7 @@ object Knn {
                        vecCol: String = "embedding"): Unit = {
     val cents = Parquet.read(spark, s"$path/centroids")
     val c = batch.select(normed(idCol, vecCol, dim, "neighbor_id", "nvec", "nn"): _*)
-    nearestCells(cents, dot(_, _, dim))(c, "neighbor_id", "nvec", 1, "nn")
+    nearestCells(cents)(c, "neighbor_id", "nvec", 1, "nn")
       .withColumnRenamed("cid", "cell")
       .write.mode("append").partitionBy("cell").parquet(s"$path/cells")
   }
@@ -1360,8 +1367,7 @@ object Knn {
                      vecCol: String = "embedding"): DataFrame = {
     val cents = Parquet.read(spark, s"$path/centroids")
     val q = queries.select(normed(idCol, vecCol, dim, "query_id", "qvec", "qn"): _*)
-    val qCells = nearestCells(cents, dot(_, _, dim))(
-        q, "query_id", "qvec", nProbe, "qn")
+    val qCells = nearestCells(cents)(q, "query_id", "qvec", nProbe, "qn")
       .localCheckpoint(false) // probed twice: the id collect + the join
     val probed = qCells.select("cid").distinct().collect().map(_.getLong(0))
     val idx = Parquet.read(spark, s"$path/cells")
@@ -1960,7 +1966,7 @@ object Knn {
     cellSearch(
       nearestCell(side(corpus, "neighbor_id", "nvec", "nn"), book, "nvec", "nn")
         .drop("cos"),
-      nearestCells(book.select(inline(col("cb"))), dotD)(
+      nearestCells(book.select(inline(col("cb"))))(
         side(queries, "query_id", "qvec", "qn"), "query_id", "qvec", nProbe, "qn"),
       k, pairCos(dotD))
   }
