@@ -10,8 +10,13 @@ import graft.sources.{ForkFreeLocalFileSystem, ForkFreeLocalFs}
   * Cluster posture (the knobs that matter at 100 TB):
   *  - AQE on: runtime coalescing of the static shuffle-partition count,
   *    skew-join splitting for hot series keys, dynamic broadcast demotion
-  *  - shuffle partitions ~2-3x total executor cores (AQE coalesces down;
-  *    too few cannot be split up without AQE skew handling)
+  *  - batch shuffle partitions 2x total executor cores (`AqeHeadroom`):
+  *    AQE coalesces down; too few cannot be split up without AQE skew
+  *    handling
+  *  - stateful streams run without AQE (Spark disables it for them), so
+  *    their shuffles and state stores keep half the batch width, one per
+  *    core, instead of tasks AQE would have coalesced away. A query
+  *    records that width in its checkpoint and keeps it across restarts
   *  - UTC session timezone: graft's index strings and the wire format
   *    are UTC by contract (pypond/index.py renders UTC)
   */
@@ -23,8 +28,11 @@ object GraftSession {
     */
   val CodegenCacheEntries = 4096
 
+  /** Batch shuffle partitions per core: the room AQE coalesces down from. */
+  val AqeHeadroom = 2
+
   def local(cores: Int = Runtime.getRuntime.availableProcessors()): SparkSession =
-    configure(SparkSession.builder().master(s"local[$cores]"), cores * 2)
+    configure(SparkSession.builder().master(s"local[$cores]"), cores * AqeHeadroom)
       .getOrCreate()
 
   /** A new session on `s`'s context with `confs` set: a query that
@@ -38,10 +46,20 @@ object GraftSession {
     d
   }
 
-  /** Apply graft's required/recommended confs to any builder. */
+  /** Apply graft's required/recommended confs to any builder.
+    *
+    * `shufflePartitions` is the batch width, `AqeHeadroom` x cores for
+    * AQE to coalesce. Stateful streams run without AQE and get
+    * `shufflePartitions / AqeHeadroom` state stores (at least 1): one per
+    * core at that width. Spark copies the store count into a query's
+    * checkpoint when it first starts, so a resumed query keeps the width
+    * it started with whatever the session says. No batch plan reads it.
+    */
   def configure(b: SparkSession.Builder, shufflePartitions: Int): SparkSession.Builder =
     b.config("spark.sql.extensions", "org.apache.spark.sql.graft.GraftExtensions")
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
+      .config("spark.sql.streaming.internal.stateStore.partitions",
+        math.max(1, shufflePartitions / AqeHeadroom).toString)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")

@@ -57,16 +57,21 @@ object StreamHarness {
     * the restart — a batch replayed after an interrupted epoch
     * overwrites, never appends twice — so the returned frame is the
     * run's full emitted row multiset: compare it against an
-    * uninterrupted run to pin no-loss/no-duplication recovery.
+    * uninterrupted run to pin no-loss/no-duplication recovery. The
+    * first run starts on `firstRun` (default: `spark`, which always
+    * runs the resumed query), so a checkpoint can be written under
+    * other confs. Also returns the resumed query's progresses, one per
+    * non-empty batch.
     */
   def feedBatchesWithRestart(spark: SparkSession, batches: Seq[DataFrame],
                              build: DataFrame => DataFrame, killAfter: Int,
-                             name: String): DataFrame = {
+                             name: String, firstRun: Option[SparkSession] = None
+                            ): (DataFrame, Seq[StreamingQueryProgress]) = {
     require(batches.nonEmpty && killAfter > 0 && killAfter < batches.size)
     val dir = Files.createTempDirectory(s"graft_rs_$name").toString
     val schema = batches.head.schema
-    def start() = build(
-      spark.readStream.schema(schema)
+    def start(s: SparkSession) = build(
+      s.readStream.schema(schema)
         .option("maxFilesPerTrigger", Int.MaxValue)
         .parquet(s"$dir/src/*"))
       .writeStream.outputMode("append").format("parquet")
@@ -74,7 +79,7 @@ object StreamHarness {
       .option("checkpointLocation", s"$dir/ckpt")
       .start()
     batches.head.write.mode("overwrite").parquet(s"$dir/src/b0")
-    val q1 = start()
+    val q1 = start(firstRun.getOrElse(spark))
     try {
       q1.processAllAvailable()
       batches.zipWithIndex.slice(1, killAfter).foreach { case (b, i) =>
@@ -85,9 +90,10 @@ object StreamHarness {
     batches.zipWithIndex.drop(killAfter).foreach { case (b, i) =>
       b.write.mode("overwrite").parquet(s"$dir/src/b$i")
     }
-    val q2 = start()
+    val q2 = start(spark)
     try q2.processAllAvailable() finally q2.stop()
-    spark.read.parquet(s"$dir/out")
+    (spark.read.parquet(s"$dir/out"),
+      q2.recentProgress.toSeq.filter(_.numInputRows > 0))
   }
 
   /** Multiset equality via two-way exceptAll — catches BOTH loss and
@@ -200,6 +206,29 @@ class StreamStateSpec extends AnyFunSuite {
     assert(rows.max < 96, s"rollup windows never evicted: $rows")
     assert(rows.max <= 2 * 3 * 8 + 6,
       s"open-window state exceeds two batches' windows: $rows")
+  }
+
+  test("stateful streams keep one state store per core, half the batch width") {
+    import spark.implicits._
+    import graft.streaming._
+    // the suite session is configured at width 4 on 4 cores: batch
+    // shuffles keep 4 partitions for AQE, stateful streams (no AQE) get
+    // 4 / AqeHeadroom = 2. A Spark upgrade that drops the internal key
+    // falls back to the shuffle width and reads 4 here
+    assert(spark.conf.get("spark.sql.shuffle.partitions") == "4")
+    val batches = advancingBatches(nKeys = 3, perKey = 10, nBatches = 2)
+    val streams: Seq[(String, DataFrame => DataFrame)] = Seq(
+      "dedup" -> (s => StreamDedup(s, "ts", Seq("user_id", "ts"), "1 hour")),
+      "rollup" -> (s => StreamRollup.fixedWindow(s, "ts", Seq("user_id"),
+        "5m", watermark = "1 hour", aggs = Seq(count(lit(1)).as("n")))),
+      "ewma" -> (s => StreamEwma(spark, s.as[SeriesFold.Ev], alpha = 0.3).toDF()))
+    streams.foreach { case (nm, build) =>
+      val (_, ps) = StreamHarness.feedBatches(spark, batches, build,
+        "append", s"width_$nm")
+      val widths = ps.flatMap(_.stateOperators).map(_.numShufflePartitions)
+      assert(widths.nonEmpty && widths.forall(_ == 2),
+        s"$nm state stores per operator: $widths")
+    }
   }
 
   test("flatMapGroupsWithState components hold exactly one state row per key") {
@@ -612,7 +641,7 @@ class StreamStateSpec extends AnyFunSuite {
       s => graft.streaming.StreamTopK(spark, s, winUs = 10 * M, k = 3,
         watermark = "1 hour").toDF(),
       "append", "topk_norestart")
-    val got = StreamHarness.feedBatchesWithRestart(spark, batches,
+    val (got, _) = StreamHarness.feedBatchesWithRestart(spark, batches,
       s => graft.streaming.StreamTopK(spark, s, winUs = 10 * M, k = 3,
         watermark = "1 hour").toDF(),
       killAfter = 2, "topk_restart")
@@ -634,7 +663,7 @@ class StreamStateSpec extends AnyFunSuite {
       build, "append", "churn_norestart")
     // kill between the sentinel batches: u1/u2's silence verdicts are
     // pending in state when the query dies
-    val got = StreamHarness.feedBatchesWithRestart(spark,
+    val (got, _) = StreamHarness.feedBatchesWithRestart(spark,
       Seq(b1, b2, b3), build, killAfter = 2, "churn_restart")
     assert(want.count() > 0)
     StreamHarness.assertSameMultiset(got, want, "churn recovery")
@@ -655,10 +684,56 @@ class StreamStateSpec extends AnyFunSuite {
       s, "ts", "text", "1h", watermark = "1 hour")
     val (want, _) = StreamHarness.feedBatches(spark, batches, build,
       "append", "cms_norestart")
-    val got = StreamHarness.feedBatchesWithRestart(spark, batches, build,
+    val (got, _) = StreamHarness.feedBatchesWithRestart(spark, batches, build,
       killAfter = 2, "cms_restart")
     assert(want.count() > 0)
     StreamHarness.assertSameMultiset(got, want, "cms recovery")
+  }
+
+  test("dedup and rollup resume an old-width checkpoint at its recorded " +
+    "width without losing state") {
+    import spark.implicits._
+    import graft.streaming._
+    val key = "spark.sql.streaming.internal.stateStore.partitions"
+    val width = spark.conf.get("spark.sql.shuffle.partitions")
+    // the width a checkpoint got before streams ran at half the batch
+    // width: the state-store count copied from the shuffle partitions
+    val old = GraftSession.withConfs(spark, key -> width)
+    // 3 users, one event a minute, batch b at minutes [22b, 22b + 22):
+    // 5-minute windows straddle each batch boundary, so the window open
+    // at the kill holds partial aggregates in state; from batch 1 on,
+    // each batch re-delivers the previous batch's last 5 minutes, so the
+    // kept keys must still be in dedup state after the restart. The
+    // last batch adds a far-future sentinel user whose watermark closes
+    // every other window. Day 1 on: an event at epoch 0 is as old as the
+    // first trigger's watermark and is dropped as late
+    def ev(u: Int, min: Int) = (u.toLong, 24 * H + min * M, (u * 100 + min).toDouble)
+    val rows = (0 until 4).map { b =>
+      val fresh = for (i <- 0 until 22; u <- 1 to 3) yield ev(u, 22 * b + i)
+      val again = if (b == 0) Seq.empty
+        else for (i <- 17 until 22; u <- 1 to 3) yield ev(u, 22 * (b - 1) + i)
+      val sentinel = if (b == 3) Seq((99L, 10 * 24 * H, 0.0)) else Seq.empty
+      fresh ++ again ++ sentinel
+    }
+    val batches = rows.map(_.toDF("user_id", "ts", "value"))
+    val all = rows.flatten.toDF("user_id", "ts", "value")
+    def rollup(s: DataFrame) = StreamRollup.fixedWindow(s, "ts", Seq("user_id"),
+      "5m", watermark = "1 hour", aggs = Seq(count(lit(1)).as("n"), sum("value").as("v")))
+    // the batch twins: every row at once, one copy per event (a copy
+    // repeats the whole row, so `distinct`); every window but the
+    // sentinel's, still open when the stream stops
+    val cases: Seq[(String, DataFrame => DataFrame, DataFrame)] = Seq(
+      ("dedup", s => StreamDedup(s, "ts", Seq("user_id", "ts"), "1 hour"),
+        all.distinct()),
+      ("rollup", rollup, rollup(all).filter($"user_id" =!= 99L)))
+    cases.foreach { case (nm, build, twin) =>
+      val (got, ps) = StreamHarness.feedBatchesWithRestart(spark, batches,
+        build, killAfter = 2, s"width_restart_$nm", firstRun = Some(old))
+      val widths = ps.flatMap(_.stateOperators).map(_.numShufflePartitions)
+      assert(widths.nonEmpty && widths.forall(_ == width.toLong),
+        s"$nm resumed at $widths state stores, recorded $width")
+      StreamHarness.assertSameMultiset(got, twin, s"$nm resume")
+    }
   }
 }
 

@@ -21,7 +21,14 @@ two verdicts:
          parent's by more than the parent's quartile spread (IQR), every
          change run is correct, and the change fails no more operations in
          total than the parent.
-`--out FILE` also writes every run's result line, one JSON object per line.
+After the metrics it prints, for each step of a pass (a query for a batch
+workload, a trigger by its position in the drain for a stream), each side's
+median step time and the median pair delta, so a change shows which step
+moved.
+
+`--out FILE` also writes every run's result line, one JSON object per line,
+with the run's context line (`step_median_s`, `setup_runs_s`, `jvm_s`, ...)
+under `context`.
 """
 import argparse
 import json
@@ -47,6 +54,7 @@ def run(checkout, workload, seed, seconds):
         sys.stderr.write(p.stderr[-2000:])
         raise SystemExit(f'bench_pairs: run failed in {checkout} (seed {seed})')
     res = json.loads(lines[-1])
+    res['context'] = json.loads(lines[-2])['context'] if len(lines) > 1 else {}
     res['wall_s'] = round(time.time() - t0, 1)
     return res
 
@@ -91,6 +99,7 @@ def main():
             flush=True)
 
     report(a.workload, a.seeds, pairs, metrics)
+    report_steps(pairs)
 
 
 def report(workload, seed_spec, pairs, metrics):
@@ -127,6 +136,23 @@ def report(workload, seed_spec, pairs, metrics):
         print(f'{"":12s} claim rule (change wins >= 9/10, median gain {gain:+.3f}'
               f' > parent IQR {pq3 - pq1:.3f}, all change runs correct, failed'
               f' {failed["change"]} <= {failed["parent"]}): {"MET" if claim else "not met"}')
+
+
+def report_steps(pairs):
+    """Print each step's median time per side and its median pair delta."""
+    med = [{s: p[s]['context'].get('step_median_s', {}) for s in p} for p in pairs]
+    keys = sorted(set().union(*(m['parent'].keys() & m['change'].keys() for m in med)))
+    if keys:
+        print('\nsteps (median step time over the pairs, lower is better)')
+    for k in keys:
+        v = [(m['parent'][k], m['change'][k]) for m in med
+             if k in m['parent'] and k in m['change']]
+        pmed = statistics.median(x for x, _ in v)
+        cmed = statistics.median(y for _, y in v)
+        delta = statistics.median(y - x for x, y in v)
+        wins = sum(1 for x, y in v if y < x)
+        print(f'{k:24s} parent {pmed:.3f}  change {cmed:.3f}  median pair delta {delta:+.3f}'
+              f' ({100 * delta / pmed if pmed else 0.0:+.1f}%)  wins change {wins}/{len(v)}')
 
 
 if __name__ == '__main__':
