@@ -356,8 +356,8 @@ object SparkEntry {
             col("ts") - lit(Jan01), 7 * UsDay).as("w"))
         .distinct()
       val wU = Window.partitionBy(col("user_id")).orderBy(col("w"))
-      uw.withColumn("__next", lead(col("w"), 1).over(wU))
-        .crossJoin(broadcast(uw.agg(max(col("w")).as("wx"))))
+      Par.withScalars(uw.withColumn("__next", lead(col("w"), 1).over(wU)),
+          uw.agg(max(col("w")).as("wx")))
         .where(col("w") < col("wx"))
         .withColumn("__churned",
           col("__next").isNull || col("__next") > col("w") + 1)
@@ -453,7 +453,7 @@ object SparkEntry {
     // formulation: every ntile window keys on cohort_week, so no
     // global single-partition rank ever forms; monetary folds as the
     // exact DECIMAL(38,6) sum, recency anchors on the corpus max ts
-    // broadcast from a 1-row agg)
+    // read as a scalar from a 1-row agg)
     "q_rfm" -> { (s, dir) =>
       val ev = events(s, dir)
       val wk = org.apache.spark.sql.graft.Bridge.fldiv(
@@ -466,8 +466,7 @@ object SparkEntry {
       val mx = ev.agg(max(col("ts")).as("max_ts"))
       def sc(order: Seq[Column]) = ntile(5).over(
         Window.partitionBy(col("cohort_week")).orderBy(order: _*))
-      pur.join(cohort, Seq("user_id"))
-        .crossJoin(broadcast(mx))
+      Par.withScalars(pur.join(cohort, Seq("user_id")), mx)
         .select(col("user_id"), col("c0").as("cohort_week"),
           org.apache.spark.sql.graft.Bridge.fldiv(
             col("max_ts") - col("last_ts"), UsDay).as("recency_days"),
@@ -1638,7 +1637,7 @@ object SparkEntry {
     "ts_timerange_rel" -> { (s, dir) =>
       val ev = events(s, dir)
       val mx = ev.agg(max(col("ts")).as("mx"))
-      ev.crossJoin(broadcast(mx))
+      Par.withScalars(ev, mx)
         .where(col("ts") > col("mx") - lit(7L * UsDay))
         .groupBy("event_type")
         .agg(count(lit(1)).as("n"), Aggs.sumExactD(col("value")).as("sum_value"))
@@ -3620,13 +3619,14 @@ object SparkEntry {
     },
 
     // keep only docs at or above the corpus p75 quality score: one
-    // tiny global percentile agg broadcast back over the scan (the
-    // ts_mad two-pass pattern — group stats move, events never do)
+    // tiny global percentile agg read back as a scalar (the ts_mad
+    // two-pass pattern); the barrier stops the filter re-scoring it
     "doc_quality_filter" -> { (s, dir) =>
       val q = TextOps.quality(ftbl(s, dir, "documents"))
-        .select(col("doc_id"), col("quality"))
+        .select(col("doc_id"), org.apache.spark.sql.graft.GraftExpressions
+          .no_pushdown(col("quality")).as("quality"))
       val thr = q.agg(Aggs.percentileLin6(col("quality"), 0.75).as("q75"))
-      q.crossJoin(broadcast(thr)).where(col("quality") >= col("q75"))
+      Par.withScalars(q, thr).where(col("quality") >= col("q75"))
         .select("doc_id", "quality", "q75")
     },
 
@@ -3672,7 +3672,7 @@ object SparkEntry {
     // concentrate on boilerplate-only pairs — see the pruned entry)
     "doc_dedup_ngram_jaccard" -> { (s, dir) =>
       val docs = tbl(s, dir, "documents")
-      val cap = if (Knn.corpusCount(docs) > NgramJaccardUncappedMaxDocs)
+      val cap = if (docs.count() > NgramJaccardUncappedMaxDocs)
         Some(NgramJaccardMaxDf) else None
       Dedup.ngramJaccardPairs(docs, maxDocFreq = cap)
     },
@@ -3775,9 +3775,8 @@ object SparkEntry {
         coalesce(sum(when(col("min_lvl") <= bv, 1L)), lit(0L)).as(s"h$bv"))
       val nhRow = truth.join(pairsMin, Seq("id_a", "id_b"), "left")
         .agg(nhCols.head, nhCols.tail: _*)
-      s.range(1)
-        .select(explode(array(bandsList.map(lit(_)): _*)).as("bv"))
-        .crossJoin(broadcast(ncRow)).crossJoin(broadcast(nhRow))
+      Par.withScalars(Par.withScalars(s.range(1)
+        .select(explode(array(bandsList.map(lit(_)): _*)).as("bv")), ncRow), nhRow)
         .select(concat(lit("bands_"), col("bv")).as("method"),
           col("n_truth"),
           bandsList.map(bv => when(col("bv") === bv, col(s"c$bv")))
@@ -4471,7 +4470,7 @@ object SparkEntry {
     // constant cost instead of taxing every full-suite scale run
     "emb_dedup_cosine_fixed" -> { (s, dir) =>
       val emb = ftbl(s, dir, "embeddings")
-      val base = if (Knn.corpusCount(emb) > EmbDedupFixedMaxVecs)
+      val base = if (emb.count() > EmbDedupFixedMaxVecs)
         emb.where(col("vec_id") < BaseIdMax)
       else emb
       Knn.cosineDupPairsLsh(base, EmbDim, 0.3, nPlanes = 4)
@@ -4749,7 +4748,7 @@ object SparkEntry {
     // correctness runs (sf0.01) always take the exhaustive branch
     "mm_phash_eval" -> { (s, dir) =>
       val docs = tbl(s, dir, "documents")
-      if (Knn.corpusCount(docs) > MmPhashEvalMaxDocs)
+      if (docs.count() > MmPhashEvalMaxDocs)
         mmPhashEvalSampledDf(s, dir).withColumnRenamed("n_hits", "n_found")
       else {
         val ph = Multimodal.phashAll(s, docs).toDF()

@@ -74,7 +74,7 @@ object Freq {
       .join(broadcast(grid), Seq("r", "bk"))
       .groupBy("tok", "n_exact")
       .agg(min(col("__c")).as("n_est"))
-    est.crossJoin(broadcast(total))
+    Par.withScalars(est, total)
       .select(
         row_number().over(org.apache.spark.sql.expressions.Window
           .orderBy(col("n_exact").desc, col("tok"))).as("rank"),

@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DoubleType}
@@ -236,8 +235,7 @@ object Knn {
     val m2 = corpus.agg(max(dot(col(vecCol), col(vecCol), dim)).as("__m2"))
     def side(df: DataFrame, id: String, vec: String,
              corpusSide: Boolean): DataFrame = {
-      val base = df.select(col(idCol).as(id), col(vecCol).as(vec))
-        .crossJoin(broadcast(m2))
+      val base = Par.withScalars(df.select(col(idCol).as(id), col(vecCol).as(vec)), m2)
       val n2 = dot(col(vec), col(vec), dim)
       // fp guard: M^2 - |x|^2 can round a hair negative on the max row
       val last =
@@ -349,7 +347,7 @@ object Knn {
     */
   def quantizeInt8(emb: DataFrame, idCol: String = "vec_id",
                    vecCol: String = "embedding"): DataFrame =
-    emb.crossJoin(broadcast(int8Bounds(emb, vecCol)))
+    Par.withScalars(emb, int8Bounds(emb, vecCol))
       .select(col(idCol), concat_ws(",",
         int8Codes(vecCol)((code, _, _) => code.cast("string"))).as("codes"))
 
@@ -403,7 +401,7 @@ object Knn {
                    rerank: Int = 15, idCol: String = "vec_id",
                    vecCol: String = "embedding"): DataFrame = {
     // dequantized corpus vector: the int8 code round-tripped to double
-    val deq = corpus.crossJoin(broadcast(int8Bounds(corpus, vecCol)))
+    val deq = Par.withScalars(corpus, int8Bounds(corpus, vecCol))
       .select(col(idCol).as("neighbor_id"), col(vecCol).as("nvec"),
         int8Codes(vecCol)((code, mn, mx) =>
           mn + code.cast("double") / lit(255.0) * (mx - mn)).as("dv"))
@@ -451,7 +449,7 @@ object Knn {
   def bqPack(df: DataFrame, means: DataFrame, dim: Int,
              vecCol: String = "embedding", outCol: String = "bw"): DataFrame = {
     require(dim % 32 == 0, s"dim $dim must pack whole 32-bit words")
-    df.crossJoin(broadcast(means))
+    Par.withScalars(df, means)
       .withColumn(outCol,
         transform(sequence(lit(0), lit(dim / 32 - 1)), w =>
           aggregate(sequence(lit(1), lit(32)), lit(0L), (acc, j) =>
@@ -512,7 +510,7 @@ object Knn {
                idCol: String = "vec_id",
                vecCol: String = "embedding"): DataFrame = {
     import org.apache.spark.sql.graft.Bridge.ldiv
-    val np = if (nPlanes > 0) nPlanes else autoPlanes(cachedCount(emb))
+    val np = if (nPlanes > 0) nPlanes else autoPlanes(emb.count())
     // HUB-CELL SALTING: hyperplane cells are skewed (dense regions
     // blow Σpop² far past the uniform n·target estimate — measured
     // 811M pairs vs the ~80M estimate at 200k vectors), so any cell
@@ -697,9 +695,8 @@ object Knn {
                      poolEvery: Int = 0, idCol: String = "vec_id",
                      vecCol: String = "embedding",
                      batch: Int = 8): DataFrame = {
-    val every = resolveCoarse(corpus, poolEvery)
-    kCenterSelect(corpus.where(col(idCol) % every === (1 % every)), dim, k,
-      idCol, vecCol, batch)
+    kCenterSelect(seedRows(corpus, idCol, 1, corpus, poolEvery, coarseEveryOf),
+      dim, k, idCol, vecCol, batch)
   }
 
   /** Per-subspace PQ assignment: one row per (vector, subspace) with
@@ -710,15 +707,15 @@ object Knn {
                idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     require(dim % m == 0, s"dim $dim not divisible by m $m")
     val subDim = dim / m
-    val every = resolvePq(emb, centroidEvery)
-    val cents = emb.where(col(idCol) % every === (1 % every))
+    val cents = seedRows(emb, idCol, 1, emb, centroidEvery, pqEveryOf)
       .select(col(idCol).as("cid"), col(vecCol).as("cvec"))
     // native subspace distance (graft VecSubL2): one tight loop per
     // (vector, centroid, subspace) instead of a lambda per element;
     // bit-identical to the HOF fold (parity-spec-enforced)
     val dist = org.apache.spark.sql.graft.GraftExpressions
       .vec_sub_l2(col("v"), col("cvec"), col("s"), subDim)
-    emb.select(col(idCol), col(vecCol).as("v"))
+    // one id-hash exchange serves the (id, s) argmin and pqCodes' collect
+    Par.spread(emb.select(col(idCol), col(vecCol).as("v")), col(idCol))
       .withColumn("s", explode(sequence(lit(0), lit(m - 1))))
       .crossJoin(broadcast(cents))
       .withColumn("dist", dist)
@@ -793,9 +790,8 @@ object Knn {
                         vecCol: String = "embedding"): DataFrame = {
     require(dim % m == 0, s"dim $dim not divisible by m $m")
     val subDim = dim / m
-    val every = resolvePq(emb, centroidEvery)
     val sub = pqSub(emb, dim, m, idCol, vecCol)
-    val c0 = emb.where(col(idCol) % every === (1 % every))
+    val c0 = seedRows(emb, idCol, 1, emb, centroidEvery, pqEveryOf)
       .select(col(idCol).as("cid"), col(vecCol).as("__cv"))
       .withColumn("s", explode(sequence(lit(0), lit(m - 1))))
       .select(col("s"), col("cid"),
@@ -809,7 +805,7 @@ object Knn {
     // emb_pq_err_curve): the join-back plans near-free at these sizes
     // while the carried subvector fattens the agg exchanges — the r15
     // shape stays.
-    val a1 = sub.join(broadcast(c0), Seq("s"))
+    val a1 = Par.spread(sub, col(idCol)).join(broadcast(c0), Seq("s"))
       .withColumn("d", d0)
       .groupBy(col(idCol), col("s"))
       .agg(min(struct(col("d"), col("cid"))).as("b"))
@@ -838,7 +834,7 @@ object Knn {
       pqCodebookLearned(emb, dim, m, centroidEvery, idCol, vecCol))
     val d = org.apache.spark.sql.graft.GraftExpressions
       .vec_sub_l2_d(col("sv"), col("cs"), lit(0), subDim)
-    pqSub(emb, dim, m, idCol, vecCol)
+    Par.spread(pqSub(emb, dim, m, idCol, vecCol), col(idCol))
       .join(broadcast(book), Seq("s"))
       .withColumn("dist", d)
       .groupBy(col(idCol), col("s"))
@@ -890,7 +886,7 @@ object Knn {
                       vecCol: String = "embedding"): DataFrame = {
     require(dim % m == 0, s"dim $dim not divisible by m $m")
     val perm = pqPermutation(emb, dim, m, vecCol)
-    val pemb = emb.crossJoin(broadcast(perm))
+    val pemb = Par.withScalars(emb, perm)
       .select(col(idCol), transform(sequence(lit(1), lit(dim)),
         j => element_at(col(vecCol), element_at(col("pm"), j))).as("__pv"))
     pqCodes(pemb, dim, m, centroidEvery, idCol, "__pv")
@@ -937,7 +933,6 @@ object Knn {
   private def rqModel(emb: DataFrame, dim: Int, centroidEvery: Int,
                       idCol: String, vecCol: String)
       : (DataFrame, DataFrame, DataFrame) = {
-    val every = resolveCoarse(emb, centroidEvery)
     // both levels' distances are the NATIVE full-segment L2 folds
     // (codegen'd tight loops, same index order and IEEE ops as the HOF
     // zip_with/aggregate formulation and the oracle's list_reduce):
@@ -945,7 +940,7 @@ object Knn {
     // dispatch fold scaled it at exponent ~0.9 vs the native ~0.6
     // (measured at sf10 before this swap)
     import org.apache.spark.sql.graft.GraftExpressions.{vec_sub_l2, vec_sub_l2_d}
-    val c1 = emb.where(col(idCol) % every === (1 % every))
+    val c1 = seedRows(emb, idCol, 1, emb, centroidEvery, coarseEveryOf)
       .select(col(idCol).as("cid1"), col(vecCol).as("c1v"))
     val best1 = emb.select(col(idCol), col(vecCol).as("v"))
       .crossJoin(broadcast(c1))
@@ -953,12 +948,15 @@ object Knn {
       .groupBy(col(idCol))
       .agg(min(struct(col("d"), col("cid1"))).as("b1"))
       .select(col(idCol), col("b1.cid1").as("cid1"), col("b1.d").as("err1"))
-    val resid = best1
+    // the checkpoint carries the stride (`__every`); the level-2 seeds
+    // and the returned level-1 book read it back without a new count
+    val resid0 = best1
       .join(emb.select(col(idCol), col(vecCol).as("v")), Seq(idCol))
       .join(broadcast(c1), Seq("cid1"))
       .withColumn("r", org.apache.spark.sql.graft.GraftExpressions
         .vec_sub_dd(castD(col("v")), castD(col("c1v"))))
       .select(col(idCol), col("cid1"), col("err1"), col("r"))
+    val resid = withStride(resid0, emb, centroidEvery, coarseEveryOf)
       .localCheckpoint(false)
     // level-2 seed residue (2 % every): at stride >= 3 this is the
     // plain residue-2 row set, disjoint from level-1's residue 1; at
@@ -967,7 +965,8 @@ object Knn {
     // the zero codeword); at stride 1 it coincides with level-1's
     // all-rows seed, which is the right degenerate (every residual is
     // its own codeword). The oracles mirror (2 % stride) verbatim.
-    val c2 = resid.where(col(idCol) % every === (2 % every))
+    val every = resid.select("__every").limit(1)
+    val c2 = seeds(resid, idCol, 2)
       .select(col(idCol).as("cid2"), col("r").as("c2v"))
       .unionByName(resid.sparkSession.range(1)
         .select(lit(-1L).as("cid2"),
@@ -978,7 +977,8 @@ object Knn {
       .agg(min(struct(col("d2"), col("cid2"))).as("b2"))
       .select(col(idCol), col("cid1"), col("err1"),
         col("b2.cid2").as("cid2"), col("b2.d2").as("err2"))
-    (assign, c1, c2)
+    (assign, seeds(Par.withScalars(emb, every), idCol, 1)
+      .select(col(idCol).as("cid1"), col(vecCol).as("c1v")), c2)
   }
 
   /** Residual quantization (two-level additive FULL-vector codebook —
@@ -1074,8 +1074,9 @@ object Knn {
     * nProbe cells of ~stride vectors — giving O(n·√n) assignment
     * compute and O(√n) probed-cell population, instead of the fixed
     * stride's O(n²)/O(1). The formula is mirrored verbatim in the
-    * DuckDB oracles (greatest(ceil(sqrt(n)), ceil(n/65536))), so both
-    * engines derive the identical centroid set from the corpus count.
+    * DuckDB oracles (greatest(ceil(sqrt(n)), ceil(n/65536))) and in
+    * [[coarseEveryOf]], so both engines derive the identical centroid
+    * set from the corpus count.
     */
   def autoCoarseEvery(n: Long): Int = math.max(1L, math.max(
     math.ceil(math.sqrt(n.toDouble)).toLong,
@@ -1111,59 +1112,17 @@ object Knn {
     math.max(4, p)
   }
 
-  /** Bounded per-plan corpus-count cache behind the auto-sizing
-    * resolvers: keyed on the CANONICALIZED analyzed plan (exprIds
-    * normalized) plus the files it reads, so repeated auto-sizes over
-    * the same corpus — [[ivfPqTopK]] resolving both its coarse and PQ
-    * strides, a bench suite running the pq / ivf_pq / rerank legs over
-    * one table — pay ONE count job total instead of one per resolver
-    * call. A parquet relation's plan compares equal by root path
-    * alone, so the file list (the read's own listing, no job) is what
-    * makes a re-read after files under that path changed count afresh.
-    * Only plans whose leaves are all file relations are stored: any
-    * other leaf (a checkpointed `LogicalRDD` above all) is a new plan
-    * on every build, so its key never hits again while the entry pins
-    * the leaf's cached partitions. LRU-bounded at 64 plans so a
-    * long-lived session never accumulates stale keys.
-    */
-  private val countCache =
-    new java.util.LinkedHashMap[AnyRef, java.lang.Long](16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[AnyRef, java.lang.Long]): Boolean =
-        size() > 64
-    }
+  /** [[autoCoarseEvery]] as a Column over a row count `n`. */
+  def coarseEveryOf(n: Column): Column = greatest(lit(1L), ceil(sqrt(n)),
+    ceil(n / lit(MaxCoarseCells.toDouble)))
 
-  private def cachedCount(df: DataFrame): Long = {
-    val plan = df.queryExecution.analyzed
-    val fileLeaves = plan.collectLeaves().forall {
-      case r: LogicalRelation => r.relation.isInstanceOf[HadoopFsRelation]
-      case _ => false
-    }
-    if (!fileLeaves) df.count()
-    else {
-      val key = (plan.canonicalized, df.inputFiles.toSet)
-      val hit = countCache.synchronized(countCache.get(key))
-      if (hit != null) hit.longValue()
-      else {
-        val n = df.count()
-        countCache.synchronized(countCache.put(key, java.lang.Long.valueOf(n)))
-        n
-      }
-    }
-  }
+  /** [[autoPqEvery]] as a Column over a row count `n`. */
+  def pqEveryOf(n: Column): Column =
+    greatest(lit(1L), ceil(n / lit(PqCodebookSize.toDouble)))
 
-  /** The memoized corpus row count (see [[countCache]]) — the public
-    * face of the build-time sizing counts every auto-dial uses; a
-    * registration gate (mm_phash_eval's eval-shape switch, the
-    * emb_dedup_cosine_fixed base-copy cap) should call THIS, never a
-    * fresh `df.count()`, so repeated query-builds on one table pay the
-    * scan once.
-    */
-  def corpusCount(df: DataFrame): Long = cachedCount(df)
-
-  /** `every <= 0` means auto-size from the corpus count (one cheap
-    * count job at build/plan time — index-build semantics; cached per
-    * corpus plan, see [[countCache]]).
+  /** The rows of `df` whose `idCol` is ≡ `k` modulo the stride:
+    * `every`, or for `every <= 0` `auto` over `corpus`'s row count as
+    * a scalar subquery (no build job).
     *
     * Seed filters throughout this file select `id % every ==
     * (k % every)` for a fixed residue k (level-1/pool seeds use k = 1,
@@ -1176,41 +1135,53 @@ object Knn {
     * `(k % stride)` residue via their stride scalar subquery, so
     * engine parity holds at every corpus size including 1-row.
     */
-  private def resolveCoarse(corpus: DataFrame, every: Int): Int =
-    if (every > 0) every else autoCoarseEvery(cachedCount(corpus))
+  private def seedRows(df: DataFrame, idCol: String, k: Int,
+                       corpus: DataFrame, every: Int,
+                       auto: Column => Column): DataFrame =
+    seeds(withStride(df, corpus, every, auto), idCol, k).drop("__every")
 
-  private def resolvePq(corpus: DataFrame, every: Int): Int =
-    if (every > 0) every else autoPqEvery(cachedCount(corpus))
+  /** `df` with the stride appended as `__every`. */
+  private def withStride(df: DataFrame, corpus: DataFrame, every: Int,
+                         auto: Column => Column): DataFrame =
+    if (every > 0) df.withColumn("__every", lit(every.toLong))
+    else Par.withScalars(df, corpus.agg(auto(count(lit(1))).as("__every")))
+
+  /** The rows of a [[withStride]] frame whose `idCol` is ≡ `k`. */
+  private def seeds(df: DataFrame, idCol: String, k: Int): DataFrame =
+    df.where(col(idCol) % col("__every") === lit(k.toLong) % col("__every"))
 
   /** Deterministic every-Nth coarse centroids with norms. */
   private def coarseCents(corpus: DataFrame, dim: Int, centroidEvery: Int,
                           idCol: String, vecCol: String): DataFrame =
-    corpus.where(col(idCol) % centroidEvery === (1 % centroidEvery))
+    seedRows(corpus, idCol, 1, corpus, centroidEvery, coarseEveryOf)
       .select(normed(idCol, vecCol, dim, "cid", "cvec", "cn"): _*)
 
   /** A (cid, cvec, cn) centroid frame as ONE row whose `cb` holds every
-    * entry as `array<struct<cid, cvec, cn>>`: the codebook that
-    * [[nearestCell]] broadcasts. k entries, whatever the corpus size.
+    * entry as `array<struct<cid, cvec, cn>>`: the codebook scalar of
+    * [[nearestCell]]. k entries, whatever the corpus size.
     */
-  private def codebook(cents: DataFrame): DataFrame =
+  private[graft] def codebook(cents: DataFrame): DataFrame =
     cents.agg(collect_list(struct(col("cid"), col("cvec"), col("cn"))).as("cb"))
 
   /** Every row of `side` with the max-cosine entry of the one-row
     * codebook `book` appended as (cid, cos); ties break on min cid.
-    * The broadcast row meets each side row in its own partition, and
-    * one `nearest_centroid` call scores the whole codebook there, so
-    * the side is neither multiplied by k nor shuffled. The kernel is
+    * The row is a scalar ([[Par.withScalars]]) and one `nearest_centroid`
+    * call scores the whole codebook per side row, so the side is
+    * neither multiplied by k nor shuffled. The kernel is
     * bit-identical to the crossJoin + `max(struct(cos, −cid))` argmax
     * it replaced (Spark's double order ties −0.0 with 0.0; a zero norm
     * is the ANSI divide error), so the oracles' row_number replay still
-    * matches. An empty codebook assigns no row.
+    * matches. An empty (or NULL) codebook assigns no row. The kernel
+    * is pinned (`no_pushdown`) so that filters the caller's joins
+    * infer on `cid` do not run it again below; filter `side` instead.
     */
-  private def nearestCell(side: DataFrame, book: DataFrame, vec: String,
-                          norm: String): DataFrame = {
+  private[graft] def nearestCell(side: DataFrame, book: DataFrame, vec: String,
+                                 norm: String): DataFrame = {
     val keep = side.columns.toSeq.map(col)
-    side.crossJoin(broadcast(book.where(size(col("cb")) > 0)))
-      .select(keep :+ org.apache.spark.sql.graft.GraftExpressions
-        .nearest_centroid(col(vec), col(norm), col("cb")).as("__nc"): _*)
+    import org.apache.spark.sql.graft.GraftExpressions.{nearest_centroid, no_pushdown}
+    Par.withScalars(side, book).where(size(col("cb")) > 0)
+      .select(keep :+ no_pushdown(nearest_centroid(col(vec), col(norm), col("cb")))
+        .as("__nc"): _*)
       .select(keep ++ Seq(col("__nc.cid").as("cid"), col("__nc.cos").as("cos")): _*)
   }
 
@@ -1219,11 +1190,9 @@ object Knn {
     * n == 1 (the corpus-side assignment — by far the bigger side) is
     * [[nearestCell]] over the frame's [[codebook]] row; n > 1 (the
     * |Q|-sized query probing) ranks the broadcast crossJoin in a
-    * window. The window crosses the k-row frame, not the codebook row:
-    * the row is an aggregate, so reading it here would add its
-    * single-partition exchange to the query side too. Both fold the dot by the vectors' element type, so float
-    * and widened (learned-codebook) vectors need no caller choice:
-    * [[dot]] over float, [[dotD]] over double.
+    * window, since the kernel returns only the best entry. Both paths fold
+    * the dot by the vectors' element type ([[dot]] over float, [[dotD]]
+    * over double), so widened (learned-codebook) vectors need no flag.
     */
   private def nearestCells(cents: DataFrame)(
       side: DataFrame, id: String, vec: String, n: Int,
@@ -1266,8 +1235,7 @@ object Knn {
                centroidEvery: Int = 0, nProbe: Int = 2,
                idCol: String = "vec_id",
                vecCol: String = "embedding"): IvfCells = {
-    val cents = coarseCents(corpus, dim, resolveCoarse(corpus, centroidEvery),
-      idCol, vecCol)
+    val cents = coarseCents(corpus, dim, centroidEvery, idCol, vecCol)
     val cells = nearestCells(cents) _
     IvfCells(
       cells(corpus.select(normed(idCol, vecCol, dim, "neighbor_id", "nvec", "nn"): _*),
@@ -1322,8 +1290,7 @@ object Knn {
   def writeIvfIndex(corpus: DataFrame, dim: Int, path: String,
                     centroidEvery: Int = 0, idCol: String = "vec_id",
                     vecCol: String = "embedding"): Unit = {
-    val cents = coarseCents(corpus, dim, resolveCoarse(corpus, centroidEvery),
-      idCol, vecCol)
+    val cents = coarseCents(corpus, dim, centroidEvery, idCol, vecCol)
     val c = corpus.select(normed(idCol, vecCol, dim, "neighbor_id", "nvec", "nn"): _*)
     nearestCells(cents)(c, "neighbor_id", "nvec", 1, "nn")
       .withColumnRenamed("cid", "cell")
@@ -1430,16 +1397,15 @@ object Knn {
                 shared: Option[IvfCells] = None): DataFrame = {
     require(dim % m == 0, s"dim $dim not divisible by m $m")
     val subDim = dim / m
-    val pqEv = resolvePq(corpus, pqEvery)
     val parts = shared.getOrElse(
       ivfCells(corpus, queries, dim, coarseEvery, nProbe, idCol, vecCol))
     val cand = cellPairs(parts.cCells.select("neighbor_id", "cid"),
       parts.qCells.select("query_id", "cid")).select("query_id", "neighbor_id")
 
-    val codes = pqAssign(corpus, dim, m, pqEv, idCol, vecCol)
+    val codes = pqAssign(corpus, dim, m, pqEvery, idCol, vecCol)
       .select(col(idCol).as("neighbor_id"), col("s"),
         col("best.cid").as("pcid"))
-    val pcents = corpus.where(col(idCol) % pqEv === (1 % pqEv))
+    val pcents = seedRows(corpus, idCol, 1, corpus, pqEvery, pqEveryOf)
       .select(col(idCol).as("pcid"), col(vecCol).as("pcvec"))
     val dtab = queries.select(col(idCol).as("query_id"), col(vecCol).as("qvec"))
       .withColumn("s", explode(sequence(lit(0), lit(m - 1))))
@@ -1466,16 +1432,15 @@ object Knn {
                        cb: Option[DataFrame] = None): DataFrame = {
     require(dim % m == 0, s"dim $dim not divisible by m $m")
     val subDim = dim / m
-    val pqEv = resolvePq(corpus, pqEvery)
     val parts = shared.getOrElse(
       ivfCells(corpus, queries, dim, coarseEvery, nProbe, idCol, vecCol))
     val cand = cellPairs(parts.cCells.select("neighbor_id", "cid"),
       parts.qCells.select("query_id", "cid")).select("query_id", "neighbor_id")
 
     val book = cb.getOrElse(
-      pqCodebookLearned(corpus, dim, m, pqEv, idCol, vecCol)
+      pqCodebookLearned(corpus, dim, m, pqEvery, idCol, vecCol)
         .localCheckpoint(false))
-    val codes = pqAssignLearned(corpus, dim, m, pqEv, idCol, vecCol,
+    val codes = pqAssignLearned(corpus, dim, m, pqEvery, idCol, vecCol,
         cb = Some(book))
       .select(col(idCol).as("neighbor_id"), col("s"),
         col("best.cid").as("pcid"))
@@ -1549,19 +1514,23 @@ object Knn {
                         shared: Option[IvfCells] = None): DataFrame = {
     require(dim % m == 0, s"dim $dim not divisible by m $m")
     val subDim = dim / m
-    val pqEv = resolvePq(corpus, pqEvery)
-    val coarseEv = resolveCoarse(corpus, coarseEvery)
     val parts = shared.getOrElse(
       ivfCells(corpus, queries, dim, coarseEvery, nProbe, idCol, vecCol))
-    val cents = corpus.where(col(idCol) % coarseEv === (1 % coarseEv))
+    val cents = seedRows(corpus, idCol, 1, corpus, coarseEvery, coarseEveryOf)
       .select(col(idCol).as("cid"), castD(col(vecCol)).as("cvd"))
-    val cres = parts.cCells.select(col("neighbor_id"), col("nvec"),
-        col("cid"))
+    def residuals(cells: DataFrame) = cells
+      .select(col("neighbor_id"), col("nvec"), col("cid"))
       .join(broadcast(cents), Seq("cid"))
       .select(col("neighbor_id"), col("cid"),
         org.apache.spark.sql.graft.GraftExpressions
           .vec_sub_dd(castD(col("nvec")), col("cvd")).as("rv"))
-    val book = cres.where(col("neighbor_id") % pqEv === 0)
+    val cres = residuals(parts.cCells)
+    // the book's seeds get their own cells: a seed filter on the shared
+    // cells would stop above nearestCell's pinned kernel
+    val book = residuals(nearestCells(coarseCents(corpus, dim, coarseEvery, idCol, vecCol))(
+        seedRows(corpus, idCol, 0, corpus, pqEvery, pqEveryOf)
+          .select(normed(idCol, vecCol, dim, "neighbor_id", "nvec", "nn"): _*),
+        "neighbor_id", "nvec", 1, "nn"))
       .select(col("neighbor_id").as("pcid"), col("rv").as("pcv"))
     val d = org.apache.spark.sql.graft.GraftExpressions
       .vec_sub_l2_d(col("rv"), col("pcv"), col("s"), subDim)
@@ -1644,7 +1613,7 @@ object Knn {
       .select(transform(sequence(lit(1), lit(dim)),
         _ => lit(1.0 / math.sqrt(dim.toDouble))).as("v"))
     for (_ <- 0 until iters) {
-      val centered = emb.crossJoin(broadcast(mu)).crossJoin(broadcast(v))
+      val centered = Par.withScalars(Par.withScalars(emb, mu), v)
         .select(zip_with(xD, col("mu"), (x, m) => x - m).as("xc"), col("v"))
         .select(col("xc"), dotD(col("xc"), col("v")).as("s"))
       val u = centered
@@ -1700,9 +1669,10 @@ object Knn {
     * removed projection and the norm before/after: how much of each
     * vector the common direction explained.
     *
-    * Scale: the mean and direction are two broadcast 1-row arrays
-    * (the pcaTop chain behind its checkpoints); the transform itself
-    * is a scan-side projection — zero additional shuffle.
+    * Scale: the mean and direction are two 1-row arrays read as
+    * scalar subqueries (the pcaTop chain behind its checkpoints); the
+    * transform itself is a scan-side projection — zero additional
+    * shuffle.
     */
   def abtt(emb: DataFrame, dim: Int, idCol: String = "vec_id",
            vecCol: String = "embedding"): DataFrame = {
@@ -1711,7 +1681,7 @@ object Knn {
     // power-iteration round (lazy checkpoint: computed on first use)
     val mu = pcaMu(emb, vecCol).localCheckpoint(false)
     val v = pcaTopVec(emb, dim, vecCol = vecCol, muPre = Some(mu))
-    emb.crossJoin(broadcast(mu)).crossJoin(broadcast(v))
+    Par.withScalars(Par.withScalars(emb, mu), v)
       .select(col(idCol),
         org.apache.spark.sql.graft.GraftExpressions
           .vec_sub_dd(xD, col("mu")).as("xc"), col("v"))
@@ -1820,7 +1790,7 @@ object Knn {
           s => s.getField("m")).as("mus"),
         transform(array_sort(collect_list(struct(col("pos"), col("sd")))),
           s => s.getField("sd")).as("sds"))
-    emb.crossJoin(broadcast(stats))
+    Par.withScalars(emb, stats)
       .select(col(idCol),
         concat_ws(",", transform(sequence(lit(1), lit(dim)), j =>
           when(element_at(col("sds"), j) === 0.0, lit(0L))
@@ -1899,7 +1869,7 @@ object Knn {
       .localCheckpoint(false)
     val thr = a.agg(graft.functions.Aggs
       .percentileMethod(col("cos"), frac, "lower").as("__thr"))
-    a.crossJoin(broadcast(thr))
+    Par.withScalars(a, thr)
       .select(col(idCol), col("cluster_id"), col("cos"),
         (col("cos") <= col("__thr")).as("is_outlier"))
   }
@@ -1924,11 +1894,10 @@ object Knn {
   private def lloyd(emb: DataFrame, dim: Int, iters: Int, centroidEvery: Int,
                     idCol: String, vecCol: String): (DataFrame, DataFrame) = {
     require(iters >= 1, s"k-means needs iters >= 1, got $iters")
-    val every = resolveCoarse(emb, centroidEvery)
     val v = emb.select(col(idCol).as("vid"),
       castD(col(vecCol)).as("v"),
       sqrt(dot(col(vecCol), col(vecCol), dim)).as("vn"))
-    var book = codebook(emb.where(col(idCol) % every === (1 % every))
+    var book = codebook(seedRows(emb, idCol, 1, emb, centroidEvery, coarseEveryOf)
       .select(col(idCol).as("cid"), castD(col(vecCol)).as("cvec"))
       .withColumn("cn", sqrt(dotD(col("cvec"), col("cvec")))))
     for (_ <- 2 to iters) {
@@ -1990,15 +1959,15 @@ object Knn {
     * `nTables` is the recall dial, paid linearly in shuffle volume.
     *
     * `nPlanes <= 0` auto-sizes from the corpus count via
-    * [[autoPlanes]] (one cached count job — same build-time posture
-    * as the IVF/PQ codebook strides), so the default geometry keeps
-    * cell populations ~constant instead of ∝ n as the corpus grows.
+    * [[autoPlanes]] (one `count()` job at build time: the plane count
+    * shapes the plan), so the default geometry keeps cell
+    * populations ~constant instead of ∝ n as the corpus grows.
     */
   def cosineDupPairsLsh(emb: DataFrame, dim: Int, threshold: Double,
                         nPlanes: Int = 0, nTables: Int = 4,
                         idCol: String = "vec_id",
                         vecCol: String = "embedding"): DataFrame = {
-    val np = if (nPlanes > 0) nPlanes else autoPlanes(cachedCount(emb))
+    val np = if (nPlanes > 0) nPlanes else autoPlanes(emb.count())
     // r16: the knnGraph-style (tb, bk) width pin was tried here and
     // measured SLOWER paired (+0.46 emb_dedup_cosine, +0.24 _fixed,
     // +0.14 emb_semdedup): these callers' inputs are already fanned

@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.{col, struct}
 
 /** Scale-adaptive scan parallelism (optimization guide §2.5/§6).
   *
@@ -61,5 +62,19 @@ object Par {
   def spread(df: DataFrame, cols: org.apache.spark.sql.Column*): DataFrame = {
     val p = df.sparkSession.sparkContext.defaultParallelism
     if (cols.isEmpty) df.repartition(p) else df.repartition(p, cols: _*)
+  }
+
+  /** `side` with the columns of the one-row frame `oneRow` appended
+    * under their own names, as ONE scalar subquery: building the plan
+    * runs no job, `side` keeps its own size estimate, and each copy of
+    * the row in a plan runs once (`ReusedSubquery`). An empty `oneRow`
+    * appends NULLs. A filter on an appended column is pushed below the
+    * projection computing its other operand, which then runs twice:
+    * pin an expensive operand with `GraftExpressions.no_pushdown`.
+    */
+  def withScalars(side: DataFrame, oneRow: DataFrame): DataFrame = {
+    val names = oneRow.columns.toSeq
+    val row = oneRow.select(struct(names.map(col): _*)).scalar()
+    side.select(col("*") +: names.map(n => row.getField(n).as(n)): _*)
   }
 }

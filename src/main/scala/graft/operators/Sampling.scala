@@ -171,7 +171,7 @@ object Sampling {
     val counts = df.groupBy(source.as("__src")).agg(count(lit(1)).as("__n"))
     val tot = counts.agg(sum(col("__n")).as("__tot"),
       round(sum(sqrt(col("__n"))), 6).as("__ssum"))
-    val rates = counts.crossJoin(broadcast(tot))
+    val rates = Par.withScalars(counts, tot)
       .select(col("__src"),
         (round(least(lit(1.0), lit(targetFrac) * col("__tot") * sqrt(col("__n"))
           / col("__ssum") / col("__n")) * lit(1e6))).cast("long").as("__thr"))

@@ -304,7 +304,7 @@ object TextOps {
         .otherwise(lit(0L))).reduce(_ + _)
     val nTerms = terms.indices.map(i =>
       (col(s"__tf$i") > 0).cast("long")).reduce(_ + _)
-    withTf.crossJoin(broadcast(stats))
+    Par.withScalars(withTf, stats)
       .select(col("doc_id"), nTerms.as("n_terms"),
         round(mu.cast("double") / lit(1e6), 6).as("bm25"))
       .where(col("n_terms") > 0)
@@ -329,8 +329,9 @@ object TextOps {
     * The per-doc top-k is a window keyed by doc_id.
     */
   def tfidf(df: DataFrame, perDoc: Int = 3): DataFrame = {
-    // corpus size N stays INSIDE the plan (broadcast one-row aggregate,
-    // the oracle's scalar subquery) — building the DataFrame runs no job
+    // corpus size N stays INSIDE the plan (a one-row aggregate read as
+    // a scalar subquery, like the oracle's) — building the DataFrame
+    // runs no job
     val n = df.agg(count(lit(1)).cast("double").as("__n"))
     val tf = df.select(col("doc_id"), explode(tokens(col("text"))).as("token"))
       .groupBy("doc_id", "token").agg(count(lit(1)).as("tf"))
@@ -338,8 +339,7 @@ object TextOps {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("doc_id"))
       .orderBy(col("score").desc, col("token"))
-    tf.join(dfreq, Seq("token"))
-      .crossJoin(broadcast(n))
+    Par.withScalars(tf.join(dfreq, Seq("token")), n)
       .withColumn("score",
         round(col("tf").cast("double") * col("__n") / col("df_docs"), 6))
       .withColumn("rank", row_number().over(w))
@@ -393,8 +393,8 @@ object TextOps {
     * (bigram and bigram-start counts); scoring joins the bigram stream
     * to those counts on its own token keys (no broadcast of the model
     * needed — the join IS token-partitioned), and the per-doc reduce
-    * carries (id, micro-nats) longs. V rides a broadcast 1-row
-    * aggregate, lazy inside the plan like [[tfidf]]'s N.
+    * carries (id, micro-nats) longs. V is a 1-row aggregate
+    * read as a scalar subquery, lazy inside the plan like [[tfidf]]'s N.
     */
   def lmScore(df: DataFrame, idCol: String = "doc_id"): DataFrame = {
     val k = 0.5
@@ -416,8 +416,7 @@ object TextOps {
     val c1 = bg.groupBy("w1").agg(count(lit(1)).as("__c1"))
     val v = toks.select(explode(col("__tk")).as("__t"))
       .agg(countDistinct(col("__t")).as("__V"))
-    val term = bg.join(c2, Seq("w1", "w2")).join(c1, Seq("w1"))
-      .crossJoin(broadcast(v))
+    val term = Par.withScalars(bg.join(c2, Seq("w1", "w2")).join(c1, Seq("w1")), v)
       .select(col(idCol),
         round(log((col("__c2") + lit(k)) / (col("__c1") + lit(k) * col("__V")))
           * lit(1e6)).cast("long").as("__tu"))
@@ -454,7 +453,7 @@ object TextOps {
     *
     * Scale shape: every model table derives from the ONE bigram-type
     * aggregate (localCheckpoint'd — c1/T fold over its (w1) groups,
-    * continuation counts over (w2), B is a 1-row broadcast); scoring
+    * continuation counts over (w2), B is a 1-row scalar); scoring
     * joins are token-keyed and carry ids + counts, never text — the
     * [[lmScore]] posture plus one tiny extra join.
     */
@@ -481,8 +480,8 @@ object TextOps {
       col("__c1").cast("double") +
       lit(discount) * col("__t1").cast("double") / col("__c1").cast("double") *
         col("__cont").cast("double") / col("__B").cast("double")
-    val term = bgM.join(c2, Seq("w1", "w2")).join(left, Seq("w1"))
-      .join(cont, Seq("w2")).crossJoin(broadcast(btot))
+    val term = Par.withScalars(bgM.join(c2, Seq("w1", "w2")).join(left, Seq("w1"))
+      .join(cont, Seq("w2")), btot)
       .select(col(idCol), round(log(p) * lit(1e6)).cast("long").as("__tu"))
     val s = term.groupBy(idCol)
       .agg(count(lit(1)).as("n_bigrams"), sum(col("__tu")).as("__su"))
@@ -582,7 +581,7 @@ object TextOps {
     val th = scored.where(col("lm_nll").isNotNull)
       .agg(graft.functions.Aggs.percentileLin6(col("lm_nll"), 1.0 / 3).as("__t1"),
         graft.functions.Aggs.percentileLin6(col("lm_nll"), 2.0 / 3).as("__t2"))
-    scored.crossJoin(broadcast(th))
+    Par.withScalars(scored, th)
       .select(col(idCol), col("lm_nll"),
         when(col("lm_nll").isNull, lit(null).cast("string"))
           .when(col("lm_nll") <= col("__t1"), lit("head"))
@@ -689,8 +688,8 @@ object TextOps {
         col("__w")).otherwise(raise_error(concat(
           lit(s"classifyWithWeights: weight table must have at most one row per bucket 0..${ClassifyBuckets - 1}, densified to "),
           size(col("__w")).cast("string"), lit(" rows")))).as("__w"))
-    df.select(col(idCol), featureBuckets(tokens(col("text"))).as("__fb"))
-      .crossJoin(broadcast(warr))
+    Par.withScalars(
+        df.select(col(idCol), featureBuckets(tokens(col("text"))).as("__fb")), warr)
       // null text => null feature array => size() would yield -1
       // (legacy sizeOfNull), not the 0 the old count(explode_outer)
       // shape returned (ADVICE r15) — pin the 0 semantics
@@ -737,8 +736,8 @@ object TextOps {
     * transcendentals at all (sigmoid(0) = 1/2 exactly), which is what
     * the oracle-verified one-step query exploits.
     *
-    * Scale shape (r14): the 65536-long weight table broadcasts as ONE
-    * array, the per-doc margin/error is a scan-side fold over the
+    * Scale shape: the 65536-long weight table rides as ONE
+    * scalar array, the per-doc margin/error is a scan-side fold over the
     * feature array, and the only shuffle per step is the map-side-
     * combined groupBy(bucket) of the gradient (≤65536 reduce rows) —
     * no per-feature groupBy(id) exchange, no error join-back.
@@ -766,7 +765,7 @@ object TextOps {
 
   private def stepOnFeatures(fb: DataFrame, weights: DataFrame,
                              lr: Double, idCol: String): DataFrame = {
-    // the weight table rides as ONE broadcast array (index = bucket+1
+    // the weight table rides as ONE scalar array (index = bucket+1
     // — zeroWeights/updates always cover the full bucket range), so
     // the per-doc margin is a scan-side fold and the per-doc error is
     // computed where the features already sit. The old shape exploded
@@ -790,7 +789,7 @@ object TextOps {
         col("__w")).otherwise(raise_error(concat(
           lit(s"trainStep: weight table must cover buckets 0..${ClassifyBuckets - 1} densely, got "),
           size(col("__w")).cast("string"), lit(" rows")))).as("__w"))
-    val perDoc = fb.crossJoin(broadcast(warr))
+    val perDoc = Par.withScalars(fb, warr)
       .select(col(idCol), col("__fb"), col("__y"),
         size(col("__fb")).as("__n"),
         // native codegen'd index-sum (r15): the HOF fold evaluated an
@@ -809,8 +808,7 @@ object TextOps {
           .as("__tU"))
       .groupBy("bucket").agg(sum(col("__tU")).as("__gU"))
     val nd = fb.agg(count(lit(1)).as("__nd"))
-    weights.join(grads, Seq("bucket"), "left")
-      .crossJoin(broadcast(nd))
+    Par.withScalars(weights.join(grads, Seq("bucket"), "left"), nd)
       .select(col("bucket"),
         // __nd > 0 guard: an empty training frame would make the
         // update 0/0, which ANSI mode rejects even for doubles — the
@@ -873,10 +871,9 @@ object TextOps {
     val tot = bc.agg(
       (lnU(sum(col("__ctgt")) + lit(0.5 * ClassifyBuckets))
         - lnU(sum(col("__craw")) + lit(0.5 * ClassifyBuckets))).as("__cu"))
-    fx.join(broadcast(bw), Seq("__b"), "left")
+    Par.withScalars(fx.join(broadcast(bw), Seq("__b"), "left")
       .groupBy(idCol)
-      .agg(count(col("__b")).as("__n"), sum(col("__wu")).as("__su"))
-      .crossJoin(broadcast(tot))
+      .agg(count(col("__b")).as("__n"), sum(col("__wu")).as("__su")), tot)
       .select(col(idCol),
         col("__n").as("n_feats"),
         when(col("__n") === 0, lit(null).cast("double"))
@@ -1194,7 +1191,7 @@ object TextOps {
     * filter prunes BEFORE the marginal joins; marginals are the
     * vocab-sized unigram agg, checkpointed so its scan runs once and
     * joined twice (AQE broadcasts when the vocab allows, shuffles
-    * otherwise); corpus totals are one scan-side agg broadcast to all.
+    * otherwise); corpus totals are one scan-side agg read as a scalar.
     * Final top-k is a TakeOrderedAndProject on the filtered pair set.
     */
   def pmiCollocations(df: DataFrame, minCount: Int = 5,
@@ -1228,10 +1225,9 @@ object TextOps {
       sum(greatest(size(col("__tk")) - 1, lit(0))).cast("long").as("n_big"))
     val pmi6 = ln6(col("n_pair")) + lit(2L) * ln6(col("n_tok")) -
       ln6(col("n_big")) - ln6(col("n_a")) - ln6(col("n_b"))
-    cand
+    Par.withScalars(cand
       .join(uni.select(col("t").as("tok_a"), col("cnt").as("n_a")), Seq("tok_a"))
-      .join(uni.select(col("t").as("tok_b"), col("cnt").as("n_b")), Seq("tok_b"))
-      .crossJoin(broadcast(tot))
+      .join(uni.select(col("t").as("tok_b"), col("cnt").as("n_b")), Seq("tok_b")), tot)
       .select(col("tok_a"), col("tok_b"), col("n_pair"), col("n_a"), col("n_b"),
         round(pmi6.cast("double") / lit(1e6), 6).as("pmi"))
       .orderBy(col("pmi").desc, col("tok_a"), col("tok_b"))

@@ -1273,7 +1273,7 @@ object Trend {
     * oracle replays the identical decision at any input size; at or
     * under the cap the output is bit-identical to the ungated op).
     * The span probe is one extra min/max partial-agg scan — no
-    * shuffle, 1-row broadcast.
+    * shuffle, read back as one scalar subquery.
     */
   def dtwToTemplate(df: DataFrame, tsCol: String, valCol: String,
                     keyCols: Seq[String], bucketUs: Long, originUs: Long,
@@ -1283,13 +1283,12 @@ object Trend {
     val dRaw = fldiv(col(tsCol) - lit(originUs), bucketUs)
     // greatest(1, …): max/min of an empty frame are NULL; Spark's
     // greatest skips NULLs, so the degenerate scale is 1, not NULL.
-    // Lazily checkpointed: the 1-row probe feeds BOTH the grid and the
-    // template branch — without materialization each branch would
-    // re-plan (and re-scan) the min/max agg
+    // The 1-row probe feeds BOTH the grid and the template branch: its
+    // second copy is a ReusedSubquery, so the min/max agg runs once
     val span = df.agg(greatest(lit(1L),
       fldiv(max(dRaw) - min(dRaw), spanCapBuckets.toLong) + lit(1L))
-      .as("__scale")).localCheckpoint(false)
-    val dfS = df.crossJoin(broadcast(span))
+      .as("__scale"))
+    val dfS = Par.withScalars(df, span)
     def d = fldivC(col(tsCol) - lit(originUs),
       lit(bucketUs) * col("__scale")).as("__d")
     val grid = dfS
@@ -1314,7 +1313,7 @@ object Trend {
     // spread before the row-independent DP projection: the exchange
     // carries one calendar-bounded array per key (~KB) against 10⁴+
     // ops of downstream compute per row, justified at any scale.
-    val joined = Par.spread(karr.crossJoin(broadcast(tmpl)))
+    val joined = Par.spread(Par.withScalars(karr, tmpl))
       .withColumn("n", size(col("a")))
       .withColumn("m", size(col("b")))
       .withColumn("w", greatest(lit(band), abs(col("n") - col("m"))))

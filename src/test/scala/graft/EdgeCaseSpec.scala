@@ -119,8 +119,8 @@ class EdgeCaseSpec extends AnyFunSuite {
     val benchOnly = Seq((97L, "alpha beta gamma delta")).toDF("doc_id", "text")
     assert(Dedup.contaminationSpans(benchOnly,
       col("doc_id") % 97 === 0).isEmpty)
-    // rq on an empty corpus: resolveCoarse sees n = 0, stride 1,
-    // empty codebooks -> empty output (nothing throws)
+    // rq on an empty corpus at stride 1: empty codebooks -> empty
+    // output (nothing throws)
     val emptyEmb = Seq.empty[(Long, Array[Float])].toDF("vec_id", "embedding")
     assert(Knn.rqCodes(emptyEmb, 2, centroidEvery = 1).isEmpty)
   }

@@ -421,6 +421,127 @@ class ExpressionParitySpec extends AnyFunSuite {
     assert(got(0).getSeq[Double](1) == Seq(0.8125, 0.1875))
   }
 
+  test("kmeans, ivfCells and nearestCell assign no row on an empty corpus " +
+      "or an empty codebook") {
+    // the codebook reaches the kernel as a scalar subquery: an empty one
+    // must drop the side's rows (as the crossJoin did), never keep them
+    // with a null cid
+    inBothCodegenModes { s =>
+      import s.implicits._
+      val none = Seq.empty[(Long, Array[Float])].toDF("vec_id", "embedding")
+      // even ids only: the stride-2 seed residue (1) selects no centroid
+      val even = Seq((0L, Array(1f, 0f)), (2L, Array(0f, 1f)), (4L, Array(1f, 1f)))
+        .toDF("vec_id", "embedding")
+      for ((emb, every) <- Seq(none -> 0, none -> 1, even -> 2)) withClue(s"every $every: ") {
+        assert(Knn.kmeans(emb, 2, centroidEvery = every).isEmpty)
+        val cells = Knn.ivfCells(emb, emb, 2, centroidEvery = every)
+        assert(cells.cCells.isEmpty && cells.qCells.isEmpty)
+      }
+      val side = s.createDataFrame(Seq(Row(1L, Seq(1.0, 0.0), 1.0)).asJava,
+        vecSchema(DoubleType))
+      val cents = s.createDataFrame(Seq.empty[Row].asJava, bookSchema(DoubleType))
+      // a one-row book holding an empty array, and a book with no row
+      // (its scalar is NULL)
+      for (book <- Seq(Knn.codebook(cents), Knn.codebook(cents).limit(0)))
+        assert(Knn.nearestCell(side, book, "vec", "norm").isEmpty)
+      assert(Knn.nearestCell(side.limit(0), Knn.codebook(
+        s.createDataFrame(Seq(Row(7L, Seq(1.0, 0.0), 1.0)).asJava,
+          bookSchema(DoubleType))), "vec", "norm").isEmpty)
+    }
+  }
+
+  test("the Column strides equal autoCoarseEvery / autoPqEvery") {
+    val sq = Seq(2L, 3L, 16L, 255L, 256L, 1000L, 65535L, 65536L, 65537L)
+      .map(r => r * r)
+    val cap = 65536L * 65536L
+    val ns = (Seq(0L, 1L, 2L) ++ sq.flatMap(q => Seq(q - 1, q, q + 1)) ++
+      Seq(256L, 512L, 65536L, 1L << 20).flatMap(m => Seq(m - 1, m, m + 1)) ++
+      Seq(cap + 1, cap + 2, cap + 65535, cap + 65536, cap + 65537, cap * 4 + 1))
+      .distinct
+    val row = spark.range(1).select(ns.flatMap(n =>
+      Seq(Knn.coarseEveryOf(lit(n)), Knn.pqEveryOf(lit(n)))): _*).head()
+    ns.zipWithIndex.foreach { case (n, i) =>
+      assert(row.getLong(2 * i) == Knn.autoCoarseEvery(n).toLong, s"coarse n=$n")
+      assert(row.getLong(2 * i + 1) == Knn.autoPqEvery(n).toLong, s"pq n=$n")
+    }
+  }
+
+  test("simhash_wide == its HOF twin, incl. null and empty token arrays") {
+    val mod = lit(1000000007L)
+    def bit(h: Column, i: Column) = call_function("shiftright", h, i).bitwiseAND(lit(1L))
+    val hof = (toks: Column) => {
+      val hs = transform(toks, t => {
+        val p = TextOps.polyHashHof(t)
+        val t2 = (p * lit(2246822519L) + lit(1013904223L)) % mod
+        struct(((p * lit(2654435761L)) % lit(1073741824L)).as("h1"),
+          ((t2 * t2) % mod).as("h2"))
+      })
+      when(toks.isNotNull, aggregate(sequence(lit(0), lit(59)), lit(0L), (acc, i) => {
+        val votes = aggregate(hs, lit(0L), (v, h) => v + when(
+          bit(when(i < 30, h.getField("h1")).otherwise(h.getField("h2")),
+            i % 30) === 1L, 1L).otherwise(-1L))
+        acc + when(votes > 0, call_function("shiftleft", lit(1L), i)).otherwise(0L)
+      }))
+    }
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    inBothCodegenModes { s =>
+      import s.implicits._
+      val docs = s.read.parquet(s"${ParquetSpec.Sf}/documents.parquet")
+        .select(TextOps.tokens($"text").as("t"))
+        .union(Seq(Some(Seq.empty[String]), None, Some(Seq("ünï", "", "a a")))
+          .toDF("t"))
+      val bad = docs.select(org.apache.spark.sql.graft.GraftExpressions
+          .simhash_wide($"t").as("n"), hof($"t").as("h"), $"t")
+        .where(!($"n" <=> $"h"))
+      assert(bad.isEmpty, bad.take(3).mkString("; "))
+      val empty = Seq(Seq.empty[String]).toDF("t").select(
+        org.apache.spark.sql.graft.GraftExpressions.simhash_wide($"t")).head()
+      assert(empty.getLong(0) == 0L)
+    }
+  }
+
+  test("index_sum_long == the element_at HOF fold, incl. null and empty arrays") {
+    inBothCodegenModes { s =>
+      import s.implicits._
+      val w = Seq(-7L, 0L, Long.MaxValue / 4, 3L, Long.MinValue / 4)
+      val df = Seq(Some(Seq(0L, 2L, 2L, 4L)), Some(Seq.empty[Long]), None,
+          Some(Seq(1L, 3L, 0L)), Some(Seq(4L, 4L, 4L)))
+        .toDF("ix")
+        .withColumn("w", typedLit(w))
+        .union(Seq((Some(Seq(0L)), Option.empty[Seq[Long]])).toDF("ix", "w"))
+      val bad = df.select(org.apache.spark.sql.graft.GraftExpressions
+          .index_sum_long($"ix", $"w").as("n"),
+        aggregate($"ix", lit(0L),
+          (acc, i) => acc + element_at($"w", (i + 1).cast("int"))).as("h"),
+        $"ix", $"w")
+        .where(!($"n" <=> $"h"))
+      assert(bad.isEmpty, bad.take(3).mkString("; "))
+    }
+  }
+
+  test("PushdownBarrier is the identity on null, ±0.0, NaN and arrays") {
+    import org.apache.spark.sql.graft.GraftExpressions.no_pushdown
+    inBothCodegenModes { s =>
+      import s.implicits._
+      val df = Seq(Some(0.0), Some(-0.0), Some(Double.NaN), None,
+          Some(Double.NegativeInfinity), Some(1.5))
+        .toDF("x")
+        .withColumn("a", when($"x".isNotNull, array($"x", -$"x")))
+      val got = df.select(no_pushdown($"x"), no_pushdown($"a"), $"x", $"a").collect()
+      def bits(r: Row, i: Int) =
+        if (r.isNullAt(i)) None else Some(java.lang.Double.doubleToRawLongBits(r.getDouble(i)))
+      def abits(r: Row, i: Int) =
+        if (r.isNullAt(i)) None
+        else Some(r.getSeq[Double](i).map(java.lang.Double.doubleToRawLongBits))
+      assert(got.length == 6)
+      got.foreach { r =>
+        assert(bits(r, 0) == bits(r, 2) && abits(r, 1) == abits(r, 3), r.toString)
+      }
+      // a pinned filter keeps the same rows (Spark orders NaN above 1.5)
+      assert(df.where(no_pushdown($"x") > 0.0).count() == 2)
+    }
+  }
+
   test("LevBanded == builtin 3-arg levenshtein on adversarial pairs") {
     // random word-soup pairs around every threshold regime (equal, one
     // edit, rotations, disjoint, length gaps, empty, unicode fallback)

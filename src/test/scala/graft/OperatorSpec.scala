@@ -680,34 +680,6 @@ class OperatorSpec extends AnyFunSuite {
     assert(out(3L) == ((0L, 0L, "unique str !")))
   }
 
-  test("Knn.corpusCount counts afresh once the files under a path change") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_ccount") + "/t"
-    (1L to 5L).toDF("vec_id").write.parquet(dir)
-    assert(Knn.corpusCount(spark.read.parquet(dir)) == 5L)
-    (6L to 8L).toDF("vec_id").write.mode("append").parquet(dir)
-    assert(Knn.corpusCount(spark.read.parquet(dir)) == 8L)
-  }
-
-  test("Knn.corpusCount does not pin a checkpointed frame's RDD") {
-    // a LogicalRDD leaf is a new plan on every build, so a stored count
-    // can never hit again; storing it would hold the RDD (and its
-    // cached partitions) for the life of the process
-    def countOnce(): java.lang.ref.WeakReference[AnyRef] = {
-      val df = (1L to 5L).toDF("vec_id").localCheckpoint()
-      val rdd = df.queryExecution.analyzed.collectFirst {
-        case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd
-      }.get
-      assert(Knn.corpusCount(df) == 5L)
-      new java.lang.ref.WeakReference[AnyRef](rdd)
-    }
-    val refs = (1 to 3).map(_ => countOnce())
-    val released = Iterator.range(0, 20).exists { _ =>
-      System.gc(); Thread.sleep(100)
-      refs.forall(_.get == null)
-    }
-    assert(released, s"${refs.count(_.get != null)} of 3 checkpointed RDDs still reachable")
-  }
-
   test("Knn.mmrTopK trades relevance for diversity in greedy order") {
     import spark.implicits._
     // query (1,0); a and b are the same direction (mutual cos 1), c is

@@ -9,16 +9,16 @@ import org.scalatest.funsuite.AnyFunSuite
   * before it ships.
   *
   * Budgets are UPPER bounds (improvements pass; regressions fail) on
-  * the AQE-initial plan, counted like graft.Explain.
+  * the AQE-initial plan, counted by [[Explain.exchanges]]: each
+  * distinct subquery's exchanges count once, however often its plan
+  * text repeats.
   */
 class PlanBudgetSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
   private val sf = "/root/testdata/sf0.001"
 
   private def exchanges(name: String): Int =
-    SparkEntry.queries(name)(spark, sf)
-      .queryExecution.executedPlan.toString()
-      .linesIterator.count(_.contains("Exchange"))
+    Explain.exchanges(SparkEntry.queries(name)(spark, sf))
 
   private val budgets = Map(
     // scan-side ops: NO exchange — they must fuse into the scan stage
@@ -39,13 +39,14 @@ class PlanBudgetSpec extends AnyFunSuite {
     // brute MIPS: query-set broadcast + the top-k rank window's hash
     // exchange — the corpus never shuffles
     "emb_mips" -> 2,
-    // bm25: scan-side per-term tf; stats 1-row agg + its broadcast —
-    // the corpus never shuffles, top-k is TakeOrderedAndProject
-    "doc_bm25" -> 2,
-    // hybrid fusion: the bm25 leg's 2 + the brute leg's query
+    // bm25: scan-side per-term tf; the stats 1-row agg's exchange,
+    // read as a scalar subquery — the corpus never shuffles, top-k is
+    // TakeOrderedAndProject
+    "doc_bm25" -> 1,
+    // hybrid fusion: the bm25 leg's 1 + the brute leg's query
     // broadcast and rank window + the two-10-row-frame outer join;
     // neither corpus ever shuffles
-    "q_hybrid_rrf" -> 6,
+    "q_hybrid_rrf" -> 5,
     // MMR rerank: query broadcast + rank window + per-query collect —
     // the greedy loop itself is scan-side over a 20-element array
     "emb_mmr" -> 2,
@@ -55,9 +56,9 @@ class PlanBudgetSpec extends AnyFunSuite {
     // TakeOrderedAndProject — NO exchange at all
     "doc_sample_weighted" -> 0,
     // CMS audit: exact token agg (the leg being audited) + its
-    // top-k, the fixed-grid agg + broadcast, the 1-row total +
-    // broadcast — the grid and total are the only production state
-    "doc_heavy_hitters" -> 5,
+    // top-k, the fixed-grid agg + broadcast, the 1-row total's agg
+    // (a scalar) — the grid and total are the only production state
+    "doc_heavy_hitters" -> 4,
     // bollinger envelope: ONE series-key window, all frames fused
     "ts_bands" -> 1,
     // holt-winters: daily pre-agg + the series-key fold window
@@ -139,18 +140,18 @@ class PlanBudgetSpec extends AnyFunSuite {
     // the engine de-duplicates (ReusedExchange with AQE off, runtime
     // stage reuse with AQE on)
     "doc_dedup_edit" -> 6,
-    // augmented-LSH MIPS: M^2 one-row agg+broadcast (x2 sides), band
+    // augmented-LSH MIPS: M^2 one-row agg (one scalar, both sides), band
     // shuffles per side, pair-dedup agg, rank window
-    "emb_mips_lsh" -> 7,
+    "emb_mips_lsh" -> 4,
     // eval: the checkpointed brute truth + the full LSH chain + the
     // tiny pair join and 1-row agg
-    "emb_mips_recall" -> 10,
+    "emb_mips_recall" -> 7,
     // band-curve eval harness: three banding chains (each band
     // self-join + pair distinct, candidates checkpointed) against the
     // one checkpointed Jaccard truth + three tiny count/join aggs —
     // measurement cost; the production geometry itself is
     // doc_dedup_minhash's 3
-    "doc_minhash_band_curve" -> 21,
+    "doc_minhash_band_curve" -> 4,
     // table-curve eval harness: three full LSH chains (band shuffles +
     // pair-dedup agg + rank window each) against the one checkpointed
     // brute truth + three tiny pair joins/1-row aggs — measurement
@@ -234,7 +235,7 @@ class PlanBudgetSpec extends AnyFunSuite {
     // + the group-by — and NO BroadcastNestedLoopJoin anywhere
     "q_interval_join_auto" -> 3,
     // quality filter: tiny percentile agg + broadcast back over the scan
-    "doc_quality_filter" -> 2,
+    "doc_quality_filter" -> 1,
     // funnel: one user-keyed window shuffle + the single-row global agg
     "q_funnel" -> 2,
     // transitions: user-keyed lead window + the |types|²-row pair agg
@@ -246,10 +247,10 @@ class PlanBudgetSpec extends AnyFunSuite {
     // stickiness: (user, day) distinct + day-frame distinct/broadcast
     // + two-phase count(DISTINCT) + dau agg + tiny join
     "q_stickiness" -> 8,
-    // RFM: cohort agg + purchase agg + 1-row max broadcast + the
+    // RFM: cohort agg + purchase agg + the 1-row max scalar + the
     // cohort-PARTITIONED ntile windows (one shuffle, shared by all
     // three scores — never a global single-partition rank)
-    "q_rfm" -> 6,
+    "q_rfm" -> 5,
     // LTV: cohort agg + the (cohort, offset) revenue agg + the
     // cohort-partitioned cumulative window + tiny size agg/broadcast
     "q_ltv" -> 7,
@@ -263,11 +264,14 @@ class PlanBudgetSpec extends AnyFunSuite {
     // lttb: (key,bucket) agg + means window + join-back argmax window
     "ts_lttb" -> 3,
     // multi-stage but bounded
-    "emb_quantize" -> 3, "ts_mad" -> 6,
-    // pq: broadcast codebook + two partial-agged shuffles (no window)
+    "emb_quantize" -> 2, "ts_mad" -> 6,
+    // pq: broadcast codebook + ONE id-hash spread that the (id, s)
+    // argmin and the per-id collect both read + the stride's count
+    // subquery (no window)
     "emb_pq" -> 3,
-    // rq: the level-1 chain lives behind the residual checkpoint; the
-    // visible plan is the level-2 codebook broadcast + the argmin agg
+    // rq: the level-1 chain lives behind the residual checkpoint, which
+    // also carries the stride; the visible plan is the level-2
+    // codebook broadcast + the argmin agg
     "emb_rq" -> 2,
     // rq recall eval: the checkpointed brute truth + the full
     // two-stage rq_search chain + the tiny pair join and 1-row agg
@@ -277,18 +281,18 @@ class PlanBudgetSpec extends AnyFunSuite {
     // then the exact-rerank candidate/query broadcasts + rank window
     // — the emb_sq_search posture plus the codebook joins
     "emb_rq_search" -> 11,
-    // abtt: the mean's pos agg + 1-row collect/broadcast feed the
-    // scan-side projection (the direction chain hides behind pcaTop's
-    // checkpoints); no corpus shuffle
-    "emb_abtt" -> 4,
+    // abtt: the checkpointed mean and direction rows are scalars over
+    // the scan-side projection (the mean pass and the direction chain
+    // run behind their checkpoints); no exchange at all
+    "emb_abtt" -> 0,
     // pca: every round's d-row result is lazily checkpointed, so the
     // visible plan is only the final posexplode of a 1-row frame (the
     // per-round (pos)-keyed partial aggs run behind the checkpoints)
     "emb_pca" -> 0,
-    // sq flat search: stats pass (pos agg + 1-row collect + broadcast)
+    // sq flat search: stats pass (pos agg + 1-row collect, a scalar)
     // + broadcast query set + top-rerank window + broadcast candidate
     // list and query re-join for the exact rerank window
-    "emb_sq_search" -> 8,
+    "emb_sq_search" -> 7,
     // hampel: ONE series-key window shuffle; median/MAD/flag/repair
     // all derive scan-side from the captured frame array
     "ts_hampel" -> 1,
@@ -299,9 +303,9 @@ class PlanBudgetSpec extends AnyFunSuite {
     // latency rollup / slo burn: one partial-agg'd shuffle each
     "ts_rollup_p95" -> 1, "q_slo_burn" -> 1,
     // churn: the distinct (user, week) agg + the user-keyed lead
-    // window + the 1-row max broadcast + the per-week rollup — every
+    // window + the 1-row max scalar + the per-week rollup — every
     // post-distinct stage moves (user, week) pairs only
-    "q_churn" -> 5,
+    "q_churn" -> 4,
     // coverage scorecard: ONE partial-agg'd shuffle
     "ts_coverage" -> 1,
     // benford: the (group, digit) agg is the only corpus-scale stage
@@ -310,17 +314,18 @@ class PlanBudgetSpec extends AnyFunSuite {
     "ts_benford" -> 4,
     // blocklist: scan-side token filter, literal wordlist — no shuffle
     "doc_blocklist" -> 0,
-    // dtw: (key, day) grid agg + key re-key + the template's day agg,
-    // 1-row collect and broadcast — the O(n·m) DP itself is a
+    // dtw: (key, day) grid agg + key re-key + the template's day agg
+    // and 1-row collect (a scalar) — the O(n·m) DP itself is a
     // scan-side fold over calendar-bounded arrays. r13: +2 for the
-    // span-gate probe (a min/max partial agg to one row + its
-    // broadcast), which bounds the DP at O(cap²) for multi-year spans
+    // span-gate probe (a min/max partial agg to one row, now a scalar
+    // whose second copy is a ReusedSubquery: +1), which bounds the DP
+    // at O(cap²) for multi-year spans
     // r16: 7 -> 8 — the explicit round-robin Par.spread before the
     // banded DP projection (guide §2: ~5.5k interpreted DP cells per
     // key ran on 1-2 AQE byte-coalesced partitions; paired A/B
     // -1.18 s). The added exchange carries one calendar-bounded array
     // per key at any scale.
-    "ts_dtw" -> 8,
+    "ts_dtw" -> 6,
     // k-center: the visible plan is the k-row literal result frame —
     // the greedy rounds run at construction as k TakeOrdered(1) scans
     // over the checkpointed corpus, none of which shuffles
@@ -329,17 +334,16 @@ class PlanBudgetSpec extends AnyFunSuite {
     // rounds scan the once-materialized √n-strided pool instead of
     // the corpus — still zero shuffle
     "emb_kcenter_sampled" -> 0,
-    // binary store: the per-dim mean pass (pos agg partial+final) +
-    // its 1-row broadcast — packing itself is a scan-side projection
-    "emb_bq" -> 3,
-    // binary serving: the mean pass + TWO packing broadcasts (corpus
-    // and query words) + Hamming top-rerank window + the exact-rerank
-    // candidate/query broadcasts and rank window — the rq_search
-    // posture with the codebook joins replaced by the mean broadcast
-    "emb_bq_search" -> 11,
+    // binary store: the per-dim mean pass (pos agg partial+final),
+    // read as a scalar — packing itself is a scan-side projection
+    "emb_bq" -> 2,
+    // binary serving: the mean pass (one scalar for both packings) +
+    // the query-word broadcast + Hamming top-rerank window + the
+    // exact-rerank candidate/query broadcasts and rank window
+    "emb_bq_search" -> 7,
     // bq recall eval: the checkpointed brute truth + the full
     // two-stage bq chain + the tiny pair join and 1-row agg
-    "emb_bq_recall" -> 14,
+    "emb_bq_recall" -> 10,
     "q_retention" -> 2, "q_argmin" -> 2, "q4_semijoin" -> 2,
     "ts_align_linear" -> 2, "ts_merge" -> 2,
     // doc_vocab: the corpus-scale agg + TakeOrderedAndProject live in a
@@ -350,7 +354,7 @@ class PlanBudgetSpec extends AnyFunSuite {
     // TakeOrderedAndProject (per-partition heaps, no global sort)
     "doc_bpe_step" -> 2,
     "q3_join" -> 5, "q5_multijoin" -> 6,
-    "doc_dedup_ngram_jaccard" -> 3, "doc_tfidf" -> 7,
+    "doc_dedup_ngram_jaccard" -> 3, "doc_tfidf" -> 6,
     // pruned scale path: the df-cap window rides the self-join's own
     // sid shuffle — same budget as the unpruned chain
     "doc_dedup_ngram_jaccard_pruned" -> 3,
@@ -390,44 +394,45 @@ class PlanBudgetSpec extends AnyFunSuite {
     // broadcasts + the drop-set agg + final left join
     "emb_semdedup" -> 8,
     // iterative-ML composite: one Lloyd round (seed codebook row +
-    // centroid_update row: a single-partition agg + broadcast each),
-    // shown once per cell side (ReusedExchange at runtime), the probe
-    // window + its broadcast, and the final rank window — every
-    // exchange carries ids or codebook rows, never the corpus
-    "emb_knn_ivf_learned" -> 11,
+    // centroid_update row: a single-partition agg each, read as
+    // scalars), the stride's count, the probe window + its broadcast,
+    // and the final rank window — every exchange carries ids or
+    // codebook rows, never the corpus
+    "emb_knn_ivf_learned" -> 7,
     // dsir: per-doc micro-nat reduce + broadcast weight/normalizer
     // frames off the lazily-checkpointed bucket model — the stats
     // scan's own agg exchange lives behind the checkpoint
-    "doc_dsir" -> 4,
-    // rate table: tiny source-count agg + 1-row total + two broadcasts
+    "doc_dsir" -> 3,
+    // rate table: tiny source-count agg + the 1-row total (a scalar) +
+    // the rate broadcast
     // back over the scan — the corpus itself never shuffles
-    "doc_source_mix" -> 5,
+    "doc_source_mix" -> 4,
     // LM train (bigram + start-count partial aggs) + token-keyed
     // scoring joins + per-doc micro-nat reduce + broadcast V + the
     // final left join back to doc ids — bigram tokens ride exactly
     // two agg shuffles and the join keys, text never
-    "doc_lm_score" -> 9,
+    "doc_lm_score" -> 8,
     // the lm chain is lazily checkpointed once; the visible plan is
     // the tertile agg broadcast + the labeling scan
-    "doc_ccnet_bucket" -> 2,
+    "doc_ccnet_bucket" -> 1,
     // kneser-ney: the lm_score posture (token-keyed model joins +
     // per-doc micro-nat reduce + the final doc-id join) with the
     // bigram-type agg checkpointed once feeding c1/T, continuation,
     // and B — same budget as doc_lm_score
-    "doc_lm_kn" -> 9,
+    "doc_lm_kn" -> 8,
     // novelty: scan-side distinct shingle hashes; the first-occurrence
     // agg, the (hash, id) join back, the per-doc agg, and the doc-id
     // left join — nothing pairwise, text never shuffles
     "doc_novelty" -> 4,
     // the emb_kmeans Lloyd shape (4) + the per-cluster top-m window
     // keyed by cluster_id
-    "emb_cluster_sample" -> 5,
+    "emb_cluster_sample" -> 4,
     // topic clustering: vectors fan out scan-side (hashed counts);
     // identical Lloyd shape to emb_kmeans at dim 16
-    "doc_topic_cluster" -> 4,
-    // checkpointed Lloyd assignment + the 1-row threshold agg and its
-    // broadcast back — the doc_quality_filter posture
-    "emb_outliers" -> 2,
+    "doc_topic_cluster" -> 3,
+    // checkpointed Lloyd assignment + the 1-row threshold agg, read
+    // back as a scalar — the doc_quality_filter posture
+    "emb_outliers" -> 1,
     // distinct-n diversity: ONE corpus-scale (grp, n, h) shuffle
     // (countDistinct's expand rides it) + the tiny (grp, n) re-combine
     "doc_distinct_ngrams" -> 2,
@@ -437,9 +442,9 @@ class PlanBudgetSpec extends AnyFunSuite {
     "doc_zipf" -> 3,
     // pmi: the (a, b) pair agg is the only corpus-scale shuffle (the
     // unigram agg is checkpointed); + its broadcast into the marginal
-    // joins, the second marginal broadcast, and the 1-row totals agg +
-    // broadcast — top-k is TakeOrderedAndProject
-    "doc_pmi" -> 5,
+    // joins, the second marginal broadcast, and the 1-row totals agg
+    // (a scalar) — top-k is TakeOrderedAndProject
+    "doc_pmi" -> 4,
     // shot segmentation: the per-video window partition is the only
     // exchange; frames come scan-side off the decode pass
     "mm_scene_cut" -> 1,
@@ -466,7 +471,7 @@ class PlanBudgetSpec extends AnyFunSuite {
     // align-hold adds the asof join-back to the window; at_key /
     // timerange_rel / convert carry a tiny frame join or global sort
     "ts_align_hold" -> 2, "ts_at_key" -> 3, "ts_convert" -> 2,
-    "ts_timerange_rel" -> 3,
+    "ts_timerange_rel" -> 2,
     // doc ops: hash/token aggs + join-backs, corpus shuffled at most
     // once per chain stage; bpe_train's freq agg is checkpointed
     "doc_bpe_apply" -> 2, "doc_bpe_train" -> 0,
@@ -486,7 +491,7 @@ class PlanBudgetSpec extends AnyFunSuite {
     // corpus-side explode + doc-keyed groupBy exchange is GONE, so the
     // only shuffles left are model-sized (was 10 with the
     // exploded-join per-doc margin, 8 in r14)
-    "doc_classify_trained" -> 9,
+    "doc_classify_trained" -> 6,
     // calibration sweep: the scored frame is checkpointed (the
     // training chain's exchanges are paid behind it), leaving the
     // 5-quantile global agg + the final partial agg + one broadcast
@@ -500,7 +505,7 @@ class PlanBudgetSpec extends AnyFunSuite {
     // doc-keyed groupBy) + 1-row metrics agg — 6 total, down from the
     // exploded-join formulation's 24; every added exchange carries
     // <= 65536 rows no matter the corpus size
-    "doc_classify_train_eval" -> 6,
+    "doc_classify_train_eval" -> 4,
     // lake reads: the pruned scan is scan+filter (manifest collect is
     // planning-time metadata); the snapshot read is two 1-row aggs +
     // their single-partition exchanges, unioned
@@ -514,34 +519,35 @@ class PlanBudgetSpec extends AnyFunSuite {
     "doc_dedup_eval" -> 11,
     // ANN index chains: codebook/cell assignment exchanges +
     // candidate join + rank window per chain. A corpus-side cell or
-    // cluster assignment is one codebook row (single-partition agg +
-    // broadcast) scored scan-side — the corpus itself never shuffles
-    // for it; emb_kmeans is two such rows (seeds, one update)
+    // cluster assignment is one codebook row (single-partition agg, a
+    // scalar) scored scan-side — the corpus itself never shuffles for
+    // it; emb_kmeans is two such rows (seeds, one update) + the
+    // stride's count
     "emb_knn_brute" -> 2, "emb_knn_lsh" -> 3, "emb_knn_ivf" -> 5,
-    "emb_knn_ivf_indexed" -> 2, "emb_kmeans" -> 4, "emb_pq_learned" -> 8,
-    "emb_ivf_pq" -> 14, "emb_ivf_pq_rerank" -> 17,
+    "emb_knn_ivf_indexed" -> 2, "emb_kmeans" -> 3, "emb_pq_learned" -> 8,
+    "emb_ivf_pq" -> 13, "emb_ivf_pq_rerank" -> 16,
     // residual IVFADC: the ivf_pq chain + the residual frame rebuilt
     // for the codes / dtab legs (byte-identical subplans —
     // ReusedExchange dedups them at runtime); the codes leg's one
     // neighbor_id exchange serves both its argmin and the ADC join
-    "emb_ivf_pq_residual" -> 25,
+    "emb_ivf_pq_residual" -> 19,
     // permuted PQ: the (dim) variance agg + the 64-row rank window +
     // permutation broadcast, then the plain PQ chain
-    "emb_pq_permuted" -> 9,
-    // whitening: the (dim) stats agg + its 1-row fold + the stats
-    // broadcast back over the scan — the corpus never shuffles
-    "emb_whiten" -> 3,
+    "emb_pq_permuted" -> 5,
+    // whitening: the (dim) stats agg + its 1-row fold, read back over
+    // the scan as a scalar — the corpus never shuffles
+    "emb_whiten" -> 2,
     // distortion dial: the three PQ store chains (3 + 8 + 9) side by
     // side plus each leg's 1-row total agg
-    "emb_pq_err_curve" -> 23,
+    "emb_pq_err_curve" -> 17,
     // multi-leg evals: by design a UNION of full index chains over a
     // shared (checkpointed / ReusedExchange-deduped) truth set —
     // budget = sum of leg budgets, pinned so a leg regression still
     // fails loudly
-    "emb_dim_tradeoff" -> 10, "emb_ivf_probe_curve" -> 25,
+    "emb_dim_tradeoff" -> 10, "emb_ivf_probe_curve" -> 19,
     // r11: + the ivf_pq_residual leg (the residual chain's exchanges,
     // ReusedExchange-deduped at runtime against the shared cells)
-    "emb_ann_recall" -> 120)
+    "emb_ann_recall" -> 97)
 
   test("no query exceeds its exchange budget") {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")

@@ -10,7 +10,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * Knn keeps one copy each of the LSH band geometry and the per-query
   * rank, and SparkEntry one copy each of the ANN query batch and the
   * recall score, that the DuckDB oracles mirror; Knn picks nearest
-  * centroids in one native kernel. `graft.streaming`
+  * centroids in one native kernel. A one-row aggregate reaches a
+  * per-row expression through one helper, `Par.withScalars`, and no
+  * operator object keeps a mutable map across plans. `graft.streaming`
   * keeps one per-series fold and one event-time prologue, and
   * `graft.sources.Parquet` is the one parquet reader. Outside
   * [[GraftSession]] no code writes a session conf, and the dedup
@@ -114,6 +116,49 @@ class SessionInvariantSpec extends AnyFunSuite {
         s"$path:${i + 1}"
     }.toSeq
     assert(argmax.isEmpty, argmax.mkString(", "))
+  }
+
+  test("no object under operators/ holds a mutable map") {
+    // a process-wide map keyed on plans (the old corpus-count cache)
+    // makes a plan depend on which queries ran before it in the JVM
+    val ops = sources.filter(_._1.startsWith(root.resolve("graft/operators")))
+    assert(ops.nonEmpty)
+    val maps = offenders(ops, """(?m)^  (?:private(?:\[\w+\])? )?(?:lazy )?va[lr] \w+[^=\n]*=\s*""" +
+      """(?:new\s+)?[\w.]*(?:mutable\.\w*Map|java\.util\.[\w.]*Map|TrieMap)\b""")
+    assert(maps.isEmpty, maps.mkString(", "))
+  }
+
+  test("one-row frames reach a plan through Par.withScalars only") {
+    // one scalar subquery per row, reused across its copies in a plan;
+    // crossJoin(broadcast(...)) stays only where the broadcast side is
+    // a k-row frame (query batches, centroid frames, PQ books, cuts)
+    val scalar = offenders(
+      sources.filterNot(_._1.endsWith("graft/operators/Par.scala")), """\.scalar\(\)""")
+    assert(scalar.isEmpty, scalar.mkString(", "))
+    assert(callers(members("graft/operators/Par.scala"), """\.scalar\(\)""") ==
+      Seq("withScalars"))
+    val kRow = Set("SparkEntry.doc_classify_calibration", "Knn.bruteTopK",
+      "Knn.mipsTopK", "Knn.sqSearchTopK", "Knn.bqSearchTopK", "Knn.pqAssign",
+      "Knn.rqModel", "Knn.rqSearchTopK", "Knn.nearestCells", "Knn.ivfPqTopK",
+      "Knn.ivfPqResidualTopK", "Knn.rangeSearch", "Knn.mmrTopK")
+    val member = """^  (?:private(?:\[\w+\])? )?(?:def|val) (\w+)""".r
+    val query = """^    "(\w+)" -> \{""".r
+    val sites = sources.flatMap { case (p, text) =>
+      val lines = text.linesIterator.toIndexedSeq
+      val obj = p.getFileName.toString.stripSuffix(".scala")
+      lines.indices.collect {
+        case i if !lines(i).trim.startsWith("*") && !lines(i).trim.startsWith("//") &&
+            lines(i).contains("crossJoin(broadcast(") =>
+          // the enclosing registered query in SparkEntry, else the member
+          val name = (i to 0 by -1).iterator.flatMap { j =>
+            (if (obj == "SparkEntry") query.findFirstMatchIn(lines(j)) else None)
+              .orElse(member.findFirstMatchIn(lines(j))).map(_.group(1))
+          }.nextOption().getOrElse("?")
+          (s"$obj.$name", s"$p:${i + 1}")
+      }
+    }
+    val stray = sites.filterNot(s => kRow(s._1))
+    assert(stray.isEmpty, stray.map { case (m, at) => s"$m ($at)" }.mkString(", "))
   }
 
   test("SparkEntry picks ANN query batches, ranks and scores recall in one helper each") {

@@ -8,8 +8,10 @@ Each dump is the stdout of `sbt "runMain graft.Explain"` (one
 plan is stripped of what changes from run to run without the plan
 changing: expression ids (`#123`), `plan_id`s, RDD ids, temp paths,
 JVM lambda class names and hash codes, lambda variable names (`x_87`,
-`lambda y_638`) and source line numbers. `-v` prints a unified diff
-per differing query.
+`lambda y_638`) and source line numbers. Each differing query prints
+as `name  old → new`, its exchange counts read from Explain's
+`[exchanges in initial physical plan: N]` line (`?` where a dump has
+none). `-v` adds a unified diff per differing query.
 Exit status: 0 when every query common to both dumps is identical.
 """
 import difflib
@@ -17,6 +19,7 @@ import re
 import sys
 
 HEADER = re.compile(r"^========== (\S+) ==========$")
+EXCHANGES = re.compile(r"^\[exchanges in initial physical plan: (\d+)\]$")
 RULES = [
     (re.compile(r"#\d+"), "#"),
     (re.compile(r"plan_id=\d+"), "plan_id="),
@@ -50,6 +53,15 @@ def sections(path):
     return out
 
 
+def exchanges(lines):
+    """The count on Explain's exchanges line, or `?`."""
+    for line in reversed(lines):
+        m = EXCHANGES.match(line)
+        if m:
+            return m.group(1)
+    return "?"
+
+
 def main(argv):
     verbose = "-v" in argv
     args = [a for a in argv if a != "-v"]
@@ -59,7 +71,7 @@ def main(argv):
     common = [q for q in old if q in new]
     differ = [q for q in common if old[q] != new[q]]
     for q in differ:
-        print(q)
+        print(f"{q}  {exchanges(old[q])} \u2192 {exchanges(new[q])}")
         if verbose:
             sys.stdout.writelines(
                 l + "\n" for l in difflib.unified_diff(
