@@ -63,7 +63,7 @@ object BenchScale {
     // emb_graph_rank (2 damped rounds over the knn_graph edges —
     // linear in edges, but it pays the graph build).
     // Sixth group (round 12): the learned-Lloyd family now auto-sizes
-    // its seeding stride (Knn.lloyd via autoCoarseEvery √n — the
+    // its seeding stride (Knn.lloyd via coarseEveryOf √n — the
     // old every-67 exclusion no longer applies), so emb_kmeans and
     // doc_topic_cluster join the measured set; emb_kcenter_sampled is
     // the pool-greedy production k-center; and the text-dedup family

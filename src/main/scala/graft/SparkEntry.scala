@@ -3672,7 +3672,7 @@ object SparkEntry {
     // concentrate on boilerplate-only pairs — see the pruned entry)
     "doc_dedup_ngram_jaccard" -> { (s, dir) =>
       val docs = tbl(s, dir, "documents")
-      val cap = if (docs.count() > NgramJaccardUncappedMaxDocs)
+      val cap = if (Parquet.countRows(docs) > NgramJaccardUncappedMaxDocs)
         Some(NgramJaccardMaxDf) else None
       Dedup.ngramJaccardPairs(docs, maxDocFreq = cap)
     },
@@ -4470,7 +4470,7 @@ object SparkEntry {
     // constant cost instead of taxing every full-suite scale run
     "emb_dedup_cosine_fixed" -> { (s, dir) =>
       val emb = ftbl(s, dir, "embeddings")
-      val base = if (emb.count() > EmbDedupFixedMaxVecs)
+      val base = if (Parquet.countRows(emb) > EmbDedupFixedMaxVecs)
         emb.where(col("vec_id") < BaseIdMax)
       else emb
       Knn.cosineDupPairsLsh(base, EmbDim, 0.3, nPlanes = 4)
@@ -4748,7 +4748,7 @@ object SparkEntry {
     // correctness runs (sf0.01) always take the exhaustive branch
     "mm_phash_eval" -> { (s, dir) =>
       val docs = tbl(s, dir, "documents")
-      if (docs.count() > MmPhashEvalMaxDocs)
+      if (Parquet.countRows(docs) > MmPhashEvalMaxDocs)
         mmPhashEvalSampledDf(s, dir).withColumnRenamed("n_hits", "n_found")
       else {
         val ph = Multimodal.phashAll(s, docs).toDF()
@@ -5735,14 +5735,14 @@ object SparkEntry {
       s"* (CAST($a[$s * 16 + i] AS DOUBLE) - $cs[i]))), " +
       "(x, y) -> x + y)"
 
-  /** DuckDB mirror of Knn.autoCoarseEvery: the √n coarse-codebook
+  /** DuckDB mirror of Knn.coarseEveryOf: the √n coarse-codebook
     * stride, derived from the same corpus count so both engines pick
     * the identical centroid set. */
   private val sqlCoarseEvery: String =
     "(SELECT greatest(1, CAST(ceil(sqrt(count(*))) AS BIGINT), " +
       "CAST(ceil(count(*) / 65536.0) AS BIGINT)) FROM embeddings)"
 
-  /** DuckDB mirror of Knn.autoPqEvery: the fixed-256-codebook stride. */
+  /** DuckDB mirror of Knn.pqEveryOf: the fixed-256-codebook stride. */
   private val sqlPqEvery: String =
     "(SELECT greatest(1, CAST(ceil(count(*) / 256.0) AS BIGINT)) " +
       "FROM embeddings)"

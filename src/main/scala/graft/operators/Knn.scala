@@ -510,7 +510,7 @@ object Knn {
                idCol: String = "vec_id",
                vecCol: String = "embedding"): DataFrame = {
     import org.apache.spark.sql.graft.Bridge.ldiv
-    val np = if (nPlanes > 0) nPlanes else autoPlanes(emb.count())
+    val np = if (nPlanes > 0) nPlanes else autoPlanes(Parquet.countRows(emb))
     // HUB-CELL SALTING: hyperplane cells are skewed (dense regions
     // blow Σpop² far past the uniform n·target estimate — measured
     // 811M pairs vs the ~80M estimate at 200k vectors), so any cell
@@ -678,7 +678,7 @@ object Knn {
     * full corpus — the standard coreset-of-a-coreset move (Gonzalez
     * greedy is a 2-approx on the pool; a √n uniform pool preserves the
     * spread structure the coverage curve reads). `poolEvery <= 0`
-    * auto-sizes the stride via [[autoCoarseEvery]], so the pool is
+    * auto-sizes the stride via [[coarseEveryOf]], so the pool is
     * ≈√n rows capped at [[MaxCoarseCells]] — the same bound every
     * coarse codebook in this file broadcasts.
     *
@@ -714,8 +714,7 @@ object Knn {
     // bit-identical to the HOF fold (parity-spec-enforced)
     val dist = org.apache.spark.sql.graft.GraftExpressions
       .vec_sub_l2(col("v"), col("cvec"), col("s"), subDim)
-    // one id-hash exchange serves the (id, s) argmin and pqCodes' collect
-    Par.spread(emb.select(col(idCol), col(vecCol).as("v")), col(idCol))
+    emb.select(col(idCol), col(vecCol).as("v"))
       .withColumn("s", explode(sequence(lit(0), lit(m - 1))))
       .crossJoin(broadcast(cents))
       .withColumn("dist", dist)
@@ -733,8 +732,9 @@ object Knn {
     * Scale shape: the codebook is broadcast; distances are computed
     * scan-side against the exploded (vector, subspace, centroid)
     * triple, and the per-subspace argmin is min(struct(dist, cid)) —
-    * an ordinary partial-aggregable min, so the shuffle carries m rows
-    * per vector (not m*k candidates) and no window sort exists. err2
+    * an ordinary partial-aggregable min, so the (id, s) shuffle
+    * carries m small (id, s, best) rows per vector — not m*k candidates,
+    * not the vector — and no window sort exists. err2
     * folds the m subspace errors in subspace order, so the double is
     * bit-reproducible.
     */
@@ -805,7 +805,7 @@ object Knn {
     // emb_pq_err_curve): the join-back plans near-free at these sizes
     // while the carried subvector fattens the agg exchanges — the r15
     // shape stays.
-    val a1 = Par.spread(sub, col(idCol)).join(broadcast(c0), Seq("s"))
+    val a1 = sub.join(broadcast(c0), Seq("s"))
       .withColumn("d", d0)
       .groupBy(col(idCol), col("s"))
       .agg(min(struct(col("d"), col("cid"))).as("b"))
@@ -834,7 +834,7 @@ object Knn {
       pqCodebookLearned(emb, dim, m, centroidEvery, idCol, vecCol))
     val d = org.apache.spark.sql.graft.GraftExpressions
       .vec_sub_l2_d(col("sv"), col("cs"), lit(0), subDim)
-    Par.spread(pqSub(emb, dim, m, idCol, vecCol), col(idCol))
+    pqSub(emb, dim, m, idCol, vecCol)
       .join(broadcast(book), Seq("s"))
       .withColumn("dist", d)
       .groupBy(col(idCol), col("s"))
@@ -948,15 +948,12 @@ object Knn {
       .groupBy(col(idCol))
       .agg(min(struct(col("d"), col("cid1"))).as("b1"))
       .select(col(idCol), col("b1.cid1").as("cid1"), col("b1.d").as("err1"))
-    // the checkpoint carries the stride (`__every`); the level-2 seeds
-    // and the returned level-1 book read it back without a new count
-    val resid0 = best1
+    val resid = best1
       .join(emb.select(col(idCol), col(vecCol).as("v")), Seq(idCol))
       .join(broadcast(c1), Seq("cid1"))
       .withColumn("r", org.apache.spark.sql.graft.GraftExpressions
         .vec_sub_dd(castD(col("v")), castD(col("c1v"))))
       .select(col(idCol), col("cid1"), col("err1"), col("r"))
-    val resid = withStride(resid0, emb, centroidEvery, coarseEveryOf)
       .localCheckpoint(false)
     // level-2 seed residue (2 % every): at stride >= 3 this is the
     // plain residue-2 row set, disjoint from level-1's residue 1; at
@@ -965,8 +962,7 @@ object Knn {
     // the zero codeword); at stride 1 it coincides with level-1's
     // all-rows seed, which is the right degenerate (every residual is
     // its own codeword). The oracles mirror (2 % stride) verbatim.
-    val every = resid.select("__every").limit(1)
-    val c2 = seeds(resid, idCol, 2)
+    val c2 = seedRows(resid, idCol, 2, emb, centroidEvery, coarseEveryOf)
       .select(col(idCol).as("cid2"), col("r").as("c2v"))
       .unionByName(resid.sparkSession.range(1)
         .select(lit(-1L).as("cid2"),
@@ -977,8 +973,7 @@ object Knn {
       .agg(min(struct(col("d2"), col("cid2"))).as("b2"))
       .select(col(idCol), col("cid1"), col("err1"),
         col("b2.cid2").as("cid2"), col("b2.d2").as("err2"))
-    (assign, seeds(Par.withScalars(emb, every), idCol, 1)
-      .select(col(idCol).as("cid1"), col(vecCol).as("c1v")), c2)
+    (assign, c1, c2)
   }
 
   /** Residual quantization (two-level additive FULL-vector codebook —
@@ -986,7 +981,7 @@ object Knn {
     * level-1 quantization ERROR, so the reconstruction c1 + c2 REFINES
     * the first approximation instead of partitioning dimensions the
     * way [[pqCodes]]' subspace split does. Level-1 centroids are the
-    * deterministic every-N corpus vectors ([[autoCoarseEvery]] √n
+    * deterministic every-N corpus vectors ([[coarseEveryOf]] √n
     * sizing); level-2 centroids are the RESIDUALS of those same
     * every-N ids — both codebooks derive from the corpus + its count
     * alone, so the DuckDB oracle replays them exactly.
@@ -1068,28 +1063,6 @@ object Knn {
   /** Target PQ codebook size per subspace (the classic 8-bit code). */
   val PqCodebookSize = 256
 
-  /** √n coarse-codebook sizing: stride so that nCells ≈ √n (capped at
-    * [[MaxCoarseCells]]). Balances the two linear-in-stride costs —
-    * assignment compares n vectors × n/stride centroids, probing scans
-    * nProbe cells of ~stride vectors — giving O(n·√n) assignment
-    * compute and O(√n) probed-cell population, instead of the fixed
-    * stride's O(n²)/O(1). The formula is mirrored verbatim in the
-    * DuckDB oracles (greatest(ceil(sqrt(n)), ceil(n/65536))) and in
-    * [[coarseEveryOf]], so both engines derive the identical centroid
-    * set from the corpus count.
-    */
-  def autoCoarseEvery(n: Long): Int = math.max(1L, math.max(
-    math.ceil(math.sqrt(n.toDouble)).toLong,
-    math.ceil(n.toDouble / MaxCoarseCells).toLong)).toInt
-
-  /** Fixed-size PQ codebook sizing: stride so the per-subspace
-    * codebook holds ≈ [[PqCodebookSize]] codewords no matter how big
-    * the corpus — assignment stays O(n·256·dim) instead of the fixed
-    * stride's O(n²·dim/67). Mirrored in the oracles as
-    * greatest(1, ceil(n/256)). */
-  def autoPqEvery(n: Long): Int =
-    math.max(1L, math.ceil(n.toDouble / PqCodebookSize).toLong).toInt
-
   /** LSH hyperplane-count sizing: the smallest plane count with
     * expected cell population n/2^planes <= `targetCell` — the dial
     * that keeps [[cosineDupPairsLsh]]'s per-cell self-join bounded as
@@ -1112,17 +1085,33 @@ object Knn {
     math.max(4, p)
   }
 
-  /** [[autoCoarseEvery]] as a Column over a row count `n`. */
+  /** √n coarse-codebook sizing over a row count `n`: stride so that
+    * nCells ≈ √n (capped at [[MaxCoarseCells]]). Balances the two
+    * linear-in-stride costs — assignment compares n vectors × n/stride
+    * centroids, probing scans nProbe cells of ~stride vectors — giving
+    * O(n·√n) assignment compute and O(√n) probed-cell population,
+    * instead of the fixed stride's O(n²)/O(1). The formula is mirrored
+    * verbatim in the DuckDB oracles (greatest(ceil(sqrt(n)),
+    * ceil(n/65536))), so both engines derive the identical centroid
+    * set from the corpus count.
+    */
   def coarseEveryOf(n: Column): Column = greatest(lit(1L), ceil(sqrt(n)),
     ceil(n / lit(MaxCoarseCells.toDouble)))
 
-  /** [[autoPqEvery]] as a Column over a row count `n`. */
+  /** Fixed-size PQ codebook sizing over a row count `n`: stride so the
+    * per-subspace codebook holds ≈ [[PqCodebookSize]] codewords no
+    * matter how big the corpus — assignment stays O(n·256·dim) instead
+    * of the fixed stride's O(n²·dim/67). Mirrored in the oracles as
+    * greatest(1, ceil(n/256)). */
   def pqEveryOf(n: Column): Column =
     greatest(lit(1L), ceil(n / lit(PqCodebookSize.toDouble)))
 
   /** The rows of `df` whose `idCol` is ≡ `k` modulo the stride:
-    * `every`, or for `every <= 0` `auto` over `corpus`'s row count as
-    * a scalar subquery (no build job).
+    * `every`, or for `every <= 0` `auto` over `corpus`'s row count n.
+    * When `corpus` is a plain parquet scan n is a literal read from
+    * its footers ([[Parquet.rowCount]]) and the filter folds to the
+    * fixed-stride one, with no Spark job; otherwise n is a count
+    * scalar subquery, run with the query that reads it.
     *
     * Seed filters throughout this file select `id % every ==
     * (k % every)` for a fixed residue k (level-1/pool seeds use k = 1,
@@ -1137,18 +1126,16 @@ object Knn {
     */
   private def seedRows(df: DataFrame, idCol: String, k: Int,
                        corpus: DataFrame, every: Int,
-                       auto: Column => Column): DataFrame =
-    seeds(withStride(df, corpus, every, auto), idCol, k).drop("__every")
-
-  /** `df` with the stride appended as `__every`. */
-  private def withStride(df: DataFrame, corpus: DataFrame, every: Int,
-                         auto: Column => Column): DataFrame =
-    if (every > 0) df.withColumn("__every", lit(every.toLong))
-    else Par.withScalars(df, corpus.agg(auto(count(lit(1))).as("__every")))
-
-  /** The rows of a [[withStride]] frame whose `idCol` is ≡ `k`. */
-  private def seeds(df: DataFrame, idCol: String, k: Int): DataFrame =
-    df.where(col(idCol) % col("__every") === lit(k.toLong) % col("__every"))
+                       auto: Column => Column): DataFrame = {
+    val strided =
+      if (every > 0) df.withColumn("__every", lit(every.toLong))
+      else Parquet.rowCount(corpus) match {
+        case Some(n) => df.withColumn("__every", auto(lit(n)))
+        case None => Par.withScalars(df, corpus.agg(auto(count(lit(1))).as("__every")))
+      }
+    strided.where(col(idCol) % col("__every") === lit(k.toLong) % col("__every"))
+      .drop("__every")
+  }
 
   /** Deterministic every-Nth coarse centroids with norms. */
   private def coarseCents(corpus: DataFrame, dim: Int, centroidEvery: Int,
@@ -1821,7 +1808,7 @@ object Knn {
     * assignment): centroids initialize from every `centroidEvery`-th
     * vector (same deterministic seeding as the IVF index; `<= 0`
     * auto-sizes the stride from the corpus count via
-    * [[autoCoarseEvery]]'s √n formula, exactly like the IVF/PQ/RQ
+    * [[coarseEveryOf]]'s √n formula, exactly like the IVF/PQ/RQ
     * paths, so k ≈ √n and assignment stays O(n·√n) instead of the
     * fixed stride's O(n²/stride)), then `iters`
     * rounds of [assign each vector to the max-cosine centroid
@@ -1959,15 +1946,16 @@ object Knn {
     * `nTables` is the recall dial, paid linearly in shuffle volume.
     *
     * `nPlanes <= 0` auto-sizes from the corpus count via
-    * [[autoPlanes]] (one `count()` job at build time: the plane count
-    * shapes the plan), so the default geometry keeps cell
+    * [[autoPlanes]] (read at build time, since the plane count shapes
+    * the plan: [[Parquet.countRows]], a footer read for a parquet scan
+    * and one `count()` job otherwise), so the default geometry keeps cell
     * populations ~constant instead of ∝ n as the corpus grows.
     */
   def cosineDupPairsLsh(emb: DataFrame, dim: Int, threshold: Double,
                         nPlanes: Int = 0, nTables: Int = 4,
                         idCol: String = "vec_id",
                         vecCol: String = "embedding"): DataFrame = {
-    val np = if (nPlanes > 0) nPlanes else autoPlanes(emb.count())
+    val np = if (nPlanes > 0) nPlanes else autoPlanes(Parquet.countRows(emb))
     // r16: the knnGraph-style (tb, bk) width pin was tried here and
     // measured SLOWER paired (+0.46 emb_dedup_cosine, +0.24 _fixed,
     // +0.14 emb_semdedup): these callers' inputs are already fanned
@@ -2022,7 +2010,7 @@ object Knn {
     * Scale shape: this is the safe [[cosineDupPairs]] use its doc
     * comment calls out — the learned cluster id is a fine-grained
     * block whose population is corpus/k, and k auto-sizes to ≈√n via
-    * [[autoCoarseEvery]] (override with `centroidEvery > 0`), so
+    * [[coarseEveryOf]] (override with `centroidEvery > 0`), so
     * blocks stay ≈√n-bounded as the corpus grows. The
     * kmeans assignment is a broadcast-centroid scan; the pair→drop
     * reduction joins the tiny pair set against the assignment, so the
@@ -2066,7 +2054,7 @@ object Knn {
     * Scale shape: assignment is the broadcast-centroid [[kmeans]]
     * scan; the per-cluster top-m is one window keyed by cluster_id —
     * k partitions of ~corpus/k rows, no self-join anywhere, and the
-    * √n-auto-sized k (see [[autoCoarseEvery]]) keeps each cluster
+    * √n-auto-sized k (see [[coarseEveryOf]]) keeps each cluster
     * partition ≈√n-bounded as the corpus grows.
     */
   def clusterSample(emb: DataFrame, dim: Int, perCluster: Int,

@@ -6,10 +6,14 @@ import org.apache.parquet.format.converter.ParquetMetadataConverter
 import org.apache.parquet.hadoop.Footer
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project, Repartition,
+  RepartitionByExpression, SubqueryAlias, View}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
   ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.execution.streaming.sinks.{FileStreamSink, FileStreamSinkLog}
 import org.apache.spark.sql.types.StructType
+import scala.jdk.CollectionConverters._
 
 /** graft's one parquet reader. `spark.read.parquet` infers the data
   * schema with a Spark job (one task per footer it touches), and every
@@ -54,6 +58,29 @@ object Parquet {
     val reader = basePath.fold(spark.read)(spark.read.option("basePath", _))
     footerSchema(spark, paths).fold(reader)(reader.schema).parquet(paths: _*)
   }
+
+  /** `df`'s row count from the footers of its files when `df` keeps
+    * every row of one parquet relation (projections, aliases and
+    * repartitions over the scan): a metadata read on the driver, no
+    * Spark job. None for any other plan.
+    */
+  def rowCount(df: DataFrame): Option[Long] = {
+    def scan(p: LogicalPlan): Option[HadoopFsRelation] = p match {
+      case _: Project | _: SubqueryAlias | _: View | _: Repartition |
+           _: RepartitionByExpression => scan(p.children.head)
+      case LogicalRelation(h: HadoopFsRelation, _, _, _, _)
+          if h.fileFormat.isInstanceOf[ParquetFileFormat] => Some(h)
+      case _ => None
+    }
+    val conf = df.sparkSession.sessionState.newHadoopConf()
+    scan(df.queryExecution.analyzed).map(_.location.inputFiles.iterator.map { f =>
+      ParquetFooterReader.readFooter(HadoopInputFile.fromPath(new Path(new java.net.URI(f)), conf),
+        ParquetMetadataConverter.NO_FILTER).getBlocks.asScala.map(_.getRowCount).sum
+    }.sum)
+  }
+
+  /** `df.count()`, answered by [[rowCount]] where it can. */
+  def countRows(df: DataFrame): Long = rowCount(df).getOrElse(df.count())
 
   /** The schema Spark would infer for `paths`, from one footer read on
     * the driver; None where Spark must speak for itself.

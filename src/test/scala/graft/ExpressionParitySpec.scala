@@ -450,7 +450,7 @@ class ExpressionParitySpec extends AnyFunSuite {
     }
   }
 
-  test("the Column strides equal autoCoarseEvery / autoPqEvery") {
+  test("the Column strides are max(1, ceil(√n), ceil(n/65536)) and max(1, ceil(n/256))") {
     val sq = Seq(2L, 3L, 16L, 255L, 256L, 1000L, 65535L, 65536L, 65537L)
       .map(r => r * r)
     val cap = 65536L * 65536L
@@ -460,10 +460,22 @@ class ExpressionParitySpec extends AnyFunSuite {
       .distinct
     val row = spark.range(1).select(ns.flatMap(n =>
       Seq(Knn.coarseEveryOf(lit(n)), Knn.pqEveryOf(lit(n)))): _*).head()
-    ns.zipWithIndex.foreach { case (n, i) =>
-      assert(row.getLong(2 * i) == Knn.autoCoarseEvery(n).toLong, s"coarse n=$n")
-      assert(row.getLong(2 * i + 1) == Knn.autoPqEvery(n).toLong, s"pq n=$n")
+    val got = ns.zipWithIndex.map { case (n, i) =>
+      n -> (row.getLong(2 * i), row.getLong(2 * i + 1)) }.toMap
+    // exact integer references: the least r with r·r >= n, ceil division
+    def ceilSqrt(n: Long): Long = Iterator.iterate(math.sqrt(n.toDouble).toLong)(_ + 1)
+      .dropWhile(r => r * r < n).next()
+    def ceilDiv(n: Long, d: Long): Long = (n + d - 1) / d
+    ns.foreach { n =>
+      assert(got(n)._1 == Seq(1L, ceilSqrt(n), ceilDiv(n, 65536)).max, s"coarse n=$n")
+      assert(got(n)._2 == math.max(1L, ceilDiv(n, 256)), s"pq n=$n")
     }
+    // the cap term takes over just above 65536²
+    assert(got(cap) == (65536L, 16777216L))
+    assert(got(cap + 1) == (65537L, 16777217L))
+    assert(got(cap * 4 + 1) == (262145L, 67108865L))
+    assert(Seq(0L, 1L, 2L, 255L, 256L, 257L).map(got(_)) ==
+      Seq((1L, 1L), (1L, 1L), (2L, 1L), (16L, 1L), (16L, 1L), (17L, 2L)))
   }
 
   test("simhash_wide == its HOF twin, incl. null and empty token arrays") {

@@ -182,3 +182,37 @@ class BuildInferenceSpec extends AnyFunSuite {
     assert(seen.isEmpty, seen.toArray.mkString("\n---\n"))
   }
 }
+
+/** [[Parquet.rowCount]] reads a scan's row count from its footers and
+  * declines every plan that can drop or add rows; the auto-sized seed
+  * strides of a parquet corpus fold to literals through it.
+  */
+class ParquetRowCountSpec extends AnyFunSuite {
+  private lazy val spark = SparkTestSession.spark
+
+  private val sf = ParquetSpec.Sf
+  private def emb = Parquet.read(spark, s"$sf/embeddings.parquet")
+
+  test("rowCount: a scan's footers, None where the plan can change the rows") {
+    val n = emb.count()
+    assert(Parquet.rowCount(emb).contains(n))
+    assert(Parquet.rowCount(emb.select("vec_id").repartition(3)).contains(n))
+    val dir = Files.createTempDirectory("graft_pq_rows").toString + "/t"
+    spark.range(0, 1000, 1, 4).write.parquet(dir)
+    assert(Parquet.rowCount(Parquet.read(spark, dir)).contains(1000L))
+    val even = emb.where(col("vec_id") % 2 === 0)
+    for (df <- Seq(even, emb.limit(3), emb.union(emb), emb.localCheckpoint(false)))
+      assert(Parquet.rowCount(df).isEmpty, df.queryExecution.analyzed)
+    assert(Parquet.countRows(even) == even.count())
+  }
+
+  test("an auto-sized seed stride over a parquet scan is a literal, not a subquery") {
+    import graft.operators.Knn
+    def subqueries(df: DataFrame) = df.queryExecution.optimizedPlan.subqueriesAll.size
+    val scan = Knn.pqCodes(emb, 64)
+    val counted = Knn.pqCodes(emb.localCheckpoint(false), 64)
+    assert(subqueries(scan) == 0)
+    assert(subqueries(counted) > 0)
+    assert(scan.exceptAll(counted).isEmpty && counted.exceptAll(scan).isEmpty)
+  }
+}

@@ -265,13 +265,10 @@ class PlanBudgetSpec extends AnyFunSuite {
     "ts_lttb" -> 3,
     // multi-stage but bounded
     "emb_quantize" -> 2, "ts_mad" -> 6,
-    // pq: broadcast codebook + ONE id-hash spread that the (id, s)
-    // argmin and the per-id collect both read + the stride's count
-    // subquery (no window)
+    // pq: broadcast codebook + two partial-agged shuffles (no window)
     "emb_pq" -> 3,
-    // rq: the level-1 chain lives behind the residual checkpoint, which
-    // also carries the stride; the visible plan is the level-2
-    // codebook broadcast + the argmin agg
+    // rq: the level-1 chain lives behind the residual checkpoint; the
+    // visible plan is the level-2 codebook broadcast + the argmin agg
     "emb_rq" -> 2,
     // rq recall eval: the checkpointed brute truth + the full
     // two-stage rq_search chain + the tiny pair join and 1-row agg
@@ -395,10 +392,10 @@ class PlanBudgetSpec extends AnyFunSuite {
     "emb_semdedup" -> 8,
     // iterative-ML composite: one Lloyd round (seed codebook row +
     // centroid_update row: a single-partition agg each, read as
-    // scalars), the stride's count, the probe window + its broadcast,
-    // and the final rank window — every exchange carries ids or
-    // codebook rows, never the corpus
-    "emb_knn_ivf_learned" -> 7,
+    // scalars), the probe window + its broadcast, and the final rank
+    // window — every exchange carries ids or codebook rows, never the
+    // corpus
+    "emb_knn_ivf_learned" -> 6,
     // dsir: per-doc micro-nat reduce + broadcast weight/normalizer
     // frames off the lazily-checkpointed bucket model — the stats
     // scan's own agg exchange lives behind the checkpoint
@@ -424,11 +421,12 @@ class PlanBudgetSpec extends AnyFunSuite {
     // agg, the (hash, id) join back, the per-doc agg, and the doc-id
     // left join — nothing pairwise, text never shuffles
     "doc_novelty" -> 4,
-    // the emb_kmeans Lloyd shape (4) + the per-cluster top-m window
+    // the emb_kmeans Lloyd shape (2) + the per-cluster top-m window
     // keyed by cluster_id
-    "emb_cluster_sample" -> 4,
+    "emb_cluster_sample" -> 3,
     // topic clustering: vectors fan out scan-side (hashed counts);
-    // identical Lloyd shape to emb_kmeans at dim 16
+    // the emb_kmeans Lloyd shape at dim 16 + the stride's count (the
+    // vectors are derived, so no footer holds their count)
     "doc_topic_cluster" -> 3,
     // checkpointed Lloyd assignment + the 1-row threshold agg, read
     // back as a scalar — the doc_quality_filter posture
@@ -521,33 +519,32 @@ class PlanBudgetSpec extends AnyFunSuite {
     // candidate join + rank window per chain. A corpus-side cell or
     // cluster assignment is one codebook row (single-partition agg, a
     // scalar) scored scan-side — the corpus itself never shuffles for
-    // it; emb_kmeans is two such rows (seeds, one update) + the
-    // stride's count
-    "emb_knn_brute" -> 2, "emb_knn_lsh" -> 3, "emb_knn_ivf" -> 5,
-    "emb_knn_ivf_indexed" -> 2, "emb_kmeans" -> 3, "emb_pq_learned" -> 8,
+    // it; emb_kmeans is two such rows (seeds, one update)
+    "emb_knn_brute" -> 2, "emb_knn_lsh" -> 3, "emb_knn_ivf" -> 4,
+    "emb_knn_ivf_indexed" -> 2, "emb_kmeans" -> 2, "emb_pq_learned" -> 8,
     "emb_ivf_pq" -> 13, "emb_ivf_pq_rerank" -> 16,
     // residual IVFADC: the ivf_pq chain + the residual frame rebuilt
     // for the codes / dtab legs (byte-identical subplans —
     // ReusedExchange dedups them at runtime); the codes leg's one
     // neighbor_id exchange serves both its argmin and the ADC join
-    "emb_ivf_pq_residual" -> 19,
+    "emb_ivf_pq_residual" -> 18,
     // permuted PQ: the (dim) variance agg + the 64-row rank window +
     // permutation broadcast, then the plain PQ chain
     "emb_pq_permuted" -> 5,
     // whitening: the (dim) stats agg + its 1-row fold, read back over
     // the scan as a scalar — the corpus never shuffles
     "emb_whiten" -> 2,
-    // distortion dial: the three PQ store chains (3 + 8 + 9) side by
+    // distortion dial: the three PQ store chains (3 + 8 + 5) side by
     // side plus each leg's 1-row total agg
-    "emb_pq_err_curve" -> 17,
+    "emb_pq_err_curve" -> 19,
     // multi-leg evals: by design a UNION of full index chains over a
     // shared (checkpointed / ReusedExchange-deduped) truth set —
     // budget = sum of leg budgets, pinned so a leg regression still
     // fails loudly
-    "emb_dim_tradeoff" -> 10, "emb_ivf_probe_curve" -> 19,
+    "emb_dim_tradeoff" -> 10, "emb_ivf_probe_curve" -> 18,
     // r11: + the ivf_pq_residual leg (the residual chain's exchanges,
     // ReusedExchange-deduped at runtime against the shared cells)
-    "emb_ann_recall" -> 97)
+    "emb_ann_recall" -> 98)
 
   test("no query exceeds its exchange budget") {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")

@@ -137,12 +137,17 @@ class SessionInvariantSpec extends AnyFunSuite {
     assert(scalar.isEmpty, scalar.mkString(", "))
     assert(callers(members("graft/operators/Par.scala"), """\.scalar\(\)""") ==
       Seq("withScalars"))
-    val kRow = Set("SparkEntry.doc_classify_calibration", "Knn.bruteTopK",
-      "Knn.mipsTopK", "Knn.sqSearchTopK", "Knn.bqSearchTopK", "Knn.pqAssign",
-      "Knn.rqModel", "Knn.rqSearchTopK", "Knn.nearestCells", "Knn.ivfPqTopK",
-      "Knn.ivfPqResidualTopK", "Knn.rangeSearch", "Knn.mmrTopK")
+    // one entry per site, keyed on the broadcast operand: a second site
+    // in a listed member, or a new operand there, is a stray too
+    val kRow = Seq("SparkEntry.doc_classify_calibration(cuts)", "Knn.bruteTopK(q)",
+      "Knn.mipsTopK(q)", "Knn.sqSearchTopK(q)", "Knn.bqSearchTopK(qw)",
+      "Knn.pqAssign(cents)", "Knn.rqModel(c1)", "Knn.rqModel(c2)",
+      "Knn.rqSearchTopK(q)", "Knn.nearestCells(cents)", "Knn.ivfPqTopK(pcents)",
+      "Knn.ivfPqResidualTopK(book)", "Knn.ivfPqResidualTopK(book)",
+      "Knn.rangeSearch(q)", "Knn.mmrTopK(q)")
     val member = """^  (?:private(?:\[\w+\])? )?(?:def|val) (\w+)""".r
     val query = """^    "(\w+)" -> \{""".r
+    val operand = """crossJoin\(broadcast\((\w+)\)\)""".r
     val sites = sources.flatMap { case (p, text) =>
       val lines = text.linesIterator.toIndexedSeq
       val obj = p.getFileName.toString.stripSuffix(".scala")
@@ -154,11 +159,15 @@ class SessionInvariantSpec extends AnyFunSuite {
             (if (obj == "SparkEntry") query.findFirstMatchIn(lines(j)) else None)
               .orElse(member.findFirstMatchIn(lines(j))).map(_.group(1))
           }.nextOption().getOrElse("?")
-          (s"$obj.$name", s"$p:${i + 1}")
+          val arg = operand.findFirstMatchIn(lines(i)).map(_.group(1)).getOrElse("?")
+          (s"$obj.$name($arg)", s"$p:${i + 1}")
       }
     }
-    val stray = sites.filterNot(s => kRow(s._1))
+    val stray = sites.map(_._1).diff(kRow).distinct
+      .flatMap(k => sites.filter(_._1 == k))
     assert(stray.isEmpty, stray.map { case (m, at) => s"$m ($at)" }.mkString(", "))
+    val gone = kRow.diff(sites.map(_._1))
+    assert(gone.isEmpty, s"listed k-row sites no longer in the source: ${gone.mkString(", ")}")
   }
 
   test("SparkEntry picks ANN query batches, ranks and scores recall in one helper each") {
